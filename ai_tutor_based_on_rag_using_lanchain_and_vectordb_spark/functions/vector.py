@@ -75,6 +75,13 @@ def cosine(a: Column, b: Column) -> Column:
 # and CAST/literal nodes match — so every score is bit-identical.
 
 
+def quote_col(name: str) -> str:
+    """A top-level column name as a backtick-quoted identifier (embedded
+    backticks doubled), valid both in SQL text and as an ``F.col`` name.
+    ``a.b`` names the column ``a.b``, never field ``b`` of struct ``a``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _elem(vec: Column, i: int, cast: bool) -> Column:
     # element_at is 1-based
     e = F.element_at(vec, i + 1)

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..session import pin
 from .knn import fit_ivf_centroids, unit_vectors_ml
 
 
@@ -58,7 +59,8 @@ def build_ivf_index(
     (backend/chroma_utils.py:161,250-253) on the production index path
     (see search_ivf_index's ``where``/``match_cols``). Upsert/refit
     derive the metadata set from the layout's own schema, so it is
-    declared once, here."""
+    declared once, here.
+    ``vec_col`` is a top-level column name."""
     model, centroids = fit_ivf_centroids(vectors, n_cells, vec_col)
     assigned = (
         model.transform(unit_vectors_ml(vectors, vec_col))
@@ -78,7 +80,7 @@ def build_ivf_index(
     # fit-time stats: corpus size and mean unit-sphere assignment
     # distance — the baselines the drift trigger compares against
     cells = [int(r[0]) for r in cent_rows]
-    _, dist = _nearest_cell_expr(f"`{vec_col}`", centroids, cells, dim)
+    _, dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells, dim)
     agg = vectors.select(
         F.count("*").alias("n"), F.avg(dist).alias("mean_dist")
     ).collect()[0]
@@ -221,11 +223,12 @@ def upsert_ivf_index(
       overwrite) — at 100 TB a batch touching 3 of 1024 cells rewrites
       3 partitions, not the index;
     - returns drift/growth telemetry and ``refit_recommended``.
+    ``vec_col`` is a top-level column name.
     """
     cent_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
     centroids = np.vstack(cent_pdf["centroid"].to_numpy())
     cells = [int(c) for c in cent_pdf["cell"].to_numpy()]
-    cell_col, dist_col = _nearest_cell_expr(f"`{vec_col}`", centroids, cells, dim)
+    cell_col, dist_col = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells, dim)
 
     # metadata columns are whatever the layout's own schema carries
     # beyond (id, vec, cell) — declared once at build time, preserved
@@ -290,7 +293,7 @@ def upsert_ivf_index(
         assigned.select(id_col, vec_col, *meta_cols, "cell")
     )
     # materialize before overwriting the files the plan reads from
-    merged = merged.localCheckpoint(eager=True)
+    merged = pin(merged, eager=True)
     (
         merged.repartition("cell")
         .write.mode("overwrite")
@@ -337,10 +340,8 @@ def refit_ivf_index(
     meta_cols = tuple(
         c for c in raw.schema.names if c not in (id_col, vec_col, "cell")
     )
-    full = (
-        raw.select(id_col, vec_col, *meta_cols)
-        .localCheckpoint(eager=True)  # break lineage before overwrite
-    )
+    # break lineage before overwrite
+    full = pin(raw.select(id_col, vec_col, *meta_cols), eager=True)
     build_ivf_index(full, path, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
                     dim=dim, meta_cols=meta_cols)
 
@@ -413,6 +414,7 @@ def search_ivf_index(
     k-NN semantics are unchanged: top-k AMONG the rows passing the
     filter (nprobe=all cells + a filter ≡ exact filtered k-NN —
     Q(knn_ivf_filtered) carries the label-filtered oracle verbatim).
+    ``vec_col`` is a top-level column name.
     """
     centroids_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
     cent = np.vstack(centroids_pdf["centroid"].to_numpy())
@@ -441,16 +443,16 @@ def search_ivf_index(
         vectors = vectors.where(where)
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        V.as_double(F.col(vec_col)).alias("qv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("qnorm"),
+        V.as_double(F.col(V.quote_col(vec_col))).alias("qv"),
+        V.norm_fixed(V.quote_col(vec_col), dim).alias("qnorm"),
         *[F.col(c).alias(f"_q_{c}") for c in match_cols],
     )
     cand = (
         vectors.select(
             F.col(id_col).alias("neighbor_id"),
-            V.as_double(F.col(vec_col)).alias("cv"),
+            V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
             "cell",
-            V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+            V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
             *[F.col(c).alias(f"_c_{c}") for c in match_cols],
         )
         .join(probe_df, "cell")

@@ -20,8 +20,8 @@ NOT emitted), so unlike connected components there is no convergence
 risk: the fixed-depth recursive-CTE oracle computes the identical
 level sets.
 
-Per-level ``localCheckpoint`` truncates the growing lineage (the
-components.py rationale); cluster runs pass ``checkpoint_dir`` for
+Per-level ``session.pin`` truncates the growing lineage (the
+components.py rationale); cluster runs set ``spark.checkpoint.dir`` for
 reliable HDFS/S3 checkpointing instead.
 """
 
@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .components import MAX_DRIVER_EDGES
 
 
@@ -68,7 +69,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     seed_col: str = "node",
-    checkpoint_dir: str | None = None,
     max_driver_edges: int | None = MAX_DRIVER_EDGES,
 ) -> DataFrame:
     """Hop distance from the nearest seed, over undirected ``edges``.
@@ -91,17 +91,6 @@ def bfs_hops(
     see the module docstring.
     """
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a") != F.col("b")
     )
@@ -111,7 +100,7 @@ def bfs_hops(
     # (optimization r14): the gate count is the materializing action, so
     # pin+gate is ONE job instead of the former eager-checkpoint job
     # followed by a count job.
-    sym = _pin(
+    sym = pin(
         e.select(
             F.explode(
                 F.array(
@@ -123,7 +112,7 @@ def bfs_hops(
         .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"))
         .distinct()
     )
-    dist0 = _pin(
+    dist0 = pin(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("hops", F.lit(0))
@@ -160,7 +149,7 @@ def bfs_hops(
         )
         if prev2 is not None:
             nxt = nxt.join(prev2, "node", "left_anti")
-        nxt = _pin(nxt.withColumn("hops", F.lit(h)))
+        nxt = pin(nxt.withColumn("hops", F.lit(h)))
         if nxt.count() == 0:
             break
         levels.append(nxt)

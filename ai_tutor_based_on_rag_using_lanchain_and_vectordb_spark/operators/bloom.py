@@ -38,6 +38,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def bloom_params(n_keys: int, fpp: float = 0.01) -> tuple[int, int]:
     """(m_bits, k_hashes) sized for ``n_keys`` distinct keys at target
@@ -113,13 +115,13 @@ def bloom_probe(
     ``monotonically_increasing_id``, which is only stable if the input
     evaluates to the same row order on both sides of the re-join —
     true for scan-rooted plans, NOT guaranteed after a shuffle. So the
-    tagged frame is pinned (``localCheckpoint``) by default; the probe
+    tagged frame is pinned (``session.pin``) by default; the probe
     side of a bloom gate is the incoming batch (small by design), so
     the pin is cheap. Callers that already pinned (the streaming gate)
     can pass ``pin_input=False``."""
     tagged = df.withColumn("_bid", F.monotonically_increasing_id())
     if pin_input:
-        tagged = tagged.localCheckpoint(eager=True)
+        tagged = pin(tagged, eager=True)
     pos = tagged.select(
         "_bid", F.explode(_positions(key, m_bits, k_hashes)).alias("pos")
     ).select(

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import exact as X
+from ..session import pin
 from .dedup import tokens_col
 
 K1 = 1.2
@@ -234,7 +235,8 @@ def bm25_search(
     caller also consumes it — e.g. Q(retrieval_eval) derives its
     relevance truth from the same tokenization. ``postings`` (any
     (doc_id, term, tf) frame, e.g. the persistent layout's) keeps the
-    former semi-filter shape for callers that already hold postings."""
+    former semi-filter shape for callers that already hold postings;
+    ``docs`` is then unused (lengths and stats come from the postings)."""
     qdf = _query_terms_df(spark, queries)
     if postings is not None:
         # caller-pinned postings (shared with other consumers): the
@@ -255,7 +257,7 @@ def bm25_search(
         # pinned: matched postings, df counts and corpus stats all read
         # the one tokenize pass instead of re-tokenizing per consumer
         base = tokenized_base(docs, queries, id_col, text_col)
-        base = base.localCheckpoint(eager=False)
+        base = pin(base)
     matched = matched_from_base(base)
     dl = base.select("doc_id", "dl")
     return _score_topk(qdf, matched, None, _corpus_stats(dl), k, k1, b)
@@ -295,13 +297,14 @@ def bm25_prf_search(
     on the (derived, tiny) expanded term broadcast before the
     (doc, term) aggregation. Nothing doc-length-joins — dl rides the
     matched rows. Passing ``postings`` keeps the old
-    semi-filter-the-pinned-frame shape for callers that share one."""
+    semi-filter-the-pinned-frame shape for callers that share one;
+    ``docs`` is then unused (both passes read the postings)."""
     from pyspark.sql import Window
 
     qdf = _query_terms_df(spark, queries)
     if postings is None:
         base = tokenized_base(docs, queries, id_col, text_col)
-        base = base.localCheckpoint(eager=False)
+        base = pin(base)
         matched1 = matched_from_base(base)
         dl = base.select("doc_id", "dl")
         dl_join = None  # dl rides matched1/matched2
@@ -311,15 +314,15 @@ def bm25_prf_search(
         )
         # dl from the POSTINGS frame (see bm25_search) — self-consistent
         # with the caller's layout, no corpus re-tokenize
-        dl = postings.groupBy("doc_id").agg(
+        dl = pin(postings.groupBy("doc_id").agg(
             F.sum("tf").cast("long").alias("dl")
-        ).localCheckpoint(eager=False)
+        ))
         dl_join = dl
     stats = _corpus_stats(dl)
     # pinned: feedback ids feed the doc semi-filter AND the tf harvest
-    feedback = _score_topk(
+    feedback = pin(_score_topk(
         qdf, matched1, dl_join, stats, fb_docs, k1, b
-    ).select("query_id", "doc_id").localCheckpoint(eager=False)
+    ).select("query_id", "doc_id"))
     # expansion candidates: terms of the feedback docs, minus the
     # query's own terms, ranked by total tf across the feedback set.
     # Only the Q·fb_docs feedback documents are tokenized here — the
@@ -470,7 +473,7 @@ def delete_bm25_docs(spark: SparkSession, path: str, doc_ids) -> dict:
     )
     dlp = os.path.join(path, "doclens")
     dl = spark.read.parquet(dlp)
-    kept = anti_filter(dl, doc_ids, "doc_id").localCheckpoint(eager=True)
+    kept = pin(anti_filter(dl, doc_ids, "doc_id"), eager=True)
     deleted_docs = dl.count() - kept.count()
     if deleted_docs:
         kept.write.mode("overwrite").parquet(dlp)
@@ -527,17 +530,14 @@ def upsert_bm25_index(
     replaced = 0
     stale = None
     if mode == "replace":
-        fresh = docs.dropDuplicates([id_col]).localCheckpoint(eager=True)
-        stale = fresh.select(id_col).join(
+        fresh = pin(docs.dropDuplicates([id_col]), eager=True)
+        stale = pin(fresh.select(id_col).join(
             F.broadcast(existing), id_col, "left_semi"
-        ).localCheckpoint(eager=True)
+        ), eager=True)
         replaced = delete_bm25_docs(spark, path, stale)["deleted_docs"]
     else:
-        fresh = (
-            docs.join(existing, id_col, "left_anti")
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)
-        )
+        fresh = pin(docs.join(existing, id_col, "left_anti")
+                    .dropDuplicates([id_col]), eager=True)
     postings = bm25_postings(fresh, id_col, text_col)
     dl = postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     added = dl.count()
@@ -587,8 +587,8 @@ def compact_bm25_index(spark: SparkSession, path: str) -> dict:
     before = _parquet_file_count(pp) + _parquet_file_count(dp)
     # materialize BEFORE overwriting the input paths (the pq_index
     # upsert pattern)
-    postings = spark.read.parquet(pp).localCheckpoint(eager=True)
-    doclens = spark.read.parquet(dp).localCheckpoint(eager=True)
+    postings = pin(spark.read.parquet(pp), eager=True)
+    doclens = pin(spark.read.parquet(dp), eager=True)
     postings.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(pp)
@@ -621,13 +621,13 @@ class Bm25Searcher:
         # a DataFrame so the scoring float association is identical.
         # Both pinned eagerly (doclens is slim: one (id, long) row per
         # doc, distributed in executor storage) — the snapshot contract.
-        self._dl = spark.read.parquet(
-            os.path.join(path, "doclens")
-        ).localCheckpoint(eager=True)
-        self._stats = self._dl.agg(
+        self._dl = pin(
+            spark.read.parquet(os.path.join(path, "doclens")), eager=True
+        )
+        self._stats = pin(self._dl.agg(
             F.count("*").cast("long").alias("n_docs"),
             (F.sum("dl") / F.count("*")).cast("double").alias("avgdl"),
-        ).localCheckpoint(eager=True)
+        ), eager=True)
 
     def search(self, queries: list, k: int = 5, k1: float = K1,
                b: float = B) -> DataFrame:

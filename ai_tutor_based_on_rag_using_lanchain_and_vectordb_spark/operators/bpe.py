@@ -13,7 +13,7 @@ Scale shape (100 TB design point):
 - Each round is: explode symbol pairs → count-weighted groupBy → a
   1-row argmax to the driver (bounded collect: one pair per round) →
   a codegen'd fold expression rewriting the symbol arrays. The
-  word-type frame is localCheckpointed per round so the plan does not
+  word-type frame is pinned per round so the plan does not
   grow with the merge count (same lineage-flattening pattern as
   operators/components.py).
 - Ties break deterministically (count desc, pair lexicographic) so two
@@ -24,6 +24,8 @@ Scale shape (100 TB design point):
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..session import pin
 
 END = "</w>"  # end-of-word marker: keeps merges from crossing words
 
@@ -110,9 +112,7 @@ def bpe_train(
 ) -> list[tuple[str, str, int]]:
     """Learn up to `n_merges` merges from a (word, n) table. Returns
     [(a, b, weighted_count), ...] in merge order."""
-    cur = wc.select(
-        "n", _initial_symbols(F.col("word")).alias("syms")
-    ).localCheckpoint()
+    cur = pin(wc.select("n", _initial_symbols(F.col("word")).alias("syms")), eager=True)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         top = _top_pair(cur)
@@ -120,9 +120,9 @@ def bpe_train(
             break
         a, b, cnt = top
         merges.append((a, b, cnt))
-        cur = cur.select(
+        cur = pin(cur.select(
             "n", _merge_expr(F.col("syms"), a, b).alias("syms")
-        ).localCheckpoint()
+        ), eager=True)
     return merges
 
 

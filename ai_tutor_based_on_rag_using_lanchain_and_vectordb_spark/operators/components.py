@@ -22,11 +22,12 @@ Scale notes (100 TB design point):
   rounds are typical; `max_iter` bounds the pathological case.
 - The per-round materialization truncates the growing lineage;
   otherwise every iteration replans the whole prefix and the DAG
-  explodes quadratically. `localCheckpoint` (default) keeps blocks on
-  executors — right for local[N], but NOT fault-tolerant on a real
-  cluster (an executor loss makes truncated lineage unrecoverable).
-  Cluster runs pass ``checkpoint_dir`` to use reliable
-  ``checkpoint()`` into HDFS/S3 instead.
+  explodes quadratically. Rounds pin through ``session.pin``: without a
+  checkpoint dir that is an executor-local ``localCheckpoint`` — right
+  for local[N], but NOT fault-tolerant on a real cluster (an executor
+  loss makes truncated lineage unrecoverable). Cluster runs set
+  ``spark.checkpoint.dir`` (HDFS/S3) to make every pin a reliable
+  ``checkpoint()`` instead.
 - Labels and edges shuffle on the same node key every round, so AQE
   reuses co-partitioned exchanges where possible.
 """
@@ -35,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import pin
 
 # Small-graph gate for the driver fast path: a MEASURED bound on the
 # symmetrized edge count (same pattern as the size-gated counts join in
@@ -85,7 +88,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
     max_driver_edges: int | None = MAX_DRIVER_EDGES,
 ) -> DataFrame:
     """Resolve undirected ``edges`` into components.
@@ -94,25 +96,12 @@ def connected_components(
     edge, where ``component`` is the minimum node id reachable —
     a deterministic, engine-independent cluster id.
 
-    ``checkpoint_dir``: when set, per-round materialization uses
-    RELIABLE ``checkpoint()`` into that directory (HDFS/S3 on a real
-    cluster — survives executor loss); when None (default), fast
-    executor-local ``localCheckpoint`` — the right trade on local[N]
-    where executor loss means the whole app died anyway.
+    Per-round materialization goes through ``session.pin``: reliable
+    ``checkpoint()`` when the session has ``spark.checkpoint.dir`` set
+    (HDFS/S3 on a real cluster — survives executor loss), fast
+    executor-local ``localCheckpoint`` otherwise.
     """
     spark = edges.sparkSession
-
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Pin the edge list once: without this every iteration re-derives
     # the upstream pair-generation plan (for near-dup input, the whole
@@ -122,7 +111,7 @@ def connected_components(
     # once per union branch. The pin is LAZY (optimization r14): the
     # gate count below is the action that materializes it, so pin+gate
     # is one job instead of an eager-checkpoint job followed by a count.
-    sym = _pin(
+    sym = pin(
         e.select(
             F.explode(
                 F.array(
@@ -137,7 +126,7 @@ def connected_components(
     # measured-gate strategy, not a guess.
     if max_driver_edges and sym.count() <= max_driver_edges:
         return _driver_components(spark, sym)
-    labels = _pin(
+    labels = pin(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -171,7 +160,7 @@ def connected_components(
         # count over it is the action that materializes the pin — the
         # former eager checkpoint + count pair cost two driver round
         # trips per round.
-        staged = _pin(
+        staged = pin(
             jumped.alias("n")
             .join(
                 labels.select("node", F.col("label").alias("old")).alias("o"),
@@ -206,25 +195,25 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     UNDIRECTED degrees (the global-clustering denominator); integer
     arithmetic throughout so the result is hash-stable.
     """
-    e = (
+    # pin once (the pagerank pattern): the edge list feeds degrees,
+    # the orientation join, and the closing-edge probe — without
+    # this the (possibly expensive) upstream pair pipeline
+    # re-executes for each of those consumers. LAZY (optimization
+    # r14): the single consuming action materializes it in place of
+    # a dedicated eager-checkpoint job.
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-        # pin once (the pagerank pattern): the edge list feeds degrees,
-        # the orientation join, and the closing-edge probe — without
-        # this the (possibly expensive) upstream pair pipeline
-        # re-executes for each of those consumers. LAZY (optimization
-        # r14): the single consuming action materializes it in place of
-        # a dedicated eager-checkpoint job.
-        .localCheckpoint(eager=False)
     )
-    deg = (
+    # consumed by the wedge census AND the orientation join (lazy:
+    # shared blocks, no dedicated job)
+    deg = pin(
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)  # consumed by the wedge census AND the orientation join (lazy: shared blocks, no dedicated job)
     )
     wedges = deg.agg(
         F.coalesce(F.expr("CAST(sum((deg * (deg - 1)) DIV 2) AS BIGINT)"), F.lit(0)).alias(
@@ -236,11 +225,11 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     ed = e.join(da, "a").join(db, "b")
     key_a = F.struct(F.col("da").alias("d"), F.col("a").alias("n"))
     key_b = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
-    oriented = ed.select(
+    oriented = pin(ed.select(
         F.when(key_a < key_b, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(key_a < key_b, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(key_a < key_b, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=False)  # consumed three times: both wedge legs + closing-edge probe (lazy pin)
+    ))  # consumed three times: both wedge legs + closing-edge probe (lazy pin)
     o1 = oriented.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
     o2 = oriented.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     wedge_pairs = o1.join(o2, "u").where(
@@ -285,7 +274,7 @@ def k_core(
     # lazy pin + count fusion (optimization r14): each round's count is
     # the action that materializes that round's pinned edge set — one
     # job per peel round instead of two
-    cur = (
+    cur = pin(
         e.select(
             F.explode(
                 F.array(
@@ -295,7 +284,6 @@ def k_core(
             ).alias("x")
         )
         .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"))
-        .localCheckpoint(eager=False)
     )
     prev_n = cur.count()
     converged = prev_n == 0
@@ -304,10 +292,9 @@ def k_core(
             break
         deg = cur.groupBy("a").agg(F.count("*").alias("_deg"))
         keep = deg.where(F.col("_deg") >= k).select("a")
-        nxt = (
+        nxt = pin(
             cur.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=False)
         )
         n = nxt.count()
         cur = nxt
@@ -335,30 +322,28 @@ def local_clustering(edges: DataFrame, src: str = "src", dst: str = "dst") -> Da
     skew bound carries over — but the closing-edge probe is an INNER
     join (the triple is needed, not just its existence), and each found
     triangle (u, x, y) credits all three corners via one explode."""
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    deg = (
+    deg = pin(
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
     )
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("db"))
     ed = e.join(da, "a").join(db, "b")
     key_a = F.struct(F.col("da").alias("d"), F.col("a").alias("n"))
     key_b = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
-    oriented = ed.select(
+    oriented = pin(ed.select(
         F.when(key_a < key_b, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(key_a < key_b, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(key_a < key_b, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=False)
+    ))
     o1 = oriented.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
     o2 = oriented.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     wedge_pairs = o1.join(o2, "u").where(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 # --------------------------------------------------------------------- exact
 
 
@@ -422,8 +424,8 @@ def simhash_pairs(
     bigger than that is template/boilerplate mass-collision whose
     O(bucket²) pair space no plan can bound (the MAX_SHINGLE_DF
     argument); its pairs only surface through the other, non-degenerate
-    quarters they share. The quarter table is localCheckpoint-
-    materialized (4 small rows per doc) so the signature aggregation
+    quarters they share. The quarter table is pinned
+    (4 small rows per doc) so the signature aggregation
     runs once, not once per join branch — the components edge-list
     pattern."""
     sig = _simhash_signatures(df, id_col, text_col, portable=portable)
@@ -456,7 +458,7 @@ def hamming_pairs(
             .where(F.col("_bsz") <= max_bucket)
             .drop("_bsz")
         )
-    quarters = quarters.localCheckpoint(eager=True)
+    quarters = pin(quarters, eager=True)
     a = quarters.alias("a")
     b = quarters.alias("b")
     ham = F.bit_count(F.col("a._lo").bitwiseXOR(F.col("b._lo"))) + F.bit_count(

@@ -51,16 +51,17 @@ def knn_exact_expr(
     query_vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Strategy 1: broadcast nested-loop + codegen cosine + window top-k."""
+    """Strategy 1: broadcast nested-loop + codegen cosine + window top-k.
+    ``vec_col`` and ``query_vec_col`` are top-level column names."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-        V.norm_fixed(f"`{query_vec_col}`", dim).alias("qnorm"),
+        F.col(V.quote_col(query_vec_col)).alias("qv"),
+        V.norm_fixed(V.quote_col(query_vec_col), dim).alias("qnorm"),
     ).where(F.col("qnorm") > 0)  # zero-norm excluded: cosine undefined
     c = vectors.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+        F.col(V.quote_col(vec_col)).alias("cv"),
+        V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     cond = F.lit(True) if not exclude_self else F.col("query_id") != F.col("neighbor_id")
     scored = c.join(F.broadcast(q), cond).withColumn(
@@ -199,7 +200,8 @@ def knn_ivf(
     only against its top-`nprobe` nearest cells, exact rerank inside.
 
     At 100 TB the assignment is a write-time partitioning column, so a
-    query touches nprobe/n_clusters of the data (partition pruning)."""
+    query touches nprobe/n_clusters of the data (partition pruning).
+    ``vec_col`` is a top-level column name."""
     model, centroids = fit_ivf_centroids(vectors, n_clusters, vec_col)
     assigned = model.transform(unit_vectors_ml(vectors, vec_col)).withColumnRenamed(
         "prediction", "cell"
@@ -224,15 +226,15 @@ def knn_ivf(
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("qnorm"),
+        F.col(V.quote_col(vec_col)).alias("qv"),
+        V.norm_fixed(V.quote_col(vec_col), dim).alias("qnorm"),
     )
     cand = (
         assigned.select(
             F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
+            F.col(V.quote_col(vec_col)).alias("cv"),
             F.col("cell"),
-            V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+            V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
         )
         .join(probe_df, "cell")  # restrict to probed cells per query
         .join(F.broadcast(q), "query_id")

@@ -117,17 +117,18 @@ def mmr_rerank(
     """(query_id, neighbor_id, rank, relevance): greedy MMR selection of
     ``k`` items from the top-``fetch_c`` EXACT cosine candidates per
     query. ``relevance`` is the plain query-candidate cosine (pround
-    4), so a caller can see exactly what diversity traded away."""
+    4), so a caller can see exactly what diversity traded away.
+    ``vec_col`` and ``query_vec_col`` are top-level column names."""
     _check_params(k, fetch_c, lam_permille)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
-        V.as_double(F.col(query_vec_col)).alias("qv"),
-        V.norm_fixed(f"`{query_vec_col}`", dim).alias("qnorm"),
+        V.as_double(F.col(V.quote_col(query_vec_col))).alias("qv"),
+        V.norm_fixed(V.quote_col(query_vec_col), dim).alias("qnorm"),
     ).where(F.col("qnorm") > 0)
     c = vectors.select(
         F.col(id_col).alias("nid"),
-        V.as_double(F.col(vec_col)).alias("cv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+        V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
+        V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     cond = (
         F.col("query_id") != F.col("nid") if exclude_self else F.lit(True)
@@ -166,7 +167,8 @@ def mmr_rerank_candidates(
     shape as the ANN searchers' own rerank fetch. The greedy itself is
     identical to :func:`mmr_rerank` (shared pool/selection path), so
     exact-pool vs ANN-pool differences come ONLY from pool membership
-    — which Q(knn_mmr_ivf)'s overlap gate measures."""
+    — which Q(knn_mmr_ivf)'s overlap gate measures.
+    ``vec_col`` is a top-level column name."""
     _check_params(k, fetch_c, lam_permille)
     cand = candidates.select(
         "query_id",
@@ -175,8 +177,8 @@ def mmr_rerank_candidates(
     )
     vecs = vectors.select(
         F.col(id_col).alias("nid"),
-        V.as_double(F.col(vec_col)).alias("cv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+        V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
+        V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     scored = cand.join(vecs.hint("shuffle_hash"), "nid").select(
         "query_id", "nid", "score", "cv", "cnorm"

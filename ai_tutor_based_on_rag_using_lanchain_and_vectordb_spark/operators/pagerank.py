@@ -6,7 +6,7 @@ here to rank documents inside near-duplicate similarity neighborhoods
 Scale shape: each iteration is one join of the edge list against the
 current rank vector plus one aggregation on the destination key — the
 classic Pregel-style plan; lineage is cut per iteration with a
-localCheckpoint (the components pattern) so the DAG stays O(1) deep.
+pin (the components pattern) so the DAG stays O(1) deep.
 No driver state beyond the node count (a 1-value collect, bounded by
 construction).
 
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exact as X
+from ..session import pin
 
 PR_DEC = "decimal(28,12)"
 PR_DEC_SQL = "DECIMAL(28,12)"
@@ -42,11 +43,15 @@ def pagerank_undirected(
     both directions are materialized internally). Nodes are the edge
     endpoints; every node therefore has degree ≥ 1 (no dangling
     mass)."""
-    sym = (
-        # explode-symmetrization (optimization r13): both directions
-        # from ONE pass over the edge plan — the former self-union
-        # executed the (possibly expensive) upstream edge computation
-        # twice, once per union branch
+    # explode-symmetrization (optimization r13): both directions from ONE
+    # pass over the edge plan — the former self-union executed the
+    # (possibly expensive) upstream edge computation twice, once per
+    # union branch. Pinned once: every iteration joins this edge list,
+    # and without the pin the upstream edge computation would re-execute
+    # per iteration. LAZY (optimization r14): the node-count action
+    # below materializes sym and deg together in one job — the former
+    # two eager checkpoints plus the count cost three driver round trips.
+    sym = pin(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .select(
             F.explode(
@@ -61,18 +66,9 @@ def pagerank_undirected(
             ).alias("x")
         )
         .select(F.col("x.src").alias("src"), F.col("x.dst").alias("dst"))
-        # pin once: every iteration joins this edge list, and without
-        # the checkpoint the upstream edge computation would re-execute
-        # per iteration. LAZY (optimization r14): the node-count action
-        # below materializes sym and deg together in one job — the
-        # former two eager checkpoints plus the count cost three driver
-        # round trips.
-        .localCheckpoint(eager=False)
     )
     deg = sym.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
-    deg = deg.select(F.col("src").alias("node_id"), "deg").localCheckpoint(
-        eager=False
-    )
+    deg = pin(deg.select(F.col("src").alias("node_id"), "deg"))
     # the only driver-side scalar: the node count (bounded: one value);
     # this action materializes both lazy pins above
     n = deg.count()
@@ -91,20 +87,18 @@ def pagerank_undirected(
         sums = contrib.groupBy("node_id").agg(
             F.sum(F.col("c").cast(PR_DEC)).cast("double").alias("s")
         )
-        state = (
-            deg.join(sums, "node_id")
-            .select(
+        # cut lineage each iteration; LAZY (optimization r14): the
+        # iteration count is FIXED — no per-round driver decision — so
+        # all five pins materialize inside the consumer's single job
+        # instead of five dedicated checkpoint jobs
+        state = pin(
+            deg.join(sums, "node_id").select(
                 "node_id",
                 "deg",
                 X.pround(
                     F.lit(teleport) + F.lit(damping) * F.col("s"), digits
                 ).alias("rank"),
             )
-            # cut lineage each iteration; LAZY (optimization r14): the
-            # iteration count is FIXED — no per-round driver decision —
-            # so all five pins materialize inside the consumer's single
-            # job instead of five dedicated checkpoint jobs
-            .localCheckpoint(eager=False)
         )
     return state.select("node_id", "rank")
 

@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 __all__ = ["anti_filter", "clear_emptied_partitions", "delete_ids_from_layout"]
 
 
@@ -121,9 +123,7 @@ def delete_ids_from_layout(
     )
     # materialize the survivors BEFORE overwriting the files the plan
     # reads from (the upsert paths' contract)
-    kept = anti_filter(existing, victim_ids, id_col).localCheckpoint(
-        eager=True
-    )
+    kept = pin(anti_filter(existing, victim_ids, id_col), eager=True)
     (
         kept.repartition(part_col)
         .write.mode("overwrite")

@@ -311,8 +311,8 @@ def _exact_rerank(
         short.join(
             rerank_vectors.select(
                 F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("cv"),
-                V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+                F.col(V.quote_col(vec_col)).alias("cv"),
+                V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
             ),
             "neighbor_id",
         )

@@ -20,6 +20,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
+from ..session import pin
 from . import knn as KNN
 from .knn import fit_ivf_centroids, unit_vectors_ml
 from .pq import (
@@ -276,7 +278,8 @@ def upsert_ivfpq_index(
     growth/drift refit triggers live in ann_index.upsert_ivf_index;
     this is the matching signal for the PQ side: a refit policy
     re-fits the codebooks when the error trend of incoming batches
-    rises above the build-time distortion."""
+    rises above the build-time distortion.
+    ``vec_col`` is a top-level column name."""
     from .ann_index import _nearest_cell_expr
 
     cent_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
@@ -285,7 +288,7 @@ def upsert_ivfpq_index(
     cb = read_codebooks(spark, path)
     dim = cb.shape[0] * cb.shape[2]
 
-    cell_col, _dist = _nearest_cell_expr(f"`{vec_col}`", centroids, cells, dim)
+    cell_col, _dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells, dim)
     # preserve whatever metadata the layout carries (declared at build
     # time via meta_cols; the batch must supply the same columns)
     codes_path = os.path.join(path, "codes")
@@ -303,7 +306,7 @@ def upsert_ivfpq_index(
     assigned = assigned.where(F.col("cell").isNotNull())
     enc = encode_pq(assigned, cb, id_col, vec_col,
                     keep_cols=("cell", *meta_cols))
-    enc = enc.localCheckpoint(eager=True)
+    enc = pin(enc, eager=True)
     batch_cells = [
         int(r["cell"]) for r in enc.select("cell").distinct().collect()
     ]
@@ -329,9 +332,9 @@ def upsert_ivfpq_index(
     touched = sorted(set(batch_cells) | {int(r["cell"]) for r in prior})
     existing = spark.read.parquet(codes_path).where(F.col("cell").isin(touched))
     keep = existing.join(enc.select(id_col), id_col, "left_anti")
-    merged = keep.select(id_col, "codes", "vnorm", *meta_cols, "cell").unionByName(
+    merged = pin(keep.select(id_col, "codes", "vnorm", *meta_cols, "cell").unionByName(
         enc.select(id_col, "codes", "vnorm", *meta_cols, "cell")
-    ).localCheckpoint(eager=True)  # materialize before overwriting inputs
+    ), eager=True)  # materialize before overwriting inputs
     (
         merged.repartition("cell")
         .write.mode("overwrite")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exact as X
+from ..session import pin
 
 __all__ = ["ranking_metrics"]
 
@@ -80,16 +81,12 @@ def ranking_metrics(
     # universe, the hit semi-join and (graded) the DCG join — unpinned,
     # each consumer re-ran the caller's whole ranking plan (for the
     # BM25/fusion rankers, the full scoring pipeline, 2-3×). ``rel``
-    # feeds n_rel and the semi-join. Both frames are top-k/Q-bounded.
-    # Streaming inputs cannot be checkpointed — skip the pin there (the
-    # micro-batch planner handles subtree reuse); a caller-side pin of
-    # an already-pinned frame only copies Q·k rows, which is noise.
-    if not ranked.isStreaming:
-        ranked = ranked.localCheckpoint(eager=False)
+    # feeds n_rel and the semi-join. Both frames are top-k/Q-bounded; a
+    # caller-side pin of an already-pinned frame only copies Q·k rows,
+    # which is noise.
+    ranked = pin(ranked)
     base = ranked.select(q).distinct()
-    rel = relevant.select(q, doc_col).distinct()
-    if not rel.isStreaming:
-        rel = rel.localCheckpoint(eager=False)
+    rel = pin(relevant.select(q, doc_col).distinct())
     n_rel = rel.groupBy(q).agg(F.count(F.lit(1)).cast("long").alias("n_rel"))
 
     topk = ranked.where(F.col(rank_col) <= k).select(q, doc_col, rank_col)

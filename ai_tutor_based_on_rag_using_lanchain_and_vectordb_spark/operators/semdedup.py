@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..session import pin
 
 DEFAULT_THRESHOLD = 0.3
 
@@ -65,12 +66,14 @@ def assign_cells(
     ``centroids`` short-circuits the fit entirely — the production
     shape: the quantizer is amortized infrastructure shared with the
     ANN index and refit on drift, not refit per dedup pass. Rows
-    outside the cosine domain (NULL / zero-norm) are dropped."""
+    outside the cosine domain (NULL / zero-norm) are dropped.
+    ``vec_col`` is a top-level column name."""
     from .ann_index import _nearest_cell_expr
     from .knn import fit_ivf_centroids
 
+    vq = V.quote_col(vec_col)
     base = vectors.select(id_col, vec_col).where(
-        F.col(vec_col).isNotNull() & (V.norm_fixed(f"`{vec_col}`", dim) > 0)
+        F.col(vq).isNotNull() & (V.norm_fixed(vq, dim) > 0)
     )
     if n_cells == 1 and centroids is None:
         # no quantizer needed: one cell, distance measured to the mean
@@ -87,7 +90,7 @@ def assign_cells(
     if len(centroids) > _EXPR_ASSIGN_MAX_CELLS:
         return _assign_cells_numpy(base, centroids, id_col, vec_col)
     cell_col, dist_col = _nearest_cell_expr(
-        f"`{vec_col}`", centroids, list(range(len(centroids))), dim
+        vq, centroids, list(range(len(centroids))), dim
     )
     return base.select(
         id_col, vec_col, cell_col.alias("cell"), dist_col.alias("centroid_dist")
@@ -162,15 +165,16 @@ def _mean_direction_dist(
     centroid's distance)."""
     from .ann_index import _nearest_cell_expr
 
+    vq = V.quote_col(vec_col)
     sums = (
-        vectors.select(F.posexplode(V.as_double(F.col(vec_col))).alias("dim", "x"))
+        vectors.select(F.posexplode(V.as_double(F.col(vq))).alias("dim", "x"))
         .groupBy("dim")
         .agg(F.avg("x").alias("m"))
         .orderBy("dim")
         .collect()
     )  # bounded: one row per embedding dimension
     centroid = np.asarray([r["m"] for r in sums], dtype=np.float64)
-    _, dist_col = _nearest_cell_expr(f"`{vec_col}`", centroid[None, :], [0], dim)
+    _, dist_col = _nearest_cell_expr(vq, centroid[None, :], [0], dim)
     return vectors.withColumn("centroid_dist", dist_col)
 
 
@@ -219,7 +223,7 @@ def semdedup(
     # (optimization r14): the collapse preflight (has_exact_duplicates,
     # the first action over it) materializes the pin inside its own
     # job, dropping the dedicated eager-checkpoint round trip.
-    assigned = assigned.localCheckpoint(eager=False)
+    assigned = pin(assigned)
     if order == "centroid" and n_cells == 1 and centroids is None:
         assigned = _mean_direction_dist(
             assigned.drop("centroid_dist"), id_col, vec_col, dim

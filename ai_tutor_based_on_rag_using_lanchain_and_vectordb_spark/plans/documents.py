@@ -26,6 +26,7 @@ from ..catalog import load_table
 from ..functions import text as TX
 from ..functions import exact as X
 from ..functions import textstats as TS
+from ..session import pin
 
 CHUNK_SIZE = 120
 CHUNK_OVERLAP = 24
@@ -260,10 +261,10 @@ def ngram_jaccard_pairs_df(
     # LAZY pin (optimization r13): the shingle frame feeds BOTH the
     # per-doc counts and the inverted-index pair generation — unpinned,
     # the explode + distinct (a full shuffle of every shingle string)
-    # executed once per consumer. localCheckpoint (not .cache()) so the
+    # executed once per consumer. A checkpoint pin (not .cache()) so the
     # blocks die with the plan instead of lingering across queries; the
     # pinned rows are (ids, shingle) — no document text.
-    sh = _shingles(reps).localCheckpoint(eager=False)
+    sh = pin(_shingles(reps))
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     # Inverted-index pair generation (no self-join): group the posting
     # list per (lang, shingle), emit each unordered doc pair inside the
@@ -501,18 +502,7 @@ def quality_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         BFS_MAX_HOPS,
         src="doc_a",
         dst="doc_b",
-        checkpoint_dir=_components_checkpoint_dir(),
     ).select(F.col("node").alias("doc_id"), "hops")
-
-
-def _components_checkpoint_dir() -> str | None:
-    """Cluster runs export ``SPARK_GRAFT_CHECKPOINT_DIR`` (an HDFS/S3
-    path) to get RELIABLE per-round checkpointing in the iterative
-    components without code edits; unset (local[N]) keeps the fast
-    executor-local localCheckpoint default."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
 
 
 def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,10 +514,7 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components(
-        pairs, src="doc_a", dst="doc_b",
-        checkpoint_dir=_components_checkpoint_dir(),
-    ).select(
+    return connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "component"
     )
 
@@ -636,10 +623,9 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    comp = connected_components(
-        pairs, src="doc_a", dst="doc_b",
-        checkpoint_dir=_components_checkpoint_dir(),
-    ).select(F.col("node").alias("doc_id"), "component")
+    comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
+        F.col("node").alias("doc_id"), "component"
+    )
     labeled = docs.join(comp, "doc_id", "left").select(
         "doc_id",
         F.coalesce("component", "doc_id").alias("component"),
@@ -903,7 +889,7 @@ def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus stats AND the relevance truth: the shared-tokenizer
     # invariant, with no corpus-wide postings shuffle anywhere in the
     # plan and no re-tokenization per consumer
-    base = tokenized_base(docs, BM25_QUERIES).localCheckpoint(eager=False)
+    base = pin(tokenized_base(docs, BM25_QUERIES))
     ranked = bm25_search(spark, docs, BM25_QUERIES, k=EVAL_K, base=base)
     nq = qdf.groupBy("query_id").agg(
         F.countDistinct("term").alias("nt")
@@ -954,15 +940,14 @@ def retrieval_eval_rankers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE pinned tokenize pass (optimization r13, guide §2.3 — see
     # retrieval_eval): shared by the BM25 scoring and both relevance
     # truths, no corpus-wide (doc, term) shuffle in the plan
-    base = tokenized_base(docs, BM25_QUERIES).localCheckpoint(eager=False)
+    base = pin(tokenized_base(docs, BM25_QUERIES))
     # lexical + vector rankings at fusion depth, each pinned: consumed
     # by their own metric chain AND the fusion
-    lex = bm25_search(
-        spark, docs, BM25_QUERIES, k=RRF_K, base=base
-    ).select("query_id", "doc_id", "rank").localCheckpoint(eager=False)
-    vec = vector_ranked_named(spark, sf_dir, RRF_K).localCheckpoint(
-        eager=False
+    lex = pin(
+        bm25_search(spark, docs, BM25_QUERIES, k=RRF_K, base=base)
+        .select("query_id", "doc_id", "rank")
     )
+    vec = pin(vector_ranked_named(spark, sf_dir, RRF_K))
     fused = rrf_fuse([lex, vec], EVAL_K).select(
         "query_id", "doc_id", "rank"
     )
@@ -972,12 +957,11 @@ def retrieval_eval_rankers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hybrid_rrf": fused,
     }
     nq = qdf.groupBy("query_id").agg(F.countDistinct("term").alias("nt"))
-    matched = (
+    matched = pin(  # feeds binary AND graded truth
         matched_from_base(base)
         .join(F.broadcast(qdf), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.countDistinct("term").alias("c"))
-        .localCheckpoint(eager=False)  # feeds binary AND graded truth
     )
     relevant = (
         matched.join(F.broadcast(nq), "query_id")

@@ -17,6 +17,7 @@ from ..operators import dedup as DD
 from ..operators import embed as EMB
 from ..operators import knn as KNN
 from ..operators import splitter as SPL
+from ..session import pin
 from . import chat
 
 
@@ -69,7 +70,7 @@ def curation_pipeline_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_text = surv_docs.join(
         scrubbed.withColumnRenamed("n_spans", "_n_spans"), "doc_id"
     )
-    packed = grouped_prefix_sum(
+    packed = pin(grouped_prefix_sum(  # consumed by four check aggregates
         with_text.select(
             "doc_id", "lang", "component", "norm_hash", "quality",
             "text", "removed_chars", "scrubbed",
@@ -80,7 +81,7 @@ def curation_pipeline_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_tokens"),
         out_col="_cum",
         exact=True,
-    ).localCheckpoint(eager=True)  # consumed by four check aggregates
+    ), eager=True)
 
     c_hash = packed.agg(
         F.count("*").alias("obs"), F.countDistinct("norm_hash").alias("exp")
@@ -1939,7 +1940,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivf_index(emb, ip, n_cells=4)
     n_cells = spark.read.parquet(f"{ip}/centroids").count()
     n0 = int(read_stats(spark, ip)["cur_n"])
-    queries = emb.where(F.col("vec_id") < 3).localCheckpoint(eager=True)
+    queries = pin(emb.where(F.col("vec_id") < 3), eager=True)
     v_ivf = int(
         search_ivf_index(spark, ip, queries, k=1, nprobe=n_cells)
         .collect()[0]["neighbor_id"]
@@ -1973,7 +1974,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinfo = delete_ivfpq_ids(spark, pp, [v_pq])
     rows.append(("ivfpq_victim_deleted", pinfo["deleted"], 1))
     pf = tempfile.mkdtemp(prefix="purge_pqf_")
-    surv2 = emb.where(F.col("vec_id") != v_pq).localCheckpoint(eager=True)
+    surv2 = pin(emb.where(F.col("vec_id") != v_pq), eager=True)
     build_ivfpq_index(surv2, pf, n_cells=4, m=8, kc=16)
     got = _rowset(
         search_ivfpq_index(

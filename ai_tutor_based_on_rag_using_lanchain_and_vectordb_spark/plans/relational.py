@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import exact as X
+from ..session import pin
 
 
 def _anchor(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -253,7 +254,7 @@ def session_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and its main pass would otherwise re-run the events scan +
     # session agg — the session table is the operator's working set
     # (orders of magnitude below the event log it condenses)
-    sess = _sessions_60m(spark, sf_dir).localCheckpoint(eager=True)
+    sess = pin(_sessions_60m(spark, sf_dir), eager=True)
     counted = interval_overlap_counts(
         sess, F.unix_micros(F.col("s_start")), F.unix_micros(F.col("s_end")),
         out_col="_n_all",
@@ -316,7 +317,7 @@ def session_concurrency_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     for this linear-size answer."""
     from ..operators.sweep import count_le_values
 
-    sess = _sessions_60m(spark, sf_dir).localCheckpoint(eager=True)
+    sess = pin(_sessions_60m(spark, sf_dir), eager=True)
     probes = sess.select(F.col("s_start").alias("at_ts")).distinct()
     starts = sess.select(F.unix_micros("s_start").alias("k"))
     ends = sess.select(F.unix_micros("s_end").alias("k"))

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import _read_schema, ensure_nanos_conf, load_table
-from ..session import tune_for_oracle
+from ..session import pin, tune_for_oracle
 from ..streaming import windows as W
 
 
@@ -238,7 +238,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             if kmv_state["sketch"] is None
             else kmv_merge(kmv_state["sketch"], sk, 256)
         )
-        kmv_state["sketch"] = merged.localCheckpoint(eager=True)
+        kmv_state["sketch"] = pin(merged, eager=True)
 
     q = (
         _stream_events(spark, sf_dir)
@@ -268,7 +268,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             if cms_state["sketch"] is None
             else cms_merge(cms_state["sketch"], sk)
         )
-        cms_state["sketch"] = merged.localCheckpoint(eager=True)
+        cms_state["sketch"] = pin(merged, eager=True)
 
     q = (
         _stream_events(spark, sf_dir)
@@ -445,7 +445,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("i", "j")
                 .agg(F.sum("s").alias("s"), F.sum("n_rows").alias("n_rows"))
             )
-            cov_state["m"] = merged.localCheckpoint(eager=True)
+            cov_state["m"] = pin(merged, eager=True)
             cov_state["batches"] += 1
 
         q = (
@@ -495,7 +495,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("user_id")
             .agg(F.sum("total").alias("total"), F.sum("n").alias("n"))
         )
-        view_state["v"] = merged.localCheckpoint(eager=True)
+        view_state["v"] = pin(merged, eager=True)
         view_state["batches"] += 1
 
     ev_src_batch = batch_events.select("user_id", "value")

@@ -59,6 +59,7 @@ _MIX_R = 2**31
 
 from ..functions.textstats import EN_STOPWORDS
 from ..functions.textstats import ws_tokens as _tokens  # shared tokenizer
+from ..session import pin
 
 
 def _grams(ws: F.Column, n: int) -> F.Column:
@@ -677,12 +678,12 @@ def span_scrub_extents(docs: DataFrame) -> DataFrame:
     # joins) — without the pin every consumer re-runs the gram explode
     # + duplicate join. The pinned rows are 3 small ints + a bool per
     # DUPLICATED occurrence only (the dup join already filtered).
-    marks = grams.join(dup.hint("shuffle_hash"), "g").select(
+    marks = pin(grams.join(dup.hint("shuffle_hash"), "g").select(
         "doc_id",
         "i",
         (F.col("i") + (SPAN_L - 1)).alias("e"),
         (key == F.col("first_key")).alias("is_first"),
-    ).localCheckpoint(eager=False)
+    ))
     # pin BOTH islands frames (optimization r13): hit islands feed the
     # cut join AND the unprotected-docs anti-join (2 consumers),
     # protected islands feed the inner gaps, the tail gaps and that
@@ -690,16 +691,16 @@ def span_scrub_extents(docs: DataFrame) -> DataFrame:
     # window+groupBy over the pinned marks (5 island computations per
     # run instead of 2). The pinned rows are one (doc_id, 2 ints) per
     # merged island — strictly fewer than the marks already pinned.
-    hit_islands = _span_islands(
-        marks.where(~F.col("is_first")).select("doc_id", "i", "e")
-    ).select(
-        "doc_id", F.col("s").alias("hs"), F.col("e").alias("he")
-    ).localCheckpoint(eager=False)
-    prot_islands = _span_islands(
-        marks.where(F.col("is_first")).select("doc_id", "i", "e")
-    ).select(
-        "doc_id", F.col("s").alias("ps"), F.col("e").alias("pe")
-    ).localCheckpoint(eager=False)
+    hit_islands = pin(
+        _span_islands(
+            marks.where(~F.col("is_first")).select("doc_id", "i", "e")
+        ).select("doc_id", F.col("s").alias("hs"), F.col("e").alias("he"))
+    )
+    prot_islands = pin(
+        _span_islands(
+            marks.where(F.col("is_first")).select("doc_id", "i", "e")
+        ).select("doc_id", F.col("s").alias("ps"), F.col("e").alias("pe"))
+    )
 
     # complement of the protected islands over [1, len(t)], only for
     # docs that have hits (others pass through untouched anyway)
@@ -965,7 +966,7 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode + fold runs twice; the pinned stream is ≤ min(grams, B)
     # small-int rows per doc (the 100× probe measured the re-compute
     # at ~2×).
-    return dsir_sample_from_counts(fbc.localCheckpoint(eager=True))
+    return dsir_sample_from_counts(pin(fbc, eager=True))
 
 
 def dsir_bucket_counts(toks: DataFrame) -> DataFrame:

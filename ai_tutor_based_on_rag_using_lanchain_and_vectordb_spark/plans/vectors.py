@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import exact as X
 from ..functions import vector as V
-from ..session import default_parallelism
+from ..session import default_parallelism, pin
 
 K = 5
 N_QUERIES = 5  # vec_id < 5 are the designated query vectors
@@ -732,16 +732,16 @@ def semantic_bfs_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin; 12 GiB always passes, 4 GiB always OOMs). So ~8 GiB IS the
     live working set at this scale. The resident structure is (a) the
     materialized
-    cell-blocked edge list (localCheckpoint blocks; O(corpus) rows by
+    cell-blocked edge list (pinned blocks; O(corpus) rows by
     the cell-size cap — never quadratic — but stored in memory+disk
     for the whole loop) plus (b) each round's frontier⋈edges
     shuffled-hash builds across all concurrent tasks (aggregate ≈ |E|
     in flight). Both scale LINEARLY with the corpus, so the knob is
     per-executor sizing, not the algorithm: a cluster divides |E|
     across executors (32-thread/12 GiB here ≈ 384 MiB per concurrent
-    task at 100×), raises shuffle partitions, or passes
-    ``checkpoint_dir`` to keep edge blocks on reliable storage instead
-    of executor memory."""
+    task at 100×), raises shuffle partitions, or sets
+    ``spark.checkpoint.dir`` so ``session.pin`` keeps edge blocks on
+    reliable storage instead of executor memory."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()  # bounded sizing preflight, as in the ANN builders
     n_cells = max(1, n // SEMDEDUP_CELL_TARGET)
@@ -761,9 +761,7 @@ def semantic_bfs_production_df(
     # count and the scorer itself — fewer than semdedup's four), so the
     # first consumer materializes the checkpoint inside its own job and
     # the dedicated eager-materialization job disappears
-    assigned = assign_cells(
-        emb, n_cells, centroids=centroids
-    ).localCheckpoint(eager=False)
+    assigned = pin(assign_cells(emb, n_cells, centroids=centroids))
     labeled = assigned.select(
         "vec_id", "embedding", F.col("cell").alias("label")
     )

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -48,3 +48,15 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: the package's one pin policy. With a
+    checkpoint dir on the session (Spark's ``spark.checkpoint.dir`` conf,
+    the cluster deployment switch) this is a reliable ``checkpoint()``
+    that survives executor loss; without one, an executor-local
+    ``localCheckpoint()``. ``eager`` materializes now in a job of its
+    own; a lazy pin is materialized by the first action over it."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

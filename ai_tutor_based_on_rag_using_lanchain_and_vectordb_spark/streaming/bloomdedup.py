@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.bloom import bloom_build, bloom_merge, bloom_probe
+from ..session import pin
 
 __all__ = ["BloomDedupState", "stream_bloom_dedup"]
 
@@ -112,12 +113,11 @@ class BloomDedupState:
 
         all_cols = F.struct(*[F.col(c) for c in batch_df.columns])
         w = Window.partitionBy(key_col).orderBy(F.xxhash64(all_cols))
-        batch = (
+        batch = pin(  # pin rows: sink + state writes
             batch_df.where(F.col(key_col).isNotNull())
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint(eager=True)  # pin rows: sink + state writes
+            .drop("_rn"), eager=True
         )
         sk = self.sketch(spark, last)
         hist_keys = self.keys(spark, last)
@@ -126,7 +126,7 @@ class BloomDedupState:
         else:
             probed = bloom_probe(
                 batch, F.col(key_col), sk, self.m_bits, self.k_hashes,
-                pin_input=False,  # batch is already localCheckpointed
+                pin_input=False,  # batch is already pinned
             )
             misses = probed.where(~F.col("bloom_hit")).drop("bloom_hit")
             cands = probed.where(F.col("bloom_hit")).drop("bloom_hit")
@@ -134,7 +134,7 @@ class BloomDedupState:
                 hist_keys.withColumnRenamed("key", key_col), key_col, "left_anti"
             )
             novel = misses.unionByName(verified)
-        novel = novel.localCheckpoint(eager=True)
+        novel = pin(novel, eager=True)
 
         sink(novel, epoch_id)
 

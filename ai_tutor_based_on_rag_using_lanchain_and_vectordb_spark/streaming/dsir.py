@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textstats import ws_tokens
 from ..plans.trainprep import dsir_bucket_counts, dsir_sample_from_counts
+from ..session import pin
 
 __all__ = ["DsirState", "stream_dsir"]
 
@@ -98,9 +99,9 @@ class DsirState:
             new = new.join(
                 hist.select("doc_id").distinct(), "doc_id", "left_anti"
             )
-        fbc = dsir_bucket_counts(
+        fbc = pin(dsir_bucket_counts(
             new.select("doc_id", ws_tokens(F.col("text")).alias("ws"))
-        ).localCheckpoint(eager=True)
+        ), eager=True)
         # write THIS epoch's counts (overwrite-safe on replay), then
         # commit the marker — the bloomdedup crash contract. An epoch
         # whose batch fully dedupes away (or carries only <2-token

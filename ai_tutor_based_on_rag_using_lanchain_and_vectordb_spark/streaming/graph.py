@@ -15,9 +15,9 @@ edges would produce (pytest pins stream ≡ batch across chunked
 arrivals; st12 in the streaming equivalence gate runs it end-to-end
 under foreachBatch).
 
-Scale shape: state is one (node, label) DataFrame, localCheckpointed
-per batch (executor memory; pass a checkpoint dir through
-``connected_components`` semantics for reliable storage on a real
+Scale shape: state is one (node, label) DataFrame, pinned per batch
+through ``session.pin`` (executor memory by default; a session with
+``spark.checkpoint.dir`` set keeps it on reliable storage on a real
 cluster). A batch touches only the components its edges reach — the
 common streaming case (most batches touch few components) costs
 O(batch) regardless of accumulated graph size, which is the entire
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.components import connected_components
+from ..session import pin
 
 __all__ = ["IncrementalComponents"]
 
@@ -37,9 +38,8 @@ __all__ = ["IncrementalComponents"]
 class IncrementalComponents:
     """Fold edge batches into a live (node, component) labeling."""
 
-    def __init__(self, checkpoint_dir: str | None = None) -> None:
+    def __init__(self) -> None:
         self._labels: DataFrame | None = None
-        self._checkpoint_dir = checkpoint_dir
 
     def update(self, edges: DataFrame, src: str = "src", dst: str = "dst") -> None:
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -60,9 +60,7 @@ class IncrementalComponents:
                     F.coalesce("_ld", F.col("dst")).alias("dst"),
                 )
             )
-        comp = connected_components(
-            e, checkpoint_dir=self._checkpoint_dir
-        )  # node ∈ {old labels} ∪ {new nodes}
+        comp = connected_components(e)  # node ∈ {old labels} ∪ {new nodes}
         if labels is None:
             merged = comp.select("node", F.col("component").alias("label"))
         else:
@@ -76,7 +74,7 @@ class IncrementalComponents:
                 labels.select("node"), "node", "left_anti"
             ).select("node", F.col("component").alias("label"))
             merged = relabeled.unionByName(fresh)
-        self._labels = merged.localCheckpoint(eager=True)
+        self._labels = pin(merged, eager=True)
 
     def labels(self) -> DataFrame | None:
         """Current (node, label); None before the first batch."""

@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..session import pin
+
 __all__ = ["DeleteStreamState", "stream_index_deletes"]
 
 _MARKER = "last_committed_epoch.txt"
@@ -59,8 +61,7 @@ class DeleteStreamState:
         once — each apply_fn's locate probe broadcasts it."""
         if epoch_id <= self.last_epoch():
             return False
-        ids = batch_df.select(batch_df.columns[0]).dropDuplicates(
-        ).localCheckpoint(eager=True)
+        ids = pin(batch_df.select(batch_df.columns[0]).dropDuplicates(), eager=True)
         spark = batch_df.sparkSession
         for fn in self.apply_fns:
             fn(spark, ids)

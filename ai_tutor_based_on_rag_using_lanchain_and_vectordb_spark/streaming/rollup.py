@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def _batch_rollup(events: DataFrame, ts_col: str, user_col: str) -> DataFrame:
     return events.groupBy(F.to_date(ts_col).alias("day")).agg(
@@ -49,24 +51,24 @@ def upsert_daily_rollup(
 
     Safety details:
 
-    - ``new`` is localCheckpoint-ed (eager) so the ``days`` collect and
+    - ``new`` is pinned (eager) so the ``days`` collect and
       the merged write see the SAME rows even for a nondeterministic or
       concurrently-changing source; without it a day appearing only in
       the recomputation would silently replace a stored partition.
-    - ``merged`` is localCheckpoint-ed BEFORE the overwrite so the
+    - ``merged`` is pinned BEFORE the overwrite so the
       stored partitions are fully read and materialized before any file
       under ``path`` is replaced — the write never races its own input.
     - ``partitionOverwriteMode=dynamic`` is scoped to this write
       (saved/restored), so later ``overwrite``+``partitionBy`` writes in
       the same session keep their expected truncate-table semantics.
     """
-    new = _batch_rollup(events, ts_col, user_col).localCheckpoint(eager=True)
+    new = pin(_batch_rollup(events, ts_col, user_col), eager=True)
     if not os.path.exists(path):
         new.write.partitionBy("day").mode("overwrite").parquet(path)
         return
     days = [r["day"] for r in new.select("day").distinct().collect()]
     stored = spark.read.parquet(path).where(F.col("day").isin(days))
-    merged = (
+    merged = pin(
         new.alias("n")
         .join(stored.alias("s"), "day", "left")
         .select(
@@ -79,8 +81,7 @@ def upsert_daily_rollup(
             (
                 F.col("n.n_events") + F.coalesce(F.col("s.n_events"), F.lit(0))
             ).alias("n_events"),
-        )
-    ).localCheckpoint(eager=True)
+        ), eager=True)
     _KEY = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(_KEY, None)
     spark.conf.set(_KEY, "dynamic")

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..operators.semdedup import assign_cells
-from ..session import default_parallelism
+from ..session import default_parallelism, pin
 
 __all__ = ["SemDedupState", "stream_semdedup"]
 
@@ -137,7 +137,7 @@ class SemDedupState:
             # (redelivered row inside a NEW epoch) is not re-added —
             # state stays a set keyed by id
             new = new.join(hist.select("vec_id"), "vec_id", "left_anti")
-        new = new.localCheckpoint(eager=True)
+        new = pin(new, eager=True)
 
         # same-cell pairs with at least one NEW side, scored ONCE:
         # side A = the new batch (salted on hash(id), the

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.components import (
     connected_components,
 )
@@ -51,60 +53,151 @@ def test_driver_fast_path_equals_distributed(spark):
     assert fast == slow
 
 
-def test_checkpoint_mode_forces_distributed(spark, tmp_path):
-    # sanity: reliable-checkpoint coverage below must actually exercise
-    # the distributed rounds, not the driver shortcut
+def _rows_digest(df) -> str:
+    import hashlib
+
+    rows = sorted(tuple(r) for r in df.collect())
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+def _pin_paths(spark, sf_dir, work, ckpt=None) -> dict:
+    """Answers of four paths that pin: the distributed components and
+    BFS loops (lazy pins), the neardup plan entry, and one eager
+    pin-before-overwrite write path. With ``ckpt``, each answer is
+    followed by the number of files the checkpoint dir then holds.
+    Runs unchanged in the test session and in a child process whose
+    session sets ``spark.checkpoint.dir``."""
     import os
 
-    ckpt = str(tmp_path / "ckpt2")
-    df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    connected_components(df, checkpoint_dir=ckpt, max_driver_edges=0).collect()
-    assert any(fs for _, _, fs in os.walk(ckpt))
-
-
-def test_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint_dir engages reliable checkpoint(): same answer, and
-    RDD checkpoint files actually land in the directory (the
-    cluster-fault-tolerant mode the 100 TB deployment uses)."""
-    import os
-
-    ckpt = str(tmp_path / "ckpt")
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load_table
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.bfs import bfs_hops
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.bm25 import (
+        build_bm25_index,
+        compact_bm25_index,
+        upsert_bm25_index,
     )
-    rows = connected_components(
-        df, checkpoint_dir=ckpt, max_driver_edges=0
-    ).collect()
-    got = {r["node"]: r["component"] for r in rows}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-    written = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(ckpt)
-        for f in fs
-    ]
-    assert written, "reliable checkpoint wrote no files"
-
-
-def test_env_knob_drives_plan_entry_checkpointing(spark, sf_dir, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CHECKPOINT_DIR routes the neardup plan entries onto
-    reliable checkpoint() without code edits (cluster deployment knob)."""
-    import glob
-    import os
-
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans.documents import (
         neardup_components,
     )
 
-    ckpt = str(tmp_path / "plan_ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckpt)
-    out = neardup_components(spark, sf_dir)
-    assert out.count() > 0
-    written = glob.glob(os.path.join(ckpt, "**", "*"), recursive=True)
-    assert written, "env-driven reliable checkpoint wrote no files"
+    out: dict = {}
 
-    # unset → default localCheckpoint path still works
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
-    assert neardup_components(spark, sf_dir).count() == out.count()
+    def record(name, value):
+        out[name] = value
+        if ckpt is not None:
+            out[name + ".files"] = sum(len(fs) for _, _, fs in os.walk(ckpt))
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    )
+    cc = connected_components(edges, max_driver_edges=0)
+    record("components", sorted(map(list, cc.collect())))
+    seeds = spark.createDataFrame([(1,), (10,)], "node long")
+    hops = bfs_hops(edges, seeds, 2, max_driver_edges=0)
+    record("bfs", sorted(map(list, hops.collect())))
+    record("neardup", _rows_digest(neardup_components(spark, sf_dir)))
+    docs = load_table(spark, sf_dir, "documents")
+    path = os.path.join(work, "bm25")
+    build_bm25_index(docs.where("doc_id % 2 = 0"), path)
+    upsert_bm25_index(spark, path, docs.where("doc_id % 2 = 1"))
+    compact_bm25_index(spark, path)
+    record("bm25", [
+        _rows_digest(spark.read.parquet(os.path.join(path, part)))
+        for part in ("postings", "doclens")
+    ])
+    return out
+
+
+_RELIABLE_CHILD = """
+import json, sys
+from pyspark.sql import SparkSession
+from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.session import tune_for_oracle
+from tests.test_components import _pin_paths
+
+sf_dir, work, ckpt = sys.argv[1:4]
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.checkpoint.dir", ckpt)
+         .config("spark.driver.memory", "1g")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false")
+         .getOrCreate())
+tune_for_oracle(spark)
+assert spark.sparkContext.getCheckpointDir() is not None
+print(json.dumps(_pin_paths(spark, sf_dir, work, ckpt)))
+spark.stop()
+"""
+
+
+@pytest.fixture(scope="module")
+def pin_runs(spark, sf_dir, tmp_path_factory):
+    """``(local, reliable)`` answers of ``_pin_paths``: once in the test
+    session (no checkpoint dir, so local pins) and once in a child
+    process whose session sets ``spark.checkpoint.dir``. The reliable
+    session is a child process: a checkpoint dir on the shared test
+    SparkContext would switch every later test to reliable pins."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    tmp = tmp_path_factory.mktemp("pins")
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = _pin_paths(spark, sf_dir, str(tmp / "local"))
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [root, os.environ.get("PYTHONPATH", "")]
+    ))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_CHILD, sf_dir,
+         str(tmp / "reliable"), str(tmp / "ckpt")],
+        cwd=tmp, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return local, json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_checkpoint_mode_forces_distributed(pin_runs):
+    # sanity: the reliable-mode coverage must actually exercise the
+    # distributed rounds, not the driver shortcut — with
+    # max_driver_edges=0 the components loop pins, so files land
+    _, reliable = pin_runs
+    assert reliable["components.files"] > 0
+
+
+def test_reliable_checkpoint_mode(pin_runs):
+    """spark.checkpoint.dir engages reliable checkpoint() in
+    connected_components: same answer as local pins, and RDD checkpoint
+    files actually land in the directory (the cluster-fault-tolerant
+    mode the 100 TB deployment uses)."""
+    local, reliable = pin_runs
+    assert reliable["components"] == local["components"] == [
+        [1, 1], [2, 1], [3, 1], [4, 1], [10, 10], [11, 10]
+    ]
+    assert reliable["components.files"] > 0, "reliable checkpoint wrote no files"
+
+
+def test_env_knob_drives_plan_entry_checkpointing(pin_runs):
+    """The spark.checkpoint.dir conf routes the neardup plan entry onto
+    reliable checkpoint() without code edits (cluster deployment knob);
+    unset, the default localCheckpoint path gives the same answer."""
+    local, reliable = pin_runs
+    assert reliable["neardup"] == local["neardup"]
+    assert reliable["neardup.files"] > reliable["bfs.files"], (
+        "conf-driven reliable checkpoint wrote no files"
+    )
+
+
+def test_reliable_pins_land_in_checkpoint_dir(pin_runs):
+    """A session with ``spark.checkpoint.dir`` set turns every pin into a
+    reliable checkpoint: each path writes files into the dir, and its
+    answers equal the local-checkpoint answers."""
+    local, reliable = pin_runs
+    files = 0
+    for name, answer in local.items():
+        assert reliable[name] == answer, name
+        assert reliable[name + ".files"] > files, f"{name} wrote no checkpoint files"
+        files = reliable[name + ".files"]
 
 
 # --- k-core peeling ------------------------------------------------------

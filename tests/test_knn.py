@@ -66,3 +66,17 @@ def test_knn_ivf_recall_gate_passes(spark, sf_dir):
     row = knn_ivf_recall(spark, sf_dir).first()
     assert row["passed"] is True, row.asDict()
     assert row["n_queries"] == 5
+
+
+def test_exact_knn_over_backtick_column_name(spark, sf_dir):
+    # the vector column is resolved both through F.col and through SQL
+    # text; one quoting must serve both
+    emb = load_table(spark, sf_dir, "embeddings")
+    odd = emb.withColumnRenamed("embedding", "e`mb")
+    q = emb.where(F.col("vec_id") < 5)
+    oq = odd.where(F.col("vec_id") < 5)
+    plain = KNN.knn_exact_expr(emb, q, k=5).collect()
+    quoted = KNN.knn_exact_expr(
+        odd, oq, k=5, vec_col="e`mb", query_vec_col="e`mb"
+    ).collect()
+    assert sorted(map(tuple, quoted)) == sorted(map(tuple, plain))
