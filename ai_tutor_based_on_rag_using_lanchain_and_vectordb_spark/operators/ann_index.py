@@ -38,7 +38,9 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..session import pin
+from ..streaming.epochs import start_foreach_batch
 from .knn import fit_ivf_centroids, unit_vectors_ml
+from .partdelete import clear_emptied_partitions
 
 
 def build_ivf_index(
@@ -153,18 +155,6 @@ def _write_stats(spark: SparkSession, path: str, fit_n: int, fit_mean_dist: floa
 def read_stats(spark: SparkSession, path: str) -> dict:
     row = spark.read.parquet(_stats_path(path)).collect()[0]
     return dict(row.asDict())
-
-
-def _clear_emptied_partitions(spark, merged, codes_path, touched) -> None:
-    """Dynamic partition overwrite only rewrites partitions PRESENT in
-    the output — a touched cell whose every row moved elsewhere keeps
-    its old files and would serve stale codes. Overwrite such cells'
-    directories with an empty (schema-bearing) parquet so the stale
-    rows are gone and the reader still discovers the partition.
-    (Shared generalized form: operators/partdelete.py.)"""
-    from .partdelete import clear_emptied_partitions
-
-    clear_emptied_partitions(spark, merged, codes_path, touched, "cell")
 
 
 def delete_ivf_ids(
@@ -303,7 +293,7 @@ def upsert_ivf_index(
     )
     # a touched cell whose every row moved elsewhere is absent from the
     # dynamic overwrite and would keep stale files — clear it explicitly
-    _clear_emptied_partitions(spark, merged, vectors_path, touched)
+    clear_emptied_partitions(spark, merged, vectors_path, touched, "cell")
 
     stats = read_stats(spark, path)
     cur_n = int(stats["cur_n"]) + n_batch - replaced
@@ -355,7 +345,6 @@ def stream_ivf_index(
     dim: int = V.EMBEDDING_DIM,
     auto_refit: bool = False,
     n_cells: int = 16,
-    available_now: bool = True,
 ):
     """ST5-style continuous index maintenance: every micro-batch runs the
     partition-scoped upsert; with ``auto_refit`` the centroid re-fit
@@ -373,12 +362,7 @@ def stream_ivf_index(
                 id_col=id_col, vec_col=vec_col, dim=dim,
             )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)
 
 
 def search_ivf_index(

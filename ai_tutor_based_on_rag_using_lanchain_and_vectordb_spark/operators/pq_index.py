@@ -22,8 +22,10 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..session import pin
+from ..streaming.epochs import start_foreach_batch
 from . import knn as KNN
 from .knn import fit_ivf_centroids, unit_vectors_ml
+from .partdelete import clear_emptied_partitions
 from .pq import (
     _RESULT_SCHEMA,
     _adc_partial,
@@ -117,6 +119,10 @@ def auto_search_params(
     """
     n_cells = spark.read.parquet(os.path.join(path, "centroids")).count()
     n_codes = spark.read.parquet(os.path.join(path, "codes")).count()
+    return _search_params(k, n_cells, n_codes)
+
+
+def _search_params(k: int, n_cells: int, n_codes: int) -> tuple[int, int]:
     shortlist = max(20 * k, 100)
     avg = max(1.0, n_codes / max(1, n_cells))
     want = int(np.ceil(20.0 * shortlist / avg))
@@ -160,12 +166,7 @@ class IvfPqSearcher:
 
     def auto_params(self, k: int) -> tuple[int, int]:
         """:func:`auto_search_params` from the cached stats (no jobs)."""
-        shortlist = max(20 * k, 100)
-        avg = max(1.0, self.n_codes / max(1, self.n_cells))
-        want = int(np.ceil(20.0 * shortlist / avg))
-        floor = int(np.ceil(np.sqrt(max(1, self.n_cells))))
-        nprobe = max(1, min(int(self.n_cells), max(want, floor)))
-        return nprobe, shortlist
+        return _search_params(k, self.n_cells, self.n_codes)
 
     def search(
         self,
@@ -342,9 +343,7 @@ def upsert_ivfpq_index(
         .partitionBy("cell")
         .parquet(codes_path)
     )
-    from .ann_index import _clear_emptied_partitions
-
-    _clear_emptied_partitions(spark, merged, codes_path, touched)
+    clear_emptied_partitions(spark, merged, codes_path, touched, "cell")
     return {
         "added": n_batch - replaced,
         "replaced": replaced,
@@ -384,7 +383,6 @@ def stream_ivfpq_index(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ):
     """Continuous maintenance of the codes layout: every micro-batch
     runs the frozen-quantizer upsert (same foreachBatch shape as
@@ -396,9 +394,4 @@ def stream_ivfpq_index(
             id_col=id_col, vec_col=vec_col,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)

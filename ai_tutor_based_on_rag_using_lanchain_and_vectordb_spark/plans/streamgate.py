@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import _read_schema, ensure_nanos_conf, load_table
 from ..session import pin, tune_for_oracle
 from ..streaming import windows as W
+from ..streaming.epochs import drain, start_foreach_batch
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +48,7 @@ def _drain(spark: SparkSession, stream_df: DataFrame, mode: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    drain(q, 300)
     return spark.table(name)
 
 
@@ -206,12 +207,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             upsert_bm25_index(batch_df.sparkSession, idx_path, batch_df)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(feed)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(start_foreach_batch(doc_stream, feed), 300)
     cols = ["query_id", "doc_id", "rank", "score"]
     bm_got = _rows(Bm25Searcher(spark, idx_path).search(BM25_QUERIES, k=5), cols)
     bm_want = _rows(
@@ -240,14 +236,10 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         kmv_state["sketch"] = pin(merged, eager=True)
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("user_id")
-        .writeStream.foreachBatch(feed_kmv)
-        .trigger(availableNow=True)
-        .start()
+    q = start_foreach_batch(
+        _stream_events(spark, sf_dir).select("user_id"), feed_kmv
     )
-    q.awaitTermination(300)
+    drain(q, 300)
     kmv_got = _rows(kmv_state["sketch"], ["uk"]) if kmv_state["sketch"] is not None else []
     kmv_want = _rows(kmv_sketch(batch_events, "user_id", 256), ["uk"])
     results.append(
@@ -270,14 +262,10 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cms_state["sketch"] = pin(merged, eager=True)
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("user_id")
-        .writeStream.foreachBatch(feed_cms)
-        .trigger(availableNow=True)
-        .start()
+    q = start_foreach_batch(
+        _stream_events(spark, sf_dir).select("user_id"), feed_cms
     )
-    q.awaitTermination(300)
+    drain(q, 300)
     cms_cols = ["row", "bucket", "cnt"]
     cms_got = (
         _rows(cms_state["sketch"], cms_cols)
@@ -307,14 +295,10 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             GK.merge_two(gk_state["entries"], entries), gk_eps / 2
         )
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("value")
-        .writeStream.foreachBatch(feed_gk)
-        .trigger(availableNow=True)
-        .start()
+    q = start_foreach_batch(
+        _stream_events(spark, sf_dir).select("value"), feed_gk
     )
-    q.awaitTermination(300)
+    drain(q, 300)
     gk_entries = gk_state["entries"]
     gk_n = GK.total_count(gk_entries)
     gk_vals = batch_events.select("value").where(F.col("value").isNotNull())
@@ -346,14 +330,10 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def feed_cc(batch_df: DataFrame, _epoch: int) -> None:
         inc_cc.update(_cc_edges(batch_df))
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("user_id", "value")
-        .writeStream.foreachBatch(feed_cc)
-        .trigger(availableNow=True)
-        .start()
+    q = start_foreach_batch(
+        _stream_events(spark, sf_dir).select("user_id", "value"), feed_cc
     )
-    q.awaitTermination(300)
+    drain(q, 300)
     cc_cols = ["node", "label"]
     cc_got = (
         _rows(inc_cc.labels(), cc_cols) if inc_cc.labels() is not None else []
@@ -396,7 +376,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             doc_stream, "text", os.path.join(bd_dir, "state"),
             os.path.join(bd_dir, "ckpt"), m_bits, k_hashes, bd_sink,
         )
-        qbd.awaitTermination(300)
+        drain(qbd, 300)
         # batch truth compares TEXT SETS: within one micro-batch the
         # surviving doc_id per duplicate text is arbitrary (matches
         # dropDuplicates semantics), across batches first-epoch wins
@@ -448,12 +428,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             cov_state["m"] = pin(merged, eager=True)
             cov_state["batches"] += 1
 
-        q = (
-            emb_stream.writeStream.foreachBatch(feed_cov)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        drain(start_foreach_batch(emb_stream, feed_cov), 300)
         cov_cols = ["i", "j", "s", "n_rows"]
         cov_got = (
             _rows(cov_state["m"], cov_cols) if cov_state["m"] is not None else []
@@ -510,12 +485,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(view_src)
         )
-        q = (
-            ev_stream.writeStream.foreachBatch(feed_view)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        drain(start_foreach_batch(ev_stream, feed_view), 300)
         view_cols = ["user_id", "total", "n"]
         view_got = (
             _rows(view_state["v"], view_cols)
@@ -561,7 +531,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             sd_cents,
             SEMDEDUP_TAU,
         )
-        qsd.awaitTermination(300)
+        drain(qsd, 300)
         sd_state = SemDedupState(
             os.path.join(sd_dir, "state"), sd_cents, SEMDEDUP_TAU
         )
@@ -608,7 +578,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(ds_dir, "state"),
             os.path.join(ds_dir, "ckpt"),
         )
-        qds.awaitTermination(300)
+        drain(qds, 300)
         st = DsirState(os.path.join(ds_dir, "state"))
         ds_cols = ["doc_id", "n_grams", "llr", "skey"]
         samp = st.sample(spark)

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.epochs import start_foreach_batch
+
 
 def write_logs_partitioned(logs: DataFrame, path: str, mode: str = "append") -> None:
     """Chat-log table partitioned by event date (P3-prunable layout)."""
@@ -100,9 +102,4 @@ def append_stream_foreachbatch(stream_df: DataFrame, path: str, checkpoint: str)
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         append_epoch(batch_df, path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream_df, sink, checkpoint)

@@ -10,19 +10,11 @@ log. Novel rows go to the caller's idempotent sink and their keys fold
 into the bitmap — so the sketch IS the accumulated corpus summary, a
 few MB standing in for the 100 TB of history at probe time.
 
-Exactly-once under foreachBatch's at-least-once redelivery, with
-VERSIONED state (stronger than the rollup's marker-only scheme,
-because a replayed batch must probe the PRE-batch sketch or every
-replayed row would look like a duplicate):
-
-- state lives in ``state/sketch_epoch=N`` + ``state/keys_epoch=N``
-  directories; a marker file names the last COMMITTED epoch;
-- a batch probes the sketch named by the marker, sinks its novel rows
-  (caller's sink must be idempotent per epoch — sinks.append_epoch
-  is the intended pairing), writes the NEXT versions, then moves the
-  marker; a crash anywhere before the marker move replays against
-  unchanged state and regenerates byte-identical outputs;
-- an epoch at-or-below the marker is skipped outright.
+Exactly-once with VERSIONED state (streaming/epochs.py): a replayed
+batch must probe the PRE-batch sketch, or every replayed row would look
+like a duplicate. State lives in ``sketch_epoch=N`` + ``keys_epoch=N``
+directories, and the caller's sink must be idempotent per epoch
+(sinks.append_epoch is the intended pairing).
 
 The exact-verify side reads the persisted key log, which at corpus
 scale is the thin (key) column of the landing zone — still never the
@@ -31,79 +23,41 @@ corpus payload.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.bloom import bloom_build, bloom_merge, bloom_probe
 from ..session import pin
+from .epochs import EpochState, start_foreach_batch
 
 __all__ = ["BloomDedupState", "stream_bloom_dedup"]
 
-_MARKER = "last_committed_epoch.txt"
 
-
-class BloomDedupState:
+class BloomDedupState(EpochState):
     """Versioned (sketch, key-log) state under one directory."""
 
     def __init__(self, root: str, m_bits: int, k_hashes: int) -> None:
-        self.root = root
+        super().__init__(root)
         self.m_bits = m_bits
         self.k_hashes = k_hashes
-        os.makedirs(root, exist_ok=True)
 
-    # -- epoch bookkeeping -------------------------------------------------
-    def last_epoch(self) -> int:
-        p = os.path.join(self.root, _MARKER)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip() or "-1")
-
-    def _commit(self, epoch: int) -> None:
-        with open(os.path.join(self.root, _MARKER), "w") as fh:
-            fh.write(str(int(epoch)))
-
-    def _sketch_path(self, epoch: int) -> str:
-        return os.path.join(self.root, f"sketch_epoch={int(epoch)}")
-
-    def _keys_path(self, epoch: int) -> str:
-        return os.path.join(self.root, f"keys_epoch={int(epoch)}")
-
-    # -- state access ------------------------------------------------------
     def sketch(self, spark, epoch: int) -> DataFrame | None:
         if epoch < 0:
             return None
-        return spark.read.parquet(self._sketch_path(epoch))
+        return spark.read.parquet(self._epoch_path("sketch", epoch))
 
     def keys(self, spark, epoch: int) -> DataFrame | None:
         """Union of the per-epoch key logs COMMITTED at-or-before
-        ``epoch`` — each epoch writes only ITS OWN keys (an uncommitted
-        epoch's directory may exist after a crash; the ≤ filter on the
-        directory name excludes it, which is what makes replay read
-        exactly the pre-batch state)."""
-        if epoch < 0:
-            return None
-        paths = sorted(
-            os.path.join(self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith("keys_epoch=") and int(d.split("=")[1]) <= epoch
-        )
-        if not paths:
-            return None
-        return spark.read.parquet(*paths)
+        ``epoch`` — each epoch writes only ITS OWN keys."""
+        paths = self._epoch_paths("keys", epoch)
+        return spark.read.parquet(*paths) if paths else None
 
-    # -- the foreachBatch body ----------------------------------------------
-    def apply_batch(self, batch_df: DataFrame, epoch_id: int, key_col: str,
-                    sink) -> bool:
-        """Gate one micro-batch; returns False when the epoch was
-        already committed (pure replay skip). ``sink(novel_df, epoch)``
-        must be idempotent per epoch."""
+    def _fold(self, batch_df: DataFrame, epoch_id: int, last: int,
+              key_col: str, sink) -> None:
+        """Gate one micro-batch (``apply_batch(batch_df, epoch_id,
+        key_col, sink)``). ``sink(novel_df, epoch)`` must be idempotent
+        per epoch."""
         spark = batch_df.sparkSession
-        last = self.last_epoch()
-        if epoch_id <= last:
-            return False
 
         # within-batch dedup must pick DETERMINISTICALLY (dropDuplicates
         # keeps an arbitrary row — a replayed epoch could then sink a
@@ -141,15 +95,13 @@ class BloomDedupState:
         new_keys = novel.select(F.col(key_col).alias("key"))
         add = bloom_build(new_keys, F.col("key"), self.m_bits, self.k_hashes)
         merged = add if sk is None else bloom_merge(sk, add)
-        # write NEXT versions (overwrite-safe on replay), then commit
+        # write NEXT versions (overwrite-safe on replay)
         merged.coalesce(1).write.mode("overwrite").parquet(
-            self._sketch_path(epoch_id)
+            self._epoch_path("sketch", epoch_id)
         )
         # per-epoch key log: each epoch persists only ITS keys (O(batch)
         # state write per batch, never O(history))
-        new_keys.write.mode("overwrite").parquet(self._keys_path(epoch_id))
-        self._commit(epoch_id)
-        return True
+        new_keys.write.mode("overwrite").parquet(self._epoch_path("keys", epoch_id))
 
 
 def stream_bloom_dedup(
@@ -160,19 +112,11 @@ def stream_bloom_dedup(
     m_bits: int,
     k_hashes: int,
     sink,
-    available_now: bool = True,
 ):
     """Continuous history-gated dedup: every micro-batch's novel rows
     (key unseen in ALL prior epochs) go to ``sink``; duplicate rows are
     dropped. Returns the started StreamingQuery."""
     state = BloomDedupState(state_root, m_bits, k_hashes)
-
-    def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-        state.apply_batch(batch_df, epoch_id, key_col, sink)
-
-    writer = stream_df.writeStream.foreachBatch(_gate).option(
-        "checkpointLocation", checkpoint
+    return start_foreach_batch(
+        stream_df, lambda b, e: state.apply_batch(b, e, key_col, sink), checkpoint
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

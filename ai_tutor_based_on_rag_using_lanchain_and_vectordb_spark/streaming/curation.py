@@ -30,6 +30,7 @@ from ..plans.trainprep import (
     _tokens,
 )
 from ..functions import exact as X
+from .epochs import start_foreach_batch
 
 
 def benchmark_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,12 +82,7 @@ def score_documents_stream(
     def _score(batch_df: DataFrame, epoch_id: int) -> None:
         sink(score_documents_batch(batch_df, bench), epoch_id)
 
-    return (
-        docs.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, _score, checkpoint)
 
 
 def score_documents_batch(docs: DataFrame, bench: DataFrame) -> DataFrame:

@@ -18,17 +18,13 @@ State is O(docs·min(grams, B)) small-int rows but O(batch) WRITE per
 epoch (per-epoch parquet subtrees). Re-emitting the sample reads the
 full count state — per-epoch emission is the gate's shape; a
 production pipeline re-emits on demand, with the weight fit itself
-always O(B)=512 rows. Exactly-once under foreachBatch's at-least-once
-redelivery via the versioned-epoch marker scheme of
-streaming/bloomdedup.py: a replayed committed epoch is skipped
-outright; duplicate doc_ids (intra-batch or cross-epoch) are dropped
-before append so counts are never double-added
+always O(B)=512 rows. Exactly-once via the committed-epoch marker of
+streaming/epochs.py; duplicate doc_ids (intra-batch or cross-epoch)
+are dropped before append so counts are never double-added
 (tests/test_stream_exactly_once.py).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,42 +32,18 @@ from pyspark.sql import functions as F
 from ..functions.textstats import ws_tokens
 from ..plans.trainprep import dsir_bucket_counts, dsir_sample_from_counts
 from ..session import pin
+from .epochs import EpochState, start_foreach_batch
 
 __all__ = ["DsirState", "stream_dsir"]
 
-_MARKER = "last_committed_epoch.txt"
 
-
-class DsirState:
+class DsirState(EpochState):
     """Versioned (doc_id, b, cnt) bucket-count state under one
     directory."""
 
-    def __init__(self, root: str) -> None:
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    # -- epoch bookkeeping (the bloomdedup scheme) --------------------------
-    def last_epoch(self) -> int:
-        p = os.path.join(self.root, _MARKER)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip() or "-1")
-
-    def _commit(self, epoch: int) -> None:
-        with open(os.path.join(self.root, _MARKER), "w") as fh:
-            fh.write(str(int(epoch)))
-
-    def _epoch_paths(self, epoch: int) -> list[str]:
-        return sorted(
-            os.path.join(self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith("fbc_epoch=") and int(d.split("=")[1]) <= epoch
-        )
-
     def counts(self, spark, epoch: int) -> DataFrame | None:
         """(doc_id, b, cnt) committed at-or-before ``epoch``."""
-        paths = self._epoch_paths(epoch) if epoch >= 0 else []
+        paths = self._epoch_paths("fbc", epoch)
         return spark.read.parquet(*paths) if paths else None
 
     def sample(self, spark) -> DataFrame | None:
@@ -81,14 +53,9 @@ class DsirState:
         fbc = self.counts(spark, self.last_epoch())
         return None if fbc is None else dsir_sample_from_counts(fbc)
 
-    # -- the foreachBatch body ----------------------------------------------
-    def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> bool:
-        """Fold one micro-batch of (doc_id, text); returns False on a
-        pure replay skip (epoch already committed)."""
+    def _fold(self, batch_df: DataFrame, epoch_id: int, last: int) -> None:
+        """Fold one micro-batch of (doc_id, text)."""
         spark = batch_df.sparkSession
-        last = self.last_epoch()
-        if epoch_id <= last:
-            return False
 
         # set-keyed-by-id state: collapse intra-batch duplicates, then
         # drop docs already committed (cross-epoch redelivery) — counts
@@ -102,38 +69,22 @@ class DsirState:
         fbc = pin(dsir_bucket_counts(
             new.select("doc_id", ws_tokens(F.col("text")).alias("ws"))
         ), eager=True)
-        # write THIS epoch's counts (overwrite-safe on replay), then
-        # commit the marker — the bloomdedup crash contract. An epoch
+        # write THIS epoch's counts (overwrite-safe on replay). An epoch
         # whose batch fully dedupes away (or carries only <2-token
-        # docs) yields ZERO count rows: skip the write but still commit
-        # the marker — an empty parquet dir has no data files, and a
-        # later counts() read would die on schema inference instead of
-        # returning the correct (empty) contribution.
+        # docs) yields ZERO count rows: skip the write (the marker
+        # still commits) — an empty parquet dir has no data files, and
+        # a later counts() read would die on schema inference instead
+        # of returning the correct (empty) contribution.
         if fbc.count():
-            fbc.write.mode("overwrite").parquet(
-                os.path.join(self.root, f"fbc_epoch={int(epoch_id)}")
-            )
-        self._commit(epoch_id)
-        return True
+            fbc.write.mode("overwrite").parquet(self._epoch_path("fbc", epoch_id))
 
 
 def stream_dsir(
     stream_df: DataFrame,
     state_root: str,
     checkpoint: str,
-    available_now: bool = True,
 ):
     """Continuous DSIR state maintenance over a (doc_id, text) stream.
     Read the maintained sample back with ``DsirState(...).sample``.
     Returns the started StreamingQuery."""
-    state = DsirState(state_root)
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        state.apply_batch(batch_df, epoch_id)
-
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, DsirState(state_root).apply_batch, checkpoint)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.freq import _domain_filter, _mg_summaries, mg_trim
+from .epochs import drain, start_foreach_batch
 
 
 class MgState:
@@ -103,7 +104,10 @@ def run_heavy_hitters_stream(
     """Drain ``stream_df`` (availableNow) maintaining the MG state;
     returns the final state. Each micro-batch runs the distributed
     per-partition summary pass (value typed through JSON for state
-    portability — ids/strings only, same domain as the batch op)."""
+    portability — ids/strings only, same domain as the batch op).
+    A drain that outlasts ``timeout`` stops the query and raises
+    ``TimeoutError`` (streaming/epochs.drain); rerun with the same
+    ``checkpoint`` and ``state_path`` to resume."""
     if not (0.0 < phi < 1.0):
         raise ValueError(f"phi must be in (0, 1), got {phi}")
     if k is None:
@@ -131,24 +135,7 @@ def run_heavy_hitters_stream(
     # redelivered, and a batch that ran but died before its checkpoint
     # commit is redelivered with the same epoch id — absorb() skips it.
     ckpt = checkpoint or f"/tmp/hh_stream_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    # awaitTermination(timeout) returns False on timeout with the query
-    # still running — a partial drain. Returning the state then would
-    # silently under-count, so stop the query and fail loudly; the
-    # checkpoint + state_path make a retry resume where this one ended.
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"heavy-hitters stream did not drain within {timeout}s "
-            f"(checkpoint={ckpt}); state is partial through epoch "
-            f"{state.last_epoch} — rerun with the same checkpoint and "
-            "state_path to resume"
-        )
+    drain(start_foreach_batch(stream_df, on_batch, ckpt), timeout)
     return state
 
 

@@ -5,13 +5,11 @@ layouts — the continuous form of the reference's /delete-doc
 (backend/main.py:443-486), at the cadence a production corpus actually
 deletes (GDPR purges, re-crawl replacements).
 
-Exactly-once under foreachBatch's at-least-once redelivery: a single
-delete is idempotent (deleting an absent id is a no-op), but replay is
-NOT harmless in general — deletes interleave with upserts, and a
-replayed old delete epoch arriving AFTER a doc was legitimately
-re-added would kill the re-added copy. So the wrapper uses the same
-versioned-epoch marker scheme as streaming/bloomdedup.py and
-streaming/dsir.py: a replayed committed epoch is skipped outright
+Exactly-once via the committed-epoch marker of streaming/epochs.py: a
+single delete is idempotent (deleting an absent id is a no-op), but
+replay is NOT harmless in general — deletes interleave with upserts,
+and a replayed old delete epoch arriving AFTER a doc was legitimately
+re-added would kill the re-added copy
 (tests/test_index_delete.py::test_stream_deletes_exactly_once).
 
 The `apply_fns` are the batch delete operators themselves
@@ -24,49 +22,30 @@ BOTH stores" contract.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from ..session import pin
+from .epochs import EpochState, start_foreach_batch
 
 __all__ = ["DeleteStreamState", "stream_index_deletes"]
 
-_MARKER = "last_committed_epoch.txt"
 
-
-class DeleteStreamState:
+class DeleteStreamState(EpochState):
     """Epoch-marker state for a delete stream: remembers the last
     committed epoch so a redelivered (completed) batch is skipped."""
 
     def __init__(self, root: str, apply_fns) -> None:
-        self.root = root
+        super().__init__(root)
         self.apply_fns = list(apply_fns)
-        os.makedirs(root, exist_ok=True)
 
-    def last_epoch(self) -> int:
-        p = os.path.join(self.root, _MARKER)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip() or "-1")
-
-    def _commit(self, epoch: int) -> None:
-        with open(os.path.join(self.root, _MARKER), "w") as fh:
-            fh.write(str(int(epoch)))
-
-    def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> bool:
-        """Apply one micro-batch of ids (first column) to every layout;
-        returns False on a pure replay skip. The id batch is pinned
-        once — each apply_fn's locate probe broadcasts it."""
-        if epoch_id <= self.last_epoch():
-            return False
+    def _fold(self, batch_df: DataFrame, epoch_id: int, last: int) -> None:
+        """Apply one micro-batch of ids (first column) to every layout.
+        The id batch is pinned once — each apply_fn's locate probe
+        broadcasts it."""
         ids = pin(batch_df.select(batch_df.columns[0]).dropDuplicates(), eager=True)
         spark = batch_df.sparkSession
         for fn in self.apply_fns:
             fn(spark, ids)
-        self._commit(epoch_id)
-        return True
 
 
 def stream_index_deletes(
@@ -74,7 +53,6 @@ def stream_index_deletes(
     state_root: str,
     checkpoint: str,
     apply_fns,
-    available_now: bool = True,
 ):
     """Continuous purge propagation: every micro-batch of ids runs each
     ``fn(spark, ids_df)`` delete operator once (exactly-once via the
@@ -86,13 +64,4 @@ def stream_index_deletes(
              lambda s, ids: delete_ivf_ids(s, ivf_path, ids)])
     """
     state = DeleteStreamState(state_root, apply_fns)
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        state.apply_batch(batch_df, epoch_id)
-
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, state.apply_batch, checkpoint)

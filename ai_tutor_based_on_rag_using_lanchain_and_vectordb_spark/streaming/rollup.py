@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import pin
+from .epochs import EpochState, start_foreach_batch
 
 
 def _batch_rollup(events: DataFrame, ts_col: str, user_col: str) -> DataFrame:
@@ -58,9 +59,9 @@ def upsert_daily_rollup(
     - ``merged`` is pinned BEFORE the overwrite so the
       stored partitions are fully read and materialized before any file
       under ``path`` is replaced — the write never races its own input.
-    - ``partitionOverwriteMode=dynamic`` is scoped to this write
-      (saved/restored), so later ``overwrite``+``partitionBy`` writes in
-      the same session keep their expected truncate-table semantics.
+    - ``partitionOverwriteMode=dynamic`` is a writer option of this
+      write, not a session conf, so later ``overwrite``+``partitionBy``
+      writes in the same session keep their truncate-table semantics.
     """
     new = pin(_batch_rollup(events, ts_col, user_col), eager=True)
     if not os.path.exists(path):
@@ -82,16 +83,19 @@ def upsert_daily_rollup(
                 F.col("n.n_events") + F.coalesce(F.col("s.n_events"), F.lit(0))
             ).alias("n_events"),
         ), eager=True)
-    _KEY = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(_KEY, None)
-    spark.conf.set(_KEY, "dynamic")
-    try:
-        merged.write.partitionBy("day").mode("overwrite").parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(_KEY)
-        else:
-            spark.conf.set(_KEY, prev)
+    (
+        merged.write.partitionBy("day")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+class _RollupEpochs(EpochState):
+    def _fold(self, batch_df, epoch_id, last, path, ts_col, user_col) -> None:
+        upsert_daily_rollup(
+            batch_df.sparkSession, path, batch_df, ts_col=ts_col, user_col=user_col
+        )
 
 
 def merge_epoch(
@@ -103,21 +107,12 @@ def merge_epoch(
     user_col: str = "user_id",
 ) -> bool:
     """foreachBatch body with replay protection: merge the batch unless
-    ``epoch_id`` was already applied (marker file in the checkpoint
-    dir). Returns True if the batch was merged, False if skipped."""
-    marker = os.path.join(checkpoint, "last_merged_epoch.txt")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            last = int(fh.read().strip() or "-1")
-        if epoch_id <= last:
-            return False
-    upsert_daily_rollup(
-        batch_df.sparkSession, path, batch_df, ts_col=ts_col, user_col=user_col
+    ``epoch_id`` was already applied (the streaming/epochs.py marker in
+    the checkpoint dir). Returns True if the batch was merged, False if
+    skipped."""
+    return _RollupEpochs(checkpoint).apply_batch(
+        batch_df, epoch_id, path, ts_col, user_col
     )
-    os.makedirs(checkpoint, exist_ok=True)
-    with open(marker, "w") as fh:
-        fh.write(str(epoch_id))
-    return True
 
 
 def stream_daily_rollup(
@@ -126,32 +121,24 @@ def stream_daily_rollup(
     checkpoint: str,
     ts_col: str = "ts",
     user_col: str = "user_id",
-    available_now: bool = True,
 ):
     """Continuous rollup maintenance: every micro-batch folds into the
     stored table via :func:`upsert_daily_rollup`. Returns the started
     StreamingQuery.
 
-    Replay semantics: foreachBatch re-delivers the SAME ``epoch_id``
-    after a restart, and while the HLL union is idempotent, the additive
-    ``n_events`` count is not — so the last applied epoch is recorded in
-    a marker file next to the checkpoint and already-applied epochs are
-    skipped. (The marker is written after the merge commits, so a crash
-    exactly between merge and marker can still double-count that one
-    batch's ``n_events`` — the distinct-count estimates remain exact
-    under any replay.)"""
+    Replay: the HLL union is idempotent but the additive ``n_events``
+    count is not, so replayed epochs are skipped by the
+    streaming/epochs.py marker (:func:`merge_epoch`). The merge is not
+    versioned: a crash exactly between merge and commit can still
+    double-count that one batch's ``n_events``; the distinct-count
+    estimates stay exact under any replay."""
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         merge_epoch(
             batch_df, epoch_id, path, checkpoint, ts_col=ts_col, user_col=user_col
         )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)
 
 
 def rollup_estimate(

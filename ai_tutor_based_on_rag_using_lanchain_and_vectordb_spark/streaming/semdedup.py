@@ -22,16 +22,13 @@ against the batch operator's numpy kernel (plans/vectors.py).
 State is O(corpus) vectors but O(batch) WRITE per epoch (per-epoch
 parquet subtrees, the operators/ann_index.py cell-layout idea), and the
 pair work per batch is new×(cell-mates) only — history×history is never
-re-scored. Exactly-once under foreachBatch's at-least-once redelivery
-via the versioned-epoch marker scheme of streaming/bloomdedup.py: a
-replayed committed epoch is skipped outright; a crash before the marker
-move replays against unchanged state and regenerates byte-identical
-epoch files (tests/test_stream_exactly_once.py).
+re-scored. Exactly-once via the committed-epoch marker of
+streaming/epochs.py: a crash before the commit replays against
+unchanged state and regenerates byte-identical epoch files
+(tests/test_stream_exactly_once.py).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -40,14 +37,14 @@ from pyspark.sql import functions as F
 from ..functions import vector as V
 from ..operators.semdedup import assign_cells
 from ..session import default_parallelism, pin
+from .epochs import EpochState, start_foreach_batch
 
 __all__ = ["SemDedupState", "stream_semdedup"]
 
-_MARKER = "last_committed_epoch.txt"
 _SALTS = 8
 
 
-class SemDedupState:
+class SemDedupState(EpochState):
     """Versioned (vectors, demotions) state under one directory."""
 
     def __init__(
@@ -57,39 +54,18 @@ class SemDedupState:
         threshold: float,
         dim: int = V.EMBEDDING_DIM,
     ) -> None:
-        self.root = root
+        super().__init__(root)
         self.centroids = np.asarray(centroids, dtype=np.float64)
         self.threshold = float(threshold)
         self.dim = dim
-        os.makedirs(root, exist_ok=True)
-
-    # -- epoch bookkeeping (the bloomdedup scheme) --------------------------
-    def last_epoch(self) -> int:
-        p = os.path.join(self.root, _MARKER)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip() or "-1")
-
-    def _commit(self, epoch: int) -> None:
-        with open(os.path.join(self.root, _MARKER), "w") as fh:
-            fh.write(str(int(epoch)))
-
-    def _epoch_paths(self, prefix: str, epoch: int) -> list[str]:
-        return sorted(
-            os.path.join(self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith(f"{prefix}_epoch=")
-            and int(d.split("=")[1]) <= epoch
-        )
 
     def vectors(self, spark, epoch: int) -> DataFrame | None:
         """(vec_id, embedding, cell) committed at-or-before ``epoch``."""
-        paths = self._epoch_paths("vecs", epoch) if epoch >= 0 else []
+        paths = self._epoch_paths("vecs", epoch)
         return spark.read.parquet(*paths) if paths else None
 
     def pruned_ids(self, spark, epoch: int) -> DataFrame | None:
-        paths = self._epoch_paths("pruned", epoch) if epoch >= 0 else []
+        paths = self._epoch_paths("pruned", epoch)
         return spark.read.parquet(*paths) if paths else None
 
     def decisions(self, spark) -> DataFrame | None:
@@ -112,14 +88,9 @@ class SemDedupState:
             "left",
         ).select("vec_id", "cell", F.col("_hit").isNull().alias("kept"))
 
-    # -- the foreachBatch body ----------------------------------------------
-    def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> bool:
-        """Fold one micro-batch of (vec_id, embedding); returns False on
-        a pure replay skip (epoch already committed)."""
+    def _fold(self, batch_df: DataFrame, epoch_id: int, last: int) -> None:
+        """Fold one micro-batch of (vec_id, embedding)."""
         spark = batch_df.sparkSession
-        last = self.last_epoch()
-        if epoch_id <= last:
-            return False
 
         # collapse duplicate ids WITHIN the batch first: a redelivering
         # source can repeat a vec_id inside one epoch, and the vec_a !=
@@ -188,16 +159,11 @@ class SemDedupState:
             F.greatest("vec_a", "vec_b").alias("vec_id")
         ).distinct()
 
-        # write THIS epoch's state (overwrite-safe on replay), then
-        # commit the marker — the bloomdedup crash contract
-        new.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"vecs_epoch={int(epoch_id)}")
-        )
+        # write THIS epoch's state (overwrite-safe on replay)
+        new.write.mode("overwrite").parquet(self._epoch_path("vecs", epoch_id))
         demoted.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"pruned_epoch={int(epoch_id)}")
+            self._epoch_path("pruned", epoch_id)
         )
-        self._commit(epoch_id)
-        return True
 
 
 def stream_semdedup(
@@ -207,20 +173,10 @@ def stream_semdedup(
     centroids: np.ndarray,
     threshold: float,
     dim: int = V.EMBEDDING_DIM,
-    available_now: bool = True,
 ):
     """Continuous semantic dedup of a (vec_id, embedding) stream on a
     frozen quantizer. Read the maintained decision set back with
     ``SemDedupState(...).decisions(spark)``. Returns the started
     StreamingQuery."""
     state = SemDedupState(state_root, centroids, threshold, dim)
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        state.apply_batch(batch_df, epoch_id)
-
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, state.apply_batch, checkpoint)

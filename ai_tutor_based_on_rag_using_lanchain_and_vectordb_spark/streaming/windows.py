@@ -180,21 +180,3 @@ def click_purchase_attribution(
         "purchase_value",
     )
 
-
-def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 60):
-    """Test harness: drain an availableNow stream into a memory sink and
-    return the collected rows."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append" if not _has_agg(stream_df) else "complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
-
-
-def _has_agg(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return "Aggregate" in plan
