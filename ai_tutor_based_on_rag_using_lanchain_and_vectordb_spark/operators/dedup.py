@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import bind
 from ..session import pin
 
 # --------------------------------------------------------------------- exact
@@ -95,13 +96,19 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     return F.array_distinct(shingles_all_col(text, n))
 
 
+def ngrams(toks: Column, n: int) -> Column:
+    """Sliding word n-grams (space-joined) of a token array, in order and
+    WITH duplicates; empty when it has fewer than n tokens. ``toks`` is
+    bound once, so a tokenizing expression is not re-run per gram."""
+    return bind(toks, lambda ts: F.transform(
+        shingle_starts(ts, n),
+        lambda i: F.concat_ws(" ", F.slice(ts, i + 1, n)),
+    ))
+
+
 def shingles_all_col(text: Column, n: int = 3) -> Column:
     """Word n-gram shingles WITH duplicates (no O(n²) distinct)."""
-    toks = tokens_col(text)
-    return F.transform(
-        shingle_starts(toks, n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    return ngrams(tokens_col(text), n)
 
 
 def _shingle_rows(
@@ -133,17 +140,15 @@ def minhash_signature(shingle_arr: Column, num_hashes: int = 16) -> Column:
     """Array of `num_hashes` min-hashes; hash_i(s) = xxhash64(i, s).
 
     Column-expression form (kept for tests and expression composition).
-    Do NOT feed it a non-trivial shingle EXPRESSION in a hot path: the
-    nested transform re-evaluates the shingle argument once per hash
-    index, so an O(n²) array_distinct inside it runs num_hashes× per
-    row — measured 170× slower than :func:`_minhash_signatures` on the
-    sf1 corpus. The dataframe form below is the scale path."""
-    return F.transform(
+    ``shingle_arr`` is bound once, so a shingle expression runs once per
+    row, not once per hash index. Hot paths still use
+    :func:`_minhash_signatures`: it skips the O(n²) array_distinct a
+    :func:`shingles_col` input carries and takes the mins in a
+    map-side-combined aggregate."""
+    return bind(shingle_arr, lambda sh: F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingle_arr, lambda s: F.xxhash64(i, s))
-        ),
-    )
+        lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(i, s))),
+    ))
 
 
 def _minhash_signatures(

@@ -7,7 +7,8 @@ Two interchangeable encoders:
 
 - ``hashing_embedding`` — feature-hashing trick as a pure Column
   expression: token → (index, sign) from xxhash64, summed into a
-  fixed-dim array, L2-normalized. Map-only, deterministic, no fitting.
+  fixed-dim array, L2-normalized. Map-only, deterministic, no fitting;
+  2 hashes per token, one count array and one norm per row.
 - ``tfidf_embedding`` — MLlib HashingTF + IDF pipeline (fitted), for
   when corpus-level weighting matters.
 
@@ -21,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import bind
+
 DEFAULT_DIM = 64
 
 
@@ -28,35 +31,41 @@ def hashing_embedding(text: Column, dim: int = DEFAULT_DIM) -> Column:
     """Signed feature hashing: for each token t, index = xxhash64(t) mod
     dim, sign = bit 62 of xxhash64(1, t) (any fixed hash bit works as a
     sign source; 62 avoids the two's-complement sign bit); accumulate,
-    then L2-normalize. Empty/blank text → zero vector."""
+    then L2-normalize. Empty/blank text → zero vector, NULL → NULL.
+
+    Index, sign, counts and norm are each bound once (:func:`bind`)
+    before the lambdas that use them, so no lambda re-evaluates an
+    outer expression per element: each token costs 2 hashes and one
+    ``dim``-wide update."""
     # split("", "\s+") yields [""] — drop empty tokens so blank text
     # really produces the documented zero vector
     toks = F.filter(
         F.split(F.lower(F.trim(text)), r"\s+"), lambda t: F.length(t) > 0
     )
-    counts = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0.0), dim),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: F.when(
-                    F.pmod(F.xxhash64(t), F.lit(dim)) == i,
-                    F.when(
-                        F.shiftright(F.xxhash64(F.lit(1), t), 62).bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1.0),
-                    ).otherwise(F.lit(-1.0)),
-                ).otherwise(F.lit(0.0)),
+
+    def add_token(acc: Column, t: Column) -> Column:
+        # counts are sums of ±1.0, exact in any order, and acc never
+        # holds -0.0, so updating only the hit coordinate is
+        # bit-identical to adding a one-hot ±1.0 vector
+        sign = F.when(
+            F.shiftright(F.xxhash64(F.lit(1), t), 62).bitwiseAND(F.lit(1)) == 1,
+            F.lit(1.0),
+        ).otherwise(F.lit(-1.0))
+        return bind(F.pmod(F.xxhash64(t), F.lit(dim)), lambda idx: bind(
+            sign,
+            lambda sgn: F.transform(
+                acc, lambda x, j: F.when(j == idx, x + sgn).otherwise(x)
             ),
-            lambda a, b: a + b,
-        ),
-    )
-    nrm = F.sqrt(
-        F.aggregate(counts, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return F.when(nrm > 0, F.transform(counts, lambda x: (x / nrm).cast("float"))).otherwise(
-        F.transform(counts, lambda x: x.cast("float"))
+        ))
+
+    def normalize(counts: Column) -> Column:
+        sq = F.aggregate(counts, F.lit(0.0), lambda acc, x: acc + x * x)
+        return bind(F.sqrt(sq), lambda nrm: F.when(
+            nrm > 0, F.transform(counts, lambda x: (x / nrm).cast("float"))
+        ).otherwise(F.transform(counts, lambda x: x.cast("float"))))
+
+    return bind(
+        F.aggregate(toks, F.array_repeat(F.lit(0.0), dim), add_token), normalize
     )
 
 

@@ -170,19 +170,14 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word-n-gram shingles per doc: tokens → sliding n-grams.
-    Built with transform over an index sequence (JVM-side). The explicit
-    repartition fans the generation out — a single parquet split would
-    otherwise evaluate every doc's shingle expressions in one task."""
+    """Distinct word-n-gram shingles per doc. The explicit repartition
+    fans the generation out — a single parquet split would otherwise
+    evaluate every doc's shingle expressions in one task."""
     from ..session import default_parallelism
 
-    from ..operators.dedup import shingle_starts
+    from ..operators.dedup import shingles_all_col
 
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    grams = F.transform(
-        shingle_starts(toks, n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    grams = shingles_all_col(F.col("text"), n)
     return (
         docs.repartition(default_parallelism())
         .select("doc_id", "lang", F.explode(grams).alias("s"))

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import exact as X
-from ..operators.dedup import shingle_starts
+from ..operators.dedup import ngrams
 from ..session import default_parallelism
 
 # Gopher-style repetition thresholds (flag = likely machine-generated /
@@ -62,14 +62,6 @@ from ..functions.textstats import ws_tokens as _tokens  # shared tokenizer
 from ..session import pin
 
 
-def _grams(ws: F.Column, n: int) -> F.Column:
-    """Sliding word n-grams of the token array (empty when < n tokens)."""
-    return F.transform(
-        shingle_starts(ws, n),
-        lambda i: F.concat_ws(" ", F.slice(ws, i + 1, n)),
-    )
-
-
 def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, ws) with the explicit repartition that fans token
     generation out of a handful of parquet splits (same fix the
@@ -97,7 +89,7 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_distinct"),
     )
     gcount = (
-        toks.select("doc_id", F.explode(_grams(F.col("ws"), 2)).alias("g"))
+        toks.select("doc_id", F.explode(ngrams(F.col("ws"), 2)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
     )
@@ -130,7 +122,7 @@ def _distinct_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, g) word-3-grams for the corpus-frequency ops."""
     toks = _tokenized(spark, sf_dir)
     return toks.select(
-        "doc_id", F.explode(_grams(F.col("ws"), 3)).alias("g")
+        "doc_id", F.explode(ngrams(F.col("ws"), 3)).alias("g")
     ).distinct()
 
 
@@ -234,7 +226,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     and drop out."""
     toks = _tokenized(spark, sf_dir)
     bi = toks.select(
-        "doc_id", F.explode(_grams(F.col("ws"), 2)).alias("g")
+        "doc_id", F.explode(ngrams(F.col("ws"), 2)).alias("g")
     )
     cb = bi.groupBy("g").agg(F.count("*").alias("cg"))
     cfirst = cb.groupBy(
@@ -975,7 +967,7 @@ def dsir_bucket_counts(toks: DataFrame) -> DataFrame:
     counts add across any split of the corpus, which is what the
     streaming twin (streaming/dsir.py, st17) folds per epoch."""
     bi = toks.select(
-        "doc_id", F.explode(_grams(F.col("ws"), 2)).alias("g")
+        "doc_id", F.explode(ngrams(F.col("ws"), 2)).alias("g")
     )
     return (
         bi.select(

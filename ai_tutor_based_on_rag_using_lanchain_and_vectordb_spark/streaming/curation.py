@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 from ..plans.trainprep import (
     BENCH_MOD,
     CONTAM_MAX,
-    _grams,
     _tokens,
 )
 from ..functions import exact as X
+from ..operators.dedup import ngrams
 from .epochs import start_foreach_batch
 
 
@@ -42,7 +42,7 @@ def benchmark_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("doc_id"), F.lit(BENCH_MOD)) == 0
     )
     return (
-        docs.select(F.explode(_grams(_tokens(F.col("text")), 3)).alias("g"))
+        docs.select(F.explode(ngrams(_tokens(F.col("text")), 3)).alias("g"))
         .distinct()
     )
 
@@ -52,7 +52,7 @@ def _doc_grams_stateless(docs: DataFrame) -> DataFrame:
     (array_distinct before explode): works identically on a batch or
     streaming frame because it needs no cross-row state. array_distinct
     is O(n²) per row — bounded by document length, not corpus size."""
-    grams = F.array_distinct(_grams(_tokens(F.col("text")), 3))
+    grams = F.array_distinct(ngrams(_tokens(F.col("text")), 3))
     return docs.select("doc_id", F.explode(grams).alias("g"))
 
 
