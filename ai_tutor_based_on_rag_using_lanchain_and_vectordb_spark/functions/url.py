@@ -49,6 +49,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 _SNAPSHOT_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "public_suffix_snapshot.dat"
 )
@@ -284,7 +286,7 @@ def suffix_table(spark) -> DataFrame:
         + [(w, "wild", w.count(".") + 1) for w in WILDCARD_PARENTS]
         + [(e, "exc", e.count(".") + 1) for e in EXCEPTION_DOMAINS]
     )
-    return spark.createDataFrame(rows, "rule string, kind string, n_labels int")
+    return local_table(spark, rows, "rule string, kind string, n_labels int")
 
 
 def registrable_domain_join(

@@ -1,26 +1,35 @@
-"""Vector math over ``array<float>`` embedding columns.
+"""Vector math over ``array<float>``/``array<double>`` embedding columns.
 
-Two tiers:
+One builder, the fold form. ``dot(a, b)`` is
 
-- ``dot_fixed``/``norm_fixed``/``cosine_fixed`` — for a known dimension,
-  a *flat left-associated* sum of ``a[i]*b[i]`` terms. This stays inside
-  WholeStageCodegen (plain arithmetic, zero per-row allocations), unlike
-  the higher-order-function tier below which allocates intermediate
-  arrays per evaluation (zip_with result + accumulators) and thrashes GC
-  on million-pair joins. Left association keeps the summation order
-  identical to the sequential fold, so scores are bit-identical to the
-  generic tier and to the DuckDB oracle.
-- ``dot``/``norm``/``cosine`` — generic `zip_with` + `aggregate`
-  expressions for unknown dimensions (still JVM-side, no Python).
+    aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+              -0.0D, (acc, t) -> acc + t)
 
-The heavy k-NN paths additionally have a numpy ``mapInPandas`` variant
-in ``operators/knn.py`` for matrix-batched scoring at cluster scale.
+parsed from one SQL text with one ``F.expr`` call; ``norm`` and
+``cosine`` wrap the same text. Inputs are SQL expression strings: a
+column name (``quote_col``), a lambda variable's field, or any array
+expression such as ``array_lit`` of a driver-side constant vector.
+
+Why the fold:
+
+- *Compile cost.* The expression does not grow with the vector
+  length. A sum unrolled per coordinate does: at 64 dimensions Janino
+  compiles a 64-term method per score, 1–2 s of codegen on a cold
+  read, where the fold is one loop.
+- *Any vector length.* The fold reads every coordinate of whatever it
+  is given, so no call site passes a length, and none can disagree
+  with the data (score a prefix, or NULL every row past the end).
+- *Bit identity.* The fold sums the products left to right, the same
+  order as the left-associated chain ``p0 + p1 + … + p(n-1)`` and the
+  DuckDB oracle. The seed is −0.0, the IEEE additive identity
+  (−0.0 + x == x bit for bit for every x, ±0 included), so even an
+  all-(−0.0) sum keeps its sign. ``CAST`` on an ``array<double>``
+  element is a no-op that the optimizer drops.
 """
 
 from __future__ import annotations
 
 import math
-from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -29,50 +38,14 @@ EMBEDDING_DIM = 64  # driver testdata embedding dimension
 
 
 def as_double(vec: Column) -> Column:
-    """Promote array<float> → array<double> so score math matches the
-    float64 oracle bit-for-bit (modulo summation order)."""
+    """Promote array<float> → array<double> once per row, so a per-pair
+    score does not re-cast each element."""
     return F.transform(vec, lambda x: x.cast("double"))
 
 
 def as_double_sql(vec_sql: str) -> str:
-    """SQL-text form of :func:`as_double` for the string-input fast
-    path below (same transform/CAST expression, parsed in one call)."""
+    """SQL-text form of :func:`as_double`."""
     return f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
-
-
-# ---------------------------------------------------------------- generic (HOF)
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-# ------------------------------------------------------- fixed-dim (codegen)
-#
-# Each builder accepts its vector input either as a Column or as a SQL
-# expression STRING (a column name or any valid SQL array<...> expr).
-# The string form builds the whole flat expression as ONE SQL text and
-# parses it with a single F.expr() round trip; the Column form issues
-# one py4j call per element/multiply/add — ~4·dim socket round trips
-# per dot product, which at dim=64 made PLAN CONSTRUCTION (not
-# execution) the dominant cost of every vector query (measured r14:
-# semantic_bfs_production spent 3.7 s of a 5.4 s wall inside these
-# builders; guide §7.3 — planning time itself as the bottleneck). The
-# parsed tree is the same expression: element_at is 1-based in both,
-# `t1 + t2 + t3` parses LEFT-ASSOCIATED exactly like the reduce() fold,
-# and CAST/literal nodes match — so every score is bit-identical.
 
 
 def quote_col(name: str) -> str:
@@ -82,79 +55,39 @@ def quote_col(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _elem(vec: Column, i: int, cast: bool) -> Column:
-    # element_at is 1-based
-    e = F.element_at(vec, i + 1)
-    return e.cast("double") if cast else e
+def array_lit(consts) -> str:
+    """SQL text of an ``array<double>`` literal holding ``consts`` (e.g.
+    a centroid). repr() round-trips IEEE doubles exactly; the D suffix
+    keeps each element DOUBLE (a bare decimal parses as DECIMAL)."""
+    parts = []
+    for c in consts:
+        f = float(c)
+        if not math.isfinite(f):
+            raise ValueError(f"non-finite constant in array_lit: {c!r}")
+        parts.append(repr(f) + "D")
+    return f"array({', '.join(parts)})"
 
 
-def _elem_sql(vec_sql: str, i: int, cast: bool) -> str:
-    e = f"element_at({vec_sql}, {i + 1})"
-    return f"CAST({e} AS DOUBLE)" if cast else e
-
-
-def _dlit_sql(c) -> str:
-    # repr() round-trips IEEE doubles exactly; the D suffix makes the
-    # SQL literal DOUBLE (a bare decimal would parse as DECIMAL)
-    f = float(c)
-    if not math.isfinite(f):
-        raise ValueError(f"non-finite constant in dot_const: {c!r}")
-    return repr(f) + "D"
-
-
-def dot_fixed_sql(a_sql: str, b_sql: str, dim: int = EMBEDDING_DIM,
-                  cast: bool = True) -> str:
-    """SQL text of the flat left-associated dot product (see the tier
-    note above) — compose into larger single-parse expressions."""
-    return " + ".join(
-        f"({_elem_sql(a_sql, i, cast)} * {_elem_sql(b_sql, i, cast)})"
-        for i in range(dim)
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of the fold-form dot product (see the module note)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (_va, _vb) -> "
+        "CAST(_va AS DOUBLE) * CAST(_vb AS DOUBLE)), "
+        "-0.0D, (_acc, _t) -> _acc + _t)"
     )
 
 
-def dot_fixed(a, b, dim: int = EMBEDDING_DIM, cast: bool = True) -> Column:
-    """Flat left-associated dot product. Pass ``cast=False`` when the
-    arrays are already array<double> (pre-cast per row with
-    ``as_double``) — halves the expression size, which matters both for
-    Janino compile time and per-pair evaluation. String inputs take the
-    one-parse fast path (see the tier note above)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_fixed_sql(a, b, dim, cast))
-    terms = [_elem(a, i, cast) * _elem(b, i, cast) for i in range(dim)]
-    # left-associated chain == sequential-fold summation order
-    return reduce(lambda acc, t: acc + t, terms)
+def norm_sql(a: str) -> str:
+    return f"SQRT({dot_sql(a, a)})"
 
 
-def norm_fixed(a, dim: int = EMBEDDING_DIM, cast: bool = True) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"SQRT({dot_fixed_sql(a, a, dim, cast)})")
-    return F.sqrt(dot_fixed(a, a, dim, cast))
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_sql(a, b))
 
 
-def dot_const_sql(vec_sql: str, consts, cast: bool = True) -> str:
-    """SQL text of the flat constant-vector dot product."""
-    return " + ".join(
-        f"({_elem_sql(vec_sql, i, cast)} * {_dlit_sql(c)})"
-        for i, c in enumerate(consts)
-    )
+def norm(a: str) -> Column:
+    return F.expr(norm_sql(a))
 
 
-def dot_const(vec, consts, cast: bool = True) -> Column:
-    """Flat dot product against a Python-side constant vector (e.g. a
-    centroid): every c_i folds into the codegen as a literal — no
-    array column, no HOF allocation. String input takes the one-parse
-    fast path (see the tier note above)."""
-    if isinstance(vec, str):
-        return F.expr(dot_const_sql(vec, consts, cast))
-    terms = [_elem(vec, i, cast) * F.lit(float(c)) for i, c in enumerate(consts)]
-    return reduce(lambda acc, t: acc + t, terms)
-
-
-def cosine_fixed(a, b, dim: int = EMBEDDING_DIM) -> Column:
-    return dot_fixed(a, b, dim) / (norm_fixed(a, dim) * norm_fixed(b, dim))
-
-
-def cosine_rounded(a: Column, b: Column, digits: int = 4) -> Column:
-    from .exact import pround
-
-    return pround(cosine(a, b), digits)
+def cosine(a: str, b: str) -> Column:
+    return F.expr(f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})")

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from ..session import pin
+from ..session import local_table, pin
 from ..streaming.epochs import start_foreach_batch
 from .knn import fit_ivf_centroids, unit_vectors_ml
 from .partdelete import clear_emptied_partitions
@@ -49,7 +49,6 @@ def build_ivf_index(
     n_cells: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
     meta_cols: tuple = (),
 ) -> None:
     """Fit the coarse quantizer and write the cell-partitioned layout
@@ -76,13 +75,13 @@ def build_ivf_index(
     cent_rows = [
         (int(i), [float(x) for x in centroids[i]]) for i in range(len(centroids))
     ]
-    spark.createDataFrame(cent_rows, "cell int, centroid array<double>").coalesce(
+    local_table(spark, cent_rows, "cell int, centroid array<double>").coalesce(
         1
     ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     # fit-time stats: corpus size and mean unit-sphere assignment
     # distance — the baselines the drift trigger compares against
     cells = [int(r[0]) for r in cent_rows]
-    _, dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells, dim)
+    _, dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells)
     agg = vectors.select(
         F.count("*").alias("n"), F.avg(dist).alias("mean_dist")
     ).collect()[0]
@@ -91,42 +90,27 @@ def build_ivf_index(
 
 
 def _nearest_cell_expr(
-    vec, centroids: np.ndarray, cells: list[int], dim: int
+    vec: str, centroids: np.ndarray, cells: list[int]
 ) -> tuple[Column, Column]:
     """(cell, unit-sphere distance) columns assigning a raw embedding to
-    its nearest centroid — pure codegen arithmetic, no MLlib model at
+    its nearest centroid — one Catalyst expression, no MLlib model at
     maintenance time. On unit vectors argmin ||u−c||² == argmin
-    (|c|²/2 − u·c), so each centroid contributes one flat literal dot.
-    Ties break on the lower cell id (array_min on struct(d, cell)).
-
-    ``vec`` may be a Column or a SQL expression string; the string form
-    builds the whole centroid argmin as ONE parsed expression (the
-    functions/vector.py fast path — at 64 dims × n_cells the per-node
-    Column form cost seconds of py4j round trips PER PLAN BUILD)."""
-    if isinstance(vec, str):
-        nrm_sql = f"SQRT({V.dot_fixed_sql(vec, vec, dim)})"
-        pair_sqls = []
-        for row_idx, cell in enumerate(cells):
-            c = np.asarray(centroids[row_idx], dtype=np.float64)
-            # same shape as the Column form: lit(|c|²/2) − dot/nrm
-            proxy = (
-                f"({V._dlit_sql(float(c @ c) / 2.0)} - "
-                f"({V.dot_const_sql(vec, c)}) / ({nrm_sql}))"
-            )
-            pair_sqls.append(f"struct({proxy} AS d, {int(cell)} AS cell)")
-        best = F.expr(f"array_min(array({', '.join(pair_sqls)}))")
-        nrm = F.expr(nrm_sql)
-        vec = F.expr(vec)
-    else:
-        nrm = V.norm_fixed(vec, dim)
-        pairs = []
-        for row_idx, cell in enumerate(cells):
-            c = np.asarray(centroids[row_idx], dtype=np.float64)
-            proxy = F.lit(float(c @ c) / 2.0) - V.dot_const(vec, c) / nrm
-            pairs.append(
-                F.struct(proxy.alias("d"), F.lit(int(cell)).alias("cell"))
-            )
-        best = F.array_min(F.array(*pairs))
+    (|c|²/2 − u·c), so each centroid contributes one fold-form dot
+    product against its array literal. Ties break on the lower cell id
+    (array_min on struct(d, cell)). ``vec`` is a SQL expression string
+    (e.g. ``V.quote_col(name)``); the whole argmin is parsed in one
+    ``F.expr`` call."""
+    nrm_sql = V.norm_sql(vec)
+    pair_sqls = []
+    for row_idx, cell in enumerate(cells):
+        c = np.asarray(centroids[row_idx], dtype=np.float64)
+        # repr() round-trips the double; D keeps the literal DOUBLE
+        half = repr(float(c @ c) / 2.0) + "D"
+        proxy = f"({half} - {V.dot_sql(vec, V.array_lit(c))} / {nrm_sql})"
+        pair_sqls.append(f"struct({proxy} AS d, {int(cell)} AS cell)")
+    best = F.expr(f"array_min(array({', '.join(pair_sqls)}))")
+    nrm = F.expr(nrm_sql)
+    vec = F.expr(vec)
     # A null or all-zero embedding has no unit direction: the division
     # yields NULL (Spark /0 → NULL), which would otherwise surface as a
     # NULL proxy inside the argmin struct. Make the no-cell case explicit
@@ -146,7 +130,8 @@ def _stats_path(path: str) -> str:
 
 def _write_stats(spark: SparkSession, path: str, fit_n: int, fit_mean_dist: float,
                  cur_n: int) -> None:
-    spark.createDataFrame(
+    local_table(
+        spark,
         [(int(fit_n), float(fit_mean_dist), int(cur_n))],
         "fit_n long, fit_mean_dist double, cur_n long",
     ).coalesce(1).write.mode("overwrite").parquet(_stats_path(path))
@@ -196,7 +181,6 @@ def upsert_ivf_index(
     new_vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
     refit_growth: float = 2.0,
     refit_drift: float = 1.5,
 ) -> dict:
@@ -218,7 +202,7 @@ def upsert_ivf_index(
     cent_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
     centroids = np.vstack(cent_pdf["centroid"].to_numpy())
     cells = [int(c) for c in cent_pdf["cell"].to_numpy()]
-    cell_col, dist_col = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells, dim)
+    cell_col, dist_col = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells)
 
     # metadata columns are whatever the layout's own schema carries
     # beyond (id, vec, cell) — declared once at build time, preserved
@@ -321,7 +305,6 @@ def refit_ivf_index(
     n_cells: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
 ) -> None:
     """Re-fit the coarse quantizer over the CURRENT index contents and
     rewrite the layout (the action behind ``refit_recommended``).
@@ -333,7 +316,7 @@ def refit_ivf_index(
     # break lineage before overwrite
     full = pin(raw.select(id_col, vec_col, *meta_cols), eager=True)
     build_ivf_index(full, path, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
-                    dim=dim, meta_cols=meta_cols)
+                    meta_cols=meta_cols)
 
 
 def stream_ivf_index(
@@ -342,7 +325,6 @@ def stream_ivf_index(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
     auto_refit: bool = False,
     n_cells: int = 16,
 ):
@@ -354,12 +336,11 @@ def stream_ivf_index(
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         info = upsert_ivf_index(
             batch_df.sparkSession, path, batch_df, id_col=id_col, vec_col=vec_col,
-            dim=dim,
         )
         if auto_refit and info["refit_recommended"]:
             refit_ivf_index(
                 batch_df.sparkSession, path, n_cells=n_cells,
-                id_col=id_col, vec_col=vec_col, dim=dim,
+                id_col=id_col, vec_col=vec_col,
             )
 
     return start_foreach_batch(stream_df, _merge, checkpoint)
@@ -373,7 +354,6 @@ def search_ivf_index(
     nprobe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
     where: str | None = None,
     match_cols: tuple = (),
 ) -> DataFrame:
@@ -413,9 +393,7 @@ def search_ivf_index(
         for i, r in enumerate(q_rows)
         for c in np.argsort(-scores[i])[:nprobe]
     ]
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_pairs, "query_id long, cell int")
-    )
+    probe_df = F.broadcast(local_table(spark, probe_pairs, "query_id long, cell int"))
     probed_cells = sorted({c for _, c in probe_pairs})
 
     vectors = spark.read.parquet(os.path.join(path, "vectors")).where(
@@ -428,7 +406,7 @@ def search_ivf_index(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         V.as_double(F.col(V.quote_col(vec_col))).alias("qv"),
-        V.norm_fixed(V.quote_col(vec_col), dim).alias("qnorm"),
+        V.norm(V.quote_col(vec_col)).alias("qnorm"),
         *[F.col(c).alias(f"_q_{c}") for c in match_cols],
     )
     cand = (
@@ -436,7 +414,7 @@ def search_ivf_index(
             F.col(id_col).alias("neighbor_id"),
             V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
             "cell",
-            V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
+            V.norm(V.quote_col(vec_col)).alias("cnorm"),
             *[F.col(c).alias(f"_c_{c}") for c in match_cols],
         )
         .join(probe_df, "cell")
@@ -449,8 +427,7 @@ def search_ivf_index(
         cand = cand.where(F.col(f"_c_{c}") == F.col(f"_q_{c}"))
     cand = cand.withColumn(
         "score",
-        V.dot_fixed("qv", "cv", dim, cast=False)
-        / (F.col("qnorm") * F.col("cnorm")),
+        V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm")),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (

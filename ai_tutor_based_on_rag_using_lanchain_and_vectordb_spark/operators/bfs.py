@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import pin
+from ..session import local_table, pin
 from .components import MAX_DRIVER_EDGES
 
 
@@ -57,9 +57,7 @@ def _driver_bfs(spark, sym: DataFrame, dist0: DataFrame,
             dist[n] = h
         frontier = list(nxt)
     node_type = dist0.schema["node"].dataType.simpleString()
-    return spark.createDataFrame(
-        list(dist.items()), f"node {node_type}, hops int"
-    )
+    return local_table(spark, list(dist.items()), f"node {node_type}, hops int")
 
 
 def bfs_hops(

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import exact as X
-from ..session import pin
+from ..session import local_table, pin
 from .dedup import tokens_col
 
 K1 = 1.2
@@ -142,7 +142,7 @@ def _query_terms_df(spark: SparkSession, queries: list) -> DataFrame:
         for t in dict.fromkeys(text.lower().split())  # dedup, keep order
         if t
     ]
-    return spark.createDataFrame(qterms, "query_id string, term string")
+    return local_table(spark, qterms, "query_id string, term string")
 
 
 def _score_topk(
@@ -439,7 +439,7 @@ def build_bm25_index(
         .agg(F.sum("tf").cast("long").alias("dl"))
     )
     dl.write.mode("overwrite").parquet(os.path.join(path, "doclens"))
-    spark.createDataFrame([(n_buckets,)], "n_buckets int").coalesce(
+    local_table(spark, [(n_buckets,)], "n_buckets int").coalesce(
         1
     ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 

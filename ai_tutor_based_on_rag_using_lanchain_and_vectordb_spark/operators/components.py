@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import pin
+from ..session import local_table, pin
 
 # Small-graph gate for the driver fast path: a MEASURED bound on the
 # symmetrized edge count (same pattern as the size-gated counts join in
@@ -78,9 +78,7 @@ def _driver_components(spark, sym: DataFrame) -> DataFrame:
             best[root] = node
     rows = [(node, best[find(node)]) for node in parent]
     node_type = sym.schema["a"].dataType.simpleString()
-    return spark.createDataFrame(
-        rows, f"node {node_type}, component {node_type}"
-    )
+    return local_table(spark, rows, f"node {node_type}, component {node_type}")
 
 
 def connected_components(

@@ -3,8 +3,9 @@ backend/chroma_utils.py:237-263; k from backend/config.py:34).
 
 Three physical strategies, trading exactness for scale:
 
-1. ``knn_exact_expr`` — broadcast queries, flat codegen cosine, window
-   top-k. Exact; right up to ~10^8 vectors per query batch.
+1. ``knn_exact_expr`` — broadcast queries, the fold-form cosine of
+   functions/vector.py (one Catalyst expression, any vector length),
+   window top-k. Exact; right up to ~10^8 vectors per query batch.
 2. ``knn_bruteforce_numpy`` — mapInPandas + numpy matmul with
    *per-partition partial top-k* before the final window: Arrow-batched,
    SIMD scoring; the shuffle carries only k rows per (partition, query).
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import vector as V
+from ..session import local_table
 
 
 def _topk_window(scored: DataFrame, k: int) -> DataFrame:
@@ -44,28 +46,27 @@ def knn_exact_expr(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 2,
-    dim: int = V.EMBEDDING_DIM,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "vec_id",
     query_vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Strategy 1: broadcast nested-loop + codegen cosine + window top-k.
-    ``vec_col`` and ``query_vec_col`` are top-level column names."""
+    """Strategy 1: broadcast nested-loop + fold-form cosine + window
+    top-k. ``vec_col`` and ``query_vec_col`` are top-level column names."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(V.quote_col(query_vec_col)).alias("qv"),
-        V.norm_fixed(V.quote_col(query_vec_col), dim).alias("qnorm"),
+        V.norm(V.quote_col(query_vec_col)).alias("qnorm"),
     ).where(F.col("qnorm") > 0)  # zero-norm excluded: cosine undefined
     c = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(V.quote_col(vec_col)).alias("cv"),
-        V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
+        V.norm(V.quote_col(vec_col)).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     cond = F.lit(True) if not exclude_self else F.col("query_id") != F.col("neighbor_id")
     scored = c.join(F.broadcast(q), cond).withColumn(
-        "score", V.dot_fixed("qv", "cv", dim) / (F.col("qnorm") * F.col("cnorm"))
+        "score", V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
     )
     return _topk_window(scored, k)
 
@@ -194,7 +195,6 @@ def knn_ivf(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
 ) -> DataFrame:
     """Strategy 3: assign every vector to a KMeans cell; score each query
     only against its top-`nprobe` nearest cells, exact rerank inside.
@@ -219,28 +219,29 @@ def knn_ivf(
     ]
     spark = vectors.sparkSession
     probe_df = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(qid, cell) for qid, cells in probe for cell in cells],
-            schema="query_id long, cell int",
+            "query_id long, cell int",
         )
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(V.quote_col(vec_col)).alias("qv"),
-        V.norm_fixed(V.quote_col(vec_col), dim).alias("qnorm"),
+        V.norm(V.quote_col(vec_col)).alias("qnorm"),
     )
     cand = (
         assigned.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(V.quote_col(vec_col)).alias("cv"),
             F.col("cell"),
-            V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
+            V.norm(V.quote_col(vec_col)).alias("cnorm"),
         )
         .join(probe_df, "cell")  # restrict to probed cells per query
         .join(F.broadcast(q), "query_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
     )
     scored = cand.withColumn(
-        "score", V.dot_fixed("qv", "cv", dim) / (F.col("qnorm") * F.col("cnorm"))
+        "score", V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
     )
     return _topk_window(scored, k)

@@ -107,7 +107,6 @@ def mmr_rerank(
     k: int = 5,
     fetch_c: int = 16,
     lam_permille: int = 500,
-    dim: int = V.EMBEDDING_DIM,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "vec_id",
@@ -123,12 +122,12 @@ def mmr_rerank(
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         V.as_double(F.col(V.quote_col(query_vec_col))).alias("qv"),
-        V.norm_fixed(V.quote_col(query_vec_col), dim).alias("qnorm"),
+        V.norm(V.quote_col(query_vec_col)).alias("qnorm"),
     ).where(F.col("qnorm") > 0)
     c = vectors.select(
         F.col(id_col).alias("nid"),
         V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
-        V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
+        V.norm(V.quote_col(vec_col)).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     cond = (
         F.col("query_id") != F.col("nid") if exclude_self else F.lit(True)
@@ -139,8 +138,7 @@ def mmr_rerank(
         .join(F.broadcast(q), cond)
         .withColumn(
             "score",
-            V.dot_fixed("qv", "cv", dim, cast=False)
-            / (F.col("qnorm") * F.col("cnorm")),
+            V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm")),
         )
     )
     pool = _pool_from_scored(scored, fetch_c)
@@ -153,7 +151,6 @@ def mmr_rerank_candidates(
     k: int = 5,
     fetch_c: int = 16,
     lam_permille: int = 500,
-    dim: int = V.EMBEDDING_DIM,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -178,7 +175,7 @@ def mmr_rerank_candidates(
     vecs = vectors.select(
         F.col(id_col).alias("nid"),
         V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
-        V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
+        V.norm(V.quote_col(vec_col)).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     scored = cand.join(vecs.hint("shuffle_hash"), "nid").select(
         "query_id", "nid", "score", "cv", "cnorm"
@@ -197,9 +194,9 @@ def _mmr_select(
     # computed JVM-side from that array with nested higher-order
     # functions — the former plan's pool self-join + second groupBy +
     # state join (2 extra Exchanges + a pool pin) collapse into this
-    # projection. V.dot's sequential fold is the same left-associated
-    # summation as dot_fixed, so every quantized sim is bit-identical
-    # to the join form (and to the DuckDB oracle). The map includes the
+    # projection. V.dot's fold is the same left-to-right summation as
+    # the scoring join, so every quantized sim is bit-identical to the
+    # join form (and to the DuckDB oracle). The map includes the
     # never-looked-up diagonal (the greedy only consults (lid, s) pairs
     # with s ∈ selected, lid ∉ selected); with a partially-filled pool
     # (C' < fetch_c) absent keys behave as before — element_at yields
@@ -211,22 +208,13 @@ def _mmr_select(
             )
         ).alias("pool"),
     )
-    simmap = F.map_from_entries(
-        F.flatten(
-            F.transform(
-                F.col("pool"),
-                lambda a: F.transform(
-                    F.col("pool"),
-                    lambda b: F.struct(
-                        (a["lid"] * stride + b["lid"]).alias("key"),
-                        _quant(
-                            V.dot(a["cv"], b["cv"])
-                            / (a["cnorm"] * b["cnorm"])
-                        ).alias("value"),
-                    ),
-                ),
-            )
-        )
+    # same arithmetic as _quant, in SQL text so the fold can name the
+    # lambda variables
+    simmap = F.expr(
+        "map_from_entries(flatten(transform(pool, _pa -> transform(pool, _pb -> "
+        f"struct(_pa.lid * CAST({int(fetch_c)} AS BIGINT) + _pb.lid AS key, "
+        f"CAST(floor({V.dot_sql('_pa.cv', '_pb.cv')} / (_pa.cnorm * _pb.cnorm) "
+        f"* {SIM_SCALE} + 0.5D) AS BIGINT) AS value)))))"
     )
     state = pooled.select(
         "query_id",

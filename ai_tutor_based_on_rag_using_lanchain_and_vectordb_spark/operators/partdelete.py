@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import pin
+from ..session import local_table, pin
 
 __all__ = ["anti_filter", "clear_emptied_partitions", "delete_ids_from_layout"]
 
@@ -87,7 +87,7 @@ def clear_emptied_partitions(
     present = {
         r[part_col] for r in kept.select(part_col).distinct().collect()
     }
-    empty = spark.createDataFrame([], kept.drop(part_col).schema)
+    empty = local_table(spark, [], kept.drop(part_col).schema)
     for p in touched:
         if p not in present:
             empty.coalesce(1).write.mode("overwrite").parquet(

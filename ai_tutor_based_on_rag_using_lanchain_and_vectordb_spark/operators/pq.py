@@ -15,10 +15,15 @@ Scale shape (100 TB design point):
 - Encoding is one mapInPandas pass (Arrow-batched numpy argmin per
   subspace): embarrassingly parallel, output ~M bytes/vector, so the
   encoded corpus is D·4/M× smaller than the raw one — the point of PQ.
-- ADC search scans CODES, not vectors: per Arrow batch the score is
-  M fancy-indexed LUT gathers + a sum, with per-partition partial
-  top-k (same merge shape as knn_bruteforce_numpy) so the shuffle sees
-  ≤ shortlist·partitions rows, never the corpus.
+- ADC search scans CODES, not vectors: each query's M×K LUT is built
+  on the driver and rides a broadcast local table, and the score is
+  one Catalyst expression — M ``element_at`` gathers folded into a sum
+  (no Python worker in the read). The shortlist is a window rank
+  filter; Catalyst runs a partial ``WindowGroupLimit`` below the
+  exchange, so the shuffle sees ≤ shortlist·partitions rows per query,
+  never the corpus. The fold sums the M subspaces left to right, so a
+  score can differ from NumPy's pairwise sum in the last ulp; final
+  scores come from the exact re-rank either way.
 - The optional exact re-rank joins the shortlist ids back to the raw
   vectors (hash join on id) — touching D floats for only
   shortlist·|queries| rows. ADC-shortlist → exact-rerank is the
@@ -35,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_table
 from . import knn as KNN
 
 
@@ -231,14 +237,12 @@ def knn_pq_adc(
     vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
-    """ADC top-k over the encoded corpus: per query an M×K LUT of
-    subspace inner products is closure-captured; each Arrow batch
-    scores its codes with M gathers + a sum and keeps a partial
-    shortlist per query. With `rerank_vectors` the shortlist is
-    re-scored exactly (hash join on id against the raw vectors) —
-    ADC ranks, exact scores decide, the production arrangement."""
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, kc, sub = cb.shape
+    """ADC top-k over the encoded corpus: every query's M×K LUT rides a
+    broadcast table, each code row is scored against every query by the
+    one ADC expression, and a window keeps a shortlist per query. With
+    `rerank_vectors` the shortlist is re-scored exactly (hash join on id
+    against the raw vectors) — ADC ranks, exact scores decide, the
+    production arrangement."""
     qm = np.asarray(query_matrix, dtype=np.float64)
     qids = np.asarray(query_ids, dtype=np.int64)
     # zero-norm queries drop out — cosine undefined, the same contract
@@ -247,46 +251,15 @@ def knn_pq_adc(
     keep_q = qn[:, 0] > 0
     qm, qn, qids = qm[keep_q], qn[keep_q], qids[keep_q]
     qu = qm / qn
-    # LUT[q, i, c] = <query subvector i, codebook i entry c>
-    lut = np.einsum("qis,ics->qic", qu.reshape(len(qu), m, sub), cb)
-
+    spark = encoded.sparkSession
+    cand = encoded.select("vec_id", "codes").crossJoin(
+        F.broadcast(_lut_df(spark, codebooks, qu, qids))
+    )
     n_short = max(shortlist, k)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, pd.DataFrame] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            # scores[q, n] = sum_i LUT[q, i, codes[n, i]]
-            gathered = lut[:, np.arange(m)[None, :], codes[:, :]]  # Q×N×M
-            scores = gathered.sum(axis=2)
-            for qi, qid in enumerate(qids):
-                mask = ids != qid if exclude_self else np.ones(len(ids), bool)
-                cand = pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": ids[mask],
-                        "score": scores[qi][mask],
-                    }
-                )
-                merged = (
-                    pd.concat([best[qi], cand]) if qi in best else cand
-                )
-                best[qi] = merged.nlargest(n_short, "score")
-        if best:
-            yield pd.concat(best.values(), ignore_index=True)
-
-    partial = encoded.select("vec_id", "codes").mapInPandas(
-        score, KNN._SCORE_SCHEMA
-    )
     if rerank_vectors is None:
-        return KNN._topk_window(partial, k)
-    short = KNN._topk_window(partial, n_short).select("query_id", "neighbor_id")
-    return _exact_rerank(
-        short, rerank_vectors, qu, qids, m * sub, k, id_col, vec_col
-    )
+        return KNN._topk_window(_adc_scored(cand, exclude_self), k)
+    short = _adc_shortlist(cand, n_short, exclude_self)
+    return _exact_rerank(short, rerank_vectors, qu, qids, k, id_col, vec_col)
 
 
 def _exact_rerank(
@@ -294,34 +267,32 @@ def _exact_rerank(
     rerank_vectors: DataFrame,
     qu: np.ndarray,
     qids: np.ndarray,
-    dim: int,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine re-scoring of an ADC shortlist: hash join on id
     back to the raw vectors, broadcast the (few) unit query vectors,
-    codegen'd fixed-dim dot product, window top-k."""
-    qdf_rows = [(int(q), [float(v) for v in qu[i]]) for i, q in enumerate(qids)]
-    spark = rerank_vectors.sparkSession
-    qdf = spark.createDataFrame(qdf_rows, "query_id long, qv array<double>")
+    fold-form dot product, window top-k."""
     from ..functions import vector as V
 
+    qdf = local_table(
+        rerank_vectors.sparkSession,
+        [(int(q), qu[i].tolist()) for i, q in enumerate(qids)],
+        "query_id long, qv array<double>",
+    )
     exact = (
         short.join(
             rerank_vectors.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(V.quote_col(vec_col)).alias("cv"),
-                V.norm_fixed(V.quote_col(vec_col), dim).alias("cnorm"),
+                V.norm(V.quote_col(vec_col)).alias("cnorm"),
             ),
             "neighbor_id",
         )
         .join(F.broadcast(qdf), "query_id")
         .where(F.col("cnorm") > 0)
-        .withColumn(
-            "score",
-            V.dot_fixed("qv", "cv", dim) / F.col("cnorm"),
-        )
+        .withColumn("score", V.dot("qv", "cv") / F.col("cnorm"))
     )
     return KNN._topk_window(exact, k)
 
@@ -349,16 +320,17 @@ def knn_ivfpq(
     join IS partition pruning), the scan inside probed cells touches
     M-byte codes instead of D floats, and raw vectors are read for only
     shortlist·|queries| rows. Compute shape: the probe table
-    (queries × nprobe) broadcasts; candidate scoring is one
-    mapInPandas over the pruned code table with per-partition partial
-    top-k — no stage ever materializes a full score matrix."""
+    (queries × nprobe) and the LUT table broadcast; candidate scoring
+    is one expression over the pruned code table with a partial
+    WindowGroupLimit below the shuffle — no stage ever materializes a
+    full score matrix."""
     from .knn import fit_ivf_centroids, unit_vectors_ml
 
     spark = vectors.sparkSession
     # queries first: an empty query set must not pay the k-means fits
-    qm, qu, qids = _prep_queries(queries, id_col, vec_col)
+    qu, qids = _prep_queries(queries, id_col, vec_col)
     if not len(qids):
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_table(spark, [], _RESULT_SCHEMA)
 
     model, centroids = fit_ivf_centroids(vectors, n_clusters, vec_col)
     assigned = (
@@ -372,12 +344,9 @@ def knn_ivfpq(
         spark, qu, qids, centroids, list(range(len(centroids))), nprobe
     )
     cand = enc.join(probe_df, "cell").select("query_id", "vec_id", "codes")
-    n_short = max(shortlist, k)
-    partial = _adc_partial(cand, cb, qu, qids, n_short, exclude_self)
-    short = KNN._topk_window(partial, n_short).select("query_id", "neighbor_id")
-    return _exact_rerank(
-        short, vectors, qu, qids, qm.shape[1], k, id_col, vec_col
-    )
+    cand = cand.join(F.broadcast(_lut_df(spark, cb, qu, qids)), "query_id")
+    short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
+    return _exact_rerank(short, vectors, qu, qids, k, id_col, vec_col)
 
 
 _RESULT_SCHEMA = (
@@ -387,19 +356,18 @@ _RESULT_SCHEMA = (
 
 def _prep_queries(
     queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray]:
     """Collect the (few) query vectors, drop zero-norm ones (cosine
-    undefined — the shared contract), return (qm, qu, qids). The single
-    place the query-side prep lives for every PQ-family search."""
+    undefined — the shared contract), return (unit vectors, ids). The
+    single place the query-side prep lives for every PQ-family search."""
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
-        return (np.empty((0, 0)), np.empty((0, 0)), np.empty(0, np.int64))
+        return np.empty((0, 0)), np.empty(0, np.int64)
     qm = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
     qids = np.asarray([r[id_col] for r in q_rows], dtype=np.int64)
     qn = np.linalg.norm(qm, axis=1, keepdims=True)
     keep_q = qn[:, 0] > 0
-    qm, qn, qids = qm[keep_q], qn[keep_q], qids[keep_q]
-    return qm, (qm / qn if len(qm) else qm), qids
+    return qm[keep_q] / qn[keep_q], qids[keep_q]
 
 
 def _probe_df(
@@ -418,53 +386,53 @@ def _probe_df(
         for i, qid in enumerate(qids)
         for c in np.argsort(-scores[i])[:nprobe]
     ]
-    probe = F.broadcast(
-        spark.createDataFrame(pairs, "query_id long, cell int")
-    )
+    probe = F.broadcast(local_table(spark, pairs, "query_id long, cell int"))
     return probe, sorted({c for _, c in pairs})
 
 
-def _adc_partial(
-    cand: DataFrame,
-    codebooks: np.ndarray,
-    qu: np.ndarray,
-    qids: np.ndarray,
-    n_short: int,
-    exclude_self: bool = True,
+#: ADC score of one (codes, lut) row: the sum over the M subspaces of
+#: lut[i][codes[i]], folded left to right (element_at is 1-based)
+_ADC_SCORE_SQL = (
+    "aggregate(zip_with(codes, lut, (_c, _row) -> element_at(_row, _c + 1)), "
+    "-0.0D, (_acc, _t) -> _acc + _t)"
+)
+
+
+def _lut_df(
+    spark, codebooks: np.ndarray, qu: np.ndarray, qids: np.ndarray
 ) -> DataFrame:
-    """Per-(candidate, probing-query) ADC scoring over a pre-pruned
-    (query_id, vec_id, codes) frame with a partial per-query shortlist
-    kept inside each partition — shared by the inline composition
-    (knn_ivfpq) and the persistent index (pq_index.search)."""
+    """(query_id, lut) with lut[i][c] = <query subvector i, codebook i
+    entry c>: the M×K asymmetric-distance table of each unit query,
+    computed on the driver and shipped as a local table."""
     cb = np.asarray(codebooks, dtype=np.float64)
-    m = cb.shape[0]
-    lut = np.einsum("qis,ics->qic", qu.reshape(len(qu), m, cb.shape[2]), cb)
-    qindex = {int(q): i for i, q in enumerate(qids)}
+    lut = np.einsum("qis,ics->qic", qu.reshape(len(qu), cb.shape[0], cb.shape[2]), cb)
+    return local_table(
+        spark,
+        [(int(q), lut[i].tolist()) for i, q in enumerate(qids)],
+        "query_id long, lut array<array<double>>",
+    )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, pd.DataFrame] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            qrow = pdf["query_id"].map(qindex).to_numpy().astype(np.int64)
-            # each candidate scores against ITS probing query only
-            scores = lut[qrow[:, None], np.arange(m)[None, :], codes].sum(
-                axis=1
-            )
-            frame = pd.DataFrame(
-                {"query_id": pdf["query_id"].to_numpy(), "neighbor_id": ids,
-                 "score": scores}
-            )
-            if exclude_self:
-                frame = frame[frame["query_id"] != frame["neighbor_id"]]
-            for qid, grp in frame.groupby("query_id"):
-                merged = (
-                    pd.concat([best[qid], grp]) if qid in best else grp
-                )
-                best[qid] = merged.nlargest(n_short, "score")
-        if best:
-            yield pd.concat(best.values(), ignore_index=True)
 
-    return cand.mapInPandas(score, KNN._SCORE_SCHEMA)
+def _adc_scored(cand: DataFrame, exclude_self: bool) -> DataFrame:
+    """(query_id, neighbor_id, score) over a (query_id, vec_id, codes,
+    lut) candidate frame: ADC as one Catalyst expression, no Python."""
+    scored = cand.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(_ADC_SCORE_SQL).alias("score"),
+    )
+    if exclude_self:
+        scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
+    return scored
+
+
+def _adc_shortlist(cand: DataFrame, n_short: int, exclude_self: bool) -> DataFrame:
+    """(query_id, neighbor_id) of each query's top-``n_short`` ADC
+    scores — shared by the inline composition (knn_ivfpq), the
+    persistent index (pq_index.search) and knn_pq_adc. The window's
+    rank filter lets Catalyst put a partial WindowGroupLimit below the
+    query_id exchange, so the shuffle carries at most ``n_short`` rows
+    per (partition, query), never the candidate set."""
+    return KNN._topk_window(_adc_scored(cand, exclude_self), n_short).select(
+        "query_id", "neighbor_id"
+    )

@@ -21,15 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from ..session import pin
+from ..session import local_table, pin
 from ..streaming.epochs import start_foreach_batch
-from . import knn as KNN
 from .knn import fit_ivf_centroids, unit_vectors_ml
 from .partdelete import clear_emptied_partitions
 from .pq import (
     _RESULT_SCHEMA,
-    _adc_partial,
+    _adc_shortlist,
     _exact_rerank,
+    _lut_df,
     _prep_queries,
     _probe_df,
     encode_pq,
@@ -69,18 +69,16 @@ def build_ivfpq_index(
         (int(i), [float(x) for x in centroids[i]])
         for i in range(len(centroids))
     ]
-    spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
+    local_table(spark, cent_rows, "cell int, centroid array<double>").coalesce(
+        1
+    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     cb_rows = [
         (int(i), int(c), [float(x) for x in cb[i, c]])
         for i in range(cb.shape[0])
         for c in range(cb.shape[1])
     ]
-    spark.createDataFrame(
-        cb_rows, "subspace int, code int, centroid array<double>"
+    local_table(
+        spark, cb_rows, "subspace int, code int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebooks")
     )
@@ -193,9 +191,9 @@ class IvfPqSearcher:
             auto_np, auto_sl = self.auto_params(k)
             nprobe = auto_np if nprobe is None else nprobe
             shortlist = auto_sl if shortlist is None else shortlist
-        qm, qu, qids = _prep_queries(queries, self.id_col, self.vec_col)
+        qu, qids = _prep_queries(queries, self.id_col, self.vec_col)
         if not len(qids):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+            return local_table(self.spark, [], _RESULT_SCHEMA)
         probe_df, probed_cells = _probe_df(
             self.spark, qu, qids, self.cent, self.cells, nprobe
         )
@@ -206,19 +204,14 @@ class IvfPqSearcher:
             # metadata filter below ADC: evaluated in the pruned scan,
             # before any distance table is consulted
             codes = codes.where(where)
-        cand = codes.join(probe_df, "cell").select(
-            "query_id", "vec_id", "codes"
+        cand = (
+            codes.join(probe_df, "cell")
+            .select("query_id", "vec_id", "codes")
+            .join(F.broadcast(_lut_df(self.spark, self.cb, qu, qids)), "query_id")
         )
-        n_short = max(shortlist, k)
-        partial = _adc_partial(
-            cand, self.cb, qu, qids, n_short, exclude_self
-        )
-        short = KNN._topk_window(partial, n_short).select(
-            "query_id", "neighbor_id"
-        )
+        short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
         return _exact_rerank(
-            short, self.rerank_vectors, qu, qids, qm.shape[1], k,
-            self.id_col, self.vec_col,
+            short, self.rerank_vectors, qu, qids, k, self.id_col, self.vec_col
         )
 
 
@@ -287,9 +280,8 @@ def upsert_ivfpq_index(
     centroids = np.vstack(cent_pdf["centroid"].to_numpy())
     cells = [int(c) for c in cent_pdf["cell"].to_numpy()]
     cb = read_codebooks(spark, path)
-    dim = cb.shape[0] * cb.shape[2]
 
-    cell_col, _dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells, dim)
+    cell_col, _dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells)
     # preserve whatever metadata the layout carries (declared at build
     # time via meta_cols; the batch must supply the same columns)
     codes_path = os.path.join(path, "codes")

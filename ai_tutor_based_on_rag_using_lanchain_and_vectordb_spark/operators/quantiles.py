@@ -45,6 +45,8 @@ from bisect import bisect_left, bisect_right
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 # expected bracket width is n/sample_target per rank; 2M rows ≈ 16 MB
 # of doubles on the driver — comfortably bounded, loop shrinks further
 DEFAULT_SAMPLE = 20_000
@@ -334,7 +336,8 @@ def exact_group_quantiles(
     mod_rows = [
         (g, max(1, ndv // sample_target)) for g, (_, ndv) in stats.items()
     ]
-    mods = spark.createDataFrame(mod_rows, ["_g", "_mod"])
+    g_type = vals.schema["_g"].dataType.simpleString()
+    mods = local_table(spark, mod_rows, f"_g {g_type}, _mod long")
     sample_rows = (
         vals.join(F.broadcast(mods), "_g")
         .where(F.pmod(F.xxhash64("_v"), F.col("_mod")) == 0)
@@ -482,7 +485,11 @@ def _group_counts_le(spark: SparkSession, vals: DataFrame, pivots: list) -> dict
     """{(group, pivot): count(col <= pivot within group)} via a
     broadcast pivot join + narrow groupBy — shuffle carries one counter
     row per (group, pivot)."""
-    pdf = spark.createDataFrame(pivots, ["_g", "_p"])
+    pdf = local_table(
+        spark, pivots,
+        f"_g {vals.schema['_g'].dataType.simpleString()}, "
+        f"_p {vals.schema['_v'].dataType.simpleString()}",
+    )
     joined = vals.join(F.broadcast(pdf), "_g")
     rows = (
         joined.groupBy("_g", "_p")
@@ -507,7 +514,8 @@ def exact_quantiles_df(
     shape. The collect inside exact_quantiles is bounded by
     construction (see its docstring)."""
     rows = exact_quantiles(df, col, probs, **kw)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(lbl, int(k), float(v)) for lbl, _, _, k, v in rows],
         "pct string, k long, value double",
     )

@@ -55,7 +55,6 @@ def assign_cells(
     n_cells: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
     seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
@@ -73,7 +72,7 @@ def assign_cells(
 
     vq = V.quote_col(vec_col)
     base = vectors.select(id_col, vec_col).where(
-        F.col(vq).isNotNull() & (V.norm_fixed(vq, dim) > 0)
+        F.col(vq).isNotNull() & (V.norm(vq) > 0)
     )
     if n_cells == 1 and centroids is None:
         # no quantizer needed: one cell, distance measured to the mean
@@ -90,16 +89,16 @@ def assign_cells(
     if len(centroids) > _EXPR_ASSIGN_MAX_CELLS:
         return _assign_cells_numpy(base, centroids, id_col, vec_col)
     cell_col, dist_col = _nearest_cell_expr(
-        vq, centroids, list(range(len(centroids))), dim
+        vq, centroids, list(range(len(centroids)))
     )
     return base.select(
         id_col, vec_col, cell_col.alias("cell"), dist_col.alias("centroid_dist")
     )
 
 
-#: above this cell count the flat-literal argmin expression (one dot
-#: product PER CENTROID inlined into the plan — O(cells·dim) terms)
-#: stops being a codegen win and becomes the bottleneck: the round-10
+#: above this cell count the argmin expression (one dot product PER
+#: CENTROID against its literal array — O(cells·dim) plan literals)
+#: stops paying off and becomes the bottleneck: the round-10
 #: 100× probe measured the 390-cell assignment at ~145× growth. The
 #: Arrow kernel below does the same argmin as one numpy matrix product
 #: per batch — O(1) plan size, vectorized math, linear in rows.
@@ -157,7 +156,7 @@ def _assign_cells_numpy(
 
 
 def _mean_direction_dist(
-    vectors: DataFrame, id_col: str, vec_col: str, dim: int
+    vectors: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """centroid_dist for the 1-cell case: unit-sphere distance to the
     corpus mean direction, via the same argmin expression machinery as
@@ -174,7 +173,7 @@ def _mean_direction_dist(
         .collect()
     )  # bounded: one row per embedding dimension
     centroid = np.asarray([r["m"] for r in sums], dtype=np.float64)
-    _, dist_col = _nearest_cell_expr(vq, centroid[None, :], [0], dim)
+    _, dist_col = _nearest_cell_expr(vq, centroid[None, :], [0])
     return vectors.withColumn("centroid_dist", dist_col)
 
 
@@ -185,7 +184,6 @@ def semdedup(
     order: str = "id",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = V.EMBEDDING_DIM,
     engine: str = "numpy",
     collapse: bool | None = None,
     seed: int = 42,
@@ -213,7 +211,7 @@ def semdedup(
     from ..plans.vectors import embedding_neardup_pairs_df
 
     assigned = assign_cells(
-        vectors, n_cells, id_col, vec_col, dim, seed, centroids=centroids
+        vectors, n_cells, id_col, vec_col, seed, centroids=centroids
     )
     # pin the assignment: it feeds the pair generator, both prune-key
     # branches and the final flag join — without the pin each branch
@@ -226,7 +224,7 @@ def semdedup(
     assigned = pin(assigned)
     if order == "centroid" and n_cells == 1 and centroids is None:
         assigned = _mean_direction_dist(
-            assigned.drop("centroid_dist"), id_col, vec_col, dim
+            assigned.drop("centroid_dist"), id_col, vec_col
         )
 
     labeled = assigned.select(

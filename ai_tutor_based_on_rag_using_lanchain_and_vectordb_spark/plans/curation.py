@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import exact as X
 from ..functions import textstats as TS
+from ..session import local_table
 
 
 def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,7 +249,8 @@ def catalog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sentinel -1: generated doc_ids are non-negative at every scale
     # factor, so the brand-new-row case can never collide with a real id
-    new_row = spark.createDataFrame(
+    new_row = local_table(
+        spark,
         [(-1, "brand new doc", "en", "reingest", 13)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
@@ -279,7 +281,8 @@ def scd2_catalog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") + 7).alias("n_chars"),
     )
     # sentinel -1: can never collide with generated (non-negative) ids
-    new_row = spark.createDataFrame(
+    new_row = local_table(
+        spark,
         [(-1, "en", "reingest", 13)],
         "doc_id long, lang string, source string, n_chars long",
     )

@@ -26,7 +26,7 @@ from ..catalog import load_table
 from ..functions import text as TX
 from ..functions import exact as X
 from ..functions import textstats as TS
-from ..session import pin
+from ..session import local_table, pin
 
 CHUNK_SIZE = 120
 CHUNK_OVERLAP = 24
@@ -595,7 +595,8 @@ def lang_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "lang", "n_chars",
         [("p25", 1, 4), ("p50", 1, 2), ("p90", 9, 10)],
     )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(g, lbl, int(k), int(v)) for g, lbl, k, v in rows],
         "lang string, pct string, k long, value long",
     )
@@ -878,7 +879,7 @@ def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, text in BM25_QUERIES
         for t in sorted(set(text.lower().split()))
     ]
-    qdf = spark.createDataFrame(qterms, "query_id string, term string")
+    qdf = local_table(spark, qterms, "query_id string, term string")
     # ONE pinned tokenize pass (optimization r13, guide §2.3 —
     # operators/bm25.tokenized_base) feeds the ranker's scoring, the
     # corpus stats AND the relevance truth: the shared-tokenizer
@@ -931,7 +932,7 @@ def retrieval_eval_rankers(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, text in BM25_QUERIES
         for t in sorted(set(text.lower().split()))
     ]
-    qdf = spark.createDataFrame(qterms, "query_id string, term string")
+    qdf = local_table(spark, qterms, "query_id string, term string")
     # ONE pinned tokenize pass (optimization r13, guide §2.3 — see
     # retrieval_eval): shared by the BM25 scoring and both relevance
     # truths, no corpus-wide (doc, term) shuffle in the plan

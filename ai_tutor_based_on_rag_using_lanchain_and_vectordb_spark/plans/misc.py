@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import exact as X
+from ..session import local_table
 
 
 def api_call_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -656,7 +657,8 @@ def constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).first()["null_custkey"]
     neg_qty = li.where(F.col("l_quantity") <= 0).count()
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 int(orphan_li),
@@ -762,7 +764,8 @@ def kmv_overlap_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                     bool(exh == true and rel <= 0.35),
                 )
             )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "pair string, exact long, estimate double, rel_err double, "
         "passed boolean",

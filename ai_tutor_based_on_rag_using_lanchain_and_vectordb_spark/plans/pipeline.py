@@ -17,7 +17,7 @@ from ..operators import dedup as DD
 from ..operators import embed as EMB
 from ..operators import knn as KNN
 from ..operators import splitter as SPL
-from ..session import pin
+from ..session import local_table, pin
 from . import chat
 
 
@@ -1070,7 +1070,7 @@ def knn_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import vector as V
 
     emb = load_table(spark, sf_dir, "embeddings").where(
-        V.norm_fixed("embedding") > 0
+        V.norm("embedding") > 0
     )
     queries = emb.where(F.col("vec_id") < 5)
     out = KNN.knn_ivf(emb, queries, k=5, n_clusters=8, nprobe=8)
@@ -1349,7 +1349,7 @@ def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann_index import build_ivf_index, search_ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings").where(
-        V.norm_fixed("embedding") > 0
+        V.norm("embedding") > 0
     )
     path = tempfile.mkdtemp(prefix="ivf_filtered_")
     build_ivf_index(emb, path, n_cells=8, meta_cols=("label",))
@@ -1385,7 +1385,7 @@ def knn_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pq_index import build_ivfpq_index, search_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings").where(
-        V.norm_fixed("embedding") > 0
+        V.norm("embedding") > 0
     )
     path = tempfile.mkdtemp(prefix="ivfpq_filtered_")
     build_ivfpq_index(emb, path, n_cells=4, m=8, kc=16, meta_cols=("label",))
@@ -1418,7 +1418,7 @@ def knn_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .vectors import knn_label_filtered
 
     emb = load_table(spark, sf_dir, "embeddings").where(
-        V.norm_fixed("embedding") > 0
+        V.norm("embedding") > 0
     )
     path = tempfile.mkdtemp(prefix="ivf_filtered_rc_")
     build_ivf_index(emb, path, n_cells=8, meta_cols=("label",))
@@ -1462,7 +1462,8 @@ def bpe_train_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = {r["word"]: r["n"] for r in wc.collect()}
     ref_merges = B.bpe_reference(counts, n_merges=20)
     n_match = sum(1 for a, b in zip(spark_merges, ref_merges) if a == b)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 "bpe_wordfreq",
@@ -1760,9 +1761,7 @@ def domain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = landed.select(
         "doc_id", url_host(F.col("url")).alias("host")
     ).withColumn("domain", registrable_domain(F.col("host")))
-    blocklist = spark.createDataFrame(
-        [(d,) for d in CURATION_BLOCKLIST], "domain string"
-    )
+    blocklist = local_table(spark, [(d,) for d in CURATION_BLOCKLIST], "domain string")
     allowed = parsed.join(F.broadcast(blocklist), "domain", "left_anti")
     from pyspark.sql import Window
 
@@ -1843,7 +1842,8 @@ def bloom_fpp_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("count") != 2)
         .count()
     )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 int(n),
@@ -1995,7 +1995,8 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         0,
     ))
 
-    out = spark.createDataFrame(
+    out = local_table(
+        spark,
         [(c, int(o), int(e)) for c, o, e in rows],
         "check string, observed long, expected long",
     )

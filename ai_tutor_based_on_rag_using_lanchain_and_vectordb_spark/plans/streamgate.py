@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import _read_schema, ensure_nanos_conf, load_table
-from ..session import pin, tune_for_oracle
+from ..session import local_table, pin, tune_for_oracle
 from ..streaming import windows as W
 from ..streaming.epochs import drain, start_foreach_batch
 
@@ -591,8 +591,8 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(ds_dir, ignore_errors=True)
 
-    out = spark.createDataFrame(
-        results, "operator string, n_stream long, n_batch long, matched boolean"
+    out = local_table(
+        spark, results, "operator string, n_stream long, n_batch long, matched boolean"
     ).orderBy("operator")
     return _assert_all_matched(out)
 

@@ -22,28 +22,26 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import exact as X
 from ..functions import vector as V
-from ..session import default_parallelism, pin
+from ..session import default_parallelism, local_table, pin
 
 K = 5
 N_QUERIES = 5  # vec_id < 5 are the designated query vectors
 
 
 def _scored_pairs(embeddings: DataFrame, same_label_only: bool) -> DataFrame:
-    # Fixed-dim flat-expression scoring: stays in WholeStageCodegen with
-    # zero per-pair allocations (the zip_with/aggregate form allocates an
-    # intermediate array per pair and GC-thrashes million-pair joins).
-    # Norms are precomputed per row, not per pair.
+    # Fold-form scoring (functions/vector.py); norms and the DOUBLE
+    # promotion are computed once per row, not per pair.
     queries = embeddings.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         V.as_double(F.col("embedding")).alias("qv"),
         F.col("label").alias("qlabel"),
-        V.norm_fixed("embedding").alias("qnorm"),
+        V.norm("embedding").alias("qnorm"),
     )
     cand = embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
         V.as_double(F.col("embedding")).alias("cv"),
         F.col("label").alias("clabel"),
-        V.norm_fixed("embedding").alias("cnorm"),
+        V.norm("embedding").alias("cnorm"),
     )
     cond = F.col("query_id") != F.col("neighbor_id")
     if same_label_only:
@@ -58,7 +56,7 @@ def _scored_pairs(embeddings: DataFrame, same_label_only: bool) -> DataFrame:
         .join(F.broadcast(queries), cond)
         .withColumn(
             "score",
-            V.dot_fixed("qv", "cv", cast=False)
+            V.dot("qv", "cv")
             / (F.col("qnorm") * F.col("cnorm")),
         )
     )
@@ -130,16 +128,16 @@ def _salted_pair_scores(
         F.col("vec_id").alias("vec_a"),
         V.as_double(F.col("embedding")).alias("va"),
         F.col("label").alias("la"),
-        V.norm_fixed("embedding").alias("norm_a"),
+        V.norm("embedding").alias("norm_a"),
         salt_a.alias("salt_a"),
     ).where(F.col("norm_a") > 0)  # zero-norm excluded: cosine undefined
     b = vectors.select(
         F.col("vec_id").alias("vec_b"),
         V.as_double(F.col("embedding")).alias("vb"),
         F.col("label").alias("lb"),
-        V.norm_fixed("embedding").alias("norm_b"),
+        V.norm("embedding").alias("norm_b"),
     ).where(F.col("norm_b") > 0)
-    score = V.dot_fixed("va", "vb", cast=False) / (
+    score = V.dot("va", "vb") / (
         F.col("norm_a") * F.col("norm_b")
     )
     if broadcast_build:
@@ -191,7 +189,7 @@ def _cogroup_pair_scores_numpy(
     Bit-parity with the expression path (and so with the DuckDB oracle)
     is engineered, not hoped for: accumulation is SEQUENTIAL over the 64
     dimensions (``acc += A[:,i]·B[:,i]``, vectorized across the pair
-    axis) — the same left-associated order as ``dot_fixed`` — norms use
+    axis) — the same left-to-right order as ``V.dot``'s fold — norms use
     the same loop, and rounding replicates ``pround``'s
     ``floor(x·10⁴+0.5)/10⁴``. All IEEE-double ops in identical order ⇒
     identical bits (equivalence-tested in tests/test_dedup.py).
@@ -349,8 +347,8 @@ def embedding_neardup_pairs_df(
     # within-group pairs: score = the rep's self-cosine, evaluated with
     # the exact expression shape of the pair join so floats agree
     vdbl = V.as_double_sql("embedding")
-    self_score = V.dot_fixed(vdbl, vdbl, cast=False) / (
-        V.norm_fixed("embedding") * V.norm_fixed("embedding")
+    self_score = V.dot(vdbl, vdbl) / (
+        V.norm("embedding") * V.norm("embedding")
     )
     from ..plans.documents import _pairs_from_sorted_ids
 
@@ -358,7 +356,7 @@ def embedding_neardup_pairs_df(
         groups.where(F.size("_ids") >= 2)
         # zero-norm excluded (cosine undefined); also keeps the division
         # 0/0-free under ANSI mode
-        .where(V.norm_fixed("embedding") > 0)
+        .where(V.norm("embedding") > 0)
         .withColumn("_s", self_score)
         .where(F.col("_s") >= threshold)
         .select(
@@ -939,7 +937,8 @@ def pca_projection_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("ex2") - F.col("mean") * F.col("mean")).alias("proj_variance"),
         )
     )
-    ev = spark.createDataFrame(
+    ev = local_table(
+        spark,
         [(int(i), float(eigvals[i])) for i in range(PCA_COMPONENTS)],
         "component int, eigenvalue double",
     )

@@ -50,6 +50,36 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-side table (probe pairs, query vectors, lookup tables,
+    small result sets) as a ``LocalTableScan``: the package's one way to
+    turn Python rows into a frame.
+
+    ``spark.createDataFrame(list)`` plans a scan of a PythonRDD, so every
+    action over it starts a Python worker and unpickles the rows, 0.3 s
+    warm and over 1 s cold per table. Handing Spark a ``pyarrow.Table``
+    instead ships the rows to the JVM as Arrow batches at plan time and
+    runs no Python while the plan executes. This path does not read
+    ``spark.sql.execution.arrow.pyspark.enabled``, so a session built
+    without the engine's defaults gets it too.
+
+    ``rows`` is a sequence of tuples (or Rows) in ``schema`` order;
+    ``schema`` is a DDL string or a StructType."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     """Cut ``df``'s lineage: the package's one pin policy. With a
     checkpoint dir on the session (Spark's ``spark.checkpoint.dir`` conf,

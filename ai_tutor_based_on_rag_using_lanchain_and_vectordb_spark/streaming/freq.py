@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.freq import _domain_filter, _mg_summaries, mg_trim
+from ..session import local_table
 from .epochs import drain, start_foreach_batch
 
 
@@ -150,7 +151,7 @@ def finalize_exact(
     if not cands:
         schema = corpus.select(col).schema
         return (
-            corpus.sparkSession.createDataFrame([], schema)
+            local_table(corpus.sparkSession, [], schema)
             .withColumn("cnt", F.lit(0).cast("long"))
         )
     return (

@@ -52,12 +52,10 @@ class SemDedupState(EpochState):
         root: str,
         centroids: np.ndarray,
         threshold: float,
-        dim: int = V.EMBEDDING_DIM,
     ) -> None:
         super().__init__(root)
         self.centroids = np.asarray(centroids, dtype=np.float64)
         self.threshold = float(threshold)
-        self.dim = dim
 
     def vectors(self, spark, epoch: int) -> DataFrame | None:
         """(vec_id, embedding, cell) committed at-or-before ``epoch``."""
@@ -99,7 +97,6 @@ class SemDedupState(EpochState):
         new = assign_cells(
             batch_df.dropDuplicates(["vec_id"]),
             n_cells=len(self.centroids),
-            dim=self.dim,
             centroids=self.centroids,
         ).select("vec_id", "embedding", "cell")
         hist = self.vectors(spark, last)
@@ -114,7 +111,7 @@ class SemDedupState(EpochState):
         # side A = the new batch (salted on hash(id), the
         # _salted_pair_scores shape), side B = new ∪ history, replicated
         # across the salts. history×history never re-scores. The score
-        # is the exact expression kernel (dot_fixed / norm·norm) that is
+        # is the exact expression kernel (dot / norm·norm) that is
         # bit-parity-tested against the batch operator's numpy kernel.
         both = new if hist is None else new.unionByName(hist)
         salt_a = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_SALTS)).cast("int")
@@ -122,7 +119,7 @@ class SemDedupState(EpochState):
             F.col("vec_id").alias("vec_a"),
             V.as_double(F.col("embedding")).alias("va"),
             F.col("cell").alias("ca"),
-            V.norm_fixed("embedding", self.dim).alias("norm_a"),
+            V.norm("embedding").alias("norm_a"),
             salt_a.alias("salt_a"),
         ).where(F.col("norm_a") > 0)
         b = (
@@ -130,14 +127,14 @@ class SemDedupState(EpochState):
                 F.col("vec_id").alias("vec_b"),
                 V.as_double(F.col("embedding")).alias("vb"),
                 F.col("cell").alias("cb"),
-                V.norm_fixed("embedding", self.dim).alias("norm_b"),
+                V.norm("embedding").alias("norm_b"),
             )
             .where(F.col("norm_b") > 0)
             .withColumn(
                 "salt_b", F.explode(F.sequence(F.lit(0), F.lit(_SALTS - 1)))
             )
         )
-        score = V.dot_fixed("va", "vb", self.dim, cast=False) / (
+        score = V.dot("va", "vb") / (
             F.col("norm_a") * F.col("norm_b")
         )
         n_parts = default_parallelism()
@@ -172,11 +169,10 @@ def stream_semdedup(
     checkpoint: str,
     centroids: np.ndarray,
     threshold: float,
-    dim: int = V.EMBEDDING_DIM,
 ):
     """Continuous semantic dedup of a (vec_id, embedding) stream on a
     frozen quantizer. Read the maintained decision set back with
     ``SemDedupState(...).decisions(spark)``. Returns the started
     StreamingQuery."""
-    state = SemDedupState(state_root, centroids, threshold, dim)
+    state = SemDedupState(state_root, centroids, threshold)
     return start_foreach_batch(stream_df, state.apply_batch, checkpoint)

@@ -33,7 +33,7 @@ from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.pq_index 
 
 def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").where(
-        V.norm_fixed(F.col("embedding")) > 0
+        V.norm("embedding") > 0
     )
 
 
@@ -44,13 +44,13 @@ def _brute_filtered(emb, n_queries=5, k=5, same_label=True, label=None):
     q = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         V.as_double("embedding").alias("qv"),
-        V.norm_fixed(F.col("embedding")).alias("qnorm"),
+        V.norm("embedding").alias("qnorm"),
         F.col("label").alias("qlabel"),
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         V.as_double("embedding").alias("cv"),
-        V.norm_fixed(F.col("embedding")).alias("cnorm"),
+        V.norm("embedding").alias("cnorm"),
         F.col("label").alias("clabel"),
     )
     cond = F.col("query_id") != F.col("neighbor_id")
@@ -65,7 +65,7 @@ def _brute_filtered(emb, n_queries=5, k=5, same_label=True, label=None):
         c.join(F.broadcast(q), cond)
         .withColumn(
             "score",
-            V.dot_fixed(F.col("qv"), F.col("cv"), cast=False)
+            V.dot("qv", "cv")
             / (F.col("qnorm") * F.col("cnorm")),
         )
         .withColumn("rank", F.row_number().over(w))

@@ -128,7 +128,7 @@ def test_selected_pairwise_similarity_bounded(spark, sf_dir):
         emb.select(
             F.col("vec_id").alias("neighbor_id"),
             V.as_double("embedding").alias("v"),
-            V.norm_fixed(F.col("embedding")).alias("n"),
+            V.norm("embedding").alias("n"),
         ),
         "neighbor_id",
     )
@@ -141,7 +141,7 @@ def test_selected_pairwise_similarity_bounded(spark, sf_dir):
         b, (F.col("query_id") == F.col("qb")) & (F.col("ia") < F.col("ib"))
     ).withColumn(
         "cos",
-        V.dot_fixed(F.col("va"), F.col("vb"), cast=False)
+        V.dot("va", "vb")
         / (F.col("na") * F.col("nb")),
     )
     worst = pairs.agg(F.max("cos")).first()[0]

@@ -144,3 +144,45 @@ def test_ivfpq_rerank_scores_are_exact(spark, sf_dir, emb):
         key = (r["query_id"], r["neighbor_id"])
         if key in exact_scores:
             assert abs(r["score"] - exact_scores[key]) < 1e-9
+
+
+def _queries(emb, n=3):
+    q = emb.where(f"vec_id < {n}").select("vec_id", "embedding").collect()
+    qm = np.vstack([np.asarray(r["embedding"], dtype=np.float64) for r in q])
+    return qm, np.asarray([r["vec_id"] for r in q], dtype=np.int64)
+
+
+def test_adc_score_is_the_left_fold_of_the_lut(emb, codebooks):
+    """The Catalyst ADC score equals sum(lut[q, i, codes[i]]) folded
+    left to right over the m subspaces, bit for bit."""
+    enc = PQ.encode_pq(emb, codebooks)
+    codes = {r["vec_id"]: r["codes"] for r in enc.collect()}
+    qm, qids = _queries(emb)
+    qu = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    m, _kc, sub = codebooks.shape
+    lut = np.einsum("qis,ics->qic", qu.reshape(len(qu), m, sub), codebooks)
+    out = PQ.knn_pq_adc(enc, codebooks, qm, qids, k=len(codes), shortlist=len(codes)).collect()
+    assert len(out) == len(qids) * (len(codes) - 1)  # self excluded
+    qrow = {int(q): i for i, q in enumerate(qids)}
+    for r in out:
+        c = codes[r["neighbor_id"]]
+        want = sum(float(lut[qrow[r["query_id"]], i, c[i]]) for i in range(m))
+        assert r["score"] == want, (r["query_id"], r["neighbor_id"])
+
+
+def test_adc_full_shortlist_equals_exact_cosine(emb, codebooks):
+    """A shortlist covering the corpus leaves the exact re-rank to decide:
+    the ann top-k is the exact cosine top-k."""
+    qm, qids = _queries(emb)
+    n = emb.count()
+    got = PQ.knn_pq_adc(
+        PQ.encode_pq(emb, codebooks), codebooks, qm, qids,
+        k=5, shortlist=n, rerank_vectors=emb,
+    ).collect()
+    want = KNN.knn_exact_expr(emb, emb.where("vec_id < 3"), k=5).collect()
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    assert [(r["query_id"], r["neighbor_id"]) for r in sorted(got, key=key)] == [
+        (r["query_id"], r["neighbor_id"]) for r in sorted(want, key=key)
+    ]
+    for a, b in zip(sorted(got, key=key), sorted(want, key=key)):
+        assert abs(a["score"] - b["score"]) < 1e-12

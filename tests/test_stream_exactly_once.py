@@ -210,10 +210,11 @@ def test_semdedup_state_replay_is_idempotent(spark, sf_dir, tmp_path):
 def test_semdedup_state_non_default_dim_and_intra_batch_dups(
     spark, sf_dir, tmp_path
 ):
-    # regression (round-12 ADVICE): apply_batch's pair score must use
-    # self.dim, not the EMBEDDING_DIM default — at dim=16 a defaulted
-    # dot over-reads past the truncated arrays, NULLing every score
-    # and silently dropping all demotions. Also: duplicate vec_ids
+    # regression (round-12 ADVICE): at dim=16 apply_batch's pair score
+    # must read the vectors' own length — a 64-term dot over-read past
+    # the truncated arrays, NULLing every score and silently dropping
+    # all demotions (the fold-form builder has no dim to get wrong,
+    # and this 16-dim data keeps checking it). Also: duplicate vec_ids
     # WITHIN one micro-batch (intra-epoch redelivery) must collapse
     # before pairing, or the self-pair filter hides the duplicate.
     from pyspark.sql import functions as F
@@ -243,7 +244,7 @@ def test_semdedup_state_non_default_dim_and_intra_batch_dups(
         .localCheckpoint(eager=True)
     )
 
-    st = SemDedupState(str(tmp_path / "sd16"), cents, 0.3, dim=dim)
+    st = SemDedupState(str(tmp_path / "sd16"), cents, 0.3)
     assert st.apply_batch(b1, 0) is True
     assert st.apply_batch(b2, 1) is True
     got = sorted(
@@ -252,7 +253,7 @@ def test_semdedup_state_non_default_dim_and_intra_batch_dups(
     want = sorted(
         (r.vec_id, r.cell, r.kept)
         for r in semdedup(
-            emb, n_cells=4, threshold=0.3, order="id", dim=dim,
+            emb, n_cells=4, threshold=0.3, order="id",
             centroids=cents,
         ).collect()
     )
