@@ -16,10 +16,12 @@ Incremental maintenance (streaming ingest):
     upsert_ivf_index(spark, path, new_vectors)   # per micro-batch
     stream_ivf_index(stream_df, path)            # foreachBatch wrapper
 
-New vectors are assigned to the EXISTING centroids with a pure-column
-argmin (no MLlib model needed at serve time) and merged into only the
-touched cell partitions (dynamic partition overwrite — untouched cells
-are never rewritten). Matching ids are replaced, Delta-MERGE style.
+The coarse quantizer (fit, cell assignment, centroid table, probe) is
+the one of operators/knn.py. New vectors are assigned to the EXISTING
+centroids with the build's own assignment and merged into only the
+touched cell partitions (dynamic partition overwrite through
+operators/partdelete.py — untouched cells are never rewritten).
+Matching ids are replaced, Delta-MERGE style.
 ``upsert`` also tracks centroid drift: when the corpus has grown past
 ``refit_growth`` × the size at fit time, or the mean
 assignment distance of incoming batches exceeds ``refit_drift`` × the
@@ -32,15 +34,21 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import vector as V
 from ..session import local_table, pin
 from ..streaming.epochs import start_foreach_batch
-from .knn import fit_ivf_centroids, unit_vectors_ml
-from .partdelete import clear_emptied_partitions
+from .knn import (
+    RESULT_SCHEMA,
+    _prep_queries,
+    _probe_search,
+    fit_centroids,
+    read_centroids,
+    with_cells,
+    write_centroids,
+)
+from .partdelete import delete_ids_from_layout
 
 
 def build_ivf_index(
@@ -62,66 +70,26 @@ def build_ivf_index(
     derive the metadata set from the layout's own schema, so it is
     declared once, here.
     ``vec_col`` is a top-level column name."""
-    model, centroids = fit_ivf_centroids(vectors, n_cells, vec_col)
-    assigned = (
-        model.transform(unit_vectors_ml(vectors, vec_col))
-        .withColumnRenamed("prediction", "cell")
-        .select(id_col, vec_col, *meta_cols, "cell")
+    centroids = fit_centroids(vectors, n_cells, vec_col, id_col)
+    assigned = with_cells(
+        vectors.select(id_col, vec_col, *meta_cols), centroids, vec_col
     )
-    assigned.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
+    # null / zero-norm embeddings have no cell: outside the cosine
+    # domain, as in the upsert's quarantine
+    assigned.where(F.col("cell").isNotNull()).drop("centroid_dist").repartition(
+        "cell"
+    ).write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(path, "vectors")
     )
     spark = vectors.sparkSession
-    cent_rows = [
-        (int(i), [float(x) for x in centroids[i]]) for i in range(len(centroids))
-    ]
-    local_table(spark, cent_rows, "cell int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    # fit-time stats: corpus size and mean unit-sphere assignment
+    write_centroids(spark, path, centroids)
+    # fit-time stats: stored rows and mean unit-sphere assignment
     # distance — the baselines the drift trigger compares against
-    cells = [int(r[0]) for r in cent_rows]
-    _, dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells)
-    agg = vectors.select(
-        F.count("*").alias("n"), F.avg(dist).alias("mean_dist")
+    agg = assigned.select(
+        F.count("cell").alias("n"), F.avg("centroid_dist").alias("mean_dist")
     ).collect()[0]
     _write_stats(spark, path, fit_n=agg["n"], fit_mean_dist=float(agg["mean_dist"]),
                  cur_n=agg["n"])
-
-
-def _nearest_cell_expr(
-    vec: str, centroids: np.ndarray, cells: list[int]
-) -> tuple[Column, Column]:
-    """(cell, unit-sphere distance) columns assigning a raw embedding to
-    its nearest centroid — one Catalyst expression, no MLlib model at
-    maintenance time. On unit vectors argmin ||u−c||² == argmin
-    (|c|²/2 − u·c), so each centroid contributes one fold-form dot
-    product against its array literal. Ties break on the lower cell id
-    (array_min on struct(d, cell)). ``vec`` is a SQL expression string
-    (e.g. ``V.quote_col(name)``); the whole argmin is parsed in one
-    ``F.expr`` call."""
-    nrm_sql = V.norm_sql(vec)
-    pair_sqls = []
-    for row_idx, cell in enumerate(cells):
-        c = np.asarray(centroids[row_idx], dtype=np.float64)
-        # repr() round-trips the double; D keeps the literal DOUBLE
-        half = repr(float(c @ c) / 2.0) + "D"
-        proxy = f"({half} - {V.dot_sql(vec, V.array_lit(c))} / {nrm_sql})"
-        pair_sqls.append(f"struct({proxy} AS d, {int(cell)} AS cell)")
-    best = F.expr(f"array_min(array({', '.join(pair_sqls)}))")
-    nrm = F.expr(nrm_sql)
-    vec = F.expr(vec)
-    # A null or all-zero embedding has no unit direction: the division
-    # yields NULL (Spark /0 → NULL), which would otherwise surface as a
-    # NULL proxy inside the argmin struct. Make the no-cell case explicit
-    # and DETERMINISTIC — both outputs NULL — so callers can route such
-    # rows to a skip/quarantine path instead of crashing on None cells.
-    unassignable = vec.isNull() | nrm.isNull() | (nrm == 0.0)
-    cell_out = F.when(unassignable, F.lit(None).cast("int")).otherwise(best["cell"])
-    # ||u−c||² = 1 + |c|² − 2·u·c = 1 + 2·proxy
-    dist = F.sqrt(F.greatest(F.lit(0.0), F.lit(1.0) + 2.0 * best["d"]))
-    dist_out = F.when(unassignable, F.lit(None).cast("double")).otherwise(dist)
-    return cell_out, dist_out
 
 
 def _stats_path(path: str) -> str:
@@ -161,8 +129,6 @@ def delete_ivf_ids(
     never contained the victims, quantizer aside (exhaustive configs:
     exactly identical — Q(purge_document_gate)). Idempotent: deleting
     an absent id is a no-op."""
-    from .partdelete import delete_ids_from_layout
-
     n, touched = delete_ids_from_layout(
         spark, os.path.join(path, "vectors"), ids, id_col, "cell"
     )
@@ -199,32 +165,27 @@ def upsert_ivf_index(
     - returns drift/growth telemetry and ``refit_recommended``.
     ``vec_col`` is a top-level column name.
     """
-    cent_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
-    centroids = np.vstack(cent_pdf["centroid"].to_numpy())
-    cells = [int(c) for c in cent_pdf["cell"].to_numpy()]
-    cell_col, dist_col = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells)
-
     # metadata columns are whatever the layout's own schema carries
     # beyond (id, vec, cell) — declared once at build time, preserved
     # here (the batch must supply them; a missing column is a loud
     # AnalysisException, not silent metadata loss)
+    vectors_path = os.path.join(path, "vectors")
     meta_cols = [
         c
-        for c in spark.read.parquet(os.path.join(path, "vectors")).schema.names
+        for c in spark.read.parquet(vectors_path).schema.names
         if c not in (id_col, vec_col, "cell")
     ]
-    assigned = (
-        new_vectors.select(id_col, vec_col, *meta_cols)
-        .dropDuplicates([id_col])
-        .withColumn("cell", cell_col)
-        .withColumn("_dist", dist_col)
+    assigned = with_cells(
+        new_vectors.select(id_col, vec_col, *meta_cols).dropDuplicates([id_col]),
+        read_centroids(spark, path),
+        vec_col,
     )
     # one pass for the telemetry + touched-cell set; batch is the small
     # side by construction so a collect of its per-cell rollup is tiny.
     # NULL cell = unassignable vector (null / zero-norm embedding) —
     # quarantined out of the merge rather than crashing the batch.
     batch_stats = assigned.groupBy("cell").agg(
-        F.count("*").alias("n"), F.sum("_dist").alias("dist_sum")
+        F.count("*").alias("n"), F.sum("centroid_dist").alias("dist_sum")
     ).collect()
     n_skipped = sum(int(r["n"]) for r in batch_stats if r["cell"] is None)
     batch_stats = [r for r in batch_stats if r["cell"] is not None]
@@ -239,45 +200,15 @@ def upsert_ivf_index(
                 "touched_cells": [], "batch_mean_dist": 0.0,
                 "refit_recommended": False, **stats}
 
-    vectors_path = os.path.join(path, "vectors")
-    # Prior locations of the batch ids ANYWHERE in the index — an updated
-    # vector may assign to a DIFFERENT cell than its stored row, and the
-    # stale row in the old cell must be removed or the index grows
-    # duplicate ids and can serve stale vectors. The probe is a
-    # column-pruned (id, cell) scan semi-joined against the broadcast
-    # batch ids: map-only, no shuffle, reads two thin columns of the
-    # index — cheap relative to the partition rewrite it guards. (A
-    # Delta/Hudi deployment would use the table's key index instead.)
-    prior_cells_rows = (
-        spark.read.parquet(vectors_path)
-        .select(id_col, "cell")
-        .join(F.broadcast(assigned.select(id_col)), id_col, "left_semi")
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .collect()
+    # the batch ids are deleted wherever they live (an updated vector
+    # may assign to a DIFFERENT cell than its stored row, whose stale
+    # copy must go) and the batch is written, in one rewrite of the
+    # touched cells
+    replaced, touched = delete_ids_from_layout(
+        spark, vectors_path, assigned.select(id_col), id_col, "cell",
+        replacement=assigned.select(id_col, vec_col, *meta_cols, "cell"),
+        replacement_parts=[int(r["cell"]) for r in batch_stats],
     )
-    replaced = sum(int(r["n"]) for r in prior_cells_rows)
-    touched = sorted(
-        {int(r["cell"]) for r in batch_stats}
-        | {int(r["cell"]) for r in prior_cells_rows}
-    )
-    existing = spark.read.parquet(vectors_path).where(F.col("cell").isin(touched))
-    keep = existing.join(assigned.select(id_col), id_col, "left_anti")
-    merged = keep.select(id_col, vec_col, *meta_cols, "cell").unionByName(
-        assigned.select(id_col, vec_col, *meta_cols, "cell")
-    )
-    # materialize before overwriting the files the plan reads from
-    merged = pin(merged, eager=True)
-    (
-        merged.repartition("cell")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(vectors_path)
-    )
-    # a touched cell whose every row moved elsewhere is absent from the
-    # dynamic overwrite and would keep stale files — clear it explicitly
-    clear_emptied_partitions(spark, merged, vectors_path, touched, "cell")
 
     stats = read_stats(spark, path)
     cur_n = int(stats["cur_n"]) + n_batch - replaced
@@ -380,58 +311,11 @@ def search_ivf_index(
     Q(knn_ivf_filtered) carries the label-filtered oracle verbatim).
     ``vec_col`` is a top-level column name.
     """
-    centroids_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
-    cent = np.vstack(centroids_pdf["centroid"].to_numpy())
-    cells = centroids_pdf["cell"].to_numpy()
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    qm = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
-    qm_unit = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    scores = qm_unit @ cent.T
-    probe_pairs = [
-        (int(r[id_col]), int(cells[c]))
-        for i, r in enumerate(q_rows)
-        for c in np.argsort(-scores[i])[:nprobe]
-    ]
-    probe_df = F.broadcast(local_table(spark, probe_pairs, "query_id long, cell int"))
-    probed_cells = sorted({c for _, c in probe_pairs})
-
-    vectors = spark.read.parquet(os.path.join(path, "vectors")).where(
-        F.col("cell").isin(probed_cells)  # partition pruning
-    )
-    if where is not None:
-        # static metadata predicate: pushed into the pruned scan,
-        # evaluated before any vector math
-        vectors = vectors.where(where)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        V.as_double(F.col(V.quote_col(vec_col))).alias("qv"),
-        V.norm(V.quote_col(vec_col)).alias("qnorm"),
-        *[F.col(c).alias(f"_q_{c}") for c in match_cols],
-    )
-    cand = (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
-            "cell",
-            V.norm(V.quote_col(vec_col)).alias("cnorm"),
-            *[F.col(c).alias(f"_c_{c}") for c in match_cols],
-        )
-        .join(probe_df, "cell")
-        .join(F.broadcast(q), "query_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-    )
-    for c in match_cols:
-        # per-query metadata equality, below scoring (NULL metadata on
-        # either side never matches — three-valued logic drops it)
-        cand = cand.where(F.col(f"_c_{c}") == F.col(f"_q_{c}"))
-    cand = cand.withColumn(
-        "score",
-        V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
+    prepped = _prep_queries(queries, id_col, vec_col)
+    if not len(prepped[1]):  # empty or all zero-norm queries
+        return local_table(spark, [], RESULT_SCHEMA)
+    return _probe_search(
+        spark.read.parquet(os.path.join(path, "vectors")),
+        queries, prepped, read_centroids(spark, path), k, nprobe,
+        id_col, vec_col, where=where, match_cols=match_cols,
     )

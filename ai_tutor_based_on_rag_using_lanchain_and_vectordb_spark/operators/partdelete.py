@@ -19,8 +19,9 @@ Scale shape (the GDPR-purge / re-crawl-replace cadence at 100 TB):
   the index;
 - a partition whose EVERY row was a victim is absent from the dynamic
   overwrite and would keep its stale files — such partitions are
-  explicitly overwritten with an empty schema-bearing parquet (same
-  contract as the upsert path's emptied-cell handling).
+  explicitly overwritten with an empty schema-bearing parquet;
+- the IVF and IVF-PQ upserts are the same rewrite with replacement
+  rows: delete the batch ids wherever they live, write the batch.
 
 Deletes are idempotent by construction (deleting an absent id touches
 nothing), which is what makes the streaming delete wrapper
@@ -101,12 +102,19 @@ def delete_ids_from_layout(
     victim_ids,
     id_col: str,
     part_col: str,
+    replacement: DataFrame | None = None,
+    replacement_parts=(),
 ) -> tuple[int, list]:
     """Remove every row whose ``id_col`` is in ``victim_ids`` from a
     ``part_col``-partitioned parquet layout, rewriting ONLY the
     partitions that contain such rows. Returns ``(rows_deleted,
-    touched_partitions)`` — ``(0, [])`` when no victim is present (the
-    idempotent replay case)."""
+    touched_partitions)`` — ``(0, [])`` when nothing is touched (the
+    idempotent replay case).
+
+    With ``replacement`` (rows in the layout's columns, landing in
+    ``replacement_parts``) the same rewrite writes them too: an upsert
+    is the delete of its batch ids plus the batch, wherever the ids
+    lived before (an updated row may move partitions)."""
     base = spark.read.parquet(data_path)
     located = (
         _semi_filter(base.select(id_col, part_col), victim_ids, id_col)
@@ -114,16 +122,21 @@ def delete_ids_from_layout(
         .agg(F.count("*").alias("n"))
         .collect()
     )  # bounded: one row per touched partition
-    touched = sorted(int(r[part_col]) for r in located)
+    touched = sorted(
+        {int(r[part_col]) for r in located} | {int(p) for p in replacement_parts}
+    )
     n_rows = sum(int(r["n"]) for r in located)
     if not touched:
         return 0, []
     existing = spark.read.parquet(data_path).where(
         F.col(part_col).isin(touched)
     )
+    kept = anti_filter(existing, victim_ids, id_col)
+    if replacement is not None:
+        kept = kept.unionByName(replacement)
     # materialize the survivors BEFORE overwriting the files the plan
-    # reads from (the upsert paths' contract)
-    kept = pin(anti_filter(existing, victim_ids, id_col), eager=True)
+    # reads from
+    kept = pin(kept, eager=True)
     (
         kept.repartition(part_col)
         .write.mode("overwrite")

@@ -9,9 +9,10 @@ public literature).
 Scale shape (100 TB design point):
 
 - Codebooks are FIXED-cardinality (M · K · D/M floats ≈ a few KB) —
-  the one thing that may live in every task's closure. Training reads
-  a bounded, deterministic sample (orderBy + limit = TakeOrdered, no
-  full sort) — never the corpus.
+  the one thing that may live in every task's closure. Training is the
+  coarse quantizer's one fit (operators/knn.py ``fit_centroids``): a
+  bounded, deterministic sample (orderBy + limit = TakeOrdered, no
+  full sort), never the corpus.
 - Encoding is one mapInPandas pass (Arrow-batched numpy argmin per
   subspace): embarrassingly parallel, output ~M bytes/vector, so the
   encoded corpus is D·4/M× smaller than the raw one — the point of PQ.
@@ -44,66 +45,18 @@ from ..session import local_table
 from . import knn as KNN
 
 
-def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
-    """Deterministic Lloyd k-means (seeded init, fixed iteration count,
-    empty clusters re-seeded from the farthest points). numpy-only so
-    the fit has no MLlib/JVM nondeterminism across runs."""
-    rng = np.random.RandomState(seed)
-    init = rng.choice(len(x), size=min(k, len(x)), replace=False)
-    cents = x[np.sort(init)].astype(np.float64).copy()
-    if len(cents) < k:  # tiny sample: pad with jittered repeats
-        pad = cents[rng.randint(0, len(cents), k - len(cents))]
-        cents = np.vstack([cents, pad + 1e-6])
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        far = d2[np.arange(len(x)), assign].argsort()[::-1]
-        n_spare = 0
-        for j in range(k):
-            sel = assign == j
-            if sel.any():
-                cents[j] = x[sel].mean(axis=0)
-            else:
-                # re-seed dead centroids from the farthest points; wrap
-                # + jitter once there are more dead clusters than sample
-                # points (k > len(x)) so the iterator never exhausts
-                cents[j] = x[far[n_spare % len(far)]] + 1e-6 * (
-                    n_spare // len(far)
-                )
-                n_spare += 1
-    return cents
-
-
 def fit_pq_codebooks(
     vectors: DataFrame,
     m: int = 8,
     k: int = 32,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    sample_n: int = 4096,
-    seed: int = 42,
 ) -> np.ndarray:
-    """Train M per-subspace codebooks of K centroids on a bounded
-    deterministic sample (first `sample_n` rows by id — TakeOrdered,
-    not a full sort). Vectors are unit-normalized before fitting so
-    ADC inner products approximate cosine. Returns (M, K, D/M)."""
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample_n)
-        .collect()
-    )
-    x = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    keep = norms[:, 0] > 0
-    x = x[keep] / norms[keep]
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    return np.stack(
-        [_lloyd(x[:, i * sub : (i + 1) * sub], k, seed + i) for i in range(m)]
-    )
+    """Train M per-subspace codebooks of K centroids with the coarse
+    quantizer's one fit (knn.fit_centroids: seeded Lloyd on the first
+    max(4096, 39·K) rows by id, unit-normalized so ADC inner products
+    approximate cosine). Returns (M, K, D/M)."""
+    return KNN.fit_centroids(vectors, 0, vec_col, id_col, pq=(m, k))[1]
 
 
 _CODES_SCHEMA = T.StructType(
@@ -311,7 +264,7 @@ def knn_ivfpq(
     exclude_self: bool = True,
 ) -> DataFrame:
     """The canonical IVF+PQ arrangement (FAISS IVFPQ, public
-    literature): a KMeans coarse quantizer prunes the corpus to each
+    literature): the coarse quantizer prunes the corpus to each
     query's top-``nprobe`` cells, PQ codes score the surviving
     candidates via the ADC lookup table, and the shortlist re-ranks
     exactly against the raw vectors.
@@ -324,70 +277,22 @@ def knn_ivfpq(
     is one expression over the pruned code table with a partial
     WindowGroupLimit below the shuffle — no stage ever materializes a
     full score matrix."""
-    from .knn import fit_ivf_centroids, unit_vectors_ml
-
     spark = vectors.sparkSession
-    # queries first: an empty query set must not pay the k-means fits
-    qu, qids = _prep_queries(queries, id_col, vec_col)
+    # queries first: an empty query set must not pay the fit
+    qu, qids = KNN._prep_queries(queries, id_col, vec_col)
     if not len(qids):
-        return local_table(spark, [], _RESULT_SCHEMA)
+        return local_table(spark, [], KNN.RESULT_SCHEMA)
 
-    model, centroids = fit_ivf_centroids(vectors, n_clusters, vec_col)
-    assigned = (
-        model.transform(unit_vectors_ml(vectors, vec_col))
-        .withColumnRenamed("prediction", "cell")
-        .select(id_col, vec_col, "cell")
+    centroids, cb = KNN.fit_centroids(
+        vectors, n_clusters, vec_col, id_col, pq=(m, kc)
     )
-    cb = fit_pq_codebooks(vectors, m=m, k=kc, vec_col=vec_col, id_col=id_col)
+    assigned = KNN.with_cells(vectors.select(id_col, vec_col), centroids, vec_col)
     enc = encode_pq(assigned, cb, id_col, vec_col, keep_cols=("cell",))
-    probe_df, _cells = _probe_df(
-        spark, qu, qids, centroids, list(range(len(centroids))), nprobe
-    )
+    probe_df, _cells = KNN._probe_df(spark, qu, qids, centroids, nprobe)
     cand = enc.join(probe_df, "cell").select("query_id", "vec_id", "codes")
     cand = cand.join(F.broadcast(_lut_df(spark, cb, qu, qids)), "query_id")
     short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
     return _exact_rerank(short, vectors, qu, qids, k, id_col, vec_col)
-
-
-_RESULT_SCHEMA = (
-    "query_id long, neighbor_id long, rank int, score double"
-)
-
-
-def _prep_queries(
-    queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collect the (few) query vectors, drop zero-norm ones (cosine
-    undefined — the shared contract), return (unit vectors, ids). The
-    single place the query-side prep lives for every PQ-family search."""
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return np.empty((0, 0)), np.empty(0, np.int64)
-    qm = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
-    qids = np.asarray([r[id_col] for r in q_rows], dtype=np.int64)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    keep_q = qn[:, 0] > 0
-    return qm[keep_q] / qn[keep_q], qids[keep_q]
-
-
-def _probe_df(
-    spark,
-    qu: np.ndarray,
-    qids: np.ndarray,
-    centroids: np.ndarray,
-    cells,
-    nprobe: int,
-):
-    """(broadcast probe table, probed cell list) for the top-``nprobe``
-    cells of each query."""
-    scores = qu @ np.asarray(centroids, dtype=np.float64).T
-    pairs = [
-        (int(qid), int(cells[c]))
-        for i, qid in enumerate(qids)
-        for c in np.argsort(-scores[i])[:nprobe]
-    ]
-    probe = F.broadcast(local_table(spark, pairs, "query_id long, cell int"))
-    return probe, sorted({c for _, c in pairs})
 
 
 #: ADC score of one (codes, lut) row: the sum over the M subspaces of

@@ -9,7 +9,8 @@ caller's raw-vector table.
 
 Build cost is paid once; searches never re-fit or re-encode — the
 difference between this and pq.knn_ivfpq (which fits inline and exists
-for gates/one-shot use).
+for gates/one-shot use). Both fit, assign and probe cells with the
+coarse quantizer of operators/knn.py.
 """
 
 from __future__ import annotations
@@ -20,21 +21,19 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import vector as V
 from ..session import local_table, pin
 from ..streaming.epochs import start_foreach_batch
-from .knn import fit_ivf_centroids, unit_vectors_ml
-from .partdelete import clear_emptied_partitions
-from .pq import (
-    _RESULT_SCHEMA,
-    _adc_shortlist,
-    _exact_rerank,
-    _lut_df,
+from .knn import (
+    RESULT_SCHEMA,
     _prep_queries,
     _probe_df,
-    encode_pq,
-    fit_pq_codebooks,
+    fit_centroids,
+    read_centroids,
+    with_cells,
+    write_centroids,
 )
+from .partdelete import delete_ids_from_layout
+from .pq import _adc_shortlist, _exact_rerank, _lut_df, encode_pq
 
 
 def build_ivfpq_index(
@@ -53,25 +52,16 @@ def build_ivfpq_index(
     filter below ADC (IvfPqSearcher.search ``where`` — the reference's
     ``where={"file_id": …}`` vector-store filter on the compressed
     path); upserts preserve whatever metadata the layout carries."""
-    model, centroids = fit_ivf_centroids(vectors, n_cells, vec_col)
-    assigned = (
-        model.transform(unit_vectors_ml(vectors, vec_col))
-        .withColumnRenamed("prediction", "cell")
-        .select(id_col, vec_col, *meta_cols, "cell")
+    centroids, cb = fit_centroids(vectors, n_cells, vec_col, id_col, pq=(m, kc))
+    assigned = with_cells(
+        vectors.select(id_col, vec_col, *meta_cols), centroids, vec_col
     )
-    cb = fit_pq_codebooks(vectors, m=m, k=kc, vec_col=vec_col, id_col=id_col)
     enc = encode_pq(assigned, cb, id_col, vec_col, keep_cols=("cell", *meta_cols))
     enc.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(path, "codes")
     )
     spark = vectors.sparkSession
-    cent_rows = [
-        (int(i), [float(x) for x in centroids[i]])
-        for i in range(len(centroids))
-    ]
-    local_table(spark, cent_rows, "cell int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    write_centroids(spark, path, centroids)
     cb_rows = [
         (int(i), int(c), [float(x) for x in cb[i, c]])
         for i in range(cb.shape[0])
@@ -115,7 +105,7 @@ def auto_search_params(
       exact); at 100× the per-cell mass covers the pool with the sqrt
       floor and the scan stays partition-pruned.
     """
-    n_cells = spark.read.parquet(os.path.join(path, "centroids")).count()
+    n_cells = len(read_centroids(spark, path))
     n_codes = spark.read.parquet(os.path.join(path, "codes")).count()
     return _search_params(k, n_cells, n_codes)
 
@@ -153,13 +143,9 @@ class IvfPqSearcher:
         self.rerank_vectors = rerank_vectors
         self.id_col = id_col
         self.vec_col = vec_col
-        centroids_pdf = spark.read.parquet(
-            os.path.join(path, "centroids")
-        ).toPandas()
-        self.cent = np.vstack(centroids_pdf["centroid"].to_numpy())
-        self.cells = centroids_pdf["cell"].to_numpy()
+        self.cent = read_centroids(spark, path)
         self.cb = read_codebooks(spark, path)
-        self.n_cells = len(self.cells)
+        self.n_cells = len(self.cent)
         self.n_codes = spark.read.parquet(os.path.join(path, "codes")).count()
 
     def auto_params(self, k: int) -> tuple[int, int]:
@@ -193,10 +179,8 @@ class IvfPqSearcher:
             shortlist = auto_sl if shortlist is None else shortlist
         qu, qids = _prep_queries(queries, self.id_col, self.vec_col)
         if not len(qids):
-            return local_table(self.spark, [], _RESULT_SCHEMA)
-        probe_df, probed_cells = _probe_df(
-            self.spark, qu, qids, self.cent, self.cells, nprobe
-        )
+            return local_table(self.spark, [], RESULT_SCHEMA)
+        probe_df, probed_cells = _probe_df(self.spark, qu, qids, self.cent, nprobe)
         codes = self.spark.read.parquet(
             os.path.join(self.path, "codes")
         ).where(F.col("cell").isin(probed_cells))  # partition pruning
@@ -274,14 +258,7 @@ def upsert_ivfpq_index(
     re-fits the codebooks when the error trend of incoming batches
     rises above the build-time distortion.
     ``vec_col`` is a top-level column name."""
-    from .ann_index import _nearest_cell_expr
-
-    cent_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
-    centroids = np.vstack(cent_pdf["centroid"].to_numpy())
-    cells = [int(c) for c in cent_pdf["cell"].to_numpy()]
     cb = read_codebooks(spark, path)
-
-    cell_col, _dist = _nearest_cell_expr(V.quote_col(vec_col), centroids, cells)
     # preserve whatever metadata the layout carries (declared at build
     # time via meta_cols; the batch must supply the same columns)
     codes_path = os.path.join(path, "codes")
@@ -290,20 +267,18 @@ def upsert_ivfpq_index(
         for c in spark.read.parquet(codes_path).schema.names
         if c not in (id_col, "codes", "vnorm", "cell")
     ]
-    assigned = (
-        new_vectors.select(id_col, vec_col, *meta_cols)
-        .dropDuplicates([id_col])
-        .withColumn("cell", cell_col)
+    assigned = with_cells(
+        new_vectors.select(id_col, vec_col, *meta_cols).dropDuplicates([id_col]),
+        read_centroids(spark, path),
+        vec_col,
     )
     n_skipped = assigned.where(F.col("cell").isNull()).count()
     assigned = assigned.where(F.col("cell").isNotNull())
     enc = encode_pq(assigned, cb, id_col, vec_col,
                     keep_cols=("cell", *meta_cols))
     enc = pin(enc, eager=True)
-    batch_cells = [
-        int(r["cell"]) for r in enc.select("cell").distinct().collect()
-    ]
-    n_batch = enc.count()
+    batch_cells = enc.groupBy("cell").count().collect()
+    n_batch = sum(int(r["count"]) for r in batch_cells)
     if not n_batch:
         return {"added": 0, "replaced": 0, "skipped": n_skipped,
                 "touched_cells": [], "mean_adc_error": None}
@@ -313,29 +288,11 @@ def upsert_ivfpq_index(
 
         mean_adc_error = mean_pq_distortion(assigned, cb, vec_col)
 
-    prior = (
-        spark.read.parquet(codes_path)
-        .select(id_col, "cell")
-        .join(F.broadcast(enc.select(id_col)), id_col, "left_semi")
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .collect()
+    replaced, touched = delete_ids_from_layout(
+        spark, codes_path, enc.select(id_col), id_col, "cell",
+        replacement=enc.select(id_col, "codes", "vnorm", *meta_cols, "cell"),
+        replacement_parts=[int(r["cell"]) for r in batch_cells],
     )
-    replaced = sum(int(r["n"]) for r in prior)
-    touched = sorted(set(batch_cells) | {int(r["cell"]) for r in prior})
-    existing = spark.read.parquet(codes_path).where(F.col("cell").isin(touched))
-    keep = existing.join(enc.select(id_col), id_col, "left_anti")
-    merged = pin(keep.select(id_col, "codes", "vnorm", *meta_cols, "cell").unionByName(
-        enc.select(id_col, "codes", "vnorm", *meta_cols, "cell")
-    ), eager=True)  # materialize before overwriting inputs
-    (
-        merged.repartition("cell")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(codes_path)
-    )
-    clear_emptied_partitions(spark, merged, codes_path, touched, "cell")
     return {
         "added": n_batch - replaced,
         "replaced": replaced,
@@ -343,7 +300,6 @@ def upsert_ivfpq_index(
         "touched_cells": touched,
         "mean_adc_error": mean_adc_error,
     }
-
 
 
 def delete_ivfpq_ids(
@@ -361,8 +317,6 @@ def delete_ivfpq_ids(
     quantizer for the survivors, and the exact re-rank on top makes
     full-shortlist searches identical to a fresh build
     (Q(purge_document_gate)). Idempotent on replay."""
-    from .partdelete import delete_ids_from_layout
-
     n, touched = delete_ids_from_layout(
         spark, os.path.join(path, "codes"), ids, id_col, "cell"
     )

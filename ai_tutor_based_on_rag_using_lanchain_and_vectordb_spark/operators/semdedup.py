@@ -6,7 +6,7 @@ The modern layer above the pairwise dedup stack: instead of scoring
 pairs across the whole corpus (quadratic) or within a metadata block
 (plans/vectors.py blocks on ``label``), vectors are first assigned to
 IVF cells — the same coarse-quantizer assignment the persistent ANN
-index uses (operators/ann_index.py) — and cosine pairs are generated
+index uses (operators/knn.py) — and cosine pairs are generated
 STRICTLY within a cell. At 100 TB the pair space is Σ|cell|² instead
 of N², each cell's pair generation is salt-spread across tasks by the
 proven near-dup machinery (plans/vectors.py), and no cross-cell pair
@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..session import pin
+from .knn import _nearest_cell_expr, fit_centroids, with_cells
 
 DEFAULT_THRESHOLD = 0.3
 
@@ -55,21 +56,15 @@ def assign_cells(
     n_cells: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """(id, embedding, cell, centroid_dist) with the IVF coarse-quantizer
-    assignment of operators/ann_index.py — KMeans centroids fit once
-    (on the corpus; at 100 TB on a sample, exactly as build_ivf_index
-    amortizes it), assignment itself a pure codegen argmin expression.
-    ``centroids`` short-circuits the fit entirely — the production
+    """(id, embedding, cell, centroid_dist) with the coarse quantizer of
+    operators/knn.py — the fit and the cell assignment the persistent
+    ANN layouts use. ``centroids`` skips the fit — the production
     shape: the quantizer is amortized infrastructure shared with the
     ANN index and refit on drift, not refit per dedup pass. Rows
     outside the cosine domain (NULL / zero-norm) are dropped.
     ``vec_col`` is a top-level column name."""
-    from .ann_index import _nearest_cell_expr
-    from .knn import fit_ivf_centroids
-
     vq = V.quote_col(vec_col)
     base = vectors.select(id_col, vec_col).where(
         F.col(vq).isNotNull() & (V.norm(vq) > 0)
@@ -85,74 +80,8 @@ def assign_cells(
             F.lit(None).cast("double").alias("centroid_dist"),
         )
     if centroids is None:
-        _, centroids = fit_ivf_centroids(base, n_cells, vec_col, seed=seed)
-    if len(centroids) > _EXPR_ASSIGN_MAX_CELLS:
-        return _assign_cells_numpy(base, centroids, id_col, vec_col)
-    cell_col, dist_col = _nearest_cell_expr(
-        vq, centroids, list(range(len(centroids)))
-    )
-    return base.select(
-        id_col, vec_col, cell_col.alias("cell"), dist_col.alias("centroid_dist")
-    )
-
-
-#: above this cell count the argmin expression (one dot product PER
-#: CENTROID against its literal array — O(cells·dim) plan literals)
-#: stops paying off and becomes the bottleneck: the round-10
-#: 100× probe measured the 390-cell assignment at ~145× growth. The
-#: Arrow kernel below does the same argmin as one numpy matrix product
-#: per batch — O(1) plan size, vectorized math, linear in rows.
-_EXPR_ASSIGN_MAX_CELLS = 32
-
-
-def _assign_cells_numpy(
-    base: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
-) -> DataFrame:
-    """mapInPandas assignment against a broadcast centroid matrix —
-    bit-compatible SEMANTICS with _nearest_cell_expr (same unit-sphere
-    proxy |c|²/2 − u·c, ties to the lowest cell id via argmin's
-    first-minimum rule); float accumulation order differs (matrix
-    product vs flat expression), which only matters for exact-boundary
-    ties between two centroids — each configuration uses ONE path
-    consistently, so decisions are reproducible run to run."""
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-    half = 0.5 * (C * C).sum(axis=1)
-    fields = {f.name: f.dataType.simpleString() for f in base.schema.fields}
-    schema = (
-        f"{id_col} {fields[id_col]}, {vec_col} {fields[vec_col]}, "
-        "cell int, centroid_dist double"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V_ = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.sqrt((V_ * V_).sum(axis=1))
-            # zero-norm/null rows were filtered upstream; guard anyway
-            ok = norms > 0.0
-            if not ok.all():
-                pdf = pdf[ok].reset_index(drop=True)
-                V_, norms = V_[ok], norms[ok]
-            if len(pdf) == 0:
-                continue
-            U = V_ / norms[:, None]
-            proxy = half[None, :] - U @ C.T
-            cell = proxy.argmin(axis=1)
-            best = proxy[np.arange(len(cell)), cell]
-            dist = np.sqrt(np.maximum(0.0, 1.0 + 2.0 * best))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    vec_col: pdf[vec_col].to_numpy(),
-                    "cell": cell.astype("int32"),
-                    "centroid_dist": dist,
-                }
-            )
-
-    return base.mapInPandas(run, schema)
+        centroids = fit_centroids(base, n_cells, vec_col, id_col)
+    return with_cells(base, centroids, vec_col)
 
 
 def _mean_direction_dist(
@@ -162,8 +91,6 @@ def _mean_direction_dist(
     corpus mean direction, via the same argmin expression machinery as
     the multi-cell path (one centroid ⇒ the argmin is just that
     centroid's distance)."""
-    from .ann_index import _nearest_cell_expr
-
     vq = V.quote_col(vec_col)
     sums = (
         vectors.select(F.posexplode(V.as_double(F.col(vq))).alias("dim", "x"))
@@ -173,7 +100,7 @@ def _mean_direction_dist(
         .collect()
     )  # bounded: one row per embedding dimension
     centroid = np.asarray([r["m"] for r in sums], dtype=np.float64)
-    _, dist_col = _nearest_cell_expr(vq, centroid[None, :], [0])
+    _, dist_col = _nearest_cell_expr(vq, centroid[None, :])
     return vectors.withColumn("centroid_dist", dist_col)
 
 
@@ -186,7 +113,6 @@ def semdedup(
     vec_col: str = "embedding",
     engine: str = "numpy",
     collapse: bool | None = None,
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Semantic dedup decision per vector: (vec_id, cell, kept).
@@ -210,9 +136,7 @@ def semdedup(
     # late import here keeps the module graph acyclic
     from ..plans.vectors import embedding_neardup_pairs_df
 
-    assigned = assign_cells(
-        vectors, n_cells, id_col, vec_col, seed, centroids=centroids
-    )
+    assigned = assign_cells(vectors, n_cells, id_col, vec_col, centroids=centroids)
     # pin the assignment: it feeds the pair generator, both prune-key
     # branches and the final flag join — without the pin each branch
     # re-runs the scan + argmin and the DAG deepens by the whole pair

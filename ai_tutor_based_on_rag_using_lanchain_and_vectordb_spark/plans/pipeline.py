@@ -1017,7 +1017,7 @@ def embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_ivf_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (KMeans-cell) approximate k-NN for the 5 query vectors —
+    """IVF (k-means-cell) approximate k-NN for the 5 query vectors —
     recall-vs-exact asserted in tests/test_knn.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
@@ -1027,12 +1027,12 @@ def knn_ivf_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-checking recall for the IVF approximate k-NN path (same
     pattern as the minhash/LSH recall gates): ground truth = exact
-    broadcast top-k, candidates = KMeans-cell IVF with nprobe=6 of 8
+    broadcast top-k, candidates = k-means-cell IVF with nprobe=6 of 8
     cells. One row with mean recall + pass flag at ≥ 0.7 — measured
-    0.88 at both sf0.001 and sf0.01 with nprobe=6, so the gate clears
-    with margin yet would catch a recall collapse (nprobe=4/5 measure
-    0.72 at sf0.01, right at the bar; tests/test_recall.py asserts the
-    measured value too). Rows-only: KMeans is not SQL-expressible."""
+    0.96 (sf0.001) / 1.0 (sf0.01) with nprobe=6, so the gate clears
+    with margin yet would catch a recall collapse (tests/test_recall.py
+    asserts the measured value too). Rows-only: the k-means fit is not
+    SQL-expressible."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
     k = 5
@@ -1060,8 +1060,8 @@ def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF path in its exhaustive configuration (nprobe = all 8
-    cells): every vector is a candidate, so the cell machinery — KMeans
-    assignment, probe-table join, partition pruning — runs end-to-end
+    cells): every vector is a candidate, so the cell machinery — k-means
+    fit and cell assignment, probe-table join, partition pruning — runs end-to-end
     yet the result is EXACT and carries knn_exact's DuckDB oracle.
     This oracle-checks the IVF plumbing itself (tests/test_ann_index.py
     proves nprobe=all ≡ exact in-repo; this row makes the driver see
@@ -1256,7 +1256,7 @@ def quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_ivfpq_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical IVF+PQ composition (operators/pq.knn_ivfpq):
-    KMeans cells prune the corpus per query, PQ codes ADC-score the
+    k-means cells prune the corpus per query, PQ codes ADC-score the
     survivors, the shortlist re-ranks exactly. Rows-only: k-means is
     not SQL-expressible."""
     from ..operators import pq as PQ
@@ -1298,7 +1298,7 @@ def knn_ivfpq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall gate for the IVF+PQ path: both approximations compound
     (cell pruning AND code quantization), so the gate sits at ≥ 0.7 —
-    measured 0.84 (sf0.001) / 0.88 (sf0.01) at nprobe=6 of 8 cells,
+    measured 0.92 (sf0.001) / 1.0 (sf0.01) at nprobe=6 of 8 cells,
     shortlist 150. Rows-only: k-means is not SQL-expressible."""
     from ..operators import knn as KNN
     from ..operators import pq as PQ
@@ -1408,7 +1408,7 @@ def knn_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact filtered ranking (Q(knn_label_filtered), oracle-green) must
     stay ≥ 0.7 — the filter shrinks each query's candidate pool ~10×,
     which is exactly when cell pruning could silently collapse a
-    filtered result. Measured 0.88 (sf0.001) / 0.84 (sf0.01), so the
+    filtered result. Measured 0.96 (sf0.001) / 1.0 (sf0.01), so the
     gate clears with margin yet catches a collapse. In-plan-guarded;
     rows-only (k-means cells aren't SQL-expressible)."""
     import tempfile
@@ -1891,6 +1891,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_stats,
         search_ivf_index,
     )
+    from ..operators.knn import read_centroids
     from ..operators.bm25 import (
         Bm25Searcher,
         build_bm25_index,
@@ -1938,7 +1939,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---------------- IVF vectors ----------------
     ip = tempfile.mkdtemp(prefix="purge_ivf_")
     build_ivf_index(emb, ip, n_cells=4)
-    n_cells = spark.read.parquet(f"{ip}/centroids").count()
+    n_cells = len(read_centroids(spark, ip))
     n0 = int(read_stats(spark, ip)["cur_n"])
     queries = pin(emb.where(F.col("vec_id") < 3), eager=True)
     v_ivf = int(

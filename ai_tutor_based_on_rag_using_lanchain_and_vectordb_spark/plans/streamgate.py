@@ -506,7 +506,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must equal the one-shot batch semdedup on the union EXACTLY,
     # (vec_id, cell, kept) for row — the dedup family's incremental
     # member alongside st5 (watermark dedup) and st13 (bloom).
-    from ..operators.knn import fit_ivf_centroids
+    from ..operators.knn import fit_centroids
     from ..operators.semdedup import semdedup
     from ..streaming.semdedup import SemDedupState, stream_semdedup
     from .vectors import SEMDEDUP_TAU
@@ -514,7 +514,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_all = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    _, sd_cents = fit_ivf_centroids(emb_all, 4, "embedding")
+    sd_cents = fit_centroids(emb_all, 4, "embedding")
     sd_dir = tempfile.mkdtemp(prefix="st16_semdedup_")
     try:
         sd_src = os.path.join(sd_dir, "src")

@@ -571,8 +571,8 @@ def semdedup_prune_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine replay: the cogrouped-Arrow decisions are recomputed
     with the codegen expression pair join (independent physical path,
     bit-parity-engineered) and the two kept sets must agree row for
-    row. One row; pytest asserts ``passed``. Rows-only: the KMeans
-    cell assignment is not SQL-expressible."""
+    row. One row; pytest asserts ``passed``. Rows-only: the k-means
+    fit behind the cells is not SQL-expressible."""
     from ..operators.semdedup import semdedup
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -608,7 +608,7 @@ def semdedup_prune_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (F.col("n_disagree") == 0)
             & (F.col("n_kept") >= 1)
-            # KMeans may leave a cell empty; ≥2 proves real bucketing
+            # k-means may leave a cell empty; ≥2 proves real bucketing
             & (F.col("n_cells") >= 2)
             & (F.col("n_cells") <= SEMDEDUP_GATE_CELLS)
         ).alias("passed"),
@@ -625,7 +625,7 @@ def semdedup_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus grows; the exhaustive 1-cell and fixed-4-cell variants
     above are the oracle hooks, not the scale path), priority =
     least-centroid-typical survives (order="centroid"). Rows-only
-    (KMeans assignment isn't SQL); the headline/scale probes time THIS
+    (the k-means fit isn't SQL); the headline/scale probes time THIS
     configuration. Returns per-vector decisions + the kept count
     sanity columns used by pytest."""
     from ..operators.semdedup import semdedup
@@ -720,7 +720,7 @@ def semantic_bfs_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     times). Blocking trades recall for linearity exactly like
     semdedup_production vs semdedup_exhaustive; with n_cells=1 the
     edge sets coincide and this reduces to the exact BFS
-    (pinned in tests/test_bfs.py). Rows-only: KMeans cells aren't
+    (pinned in tests/test_bfs.py). Rows-only: k-means cells aren't
     SQL-expressible.
 
     Memory floor (measured, BENCH_SF10_r12.json headroom_8g): at 100×

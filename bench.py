@@ -251,7 +251,7 @@ def main() -> None:
     # amortized infrastructure as the ANN index above (fit once, refit
     # on drift) — the headline times the dedup pass, not the fit.
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.knn import (
-        fit_ivf_centroids,
+        fit_centroids,
     )
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.semdedup import (
         semdedup,
@@ -262,7 +262,7 @@ def main() -> None:
     )
 
     sd_cells = max(1, emb.count() // SEMDEDUP_CELL_TARGET)
-    _, sd_centroids = fit_ivf_centroids(emb, sd_cells, "embedding")
+    sd_centroids = fit_centroids(emb, sd_cells, "embedding")
 
     def semdedup_production(spark, sf_dir):
         vs = load_table(spark, sf_dir, "embeddings")

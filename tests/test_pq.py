@@ -100,7 +100,7 @@ def test_lloyd_more_clusters_than_points():
     """k > sample size with dead clusters must re-seed (wrap+jitter),
     never exhaust the spare iterator."""
     rng = np.random.RandomState(0)
-    cents = PQ._lloyd(rng.rand(4, 8), 32, seed=1)
+    cents = KNN._lloyd(rng.rand(4, 8), 32, seed=1)
     assert cents.shape == (32, 8)
     assert np.isfinite(cents).all()
 

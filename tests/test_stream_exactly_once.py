@@ -158,7 +158,7 @@ def test_append_stream_end_to_end_still_lands_all_rows(spark, sf_dir, tmp_path):
 
 def test_semdedup_state_replay_is_idempotent(spark, sf_dir, tmp_path):
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.knn import (
-        fit_ivf_centroids,
+        fit_centroids,
     )
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.semdedup import (
         semdedup,
@@ -168,7 +168,7 @@ def test_semdedup_state_replay_is_idempotent(spark, sf_dir, tmp_path):
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _, cents = fit_ivf_centroids(emb, 4, "embedding")
+    cents = fit_centroids(emb, 4, "embedding")
     b1 = emb.where("vec_id < 250").localCheckpoint(eager=True)
     b2 = emb.where("vec_id >= 250").localCheckpoint(eager=True)
 
@@ -220,7 +220,7 @@ def test_semdedup_state_non_default_dim_and_intra_batch_dups(
     from pyspark.sql import functions as F
 
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.knn import (
-        fit_ivf_centroids,
+        fit_centroids,
     )
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.semdedup import (
         semdedup,
@@ -234,7 +234,7 @@ def test_semdedup_state_non_default_dim_and_intra_batch_dups(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.slice("embedding", 1, dim).alias("embedding"))
     )
-    _, cents = fit_ivf_centroids(emb, 4, "embedding")
+    cents = fit_centroids(emb, 4, "embedding")
     cents = cents[:, :dim]
     b1 = emb.where("vec_id < 250").localCheckpoint(eager=True)
     # intra-batch duplicate ids: redeliver part of b2 inside b2 itself

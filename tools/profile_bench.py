@@ -82,7 +82,7 @@ def main() -> None:
             pq_index as PI,
         )
         from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.knn import (
-            fit_ivf_centroids,
+            fit_centroids,
         )
         from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.semdedup import (
             semdedup,
@@ -98,7 +98,7 @@ def main() -> None:
         PI.build_ivfpq_index(emb, idx_path, n_cells=8, m=8, kc=32)
         searcher = PI.open_ivfpq_index(spark, idx_path, emb)
         sd_cells = max(1, emb.count() // SEMDEDUP_CELL_TARGET)
-        _, sd_centroids = fit_ivf_centroids(emb, sd_cells, "embedding")
+        sd_centroids = fit_centroids(emb, sd_cells, "embedding")
 
         all_queries["knn_ivfpq_search"] = lambda s, d: searcher.search(
             load_table(s, d, "embeddings").where("vec_id < 5"), k=5
