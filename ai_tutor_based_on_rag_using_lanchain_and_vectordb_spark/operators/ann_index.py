@@ -152,7 +152,7 @@ def upsert_ivf_index(
 ) -> dict:
     """Merge a batch of vectors into the persistent IVF layout.
 
-    - assignment against the EXISTING centroids (column expression);
+    - assignment against the EXISTING centroids (``knn.with_cells``);
     - matching ids are replaced (Delta-MERGE upsert semantics) — INCLUDING
       ids whose new embedding assigns to a different cell: prior rows are
       located by a column-pruned (id, cell) probe of the whole index, and

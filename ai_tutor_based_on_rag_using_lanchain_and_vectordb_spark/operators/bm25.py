@@ -63,25 +63,6 @@ def bm25_postings(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def doc_lengths(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """(doc_id, dl) WITHOUT building corpus-wide postings: dl = count of
-    non-empty whitespace tokens, a map-only codegen expression — row-
-    identical to ``bm25_postings(...).groupBy("doc_id").sum("tf")``
-    (docs with no tokens are absent from both, incl. NULL text where
-    ``size(null)`` is -1). The direct-search paths use this instead of
-    re-aggregating postings per consumer: the (doc, term) shuffle only
-    exists where an actual posting is needed (guide §2.3 — don't
-    shuffle what a scan can compute)."""
-    toks = tokens_col(F.col(text_col))
-    dl = F.size(F.filter(toks, lambda t: t != F.lit("")))
-    return (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    dl.cast("long").alias("dl"))
-        .where(F.col("dl") > 0)
-    )
-
-
 def tokenized_base(docs: DataFrame, queries: list,
                    id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:

@@ -16,6 +16,11 @@ Three physical strategies, trading exactness for scale:
    rerank inside. Approximate; the 100 TB path (cell assignment
    partitions/prunes the scan).
 
+Every assignment to a fitted quantizer — IVF cells, PQ codes and the
+PQ quantization error — is one ``mapInArrow`` kernel, ``quantize``,
+over one NumPy ranking, ``_proxy``; the probe ranks cells with the same
+helper.
+
 Plus ``lsh_similarity_join`` via MLlib BucketedRandomProjectionLSH on
 unit-normalized vectors (Euclidean distance on unit sphere ⇔ cosine).
 """
@@ -27,7 +32,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -173,9 +178,10 @@ def lsh_similarity_join(
 
 
 # ---------------------------------------------------------------------
-# The coarse quantizer: one fit, one assignment, one persisted table and
-# one probe for every IVF path (knn_ivf, pq.knn_ivfpq, the two
-# persistent layouts, their upserts, semdedup).
+# The coarse quantizer: one fit, one assignment kernel (which also
+# encodes PQ), one persisted table and one probe for every IVF path
+# (knn_ivf, pq.knn_ivfpq, the two persistent layouts, their upserts,
+# semdedup).
 
 #: the fit's seed; PQ subspace i uses _FIT_SEED + i
 _FIT_SEED = 42
@@ -183,12 +189,6 @@ _FIT_SEED = 42
 #: centroid is FAISS's training floor; 4096 is the floor PQ always used.
 _FIT_MIN_SAMPLE = 4096
 _POINTS_PER_CENTROID = 39
-#: above this cell count the argmin expression (one dot product per
-#: centroid against its literal array, O(cells·dim) plan literals) is the
-#: bottleneck: the 100x probe measured a 390-cell assignment at ~145x
-#: growth. The Arrow kernel does the same argmin as one matrix product
-#: per batch.
-_EXPR_ASSIGN_MAX_CELLS = 32
 
 #: result schema of every IVF-family search
 RESULT_SCHEMA = "query_id long, neighbor_id long, rank int, score double"
@@ -271,42 +271,109 @@ def fit_centroids(
     return cells, codebooks
 
 
-def _half_sq_norms(centroids: np.ndarray) -> np.ndarray:
-    """|c|²/2 per centroid, computed one way for every assignment path
-    and the probe, so their proxies agree bit for bit on this term."""
-    c = np.asarray(centroids, dtype=np.float64)
-    return 0.5 * (c * c).sum(axis=1)
+def _proxy(u: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """|c|²/2 − u·c of each row of ``u`` against each centroid row
+    (float64). For a fixed row ||u−c||² = |u|² + 2·proxy, so the argmin
+    is the nearest centroid: the one ranking of every assignment and of
+    the probe."""
+    return 0.5 * (centroids * centroids).sum(axis=1)[None, :] - u @ centroids.T
 
 
-def _nearest_cell_expr(vec: str, centroids: np.ndarray) -> tuple[Column, Column]:
-    """(cell, unit-sphere distance) columns assigning a raw embedding to
-    its nearest centroid (cell = the centroid's row) as one Catalyst
-    expression. On unit vectors argmin ||u−c||² == argmin
-    (|c|²/2 − u·c), so each centroid contributes one fold-form dot
-    product against its array literal. Ties break on the lower cell id
-    (array_min on struct(d, cell)). ``vec`` is a SQL expression string
-    (e.g. ``V.quote_col(name)``); the whole argmin is parsed in one
-    ``F.expr`` call."""
-    nrm_sql = V.norm_sql(vec)
-    pair_sqls = []
-    for cell, (c, half) in enumerate(zip(centroids, _half_sq_norms(centroids))):
-        # repr() round-trips the double; D keeps the literal DOUBLE
-        proxy = f"({repr(float(half))}D - {V.dot_sql(vec, V.array_lit(c))} / {nrm_sql})"
-        pair_sqls.append(f"struct({proxy} AS d, {cell} AS cell)")
-    best = F.expr(f"array_min(array({', '.join(pair_sqls)}))")
-    nrm = F.expr(nrm_sql)
-    vec = F.expr(vec)
-    # A null or all-zero embedding has no unit direction: the division
-    # yields NULL, which would otherwise surface as a NULL proxy inside
-    # the argmin struct. Make the no-cell case explicit and
-    # DETERMINISTIC (both outputs NULL) so callers can route such rows
-    # to a skip/quarantine path instead of crashing on None cells.
-    unassignable = vec.isNull() | nrm.isNull() | (nrm == 0.0)
-    cell_out = F.when(unassignable, F.lit(None).cast("int")).otherwise(best["cell"])
-    # ||u−c||² = 1 + |c|² − 2·u·c = 1 + 2·proxy
-    dist = F.sqrt(F.greatest(F.lit(0.0), F.lit(1.0) + 2.0 * best["d"]))
-    dist_out = F.when(unassignable, F.lit(None).cast("double")).otherwise(dist)
-    return cell_out, dist_out
+def quantize(
+    df: DataFrame,
+    vec_col: str = "embedding",
+    centroids: np.ndarray | None = None,
+    codebooks: np.ndarray | None = None,
+) -> DataFrame:
+    """``df`` assigned to a fitted quantizer in one ``mapInArrow`` pass:
+    the package's one assignment kernel. Each vector is unit-normalized
+    once, then ranked by :func:`_proxy` against the coarse
+    ``centroids`` (n_cells, D) and against each of the M subspace
+    ``codebooks`` (M, K, D/M); argmin ties go to the lower index.
+
+    The input columns pass through as Arrow arrays, untouched. With
+    ``centroids`` it adds ``cell`` (int, the nearest centroid's row) and
+    ``centroid_dist`` (unit-sphere distance to it); with ``codebooks``
+    it adds ``codes`` (array<int>, one entry per subspace), ``vnorm``
+    (the vector's norm) and ``pq_error`` (the squared quantization
+    error of the unit vector). Every added column is NULL for a NULL or
+    zero-norm vector. ``vec_col`` is a top-level column name."""
+    import pyarrow as pa
+
+    C = None if centroids is None else np.asarray(centroids, dtype=np.float64)
+    cb = None if codebooks is None else np.asarray(codebooks, dtype=np.float64)
+    fields = []
+    if C is not None:
+        dim = C.shape[1]
+        fields += [
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("centroid_dist", T.DoubleType()),
+        ]
+    if cb is not None:
+        m, _, sub = cb.shape
+        dim = m * sub
+        fields += [
+            T.StructField("codes", T.ArrayType(T.IntegerType())),
+            T.StructField("vnorm", T.DoubleType()),
+            T.StructField("pq_error", T.DoubleType()),
+        ]
+    schema = T.StructType(df.schema.fields + fields)
+
+    def run(batches):
+        for b in batches:
+            col = b.column(vec_col)
+            valid = np.asarray(col.is_valid(), dtype=bool)
+            flat = col.flatten().to_numpy(zero_copy_only=False)
+            if len(flat) != int(valid.sum()) * dim:
+                raise ValueError(f"every {vec_col} must have {dim} entries")
+            X = flat.astype(np.float64).reshape(-1, dim)
+            norms = np.sqrt((X * X).sum(axis=1))
+            nz = norms > 0.0
+            X, norms = X[nz] / norms[nz, None], norms[nz]
+            ok = np.zeros(len(valid), dtype=bool)
+            ok[np.flatnonzero(valid)[nz]] = True
+
+            def column(vals):
+                full = np.zeros(len(ok), dtype=vals.dtype)
+                full[ok] = vals
+                return pa.array(full, mask=~ok)
+
+            rows = np.arange(len(X))
+            out = []
+            if C is not None:
+                proxy = _proxy(X, C)
+                best = proxy.argmin(axis=1)
+                d = proxy[rows, best]
+                out += [
+                    column(best.astype(np.int32)),
+                    column(np.sqrt(np.maximum(0.0, 1.0 + 2.0 * d))),
+                ]
+            if cb is not None:
+                codes = np.empty((len(X), m), dtype=np.int32)
+                err = np.zeros(len(X))
+                for i in range(m):
+                    seg = X[:, i * sub : (i + 1) * sub]
+                    proxy = _proxy(seg, cb[i])
+                    codes[:, i] = proxy.argmin(axis=1)
+                    # ||seg−c||² = |seg|² + 2·proxy; roundoff can take
+                    # the true minimum a hair below zero
+                    err += np.maximum(
+                        0.0, (seg * seg).sum(axis=1) + 2.0 * proxy[rows, codes[:, i]]
+                    )
+                offsets = np.zeros(len(ok) + 1, dtype=np.int32)
+                offsets[1:] = np.cumsum(ok * m)
+                out += [
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets), pa.array(codes.ravel()), mask=pa.array(~ok)
+                    ),
+                    column(norms),
+                    column(err),
+                ]
+            yield pa.RecordBatch.from_arrays(
+                b.columns + out, names=b.schema.names + [f.name for f in fields]
+            )
+
+    return df.mapInArrow(run, schema)
 
 
 def with_cells(
@@ -314,61 +381,10 @@ def with_cells(
 ) -> DataFrame:
     """``df`` plus the coarse quantizer's assignment: ``cell`` (int, the
     nearest centroid's row) and ``centroid_dist`` (unit-sphere distance
-    to it), both NULL for a null or zero-norm embedding. Every builder,
-    inline search, upsert and semdedup assigns cells here. Up to
-    ``_EXPR_ASSIGN_MAX_CELLS`` cells the argmin is one Catalyst
-    expression; above, an Arrow kernel computes the same proxy. Each
-    cell count uses one path, so a build and its upserts agree."""
-    if len(centroids) > _EXPR_ASSIGN_MAX_CELLS:
-        return _with_cells_arrow(df, centroids, vec_col)
-    cell, dist = _nearest_cell_expr(V.quote_col(vec_col), centroids)
-    return df.select("*", cell.alias("cell"), dist.alias("centroid_dist"))
-
-
-def _with_cells_arrow(
-    df: DataFrame, centroids: np.ndarray, vec_col: str
-) -> DataFrame:
-    """mapInArrow assignment against the centroid matrix, the same
-    proxy as :func:`_nearest_cell_expr` (ties to the lowest cell via
-    argmin's first-minimum rule). Float accumulation order differs
-    (matrix product vs fold), which only matters at exact-boundary
-    ties. The input columns pass through as Arrow arrays, untouched."""
-    import pyarrow as pa
-
-    C = np.asarray(centroids, dtype=np.float64)
-    half = _half_sq_norms(C)
-    schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("centroid_dist", T.DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        for b in batches:
-            vals = b.column(vec_col).to_numpy(zero_copy_only=False)
-            cell = np.zeros(len(vals), dtype=np.int32)
-            dist = np.zeros(len(vals))
-            ok = np.zeros(len(vals), dtype=bool)
-            live = np.flatnonzero([v is not None for v in vals])
-            if len(live):
-                X = np.stack(vals[live]).astype(np.float64)
-                norms = np.sqrt((X * X).sum(axis=1))
-                nz = norms > 0.0
-                live, X, norms = live[nz], X[nz], norms[nz]
-                proxy = half[None, :] - (X / norms[:, None]) @ C.T
-                best = proxy.argmin(axis=1)
-                d = proxy[np.arange(len(best)), best]
-                cell[live] = best
-                dist[live] = np.sqrt(np.maximum(0.0, 1.0 + 2.0 * d))
-                ok[live] = True
-            yield pa.RecordBatch.from_arrays(
-                b.columns + [pa.array(cell, mask=~ok), pa.array(dist, mask=~ok)],
-                names=b.schema.names + ["cell", "centroid_dist"],
-            )
-
-    return df.mapInArrow(run, schema)
+    to it), both NULL for a null or zero-norm embedding. The
+    :func:`quantize` kernel with the centroids only; every cell count
+    takes this one path, so a build and its upserts agree."""
+    return quantize(df, vec_col, centroids=centroids)
 
 
 def write_centroids(spark, path: str, centroids: np.ndarray) -> None:
@@ -411,8 +427,7 @@ def _probe_df(
     cells of each query, ranked by the assignment's own proxy
     |c|²/2 − u·c ascending, ties to the lower cell — so a query equal
     to a stored vector probes that vector's cell first."""
-    C = np.asarray(centroids, dtype=np.float64)
-    proxy = _half_sq_norms(C)[None, :] - qu @ C.T
+    proxy = _proxy(qu, np.asarray(centroids, dtype=np.float64))
     pairs = [
         (int(qid), int(c))
         for i, qid in enumerate(qids)

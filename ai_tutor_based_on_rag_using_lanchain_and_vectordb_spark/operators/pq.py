@@ -13,9 +13,11 @@ Scale shape (100 TB design point):
   coarse quantizer's one fit (operators/knn.py ``fit_centroids``): a
   bounded, deterministic sample (orderBy + limit = TakeOrdered, no
   full sort), never the corpus.
-- Encoding is one mapInPandas pass (Arrow-batched numpy argmin per
-  subspace): embarrassingly parallel, output ~M bytes/vector, so the
-  encoded corpus is D·4/M× smaller than the raw one — the point of PQ.
+- Encoding is the package's one assignment kernel (operators/knn.py
+  ``quantize``: one mapInArrow pass that assigns the coarse cell and
+  the M subspace codes together): embarrassingly parallel, output ~M
+  bytes/vector, so the encoded corpus is D·4/M× smaller than the raw
+  one — the point of PQ.
 - ADC search scans CODES, not vectors: each query's M×K LUT is built
   on the driver and rides a broadcast local table, and the score is
   one Catalyst expression — M ``element_at`` gathers folded into a sum
@@ -33,13 +35,9 @@ Scale shape (100 TB design point):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..session import local_table
 from . import knn as KNN
@@ -59,15 +57,6 @@ def fit_pq_codebooks(
     return KNN.fit_centroids(vectors, 0, vec_col, id_col, pq=(m, k))[1]
 
 
-_CODES_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("codes", T.ArrayType(T.IntegerType())),
-        T.StructField("vnorm", T.DoubleType()),
-    ]
-)
-
-
 def encode_pq(
     vectors: DataFrame,
     codebooks: np.ndarray,
@@ -75,107 +64,28 @@ def encode_pq(
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """One Arrow-batched pass assigning each vector's M subvectors to
-    their nearest codebook entries. Zero-norm vectors are dropped
-    (cosine undefined — same contract as knn_exact_expr). Output is
-    (vec_id, codes[M], original norm) plus any ``keep_cols`` carried
-    through untouched (e.g. the IVF cell id); at 100 TB this is the
-    table you persist instead of the raw vectors."""
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, k, sub = cb.shape
-    extra_fields = [
-        vectors.schema[c] for c in keep_cols
-    ]
-    schema = T.StructType(list(_CODES_SCHEMA.fields) + extra_fields)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # NULL embeddings are dropped up front (np.vstack would
-            # crash on a None element) — same contract as the zero-norm
-            # drop below and as knn_exact_expr's norm filtering
-            pdf = pdf[pdf[vec_col].notna()]
-            if not len(pdf):
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            keep = norms > 0
-            mat, ids = mat[keep] / norms[keep, None], pdf[id_col].to_numpy()[keep]
-            if not len(mat):  # all-zero-norm batch: empty object column
-                continue  # would break Arrow's list<int32> conversion
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for i in range(m):
-                seg = mat[:, i * sub : (i + 1) * sub]
-                d2 = (
-                    (seg**2).sum(axis=1)[:, None]
-                    - 2.0 * seg @ cb[i].T
-                    + (cb[i] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, i] = d2.argmin(axis=1)
-            out = {
-                "vec_id": ids.astype(np.int64),
-                # plain lists: Arrow's ndarray-of-ndarray conversion
-                # is not implemented for some batch shapes
-                "codes": codes.tolist(),
-                "vnorm": norms[keep],
-            }
-            for c in keep_cols:
-                out[c] = pdf[c].to_numpy()[keep]
-            yield pd.DataFrame(out)
-
-    return vectors.select(id_col, vec_col, *keep_cols).mapInPandas(
-        encode, schema
+    """Assign each vector's M subvectors to their nearest codebook
+    entries (the :func:`knn.quantize` kernel with the codebooks only).
+    NULL and zero-norm vectors are dropped (cosine undefined — same
+    contract as knn_exact_expr). Output is (vec_id, codes[M], original
+    norm) plus any ``keep_cols`` carried through untouched; at 100 TB
+    this is the table you persist instead of the raw vectors."""
+    return _encoded(
+        KNN.quantize(
+            vectors.select(id_col, vec_col, *keep_cols), vec_col, codebooks=codebooks
+        ),
+        id_col,
+        keep_cols,
     )
 
 
-def mean_pq_distortion(
-    vectors: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-) -> float | None:
-    """Mean squared quantization error of encoding ``vectors`` with the
-    given (frozen) codebooks — the observable a codebook-refit policy
-    needs: under distribution drift the frozen codebooks reconstruct
-    new vectors worse, and this number rises. Same normalization and
-    assignment math as :func:`encode_pq`; one Arrow pass emitting one
-    (count, sse) row per batch, aggregated to a scalar. Returns None
-    when no encodable (non-null, non-zero-norm) vectors exist."""
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, k, sub = cb.shape
-
-    def measure(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if not len(pdf):
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            mat = mat[norms > 0] / norms[norms > 0, None]
-            if not len(mat):
-                continue
-            sse = 0.0
-            for i in range(m):
-                seg = mat[:, i * sub : (i + 1) * sub]
-                d2 = (
-                    (seg**2).sum(axis=1)[:, None]
-                    - 2.0 * seg @ cb[i].T
-                    + (cb[i] ** 2).sum(axis=1)[None, :]
-                )
-                # float roundoff can push the true-minimum distance a
-                # hair below zero — clamp before summing
-                sse += float(np.maximum(d2.min(axis=1), 0.0).sum())
-            yield pd.DataFrame({"n": [len(mat)], "sse": [sse]})
-
-    totals = (
-        vectors.select(vec_col)
-        .mapInPandas(measure, "n long, sse double")
-        .agg(F.sum("n").alias("n"), F.sum("sse").alias("sse"))
-        .first()
+def _encoded(quantized: DataFrame, id_col: str, keep_cols=()) -> DataFrame:
+    """The encoded-corpus shape (vec_id, codes, vnorm, *keep_cols) of a
+    :func:`knn.quantize` pass with codebooks: rows with no codes (NULL
+    or zero-norm vectors) drop out."""
+    return quantized.where(F.col("codes").isNotNull()).select(
+        F.col(id_col).cast("long").alias("vec_id"), "codes", "vnorm", *keep_cols
     )
-    if not totals or not totals["n"]:
-        return None
-    return float(totals["sse"]) / float(totals["n"])
 
 
 def knn_pq_adc(
@@ -286,8 +196,11 @@ def knn_ivfpq(
     centroids, cb = KNN.fit_centroids(
         vectors, n_clusters, vec_col, id_col, pq=(m, kc)
     )
-    assigned = KNN.with_cells(vectors.select(id_col, vec_col), centroids, vec_col)
-    enc = encode_pq(assigned, cb, id_col, vec_col, keep_cols=("cell",))
+    enc = _encoded(
+        KNN.quantize(vectors.select(id_col, vec_col), vec_col, centroids, cb),
+        id_col,
+        ("cell",),
+    )
     probe_df, _cells = KNN._probe_df(spark, qu, qids, centroids, nprobe)
     cand = enc.join(probe_df, "cell").select("query_id", "vec_id", "codes")
     cand = cand.join(F.broadcast(_lut_df(spark, cb, qu, qids)), "query_id")

@@ -28,12 +28,12 @@ from .knn import (
     _prep_queries,
     _probe_df,
     fit_centroids,
+    quantize,
     read_centroids,
-    with_cells,
     write_centroids,
 )
 from .partdelete import delete_ids_from_layout
-from .pq import _adc_shortlist, _exact_rerank, _lut_df, encode_pq
+from .pq import _adc_shortlist, _encoded, _exact_rerank, _lut_df
 
 
 def build_ivfpq_index(
@@ -53,10 +53,11 @@ def build_ivfpq_index(
     ``where={"file_id": …}`` vector-store filter on the compressed
     path); upserts preserve whatever metadata the layout carries."""
     centroids, cb = fit_centroids(vectors, n_cells, vec_col, id_col, pq=(m, kc))
-    assigned = with_cells(
-        vectors.select(id_col, vec_col, *meta_cols), centroids, vec_col
+    enc = _encoded(
+        quantize(vectors.select(id_col, vec_col, *meta_cols), vec_col, centroids, cb),
+        id_col,
+        ("cell", *meta_cols),
     )
-    enc = encode_pq(assigned, cb, id_col, vec_col, keep_cols=("cell", *meta_cols))
     enc.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(path, "codes")
     )
@@ -237,28 +238,24 @@ def upsert_ivfpq_index(
     new_vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    track_distortion: bool = False,
 ) -> dict:
     """Merge a batch into the persistent codes layout with the FROZEN
     quantizers: cells assign against the stored centroids, codes encode
-    against the stored codebooks, matching ids are replaced wherever
-    they previously lived (a column-pruned (id, cell) probe locates
-    stale rows — an updated vector may move cells), zero-norm vectors
-    quarantine, and only touched cell partitions rewrite (dynamic
-    partition overwrite).
+    against the stored codebooks (one :func:`knn.quantize` pass, pinned),
+    matching ids are replaced wherever they previously lived (a
+    column-pruned (id, cell) probe locates stale rows — an updated
+    vector may move cells), zero-norm vectors quarantine, and only
+    touched cell partitions rewrite (dynamic partition overwrite).
 
-    Telemetry: with ``track_distortion=True`` the returned dict
-    carries ``mean_adc_error`` — the batch's mean squared quantization
-    error under the FROZEN codebooks (operators/pq.mean_pq_distortion).
-    Off by default: it is a second full Arrow pass over the batch, so a
-    refit policy should sample batches rather than pay it on every
-    upsert. The coarse quantizer's
-    growth/drift refit triggers live in ann_index.upsert_ivf_index;
-    this is the matching signal for the PQ side: a refit policy
-    re-fits the codebooks when the error trend of incoming batches
-    rises above the build-time distortion.
+    Telemetry: the returned dict carries ``mean_adc_error`` — the
+    batch's mean squared quantization error under the FROZEN codebooks,
+    None when nothing was encodable. The skipped count, the touched
+    cells and this error come from one aggregate over the pinned pass.
+    The coarse quantizer's growth/drift refit triggers live in
+    ann_index.upsert_ivf_index; this is the matching signal for the PQ
+    side: a refit policy re-fits the codebooks when the error trend of
+    incoming batches rises above the build-time distortion.
     ``vec_col`` is a top-level column name."""
-    cb = read_codebooks(spark, path)
     # preserve whatever metadata the layout carries (declared at build
     # time via meta_cols; the batch must supply the same columns)
     codes_path = os.path.join(path, "codes")
@@ -267,27 +264,25 @@ def upsert_ivfpq_index(
         for c in spark.read.parquet(codes_path).schema.names
         if c not in (id_col, "codes", "vnorm", "cell")
     ]
-    assigned = with_cells(
+    quantized = quantize(
         new_vectors.select(id_col, vec_col, *meta_cols).dropDuplicates([id_col]),
-        read_centroids(spark, path),
         vec_col,
+        read_centroids(spark, path),
+        read_codebooks(spark, path),
     )
-    n_skipped = assigned.where(F.col("cell").isNull()).count()
-    assigned = assigned.where(F.col("cell").isNotNull())
-    enc = encode_pq(assigned, cb, id_col, vec_col,
-                    keep_cols=("cell", *meta_cols))
-    enc = pin(enc, eager=True)
-    batch_cells = enc.groupBy("cell").count().collect()
-    n_batch = sum(int(r["count"]) for r in batch_cells)
+    quantized = pin(quantized.drop(vec_col, "centroid_dist"), eager=True)
+    # NULL cell = unassignable vector (null / zero-norm embedding),
+    # quarantined out of the merge rather than crashing the batch
+    batch_cells = quantized.groupBy("cell").agg(
+        F.count("*").alias("n"), F.sum("pq_error").alias("err")
+    ).collect()
+    n_skipped = sum(int(r["n"]) for r in batch_cells if r["cell"] is None)
+    batch_cells = [r for r in batch_cells if r["cell"] is not None]
+    n_batch = sum(int(r["n"]) for r in batch_cells)
     if not n_batch:
         return {"added": 0, "replaced": 0, "skipped": n_skipped,
                 "touched_cells": [], "mean_adc_error": None}
-    mean_adc_error = None
-    if track_distortion:
-        from .pq import mean_pq_distortion
-
-        mean_adc_error = mean_pq_distortion(assigned, cb, vec_col)
-
+    enc = _encoded(quantized, id_col, ("cell", *meta_cols))
     replaced, touched = delete_ids_from_layout(
         spark, codes_path, enc.select(id_col), id_col, "cell",
         replacement=enc.select(id_col, "codes", "vnorm", *meta_cols, "cell"),
@@ -298,7 +293,7 @@ def upsert_ivfpq_index(
         "replaced": replaced,
         "skipped": n_skipped,
         "touched_cells": touched,
-        "mean_adc_error": mean_adc_error,
+        "mean_adc_error": sum(float(r["err"]) for r in batch_cells) / n_batch,
     }
 
 

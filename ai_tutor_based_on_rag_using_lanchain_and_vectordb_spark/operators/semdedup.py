@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..session import pin
-from .knn import _nearest_cell_expr, fit_centroids, with_cells
+from .knn import fit_centroids, with_cells
 
 DEFAULT_THRESHOLD = 0.3
 
@@ -87,10 +87,10 @@ def assign_cells(
 def _mean_direction_dist(
     vectors: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """centroid_dist for the 1-cell case: unit-sphere distance to the
-    corpus mean direction, via the same argmin expression machinery as
-    the multi-cell path (one centroid ⇒ the argmin is just that
-    centroid's distance)."""
+    """(id, embedding, cell, centroid_dist) for the 1-cell case:
+    :func:`with_cells` against the corpus mean direction as the one
+    centroid, so every row lands in cell 0 and its distance is the
+    unit-sphere distance to that direction."""
     vq = V.quote_col(vec_col)
     sums = (
         vectors.select(F.posexplode(V.as_double(F.col(vq))).alias("dim", "x"))
@@ -100,8 +100,7 @@ def _mean_direction_dist(
         .collect()
     )  # bounded: one row per embedding dimension
     centroid = np.asarray([r["m"] for r in sums], dtype=np.float64)
-    _, dist_col = _nearest_cell_expr(vq, centroid[None, :])
-    return vectors.withColumn("centroid_dist", dist_col)
+    return with_cells(vectors, centroid[None, :], vec_col)
 
 
 def semdedup(
@@ -139,7 +138,7 @@ def semdedup(
     assigned = assign_cells(vectors, n_cells, id_col, vec_col, centroids=centroids)
     # pin the assignment: it feeds the pair generator, both prune-key
     # branches and the final flag join — without the pin each branch
-    # re-runs the scan + argmin and the DAG deepens by the whole pair
+    # re-runs the scan + assignment and the DAG deepens by the whole pair
     # machinery per branch. The assignment is (id, vec, cell, dist) —
     # the operator's working set, same bound as the index build. LAZY
     # (optimization r14): the collapse preflight (has_exact_duplicates,
@@ -148,7 +147,7 @@ def semdedup(
     assigned = pin(assigned)
     if order == "centroid" and n_cells == 1 and centroids is None:
         assigned = _mean_direction_dist(
-            assigned.drop("centroid_dist"), id_col, vec_col
+            assigned.drop("cell", "centroid_dist"), id_col, vec_col
         )
 
     labeled = assigned.select(

@@ -155,10 +155,6 @@ def _decode_pdf_bytes(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _decode_pdf_string(raw: bytes) -> str:
-    return _decode_pdf_bytes(raw).decode("latin-1")
-
-
 def _hex_bytes(hx: bytes) -> bytes:
     hx = re.sub(rb"\s", b"", hx)
     if len(hx) % 2:

@@ -181,7 +181,7 @@ def test_upsert_reports_adc_error_rising_under_drift(spark, emb, tmp_path):
     indist = emb.where("vec_id >= 5 AND vec_id < 55").select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
-    r1 = PI.upsert_ivfpq_index(spark, path, indist, track_distortion=True)
+    r1 = PI.upsert_ivfpq_index(spark, path, indist)
     assert r1["mean_adc_error"] is not None and r1["mean_adc_error"] >= 0.0
 
     # distribution shift: vectors collapse onto (almost) one basis
@@ -197,14 +197,13 @@ def test_upsert_reports_adc_error_rising_under_drift(spark, emb, tmp_path):
             .cast("float"),
         ).alias("embedding"),
     )
-    r2 = PI.upsert_ivfpq_index(spark, path, shifted, track_distortion=True)
+    r2 = PI.upsert_ivfpq_index(spark, path, shifted)
     # the refit signal: frozen codebooks reconstruct drifted vectors worse
     assert r2["mean_adc_error"] > r1["mean_adc_error"] * 1.5
 
     # empty batch keeps the field present (None)
     r3 = PI.upsert_ivfpq_index(
         spark, path, emb.where("vec_id < 0").select("vec_id", "embedding"),
-        track_distortion=True,
     )
     assert r3["mean_adc_error"] is None
 

@@ -85,9 +85,8 @@ def test_multi_cell_decisions_are_cell_local(spark, corpus):
 
 
 def test_numpy_assignment_path_matches_brute_force(spark, corpus):
-    # > _EXPR_ASSIGN_MAX_CELLS routes assignment through the Arrow
-    # matrix kernel (the 100x-probe fix); decisions must still match
-    # the triu rule under the kernel's own assignment
+    # 40 cells, most of them empty: decisions must still match the
+    # triu rule under the assignment kernel's own cells
     import numpy as np
 
     rng = np.random.default_rng(11)
