@@ -8,7 +8,7 @@ One builder, the fold form. ``dot(a, b)`` is
 parsed from one SQL text with one ``F.expr`` call; ``norm`` and
 ``cosine`` wrap the same text. Inputs are SQL expression strings: a
 column name (``quote_col``), a lambda variable's field, or any array
-expression such as ``array_lit`` of a driver-side constant vector.
+expression.
 
 Why the fold:
 
@@ -28,8 +28,6 @@ Why the fold:
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -53,19 +51,6 @@ def quote_col(name: str) -> str:
     backticks doubled), valid both in SQL text and as an ``F.col`` name.
     ``a.b`` names the column ``a.b``, never field ``b`` of struct ``a``."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def array_lit(consts) -> str:
-    """SQL text of an ``array<double>`` literal holding ``consts`` (e.g.
-    a centroid). repr() round-trips IEEE doubles exactly; the D suffix
-    keeps each element DOUBLE (a bare decimal parses as DECIMAL)."""
-    parts = []
-    for c in consts:
-        f = float(c)
-        if not math.isfinite(f):
-            raise ValueError(f"non-finite constant in array_lit: {c!r}")
-        parts.append(repr(f) + "D")
-    return f"array({', '.join(parts)})"
 
 
 def dot_sql(a: str, b: str) -> str:

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_table, pin
@@ -75,19 +75,19 @@ def build_ivf_index(
         vectors.select(id_col, vec_col, *meta_cols), centroids, vec_col
     )
     # null / zero-norm embeddings have no cell: outside the cosine
-    # domain, as in the upsert's quarantine
-    assigned.where(F.col("cell").isNotNull()).drop("centroid_dist").repartition(
-        "cell"
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, "vectors")
-    )
+    # domain, as in the upsert's quarantine. The fit-time stats (stored
+    # rows and mean unit-sphere assignment distance — the baselines the
+    # drift trigger compares against) are observed on the write itself,
+    # so the corpus is assigned once.
+    stats = Observation("ivf_fit_stats")
+    assigned.where(F.col("cell").isNotNull()).observe(
+        stats, F.count("cell").alias("n"), F.avg("centroid_dist").alias("mean_dist")
+    ).drop("centroid_dist").repartition("cell").write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(os.path.join(path, "vectors"))
     spark = vectors.sparkSession
     write_centroids(spark, path, centroids)
-    # fit-time stats: stored rows and mean unit-sphere assignment
-    # distance — the baselines the drift trigger compares against
-    agg = assigned.select(
-        F.count("cell").alias("n"), F.avg("centroid_dist").alias("mean_dist")
-    ).collect()[0]
+    agg = stats.get
     _write_stats(spark, path, fit_n=agg["n"], fit_mean_dist=float(agg["mean_dist"]),
                  cur_n=agg["n"])
 

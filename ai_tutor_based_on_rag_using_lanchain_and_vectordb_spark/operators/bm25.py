@@ -194,7 +194,6 @@ def bm25_search(
     b: float = B,
     id_col: str = "doc_id",
     text_col: str = "text",
-    postings: DataFrame | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k documents per query by BM25: (query_id, doc_id, rank,
@@ -214,26 +213,9 @@ def bm25_search(
 
     Pass ``base`` (a pinned :func:`tokenized_base` frame) when the
     caller also consumes it — e.g. Q(retrieval_eval) derives its
-    relevance truth from the same tokenization. ``postings`` (any
-    (doc_id, term, tf) frame, e.g. the persistent layout's) keeps the
-    former semi-filter shape for callers that already hold postings;
-    ``docs`` is then unused (lengths and stats come from the postings)."""
+    relevance truth from the same tokenization. The persistent layout's
+    postings are searched through :class:`Bm25Searcher`."""
     qdf = _query_terms_df(spark, queries)
-    if postings is not None:
-        # caller-pinned postings (shared with other consumers): the
-        # semi-filter still touches only matched terms' postings.
-        # dl derives from the POSTINGS frame itself (dl = Σ tf over all
-        # terms, by definition) so scores stay self-consistent with
-        # whatever postings the caller holds — a post-delete/filtered
-        # layout must not be scored against lengths re-tokenized from a
-        # diverged docs frame (and the corpus is not re-read).
-        matched = postings.join(
-            F.broadcast(qdf.select("term").distinct()), "term", "left_semi"
-        )
-        dl = postings.groupBy("doc_id").agg(
-            F.sum("tf").cast("long").alias("dl")
-        )
-        return _score_topk(qdf, matched, dl, _corpus_stats(dl), k, k1, b)
     if base is None:
         # pinned: matched postings, df counts and corpus stats all read
         # the one tokenize pass instead of re-tokenizing per consumer
@@ -256,7 +238,6 @@ def bm25_prf_search(
     b: float = B,
     id_col: str = "doc_id",
     text_col: str = "text",
-    postings: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 with pseudo-relevance-feedback query expansion (the
     RM3/Rocchio recipe): run the base ranking, harvest the top
@@ -277,53 +258,34 @@ def bm25_prf_search(
     2's matched postings carry dl alongside the explode, semi-filtered
     on the (derived, tiny) expanded term broadcast before the
     (doc, term) aggregation. Nothing doc-length-joins — dl rides the
-    matched rows. Passing ``postings`` keeps the old
-    semi-filter-the-pinned-frame shape for callers that share one;
-    ``docs`` is then unused (both passes read the postings)."""
+    matched rows."""
     from pyspark.sql import Window
 
     qdf = _query_terms_df(spark, queries)
-    if postings is None:
-        base = tokenized_base(docs, queries, id_col, text_col)
-        base = pin(base)
-        matched1 = matched_from_base(base)
-        dl = base.select("doc_id", "dl")
-        dl_join = None  # dl rides matched1/matched2
-    else:
-        matched1 = postings.join(
-            F.broadcast(qdf.select("term").distinct()), "term", "left_semi"
-        )
-        # dl from the POSTINGS frame (see bm25_search) — self-consistent
-        # with the caller's layout, no corpus re-tokenize
-        dl = pin(postings.groupBy("doc_id").agg(
-            F.sum("tf").cast("long").alias("dl")
-        ))
-        dl_join = dl
-    stats = _corpus_stats(dl)
-    # pinned: feedback ids feed the doc semi-filter AND the tf harvest
+    base = pin(tokenized_base(docs, queries, id_col, text_col))
+    stats = _corpus_stats(base.select("doc_id", "dl"))
+    # pinned: feedback ids feed the doc semi-filter AND the tf harvest;
+    # dl rides the matched rows of both passes
     feedback = pin(_score_topk(
-        qdf, matched1, dl_join, stats, fb_docs, k1, b
+        qdf, matched_from_base(base), None, stats, fb_docs, k1, b
     ).select("query_id", "doc_id"))
     # expansion candidates: terms of the feedback docs, minus the
     # query's own terms, ranked by total tf across the feedback set.
     # Only the Q·fb_docs feedback documents are tokenized here — the
     # semi-join lands below the explode, so no other doc fans out.
-    if postings is None:
-        fb_post = (
-            docs.join(
-                F.broadcast(feedback.select(F.col("doc_id").alias(id_col))
-                            .distinct()),
-                id_col,
-                "left_semi",
-            )
-            .select(F.col(id_col).alias("doc_id"),
-                    F.explode(tokens_col(F.col(text_col))).alias("term"))
-            .where(F.col("term") != "")
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").cast("long").alias("tf"))
+    fb_post = (
+        docs.join(
+            F.broadcast(feedback.select(F.col("doc_id").alias(id_col))
+                        .distinct()),
+            id_col,
+            "left_semi",
         )
-    else:
-        fb_post = postings.hint("shuffle_hash")
+        .select(F.col(id_col).alias("doc_id"),
+                F.explode(tokens_col(F.col(text_col))).alias("term"))
+        .where(F.col("term") != "")
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").cast("long").alias("tf"))
+    )
     cand = (
         feedback.join(fb_post, "doc_id")
         .join(qdf, ["query_id", "term"], "left_anti")
@@ -341,43 +303,38 @@ def bm25_prf_search(
         )
     )
     q2 = qdf.withColumn("weight", F.lit(1.0)).unionByName(expansion)
-    if postings is None:
-        # pass-2 matched postings with dl riding along: one tokenize
-        # pass. The expanded term set is DERIVED (not driver-literal),
-        # so the in-scan filter attaches it as a broadcast 1-row
-        # collect_set and filters INSIDE the token array (optimization
-        # r14) — only expanded-term hits ever leave the projection.
-        # The former shape exploded EVERY token of EVERY document and
-        # semi-joined above the explode: a corpus-wide row fan-out
-        # (plus a join) for a ~Q·(terms+fb_terms)-term filter.
-        toks = F.filter(
-            tokens_col(F.col(text_col)), lambda t: t != F.lit("")
+    # pass-2 matched postings with dl riding along: one tokenize
+    # pass. The expanded term set is DERIVED (not driver-literal),
+    # so the in-scan filter attaches it as a broadcast 1-row
+    # collect_set and filters INSIDE the token array (optimization
+    # r14) — only expanded-term hits ever leave the projection.
+    # The former shape exploded EVERY token of EVERY document and
+    # semi-joined above the explode: a corpus-wide row fan-out
+    # (plus a join) for a ~Q·(terms+fb_terms)-term filter.
+    toks = F.filter(
+        tokens_col(F.col(text_col)), lambda t: t != F.lit("")
+    )
+    q2_terms = q2.select("term").distinct().agg(
+        F.collect_set("term").alias("_q2terms")
+    )
+    matched2 = (
+        docs.crossJoin(F.broadcast(q2_terms))
+        .select(F.col(id_col).alias("doc_id"), toks.alias("_toks"),
+                "_q2terms")
+        .select(
+            "doc_id",
+            F.size("_toks").cast("long").alias("dl"),
+            F.explode(
+                F.filter(
+                    "_toks",
+                    lambda t: F.array_contains(F.col("_q2terms"), t),
+                )
+            ).alias("term"),
         )
-        q2_terms = q2.select("term").distinct().agg(
-            F.collect_set("term").alias("_q2terms")
-        )
-        matched2 = (
-            docs.crossJoin(F.broadcast(q2_terms))
-            .select(F.col(id_col).alias("doc_id"), toks.alias("_toks"),
-                    "_q2terms")
-            .select(
-                "doc_id",
-                F.size("_toks").cast("long").alias("dl"),
-                F.explode(
-                    F.filter(
-                        "_toks",
-                        lambda t: F.array_contains(F.col("_q2terms"), t),
-                    )
-                ).alias("term"),
-            )
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count("*").cast("long").alias("tf"))
-        )
-    else:
-        matched2 = postings.join(
-            F.broadcast(q2.select("term").distinct()), "term", "left_semi"
-        )
-    return _score_topk(q2, matched2, dl_join, stats, k, k1, b)
+        .groupBy("doc_id", "dl", "term")
+        .agg(F.count("*").cast("long").alias("tf"))
+    )
+    return _score_topk(q2, matched2, None, stats, k, k1, b)
 
 
 # ------------------------------------------------- persistent index

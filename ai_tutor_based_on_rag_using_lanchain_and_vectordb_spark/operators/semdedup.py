@@ -4,13 +4,17 @@ through semantic deduplication", arXiv:2303.09540).
 
 The modern layer above the pairwise dedup stack: instead of scoring
 pairs across the whole corpus (quadratic) or within a metadata block
-(plans/vectors.py blocks on ``label``), vectors are first assigned to
-IVF cells — the same coarse-quantizer assignment the persistent ANN
-index uses (operators/knn.py) — and cosine pairs are generated
-STRICTLY within a cell. At 100 TB the pair space is Σ|cell|² instead
-of N², each cell's pair generation is salt-spread across tasks by the
-proven near-dup machinery (plans/vectors.py), and no cross-cell pair
-exists anywhere in the plan by construction.
+(``embedding_neardup_pairs_df`` blocks on ``label``), vectors are first
+assigned to IVF cells — the same coarse-quantizer assignment the
+persistent ANN index uses (operators/knn.py) — and cosine pairs are
+generated STRICTLY within a cell. At 100 TB the pair space is Σ|cell|²
+instead of N², each cell's pair generation is salt-spread across tasks
+by :func:`cosine_pairs`, and no cross-cell pair exists anywhere in the
+plan by construction.
+
+:func:`cosine_pairs` is the package's one exact cosine pair scorer:
+the label-blocked near-dup pairs, this operator and the streaming fold
+(streaming/semdedup.py) all score through it.
 
 Prune rule — the paper's upper-triangular max rule, which is
 deliberately NON-recursive (a vector's fate does not depend on whether
@@ -41,14 +45,209 @@ repo): they appear in neither the kept nor the pruned set.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import exact as X
 from ..functions import vector as V
 from ..session import pin
+from .dedup import has_exact_duplicates, pairs_from_sorted_ids
 from .knn import fit_centroids, with_cells
 
 DEFAULT_THRESHOLD = 0.3
+
+# Salt buckets of the pair scorer: each block's pair space is split
+# across this many cogroup keys so no single task owns a whole block
+# (the blocking key's O(N_block²) pair output is the skew risk).
+NEARDUP_SALTS = 16
+
+def _no_pairs() -> pd.DataFrame:
+    return pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
+                         "vec_b": pd.Series(dtype="int64"),
+                         "score": pd.Series(dtype="float64")})
+
+
+def cosine_pairs(
+    a: DataFrame, b: DataFrame | None = None, threshold: float = DEFAULT_THRESHOLD
+) -> DataFrame:
+    """Exact same-block cosine pairs (vec_a, vec_b, score) with cosine ≥
+    ``threshold``, score ``pround``-ed to 4 places. ``a`` and ``b`` are
+    (vec_id, embedding, label) frames; ``label`` is the blocking key.
+
+    The pair rule comes from the input: with ``b=None`` every unordered
+    pair of ``a`` is emitted once (``vec_a < vec_b``); with a distinct
+    ``b`` every (a, b) pair with ``vec_a != vec_b`` is emitted, so a
+    vector found on both sides meets the others in both orientations.
+
+    Plan: both sides are grouped on (label, salt) — side A salted by
+    hash(vec_id) mod :data:`NEARDUP_SALTS`, side B replicated to every
+    salt, so each pair meets exactly once (at A's salt) and a block's
+    pair space spreads across the salts instead of one hot key. Each
+    cogroup scores its |A|×|B| block in NumPy, one vectorized row-sweep
+    per dimension and one Python/Arrow call per key. Measured against the
+    salted shuffled-hash expression join it replaced (4-core host,
+    2,000 vectors, warm): 1 cell at τ 0.95 (~2M pairs) 0.55 s against
+    4.4 s, 4 cells at τ 0.3 0.45–0.51 s against 1.2–1.4 s, label
+    blocks 0.52–0.82 s against 0.62–1.01 s, with identical answers.
+
+    Bit-parity with ``V.dot`` (and so with the DuckDB oracle) is
+    engineered, not hoped for: accumulation is SEQUENTIAL over the
+    dimensions (``acc += A[:,i]·B[:,i]``, vectorized across the pair
+    axis) — the same left-to-right order as ``V.dot``'s fold — norms use
+    the same loop, and rounding replicates ``pround``'s
+    ``floor(x·10⁴+0.5)/10⁴``. All IEEE-double ops in identical order ⇒
+    identical bits.
+
+    NULL and zero-norm vectors are excluded (cosine undefined). Memory
+    per task is |A_block|×|B| doubles: A rows are swept in fixed-size
+    blocks, and |B| per key is one label's rows."""
+    self_pairs = b is None
+
+    def score_block(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
+        if len(adf) == 0 or len(bdf) == 0:
+            return _no_pairs()
+        A = np.stack(adf["embedding"].to_numpy()).astype(np.float64)
+        B = np.stack(bdf["b_embedding"].to_numpy()).astype(np.float64)
+        ids_a = adf["vec_id"].to_numpy(dtype=np.int64)
+        ids_b = bdf["b_vec_id"].to_numpy(dtype=np.int64)
+        dim = A.shape[1]
+
+        def seq_norm(M):
+            acc = np.zeros(M.shape[0])
+            for i in range(dim):
+                acc = acc + M[:, i] * M[:, i]
+            return np.sqrt(acc)
+
+        na, nb = seq_norm(A), seq_norm(B)
+        A, ids_a, na = A[na > 0.0], ids_a[na > 0.0], na[na > 0.0]
+        B, ids_b, nb = B[nb > 0.0], ids_b[nb > 0.0], nb[nb > 0.0]
+        frames = []
+        BLOCK = 2048
+        for lo in range(0, A.shape[0], BLOCK):
+            Ab = A[lo : lo + BLOCK]
+            ia = ids_a[lo : lo + BLOCK]
+            acc = np.zeros((Ab.shape[0], B.shape[0]))
+            for i in range(dim):
+                acc = acc + Ab[:, i][:, None] * B[:, i][None, :]
+            s = acc / (na[lo : lo + BLOCK][:, None] * nb[None, :])
+            if self_pairs:
+                rule = ia[:, None] < ids_b[None, :]
+            else:
+                rule = ia[:, None] != ids_b[None, :]
+            r, c = np.nonzero(rule & (s >= threshold))
+            if len(r):
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "vec_a": ia[r],
+                            "vec_b": ids_b[c],
+                            "score": np.floor(s[r, c] * 10000.0 + 0.5) / 10000.0,
+                        }
+                    )
+                )
+        return pd.concat(frames, ignore_index=True) if frames else _no_pairs()
+
+    # np.stack cannot take a NULL embedding: drop them up front, and the
+    # filter reaches the scan
+    a = a.where(F.col("embedding").isNotNull())
+    b = a if self_pairs else b.where(F.col("embedding").isNotNull())
+    salt_a = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(NEARDUP_SALTS)).cast("int")
+    a = a.select("vec_id", "embedding", "label", salt_a.alias("salt"))
+    # fresh attribute names on the B side: a self-cogroup whose sides
+    # share attribute ids gets its right side deduplicated to the
+    # grouping keys under some parent plans (e.g. count()), dropping
+    # the payload columns before they reach the Python worker
+    b = b.select(
+        F.col("vec_id").alias("b_vec_id"),
+        F.col("embedding").alias("b_embedding"),
+        F.col("label").alias("b_label"),
+    ).withColumn(
+        "b_salt", F.explode(F.sequence(F.lit(0), F.lit(NEARDUP_SALTS - 1)))
+    )
+    return (
+        a.groupBy("label", "salt")
+        .cogroup(b.groupBy("b_label", "b_salt"))
+        .applyInPandas(score_block, "vec_a long, vec_b long, score double")
+    )
+
+
+def embedding_neardup_pairs_df(
+    emb: DataFrame,
+    threshold: float = DEFAULT_THRESHOLD,
+    collapse: bool | None = None,
+) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs within a label block
+    (cosine ≥ ``threshold``; blocking on label keeps the pair space
+    linear-ish). Exact within the block — every same-label pair is
+    scored by :func:`cosine_pairs`.
+
+    **Duplicate collapse**: byte-identical vectors are grouped first and
+    the O(N²/labels) scoring runs on one representative per group; the
+    full pair set is expanded back afterwards (cross-group pairs carry
+    the representative score — identical vectors score identically —
+    and within-group pairs carry the rep's self-cosine, the same float
+    expression a naive pair of identical vectors evaluates). On a
+    duplicate-heavy corpus (the realistic case for embedding dedup) the
+    scored pair space shrinks quadratically; output is unchanged.
+
+    ``collapse=None`` (default) size-gates the rewrite with one cheap
+    hash-distinct pre-flight over (label, embedding): a duplicate-free
+    table (every group size 1) skips the group-by and both expansion
+    joins — the plans are identical on such data by construction."""
+    if collapse is None:
+        collapse = has_exact_duplicates(emb, "label", "embedding")
+    if not collapse:
+        return cosine_pairs(
+            emb.select("vec_id", "embedding", "label"), threshold=threshold
+        )
+    groups = emb.groupBy("label", "embedding").agg(
+        F.sort_array(F.collect_list("vec_id")).alias("_ids"),
+        F.min("vec_id").alias("_rep"),
+    )
+    reps = groups.select(F.col("_rep").alias("vec_id"), "embedding", "label")
+    rep_pairs = cosine_pairs(reps, threshold=threshold)
+
+    # expansion joins: shuffled-hash on the rep id — the groups side has
+    # distinct-vector cardinality, so broadcasting it dies at scale just
+    # like broadcasting the table would
+    ga = groups.select(F.col("_rep").alias("vec_a"), F.col("_ids").alias("ids_a"))
+    gb = groups.select(F.col("_rep").alias("vec_b"), F.col("_ids").alias("ids_b"))
+    cross = (
+        rep_pairs.join(ga.hint("shuffle_hash"), "vec_a")
+        .join(gb.hint("shuffle_hash"), "vec_b")
+        .select(F.explode("ids_a").alias("a_id"), "ids_b", "score")
+        .select("a_id", F.explode("ids_b").alias("b_id"), "score")
+        .select(
+            F.least("a_id", "b_id").alias("vec_a"),
+            F.greatest("a_id", "b_id").alias("vec_b"),
+            "score",
+        )
+    )
+    # within-group pairs: score = the rep's self-cosine, evaluated with
+    # the fold-form expression whose bits the kernel reproduces
+    vdbl = V.as_double_sql("embedding")
+    self_score = V.dot(vdbl, vdbl) / (
+        V.norm("embedding") * V.norm("embedding")
+    )
+    within = (
+        groups.where(F.size("_ids") >= 2)
+        # zero-norm excluded (cosine undefined); also keeps the division
+        # 0/0-free under ANSI mode
+        .where(V.norm("embedding") > 0)
+        .withColumn("_s", self_score)
+        .where(F.col("_s") >= threshold)
+        .select(
+            F.explode(pairs_from_sorted_ids(F.col("_ids"))).alias("p"),
+            X.pround(F.col("_s"), 4).alias("score"),
+        )
+        .select(
+            F.col("p.doc_a").alias("vec_a"),
+            F.col("p.doc_b").alias("vec_b"),
+            "score",
+        )
+    )
+    return cross.unionByName(within)
 
 
 def assign_cells(
@@ -110,7 +309,6 @@ def semdedup(
     order: str = "id",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "numpy",
     collapse: bool | None = None,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
@@ -118,23 +316,14 @@ def semdedup(
 
     ``kept = false`` ⇔ some same-cell vector with strictly higher
     priority scores cosine ≥ ``threshold`` against it. Pair generation
-    reuses plans/vectors.embedding_neardup_pairs_df with the cell as
-    the blocking key — salted self-join / cogrouped Arrow kernel,
-    duplicate-collapse rewrite, zero-norm contract and all — so the
-    plan is cell-local and skew-spread end to end; this function adds
-    only the (cheap, pair-bounded) prune bookkeeping on top.
-
-    ``engine`` forwards to the pair scorer ("numpy" = cogrouped Arrow
-    kernel, anything else = the codegen expression join); the two are
-    bit-parity-tested, which the pruned-configuration gate exploits as
-    a cross-engine check.
+    is :func:`embedding_neardup_pairs_df` with the cell as the blocking
+    key — the salted cogroup kernel, duplicate-collapse rewrite,
+    zero-norm contract and all — so the plan is cell-local and
+    skew-spread end to end; this function adds only the (cheap,
+    pair-bounded) prune bookkeeping on top.
     """
     if order not in ("id", "centroid"):
         raise ValueError(f"order must be 'id' or 'centroid', got {order!r}")
-    # plans.vectors imports operators lazily, never this module — the
-    # late import here keeps the module graph acyclic
-    from ..plans.vectors import embedding_neardup_pairs_df
-
     assigned = assign_cells(vectors, n_cells, id_col, vec_col, centroids=centroids)
     # pin the assignment: it feeds the pair generator, both prune-key
     # branches and the final flag join — without the pin each branch
@@ -156,7 +345,7 @@ def semdedup(
         F.col("cell").alias("label"),
     )
     pairs = embedding_neardup_pairs_df(
-        labeled, threshold=threshold, engine=engine, collapse=collapse
+        labeled, threshold=threshold, collapse=collapse
     )
 
     if order == "id":

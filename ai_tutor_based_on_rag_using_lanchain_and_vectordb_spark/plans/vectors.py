@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import exact as X
 from ..functions import vector as V
+from ..operators.semdedup import assign_cells, embedding_neardup_pairs_df, semdedup
 from ..session import default_parallelism, local_table, pin
 
 K = 5
@@ -99,289 +100,17 @@ def knn_label_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Salt buckets for the near-dup self-join: each label block's pair space
-# is split across this many join keys so no single task owns a whole
-# label (the blocking key's O(N_label²) pair output is the skew risk).
-NEARDUP_SALTS = 16
-
-
-def _salted_pair_scores(
-    vectors: DataFrame, threshold: float, salts: int, broadcast_build: bool
-) -> DataFrame:
-    """Exact same-label pair scoring (cosine ≥ threshold) over a vectors
-    frame. Default physical plan (the 100 TB shape): a **salt-replicated
-    shuffled-hash self-join** on (label, salt). Side A gets a
-    deterministic salt = hash(vec_id) mod S; side B is replicated to all
-    S salts, so each unordered pair meets exactly once (at A's salt) and
-    each label's pair space is spread across S join keys instead of one
-    hot key. Both sides shuffle on (label, salt) — nothing is
-    broadcast, so an un-broadcastable build side can't kill the plan.
-    Replication costs S× on side B's shuffle, the standard trade for
-    skew-free exact pair generation (fragment-replicate join).
-
-    ``broadcast_build=True`` is the size-gated local fast path: broadcast
-    the whole table as build side and fan the probe side out round-robin
-    — only valid when the table fits in a broadcast (small corpora).
-    """
-    salt_a = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(salts)).cast("int")
-    a = vectors.select(
-        F.col("vec_id").alias("vec_a"),
-        V.as_double(F.col("embedding")).alias("va"),
-        F.col("label").alias("la"),
-        V.norm("embedding").alias("norm_a"),
-        salt_a.alias("salt_a"),
-    ).where(F.col("norm_a") > 0)  # zero-norm excluded: cosine undefined
-    b = vectors.select(
-        F.col("vec_id").alias("vec_b"),
-        V.as_double(F.col("embedding")).alias("vb"),
-        F.col("label").alias("lb"),
-        V.norm("embedding").alias("norm_b"),
-    ).where(F.col("norm_b") > 0)
-    score = V.dot("va", "vb") / (
-        F.col("norm_a") * F.col("norm_b")
-    )
-    if broadcast_build:
-        joined = (
-            a.drop("salt_a")
-            .repartition(default_parallelism())
-            .join(
-                F.broadcast(b),
-                (F.col("la") == F.col("lb")) & (F.col("vec_a") < F.col("vec_b")),
-            )
-        )
-    else:
-        b_rep = b.withColumn(
-            "salt_b", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-        )
-        # explicit repartition on the join keys: it satisfies the join's
-        # required hash distribution (no extra exchange) AND pins the
-        # partition count — AQE would otherwise coalesce these tiny local
-        # shuffles to one partition and serialize the pair-scoring stage,
-        # whose OUTPUT (not input) is the heavy part
-        n_parts = default_parallelism()
-        a_p = a.repartition(n_parts, "la", "salt_a")
-        b_p = b_rep.repartition(n_parts, "lb", "salt_b")
-        joined = a_p.hint("shuffle_hash").join(
-            b_p,
-            (F.col("la") == F.col("lb"))
-            & (F.col("salt_a") == F.col("salt_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-    return (
-        joined.withColumn("score", score)
-        .where(F.col("score") >= threshold)
-        .select("vec_a", "vec_b", X.pround(F.col("score"), 4).alias("score"))
-    )
-
-
-def _cogroup_pair_scores_numpy(
-    vectors: DataFrame, threshold: float, salts: int
-) -> DataFrame:
-    """Same logical output as :func:`_salted_pair_scores` (non-broadcast
-    path), produced by a cogrouped Arrow/numpy kernel instead of a
-    per-pair codegen expression: both sides are grouped on (label,
-    salt) — side A salted by hash(vec_id), side B replicated to every
-    salt — and each cogroup scores its |A|×|B| block as 64 vectorized
-    row-sweeps. ~10× the per-pair throughput of the expression plan at
-    large pair counts (one Python/Arrow call per key, BLAS-free inner
-    loop that preserves float semantics).
-
-    Bit-parity with the expression path (and so with the DuckDB oracle)
-    is engineered, not hoped for: accumulation is SEQUENTIAL over the 64
-    dimensions (``acc += A[:,i]·B[:,i]``, vectorized across the pair
-    axis) — the same left-to-right order as ``V.dot``'s fold — norms use
-    the same loop, and rounding replicates ``pround``'s
-    ``floor(x·10⁴+0.5)/10⁴``. All IEEE-double ops in identical order ⇒
-    identical bits (equivalence-tested in tests/test_dedup.py).
-
-    Memory per task is |A_block|×|B| doubles: A rows are swept in
-    fixed-size blocks, and |B| per key is one label — the same per-key
-    bound as the shuffled-hash join's build side. Skew across labels is
-    spread by the salt exactly as in the join plan."""
-    import numpy as np
-    import pandas as pd
-
-    out_cols = ["vec_a", "vec_b", "score"]
-
-    def score_block(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        if len(adf) == 0 or len(bdf) == 0:
-            return pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
-                                 "vec_b": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        A = np.stack(adf["embedding"].to_numpy()).astype(np.float64)
-        B = np.stack(bdf["b_embedding"].to_numpy()).astype(np.float64)
-        ids_a = adf["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = bdf["b_vec_id"].to_numpy(dtype=np.int64)
-        dim = A.shape[1]
-
-        def seq_sq_norm(M):
-            acc = np.zeros(M.shape[0])
-            for i in range(dim):
-                acc = acc + M[:, i] * M[:, i]
-            return np.sqrt(acc)
-
-        # zero-norm vectors are excluded by contract (cosine undefined)
-        # — mirrors the expression engine's norm > 0 filter
-        keep_a = seq_sq_norm(A) > 0.0
-        A, ids_a = A[keep_a], ids_a[keep_a]
-        keep_b = seq_sq_norm(B) > 0.0
-        B, ids_b = B[keep_b], ids_b[keep_b]
-        if len(ids_a) == 0 or len(ids_b) == 0:
-            return pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
-                                 "vec_b": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        nb_norm = seq_sq_norm(B)
-        frames = []
-        BLOCK = 2048
-        for lo in range(0, A.shape[0], BLOCK):
-            Ab = A[lo : lo + BLOCK]
-            ia = ids_a[lo : lo + BLOCK]
-            acc = np.zeros((Ab.shape[0], B.shape[0]))
-            for i in range(dim):
-                acc = acc + Ab[:, i][:, None] * B[:, i][None, :]
-            s = acc / (seq_sq_norm(Ab)[:, None] * nb_norm[None, :])
-            mask = (ia[:, None] < ids_b[None, :]) & (s >= threshold)
-            if not mask.any():
-                continue
-            r, c = np.nonzero(mask)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_a": ia[r],
-                        "vec_b": ids_b[c],
-                        "score": np.floor(s[r, c] * 10000.0 + 0.5) / 10000.0,
-                    }
-                )
-            )
-        if not frames:
-            return pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
-                                 "vec_b": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        return pd.concat(frames, ignore_index=True)[out_cols]
-
-    # a NULL embedding scores NULL in the expression plan and is dropped
-    # by the >= threshold filter; np.stack would instead crash on it, so
-    # drop nulls up front — same output, and the filter reaches the scan
-    vectors = vectors.where(F.col("embedding").isNotNull())
-    salt_a = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(salts)).cast("int")
-    a = vectors.select("vec_id", "embedding", "label", salt_a.alias("salt"))
-    # fresh attribute names on the B side: a self-cogroup whose sides
-    # share attribute ids gets its right side deduplicated to the
-    # grouping keys under some parent plans (e.g. count()), dropping
-    # the payload columns before they reach the Python worker
-    b = vectors.select(
-        F.col("vec_id").alias("b_vec_id"),
-        F.col("embedding").alias("b_embedding"),
-        F.col("label").alias("b_label"),
-    ).withColumn("b_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1))))
-    return (
-        a.groupBy("label", "salt")
-        .cogroup(b.groupBy("b_label", "b_salt"))
-        .applyInPandas(
-            lambda left, right: score_block(left, right),
-            "vec_a long, vec_b long, score double",
-        )
-    )
-
-
-def embedding_neardup_pairs_df(
-    emb: DataFrame,
-    threshold: float = 0.3,
-    salts: int = NEARDUP_SALTS,
-    broadcast_build: bool = False,
-    collapse: bool | None = None,
-    engine: str = "numpy",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a label block
-    (cosine ≥ ``threshold``; blocking on label keeps the pair space
-    linear-ish). Exact within the block — every same-label pair is
-    scored.
-
-    **Duplicate collapse**: byte-identical vectors are grouped first and
-    the O(N²/labels) scoring runs on one representative per group; the
-    full pair set is expanded back afterwards (cross-group pairs carry
-    the representative score — identical vectors score identically —
-    and within-group pairs carry the rep's self-cosine, the same float
-    expression a naive pair of identical vectors evaluates). On a
-    duplicate-heavy corpus (the realistic case for embedding dedup) the
-    scored pair space shrinks quadratically; output is unchanged.
-
-    ``collapse=None`` (default) size-gates the rewrite with one cheap
-    hash-distinct pre-flight over (label, embedding): a duplicate-free
-    table (every group size 1) skips the group-by and both expansion
-    joins — the plans are identical on such data by construction."""
-    from ..operators.dedup import has_exact_duplicates
-
-    def scorer(vectors: DataFrame) -> DataFrame:
-        if engine == "numpy" and not broadcast_build:
-            return _cogroup_pair_scores_numpy(vectors, threshold, salts)
-        return _salted_pair_scores(vectors, threshold, salts, broadcast_build)
-
-    if collapse is None:
-        collapse = has_exact_duplicates(emb, "label", "embedding")
-    if not collapse:
-        return scorer(emb.select("vec_id", "embedding", "label"))
-    groups = emb.groupBy("label", "embedding").agg(
-        F.sort_array(F.collect_list("vec_id")).alias("_ids"),
-        F.min("vec_id").alias("_rep"),
-    )
-    reps = groups.select(F.col("_rep").alias("vec_id"), "embedding", "label")
-    rep_pairs = scorer(reps)
-
-    # expansion joins: shuffled-hash on the rep id — the groups side has
-    # distinct-vector cardinality, so broadcasting it dies at scale just
-    # like broadcasting the table would
-    ga = groups.select(F.col("_rep").alias("vec_a"), F.col("_ids").alias("ids_a"))
-    gb = groups.select(F.col("_rep").alias("vec_b"), F.col("_ids").alias("ids_b"))
-    cross = (
-        rep_pairs.join(ga.hint("shuffle_hash"), "vec_a")
-        .join(gb.hint("shuffle_hash"), "vec_b")
-        .select(F.explode("ids_a").alias("a_id"), "ids_b", "score")
-        .select("a_id", F.explode("ids_b").alias("b_id"), "score")
-        .select(
-            F.least("a_id", "b_id").alias("vec_a"),
-            F.greatest("a_id", "b_id").alias("vec_b"),
-            "score",
-        )
-    )
-    # within-group pairs: score = the rep's self-cosine, evaluated with
-    # the exact expression shape of the pair join so floats agree
-    vdbl = V.as_double_sql("embedding")
-    self_score = V.dot(vdbl, vdbl) / (
-        V.norm("embedding") * V.norm("embedding")
-    )
-    from ..plans.documents import _pairs_from_sorted_ids
-
-    within = (
-        groups.where(F.size("_ids") >= 2)
-        # zero-norm excluded (cosine undefined); also keeps the division
-        # 0/0-free under ANSI mode
-        .where(V.norm("embedding") > 0)
-        .withColumn("_s", self_score)
-        .where(F.col("_s") >= threshold)
-        .select(
-            F.explode(_pairs_from_sorted_ids(F.col("_ids"))).alias("p"),
-            X.pround(F.col("_s"), 4).alias("score"),
-        )
-        .select(
-            F.col("p.doc_a").alias("vec_a"),
-            F.col("p.doc_b").alias("vec_b"),
-            "score",
-        )
-    )
-    return cross.unionByName(within)
-
-
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over the ``embeddings`` table via
-    the scale-safe salted self-join (see :func:`embedding_neardup_pairs_df`)."""
+    """Embedding-cosine near-dup pairs over the ``embeddings`` table,
+    blocked on label and scored by the salted cogroup kernel
+    (operators/semdedup.py :func:`embedding_neardup_pairs_df`)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_neardup_pairs_df(emb)
 
 
 def embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-checking recall for the BucketedRandomProjectionLSH cosine
-    join: ground truth = the exact salted self-join pairs (cosine ≥ 0.3
+    join: ground truth = the exact label-blocked pairs (cosine ≥ 0.3
     within label); candidates = MLlib LSH approxSimilarityJoin over the
     whole table (no label blocking — a superset space). One row with a
     pass flag at recall ≥ 0.9. Rows-only (LSH is not SQL-expressible);
@@ -557,8 +286,6 @@ def semdedup_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     τ against it — exactly the oracle's NOT EXISTS. The semantic-scale
     descendant of the exact-hash ingest dedup gate
     (backend/db_utils.py:173,221-225)."""
-    from ..operators.semdedup import semdedup
-
     emb = load_table(spark, sf_dir, "embeddings")
     return semdedup(emb, n_cells=1, threshold=SEMDEDUP_TAU).select(
         "vec_id", "kept"
@@ -567,21 +294,32 @@ def semdedup_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def semdedup_prune_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup in its PRUNED (production) configuration — 4 IVF cells,
-    so pair generation is strictly cell-local — self-checked by a
-    cross-engine replay: the cogrouped-Arrow decisions are recomputed
-    with the codegen expression pair join (independent physical path,
-    bit-parity-engineered) and the two kept sets must agree row for
-    row. One row; pytest asserts ``passed``. Rows-only: the k-means
-    fit behind the cells is not SQL-expressible."""
-    from ..operators.semdedup import semdedup
-
+    so pair generation is strictly cell-local — self-checked against an
+    independent reference: on cells from the same deterministic
+    quantizer fit, the reference prunes every vector that a smaller id
+    in its cell scores cosine ≥ τ against, through a plain same-cell
+    Catalyst self-join (``V.cosine``, no salt, no duplicate collapse,
+    no NumPy). The operator's (vec_id, cell, kept) must agree with the
+    reference row for row. One row; pytest asserts ``passed``.
+    Rows-only: the k-means fit behind the cells is not SQL-expressible."""
     emb = load_table(spark, sf_dir, "embeddings")
-    kw = dict(n_cells=SEMDEDUP_GATE_CELLS, threshold=SEMDEDUP_TAU)
-    a = semdedup(emb, engine="numpy", **kw)
-    b = semdedup(emb, engine="expr", **kw).select(
+    a = semdedup(emb, n_cells=SEMDEDUP_GATE_CELLS, threshold=SEMDEDUP_TAU)
+    ref = pin(assign_cells(emb, SEMDEDUP_GATE_CELLS))
+    l, r = ref.alias("l"), ref.alias("r")
+    pruned = (
+        l.join(
+            r,
+            (F.col("l.cell") == F.col("r.cell"))
+            & (F.col("l.vec_id") < F.col("r.vec_id")),
+        )
+        .where(V.cosine("l.embedding", "r.embedding") >= SEMDEDUP_TAU)
+        .select(F.col("r.vec_id").alias("_pid"))
+        .distinct()
+    )
+    b = ref.join(pruned, F.col("vec_id") == F.col("_pid"), "left").select(
         F.col("vec_id").alias("b_vec_id"),
         F.col("cell").alias("b_cell"),
-        F.col("kept").alias("b_kept"),
+        F.col("_pid").isNull().alias("b_kept"),
     )
     j = a.join(b, F.col("vec_id") == F.col("b_vec_id"), "full_outer")
     agg = j.agg(
@@ -628,8 +366,6 @@ def semdedup_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the k-means fit isn't SQL); the headline/scale probes time THIS
     configuration. Returns per-vector decisions + the kept count
     sanity columns used by pytest."""
-    from ..operators.semdedup import semdedup
-
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()  # bounded sizing preflight, as in the ANN builders
     n_cells = max(1, n // SEMDEDUP_CELL_TARGET)
@@ -752,7 +488,6 @@ def semantic_bfs_production_df(
     """Cell-blocked BFS core; ``centroids`` lets callers amortize the
     quantizer fit exactly like semdedup (fit once, refit on drift)."""
     from ..operators.bfs import bfs_hops
-    from ..operators.semdedup import assign_cells
 
     # LAZY pin (optimization r13): the assignment has exactly two
     # consumers here (the pair generator's duplicate-collapse preflight

@@ -15,9 +15,10 @@ higher id of every hit — new vectors against surviving-and-pruned
 history alike (the rule is non-recursive: a pruned witness still
 prunes). After any prefix of batches the decision set equals the
 one-shot ``semdedup(union, order="id", centroids=frozen)`` on the rows
-seen so far — Q(streaming_equivalence_gate) st16 pins exactly that, and
-the float path is the expression kernel that is bit-parity-tested
-against the batch operator's numpy kernel (plans/vectors.py).
+seen so far — Q(streaming_equivalence_gate) st16 pins exactly that. The
+pairs come from the batch operator's own scorer
+(operators/semdedup.py ``cosine_pairs``), so the stream and the batch
+compare the same float bits.
 
 State is O(corpus) vectors but O(batch) WRITE per epoch (per-epoch
 parquet subtrees, the operators/ann_index.py cell-layout idea), and the
@@ -34,14 +35,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import vector as V
-from ..operators.semdedup import assign_cells
-from ..session import default_parallelism, pin
+from ..operators.semdedup import assign_cells, cosine_pairs
+from ..session import pin
 from .epochs import EpochState, start_foreach_batch
 
 __all__ = ["SemDedupState", "stream_semdedup"]
-
-_SALTS = 8
 
 
 class SemDedupState(EpochState):
@@ -107,47 +105,15 @@ class SemDedupState(EpochState):
             new = new.join(hist.select("vec_id"), "vec_id", "left_anti")
         new = pin(new, eager=True)
 
-        # same-cell pairs with at least one NEW side, scored ONCE:
-        # side A = the new batch (salted on hash(id), the
-        # _salted_pair_scores shape), side B = new ∪ history, replicated
-        # across the salts. history×history never re-scores. The score
-        # is the exact expression kernel (dot / norm·norm) that is
-        # bit-parity-tested against the batch operator's numpy kernel.
+        # same-cell pairs with at least one NEW side, scored ONCE by the
+        # batch operator's pair kernel: side A = the new batch, side B =
+        # new ∪ history, pair rule vec_a != vec_b. history×history never
+        # re-scores.
         both = new if hist is None else new.unionByName(hist)
-        salt_a = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_SALTS)).cast("int")
-        a = new.select(
-            F.col("vec_id").alias("vec_a"),
-            V.as_double(F.col("embedding")).alias("va"),
-            F.col("cell").alias("ca"),
-            V.norm("embedding").alias("norm_a"),
-            salt_a.alias("salt_a"),
-        ).where(F.col("norm_a") > 0)
-        b = (
-            both.select(
-                F.col("vec_id").alias("vec_b"),
-                V.as_double(F.col("embedding")).alias("vb"),
-                F.col("cell").alias("cb"),
-                V.norm("embedding").alias("norm_b"),
-            )
-            .where(F.col("norm_b") > 0)
-            .withColumn(
-                "salt_b", F.explode(F.sequence(F.lit(0), F.lit(_SALTS - 1)))
-            )
-        )
-        score = V.dot("va", "vb") / (
-            F.col("norm_a") * F.col("norm_b")
-        )
-        n_parts = default_parallelism()
-        pairs = (
-            a.repartition(n_parts, "ca", "salt_a")
-            .hint("shuffle_hash")
-            .join(
-                b.repartition(n_parts, "cb", "salt_b"),
-                (F.col("ca") == F.col("cb"))
-                & (F.col("salt_a") == F.col("salt_b"))
-                & (F.col("vec_a") != F.col("vec_b")),
-            )
-            .where(score >= self.threshold)
+        pairs = cosine_pairs(
+            new.withColumnRenamed("cell", "label"),
+            both.withColumnRenamed("cell", "label"),
+            self.threshold,
         )
         # non-recursive id priority: every hit demotes its larger id
         # (new-new pairs meet twice — once per orientation — and

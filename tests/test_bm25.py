@@ -97,23 +97,11 @@ def test_plan_filters_postings_before_scoring(spark, docs_df):
     path (optimization r13): terms are filtered INSIDE the scan
     projection (the tokenized_base ``qtoks`` array filter) — no
     corpus-wide postings aggregate exists and no doc-length join is
-    needed (dl rides the matched rows). The postings path keeps the
-    broadcast semi-join shape."""
+    needed (dl rides the matched rows)."""
     plan = bm25_search(spark, docs_df, [("q", "spark")], k=3)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "qtoks" in plan  # in-scan term filter feeds the aggregation
     assert "CartesianProduct" not in plan
-
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.bm25 import (
-        bm25_postings,
-    )
-
-    plan2 = bm25_search(
-        spark, docs_df, [("q", "spark")], k=3,
-        postings=bm25_postings(docs_df),
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan2
-    assert "CartesianProduct" not in plan2
 
 
 # ---------------------------------------------------------- RRF fusion

@@ -106,12 +106,11 @@ def test_knn_broadcasts_and_stays_jvm_side(spark, sf_dir):
 
 
 def test_neardup_pairs_default_has_no_fulltable_broadcast(spark, sf_dir):
-    # The scale-safe default partitions both sides on (label, salt):
-    # either the salted shuffled-hash self-join (expression engine) or
-    # the cogrouped numpy kernel (default engine — shows up as
-    # FlatMapCoGroupsInPandas over two hash exchanges). Broadcasting the
-    # whole embeddings table as build side dies at 100 TB, so its
-    # presence here is a regression, as is a cartesian product.
+    # The scale-safe plan partitions both sides on (label, salt): the
+    # cogrouped numpy kernel shows up as FlatMapCoGroupsInPandas over two
+    # hash exchanges. Broadcasting the whole embeddings table as build
+    # side dies at 100 TB, so its presence here is a regression, as is a
+    # cartesian product.
     p = _plan(_q("embedding_neardup_pairs", spark, sf_dir))
     assert "BroadcastExchange" not in p
     assert (
@@ -120,20 +119,6 @@ def test_neardup_pairs_default_has_no_fulltable_broadcast(spark, sf_dir):
         or "SortMergeJoin" in p
     )
     assert "CartesianProduct" not in p
-
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load_table
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans.vectors import (
-        embedding_neardup_pairs_df,
-    )
-
-    # the expression engine stays available and keeps its join shape
-    pe = _plan(
-        embedding_neardup_pairs_df(
-            load_table(spark, sf_dir, "embeddings"), engine="expr"
-        )
-    )
-    assert "BroadcastExchange" not in pe
-    assert "ShuffledHashJoin" in pe or "SortMergeJoin" in pe
 
 
 @pytest.mark.parametrize("name", bench.HEADLINE)

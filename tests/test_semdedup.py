@@ -107,15 +107,22 @@ def test_numpy_assignment_path_matches_brute_force(spark, corpus):
 
 
 def test_engines_agree(spark, corpus):
-    a = {
-        (r.vec_id, r.cell, r.kept)
-        for r in semdedup(corpus, n_cells=3, engine="numpy", threshold=TAU).collect()
-    }
-    b = {
-        (r.vec_id, r.cell, r.kept)
-        for r in semdedup(corpus, n_cells=3, engine="expr", threshold=TAU).collect()
-    }
-    assert a == b
+    # one pair kernel: both plans over it (the duplicate-collapse
+    # rewrite and the direct scoring) give the triu rule's decisions
+    rows = assign_cells(corpus, n_cells=3).collect()
+    kept = _brute_kept(
+        [r.vec_id for r in rows], [r.embedding for r in rows],
+        [r.cell for r in rows], TAU,
+    )
+    want = {(r.vec_id, r.cell, kept[r.vec_id]) for r in rows}
+    for collapse in (True, False):
+        got = {
+            (r.vec_id, r.cell, r.kept)
+            for r in semdedup(
+                corpus, n_cells=3, threshold=TAU, collapse=collapse
+            ).collect()
+        }
+        assert got == want, collapse
 
 
 def test_centroid_order_keeps_least_typical(spark):
@@ -187,3 +194,109 @@ def test_registered_queries(spark, sf_dir):
     assert len(prod) == n  # same domain: every non-null vector decided
     kept = sum(1 for r in prod if r.kept)
     assert 0 < kept <= n
+
+
+@pytest.mark.parametrize("order", ["descending", "ascending"])
+def test_streaming_fold_equals_batch(spark, sf_dir, tmp_path, monkeypatch, order):
+    """Two epochs of SemDedupState.apply_batch on a frozen quantizer give
+    the one-shot batch decisions. Descending ids: the second epoch's
+    new vectors must demote history vectors. Ascending ids: every new
+    vector has a larger id than all history, so the fold must score
+    the new × history pairs whose new side has the larger id."""
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load_table
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.knn import (
+        fit_centroids,
+    )
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.streaming import (
+        semdedup as SS,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = fit_centroids(emb, 4, "embedding")
+    ids = sorted(r.vec_id for r in emb.select("vec_id").collect())
+    mid = ids[len(ids) // 2]
+    low = emb.where(F.col("vec_id") < mid).localCheckpoint(eager=True)
+    high = emb.where(F.col("vec_id") >= mid).localCheckpoint(eager=True)
+    descending = order == "descending"
+    first, second = (high, low) if descending else (low, high)
+
+    scored = []
+    kernel = SS.cosine_pairs
+    monkeypatch.setattr(
+        SS, "cosine_pairs", lambda *a: scored.append(kernel(*a)) or scored[-1]
+    )
+    st = SS.SemDedupState(str(tmp_path / "sd"), cents, 0.3)
+    assert st.apply_batch(first, 0) is True
+    after_first = {r.vec_id: r.kept for r in st.decisions(spark).collect()}
+    assert st.apply_batch(second, 1) is True
+    got = {(r.vec_id, r.cell, r.kept) for r in st.decisions(spark).collect()}
+    want = {
+        (r.vec_id, r.cell, r.kept)
+        for r in semdedup(
+            emb, n_cells=4, threshold=0.3, order="id", centroids=cents
+        ).collect()
+    }
+    assert got == want
+    flipped = {v for v, _, kept in got if not kept and after_first.get(v)}
+    fresh_pruned = {v for v, _, kept in got if not kept and v not in after_first}
+    # the case each order exists for actually occurs
+    assert flipped if descending else fresh_pruned
+
+    # each fold scores its pairs in one cogroup, no other pair join
+    plan = scored[-1]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    assert "Join" not in plan
+
+
+def test_one_pair_scorer_in_the_package():
+    """One exact cosine pair scorer: the only ``.cogroup(`` and the only
+    salt replication (``F.sequence(F.lit(0), …salts…)``) in the package
+    live in operators/semdedup.cosine_pairs, and no pair entry point
+    takes an engine or salting option."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark"
+    kernel_py = os.path.join(pkg, "operators", "semdedup.py")
+    found = []
+    for dp, _dirs, files in os.walk(os.path.join(root, pkg)):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dp, f)
+            rel = os.path.relpath(path, root)
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            tree = ast.parse(src, path)
+            kernel = set()
+            if rel == kernel_py:
+                for node in tree.body:
+                    if isinstance(node, ast.FunctionDef) and node.name == "cosine_pairs":
+                        kernel = {id(n) for n in ast.walk(node)}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name in (
+                    "embedding_neardup_pairs_df", "semdedup"
+                ):
+                    args = node.args.args + node.args.kwonlyargs
+                    for a in args:
+                        if a.arg in ("engine", "broadcast_build", "salts"):
+                            found.append(f"{rel}:{node.lineno}: {node.name}({a.arg}=)")
+                if not isinstance(node, ast.Call) or id(node) in kernel:
+                    continue
+                fn = node.func
+                if isinstance(fn, ast.Attribute) and fn.attr == "cogroup":
+                    found.append(f"{rel}:{node.lineno}: .cogroup(")
+                if (
+                    isinstance(fn, ast.Attribute) and fn.attr == "sequence"
+                    and len(node.args) == 2
+                    and isinstance(node.args[0], ast.Call)
+                    and isinstance(node.args[0].func, ast.Attribute)
+                    and node.args[0].func.attr == "lit"
+                    and len(node.args[0].args) == 1
+                    and isinstance(node.args[0].args[0], ast.Constant)
+                    and node.args[0].args[0].value == 0
+                    and "salt" in ast.get_source_segment(src, node.args[1]).lower()
+                ):
+                    found.append(f"{rel}:{node.lineno}: salt replication")
+    assert not found, "second pair scorer in the package:\n" + "\n".join(found)

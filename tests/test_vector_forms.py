@@ -81,10 +81,13 @@ def _digest(df, col):
 def test_fold_matches_frozen_unrolled_digests(spark, dim, etype):
     rows, consts = (ROWS4, CONSTS4) if dim == 4 else (_rows64(), CONSTS64)
     df = spark.createDataFrame(rows, f"id int, a array<{etype}>, b array<{etype}>")
+    # the constant vector as SQL text: repr() round-trips each IEEE
+    # double and the D suffix keeps it DOUBLE, not DECIMAL
+    const = "array(" + ", ".join(repr(float(c)) + "D" for c in consts) + ")"
     got = (
         _digest(df, V.dot("a", "b")),
         _digest(df, V.norm("a")),
-        _digest(df, V.dot("b", V.array_lit(consts))),
+        _digest(df, V.dot("b", const)),
     )
     assert got == FROZEN[(dim, etype)]
 
