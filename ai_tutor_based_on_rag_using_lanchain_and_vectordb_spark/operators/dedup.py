@@ -441,8 +441,8 @@ def hamming_pairs(
     sig: DataFrame, max_hamming: int, max_bucket: int | None = MAX_LSH_BUCKET
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance over 64-bit signatures
-    (_id, _lo, _hi) — the quarter-block candidate machinery shared by
-    text SimHash and image pHash (multimodal.image_phash)."""
+    (_id, _lo, _hi) — the quarter-block candidate machinery behind
+    text SimHash near-dup pairs."""
     quarters = sig.select(
         "_id",
         "_lo",

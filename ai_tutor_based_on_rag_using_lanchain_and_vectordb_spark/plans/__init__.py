@@ -38,7 +38,6 @@ _DRIVER_PRIORITY = (
     "validation_flags",
     "association_rules",
     "audience_overlap_matrix",
-    "audio_spectral_gate",
     "bm25_index_search",
     "bm25_search_topk",
     "brand_supplier_counts",
@@ -58,15 +57,12 @@ _DRIVER_PRIORITY = (
     "gk_grouped_quantile_gate",
     "gk_quantile_gate",
     "hybrid_rrf_fusion",
-    "image_phash_gate",
     "kmv_distinct_users",
     "kmv_overlap_gate",
     "knn_ivf_exhaustive",
     "lang_length_quantiles",
     "leakage_safe_splits",
-    "media_decode_gate",
     "media_metadata",
-    "multimodal_gate",
     "neardup_k_core",
     "neardup_local_clustering",
     "neardup_pagerank",
@@ -256,13 +252,9 @@ _GATE_GUARDS: dict[str, tuple] = {
     "minhash_recall": ("passed", "n_exact", "strategy"),
     "hll_rollup_gate": ("passed", "n_days", "strategy"),
     "splitter_invariants": ("passed", "n_chunks", "strategy"),
-    "audio_spectral_gate": ("passed", "n_checks", "strategy"),
     "gk_quantile_gate": ("passed", "n", None),
     "gk_grouped_quantile_gate": ("passed", "n", "lang"),
-    "image_phash_gate": ("passed", "n_pairs", "strategy"),
     "kmv_overlap_gate": ("passed", "exact", "pair"),
-    "media_decode_gate": ("passed", "n_assets", "strategy"),
-    "multimodal_gate": ("passed", "n_checks", "strategy"),
     "bloom_fpp_gate": ("passed", "n_keys", None),
     "curation_pipeline_gate": ("passed", "observed", "check"),
     "purge_document_gate": ("passed", "observed", "check"),

@@ -1,9 +1,9 @@
 """Rows-only queries() entries for operators whose semantics aren't
 ANSI-SQL-expressible (custom splitter, LSH/IVF approximate search,
-signature-based dedup, the stubbed-LLM chat pipeline, multimodal
-stages). The driver records a rows-only check for these; their real
-correctness coverage lives in tests/ (property tests, recall-vs-exact,
-batch-vs-streaming equivalence).
+signature-based dedup, the stubbed-LLM chat pipeline). The driver
+records a rows-only check for these; their real correctness coverage
+lives in tests/ (property tests, recall-vs-exact, batch-vs-streaming
+equivalence).
 """
 
 from __future__ import annotations
@@ -225,9 +225,8 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EXPECTED metadata independently — which turns the media decoders
     from a self-referential gate into an oracle-checked query
     (media_metadata below). The FLAC asset (asset_id = doc_id + 100) is
-    stereo with a doc-dependent sample count, so the compressed-audio
-    decode (sources/flac.py: frame walk, LPC/fixed subframes, stereo
-    reconstruction) is what produces the oracle-checked fields."""
+    a STREAMINFO-only stream (stereo, 16-bit, doc-dependent sample
+    count): the audio stage reads FLAC header fields, not frames."""
     import io
     import math
     import struct
@@ -235,11 +234,9 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
 
     from ..sources import multimodal as MM
-    from ..sources.flac import encode_flac
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def png(w, h):
@@ -282,32 +279,29 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + box(b"moov", mvhd + box(b"trak", tkhd))
                     + box(b"mdat", b"\x00" * 32))
 
+        def flac(rate, n):
+            # fLaC, a last-block STREAMINFO header, then its 34-byte
+            # body: block/frame sizes, one word packing rate, channels − 1
+            # (stereo), bits − 1 (16-bit) and the sample count, and an
+            # all-zero MD5
+            return (b"fLaC\x80" + (34).to_bytes(3, "big") + b"\x00" * 10
+                    + struct.pack(">Q", rate << 44 | 1 << 41 | 15 << 36 | n)
+                    + b"\x00" * 16)
+
         for pdf in batches:
             rows = []
             for did in pdf["doc_id"]:
                 did = int(did)
                 w, h = 8 + did % 32, 8 + (did * 7) % 32
-                rows.append({"asset_id": did, "owner_id": 0, "media_type": "image",
+                rows.append({"asset_id": did, "doc_id": did, "media_type": "image",
                              "content": png(w, h), "meta": {"ext": "png"}})
                 rate = 8000 + (did % 3) * 4000
-                rows.append({"asset_id": did, "owner_id": 0, "media_type": "audio",
+                rows.append({"asset_id": did, "doc_id": did, "media_type": "audio",
                              "content": wav(rate, rate // 10), "meta": {"ext": "wav"}})
-                nf = rate // 10 + did
-                tt = np.arange(nf)
-                fs = np.stack(
-                    [
-                        (2000 * np.sin(tt / (7 + did % 5))).astype(np.int64),
-                        (1500 * np.sin(tt / (9 + did % 3))).astype(np.int64),
-                    ],
-                    axis=1,
-                )
-                rows.append({"asset_id": did + 100, "owner_id": 0,
-                             "media_type": "audio",
-                             "content": encode_flac(
-                                 fs, sample_rate=rate, bits_per_sample=16,
-                                 block_size=256, lpc_order=4),
+                rows.append({"asset_id": did + 100, "doc_id": did, "media_type": "audio",
+                             "content": flac(rate, rate // 10 + did),
                              "meta": {"ext": "flac"}})
-                rows.append({"asset_id": did, "owner_id": 0, "media_type": "video",
+                rows.append({"asset_id": did, "doc_id": did, "media_type": "video",
                              "content": mp4(500 + did * 10, 64 + did, 36 + did),
                              "meta": {"ext": "mp4"}})
             yield pd.DataFrame(rows, columns=[f.name for f in MM.MEDIA_ASSETS.fields])
@@ -318,446 +312,20 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(synth, MM.MEDIA_ASSETS)
 
 
-def media_decode_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal self-check (driver-visible gate for the mediadecode
-    kernels): synthesize REAL PNG and WAV payloads in-engine with
-    dimensions/rates derived from doc_id, run them through the strict
-    (no-stub) image/audio feature stages, and compare decoded metadata
-    against the expected values. One row, pass flag; pytest asserts it
-    (tests/test_mediadecode.py covers the kernels directly). The
-    non-self-referential variant is media_metadata (DuckDB recomputes
-    the expectations); this gate additionally covers the float audio
-    stats (rms/peak bounds) the oracle can't express exactly."""
-    from ..sources import multimodal as MM
-
-    assets = _synth_media_assets(spark, sf_dir)
-    img = MM.image_features(assets, strict=True).select(
-        "asset_id",
-        ((F.col("format") == "png")
-         & (F.col("width") == 8 + F.col("asset_id") % 32)
-         & (F.col("height") == 8 + (F.col("asset_id") * 7) % 32)
-         & (F.col("channels") == 3)
-         # real pixel decode: the synthesized PNG is uniform 0x7f, so
-         # per-channel mean is exactly 127 and stddev exactly 0
-         & F.col("pixels_real")
-         & (F.col("pixel_mean") == F.array(F.lit(127.0), F.lit(127.0), F.lit(127.0)))
-         & (F.col("pixel_std") == F.array(F.lit(0.0), F.lit(0.0), F.lit(0.0)))
-         ).alias("ok"),
-    )
-    aud = MM.audio_features(assets, strict=True).select(
-        "asset_id",
-        F.when(
-            F.col("asset_id") >= 100,
-            # FLAC asset (asset_id = doc_id + 100): stereo, amplitude
-            # 2000/1500 over 32768 → rms/peak bounds scale accordingly
-            (F.col("format") == "flac")
-            & (F.col("channels") == 2)
-            & (F.col("sample_rate") == 8000 + ((F.col("asset_id") - 100) % 3) * 4000)
-            & (F.col("n_samples") == F.col("sample_rate") / 10 + F.col("asset_id") - 100)
-            & (F.col("rms") > 0.02) & (F.col("rms") < 0.07)
-            & (F.col("peak") > 0.045) & (F.col("peak") <= 0.062),
-        ).otherwise(
-            (F.col("format") == "wav")
-            & (F.col("sample_rate") == 8000 + (F.col("asset_id") % 3) * 4000)
-            & (F.col("n_samples") == F.col("sample_rate") / 10)
-            & (F.col("duration_ms") == 100)
-            & (F.col("rms") > 0.2) & (F.col("rms") < 0.5)
-            & (F.col("peak") > 0.4) & (F.col("peak") <= 0.51)
-        ).alias("ok"),
-    )
-    vid = MM.video_metadata(assets, strict=True).select(
-        "asset_id",
-        ((F.col("format") == "mp4")
-         & (F.col("duration_ms") == 500 + F.col("asset_id") * 10)
-         & (F.col("width") == 64 + F.col("asset_id"))
-         & (F.col("height") == 36 + F.col("asset_id"))
-         & (F.col("n_tracks") == 1)).alias("ok"),
-    )
-    both = img.unionByName(aud).unionByName(vid)
-    agg = both.agg(
-        F.count("*").cast("long").alias("n_assets"),
-        F.sum(F.when(F.col("ok"), 0).otherwise(1)).cast("long").alias("n_bad"),
-    )
-    return agg.select(
-        F.lit("media_decode").alias("strategy"),
-        "n_assets",
-        "n_bad",
-        ((F.col("n_bad") == 0) & (F.col("n_assets") > 0)).alias("passed"),
-    )
-
-
-def multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible self-check for the CONTENT stages of the
-    multimodal pipeline (frame extraction + windowed audio): per
-    doc_id < 16, synthesize in-engine
-
-    - an MJPEG MP4 (3 uniform-gray JPEG frames, levels 40·(f+1) +
-      doc_id, 500 ms apart — two-chunk stsc layout) and assert
-      frame_features yields exactly 3 pixels_real JPEG frames at the
-      stored timestamps whose decoded per-channel mean is within 2 of
-      the encoded level;
-    - a WAV whose first 100 ms is a 0.5-amplitude sine and second
-      100 ms silence, and assert audio_segments(window=100 ms) yields
-      a loud window (|rms − 0.5/√2| ≤ 0.02) then a silent one
-      (rms ≤ 1e-6);
-    - the SAME signal as a FLAC stream (LPC-predicted, Rice-coded —
-      sources/flac.py), which must produce identical windows: lossless
-      decode means the FLAC rows satisfy the same rms bounds.
-
-    One row, pass flag (rows-only: frame/window decode isn't
-    SQL-expressible); pytest asserts it too."""
-    import io
-    import math
-    import struct
-    import wave
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..sources import multimodal as MM
-    from ..sources.flac import encode_flac
-    from ..sources.mediaencode import encode_jpeg, encode_mjpeg_mp4
-    from ..sources.mpeg1 import encode_m1v
-    from ..sources.mpegps import encode_mpeg_ps
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def half_loud_samples(rate=8000):
-            return [
-                int(16383 * math.sin(2 * math.pi * 440 * i / rate))
-                for i in range(rate // 10)
-            ] + [0] * (rate // 10)
-
-        def wav_half_loud(rate=8000):
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as f:
-                f.setnchannels(1)
-                f.setsampwidth(2)
-                f.setframerate(rate)
-                f.writeframes(
-                    b"".join(struct.pack("<h", v) for v in half_loud_samples(rate))
-                )
-            return buf.getvalue()
-
-        def flac_half_loud(rate=8000):
-            return encode_flac(
-                np.array(half_loud_samples(rate), dtype=np.int64),
-                sample_rate=rate,
-                bits_per_sample=16,
-                block_size=256,
-                lpc_order=8,
-            )
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                # rotate the entropy coder per doc so the gate covers
-                # all three sequential frame flavors: Huffman baseline,
-                # progressive, and arithmetic (SOF9)
-                frames = [
-                    encode_jpeg(
-                        np.full((16, 24), 40 * (f + 1) + did, dtype=np.uint8),
-                        progressive=(did % 3 == 1),
-                        arithmetic=(did % 3 == 2),
-                    )
-                    for f in range(3)
-                ]
-                rows.append({"asset_id": did, "owner_id": 0,
-                             "media_type": "video",
-                             "content": encode_mjpeg_mp4(frames, frame_ms=500),
-                             "meta": {"ext": "mp4"}})
-                rows.append({"asset_id": did, "owner_id": 0,
-                             "media_type": "audio",
-                             "content": wav_half_loud(),
-                             "meta": {"ext": "wav"}})
-                rows.append({"asset_id": did + 200, "owner_id": 0,
-                             "media_type": "audio",
-                             "content": flac_half_loud(),
-                             "meta": {"ext": "flac"}})
-                # MPEG-1 ES (asset_id offset +100): 2 uniform-gray
-                # pictures, level 50+did then +20 — the I picture and a
-                # residual-coded P picture both must pixel-decode
-                v = 50 + did
-                m1, _ = encode_m1v(
-                    [
-                        np.full((16, 24, 3), v, dtype=np.uint8),
-                        np.full((16, 24, 3), v + 20, dtype=np.uint8),
-                    ]
-                )
-                rows.append({"asset_id": did + 100, "owner_id": 0,
-                             "media_type": "video",
-                             "content": m1,
-                             "meta": {"ext": "m1v"}})
-                # the same ES wrapped in an ISO 11172-1 program stream
-                # (asset_id +300): the PES demux must reassemble it and
-                # the pictures must decode identically
-                rows.append({"asset_id": did + 300, "owner_id": 0,
-                             "media_type": "video",
-                             "content": encode_mpeg_ps(m1, pes_size=200),
-                             "meta": {"ext": "mpg"}})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM.MEDIA_ASSETS.fields]
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < 16
-    )
-    assets = docs.mapInPandas(synth, MM.MEDIA_ASSETS)
-
-    frames = MM.frame_features(assets, every_ms=500).select(
-        "asset_id",
-        F.when(
-            F.col("asset_id") >= 300,
-            # program-stream path: PES demux + the same MPEG-1 decode
-            (F.col("format") == "bmp")
-            & F.col("pixels_real")
-            & (F.col("width") == 24) & (F.col("height") == 16)
-            & (F.abs(
-                F.element_at("pixel_mean", 1)
-                - (50 + (F.col("asset_id") - 300) + 20 * F.col("frame_no"))
-            ) <= 2),
-        ).when(
-            F.col("asset_id") >= 100,
-            # MPEG-1 path: decoded pictures arrive as BMP payloads
-            (F.col("format") == "bmp")
-            & F.col("pixels_real")
-            & (F.col("width") == 24) & (F.col("height") == 16)
-            & (F.abs(
-                F.element_at("pixel_mean", 1)
-                - (50 + (F.col("asset_id") - 100) + 20 * F.col("frame_no"))
-            ) <= 2),
-        ).otherwise(
-            (F.col("format") == "jpeg")
-            & F.col("pixels_real")
-            & (F.col("width") == 24) & (F.col("height") == 16)
-            & (F.abs(
-                F.element_at("pixel_mean", 1)
-                - (40 * (F.col("frame_no") + 1) + F.col("asset_id"))
-            ) <= 2)
-        ).alias("ok"),
-    )
-    segs = MM.audio_segments(assets, window_ms=100, strict=True).select(
-        "asset_id",
-        F.when(F.col("segment_no") == 0,
-               F.abs(F.col("rms") - 0.5 / math.sqrt(2)) <= 0.02)
-         .when(F.col("segment_no") == 1, F.col("rms") <= 1e-6)
-         .otherwise(F.lit(False)).alias("ok"),
-    )
-    both = frames.unionByName(segs)
-    agg = both.agg(
-        F.count("*").cast("long").alias("n_checks"),
-        F.sum(F.when(F.col("ok"), 0).otherwise(1)).cast("long").alias("n_bad"),
-    )
-    # 16 docs × (3 MJPEG frames + 2 MPEG-1 pictures + 2 program-stream
-    # pictures + 2 WAV windows + 2 FLAC windows) = 176 expected checks
-    return agg.select(
-        F.lit("multimodal_pipeline").alias("strategy"),
-        "n_checks",
-        "n_bad",
-        ((F.col("n_bad") == 0) & (F.col("n_checks") == 176)).alias("passed"),
-    )
-
-
-def audio_spectral_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible self-check for the SPECTRAL audio stage
-    (multimodal.audio_spectrogram): per doc_id < 16, synthesize the
-    half-loud signal (100 ms of a 0.5-amplitude 440 Hz sine at 8 kHz,
-    then 100 ms silence) as BOTH a WAV and a FLAC stream and assert,
-    per 100 ms window:
-
-    - loud window: dominant_hz == 440 exactly (440 sits on a bin at
-      8 kHz / 800-sample windows), band energies sum to the sine's
-      mean power 0.125 (Parseval) within 2e-3, centroid within 1 Hz;
-    - silent window: zero energy;
-    - WAV ≡ FLAC rows element-exact (lossless decode ⇒ identical
-      samples ⇒ identical spectra — the FLAC codec re-checked through
-      real DSP, not just headers).
-
-    One row, pass flag (rows-only: FFTs aren't SQL-expressible)."""
-    import io
-    import math
-    import struct
-    import wave
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..sources import multimodal as MM
-    from ..sources.flac import encode_flac
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rate = 8000
-
-        def samples():
-            return [
-                int(16383 * math.sin(2 * math.pi * 440 * i / rate))
-                for i in range(rate // 10)
-            ] + [0] * (rate // 10)
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as f:
-                    f.setnchannels(1)
-                    f.setsampwidth(2)
-                    f.setframerate(rate)
-                    f.writeframes(
-                        b"".join(struct.pack("<h", v) for v in samples())
-                    )
-                rows.append({"asset_id": did, "owner_id": 0,
-                             "media_type": "audio",
-                             "content": buf.getvalue(),
-                             "meta": {"ext": "wav"}})
-                rows.append({"asset_id": did + 200, "owner_id": 0,
-                             "media_type": "audio",
-                             "content": encode_flac(
-                                 np.array(samples(), dtype=np.int64),
-                                 sample_rate=rate, bits_per_sample=16,
-                                 block_size=256, lpc_order=8),
-                             "meta": {"ext": "flac"}})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM.MEDIA_ASSETS.fields]
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < 16
-    )
-    assets = docs.mapInPandas(synth, MM.MEDIA_ASSETS)
-    spec = MM.audio_spectrogram(assets, window_ms=100, n_bands=8, strict=True)
-    total = F.aggregate("band_energy", F.lit(0.0), lambda a, x: a + x)
-    per_window = spec.select(
-        "asset_id",
-        F.when(
-            F.col("segment_no") == 0,
-            (F.col("dominant_hz") == 440.0)
-            & (F.abs(total - 0.125) < 2e-3)
-            & (F.abs(F.col("spectral_centroid_hz") - 440.0) < 1.0),
-        ).when(F.col("segment_no") == 1, total == 0.0)
-         .otherwise(F.lit(False)).alias("ok"),
-    )
-    wav = spec.where(F.col("asset_id") < 200).alias("w")
-    flc = spec.where(F.col("asset_id") >= 200).alias("f")
-    parity = wav.join(
-        flc,
-        (F.col("w.asset_id") == F.col("f.asset_id") - 200)
-        & (F.col("w.segment_no") == F.col("f.segment_no")),
-    ).select(
-        F.col("w.asset_id").alias("asset_id"),
-        ((F.col("w.band_energy") == F.col("f.band_energy"))
-         & (F.col("w.dominant_hz") == F.col("f.dominant_hz"))
-         & (F.col("w.spectral_centroid_hz")
-            == F.col("f.spectral_centroid_hz"))).alias("ok"),
-    )
-    both = per_window.unionByName(parity)
-    agg = both.agg(
-        F.count("*").cast("long").alias("n_checks"),
-        F.sum(F.when(F.col("ok"), 0).otherwise(1)).cast("long").alias("n_bad"),
-    )
-    # 16 docs × (2 wav windows + 2 flac windows + 2 parity rows) = 96
-    return agg.select(
-        F.lit("audio_spectral").alias("strategy"),
-        "n_checks",
-        "n_bad",
-        ((F.col("n_bad") == 0) & (F.col("n_checks") == 96)).alias("passed"),
-    )
-
-
-def image_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible self-check for perceptual image dedup
-    (multimodal.image_phash + the shared Hamming-pair machinery): per
-    doc_id < 16, synthesize a smoothed random image (seeded by doc_id)
-    as a lossless BMP (asset d), a JPEG recompression (d+100) and an
-    exact BMP copy (d+200). The pair set must contain, per doc:
-
-    - (d, d+200) with Hamming 0 — identical pixels, identical hash;
-    - (d, d+100) and (d+100, d+200) with Hamming ≤ 8 — JPEG loss
-      perturbs low-frequency DCT signs only slightly;
-    - and NO pair across different docs (independent random content
-      collides at ~32/64 bits).
-
-    One row, pass flag (rows-only: pixel DSP isn't SQL-expressible)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from ..sources import multimodal as MM
-    from ..sources.mediaencode import encode_bmp, encode_jpeg
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rng = np.random.default_rng(1000 + did)
-                img = rng.integers(0, 256, (48, 64, 3)).astype(np.int32)
-                img = (
-                    img + np.roll(img, 1, 0) + np.roll(img, 1, 1)
-                    + np.roll(img, 2, 0)
-                ) // 4
-                img = img.astype(np.uint8)
-                rows.append({"asset_id": did, "owner_id": 0,
-                             "media_type": "image",
-                             "content": encode_bmp(img),
-                             "meta": {"ext": "bmp"}})
-                rows.append({"asset_id": did + 100, "owner_id": 0,
-                             "media_type": "image",
-                             "content": encode_jpeg(img),
-                             "meta": {"ext": "jpg"}})
-                rows.append({"asset_id": did + 200, "owner_id": 0,
-                             "media_type": "image",
-                             "content": encode_bmp(img),
-                             "meta": {"ext": "bmp"}})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM.MEDIA_ASSETS.fields]
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < 16
-    )
-    assets = docs.mapInPandas(synth, MM.MEDIA_ASSETS)
-    pairs = MM.image_phash_pairs(assets, max_hamming=16, strict=True)
-    doc_a = F.pmod(F.col("id_a"), F.lit(100))
-    doc_b = F.pmod(F.col("id_b"), F.lit(100))
-    kind_a = (F.col("id_a") / 100).cast("int")
-    kind_b = (F.col("id_b") / 100).cast("int")
-    per_pair = pairs.select(
-        F.when(doc_a != doc_b, F.lit(False))  # cross-doc pair: a failure
-        .when((kind_a == 0) & (kind_b == 2), F.col("hamming") == 0)
-        .otherwise(F.col("hamming") <= 8)
-        .alias("ok"),
-    )
-    agg = per_pair.agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("ok"), 0).otherwise(1)).cast("long").alias("n_bad"),
-    )
-    # 16 docs × 3 within-doc pairs, zero cross-doc pairs
-    return agg.select(
-        F.lit("image_phash").alias("strategy"),
-        "n_pairs",
-        "n_bad",
-        ((F.col("n_bad") == 0) & (F.col("n_pairs") == 48)).alias("passed"),
-    )
-
-
 def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked media decode: the engine synthesizes real
     PNG/WAV/FLAC/MP4 payloads (parameters = arithmetic on doc_id,
-    _synth_media_assets) and DECODES them back through the strict
+    _synth_media_assets) and DECODES them back through the
     image/audio/video stages; DuckDB independently recomputes the
     expected metadata from the same arithmetic — so a decoder that
-    misreads any header field hash-mismatches. Unlike media_decode_gate
-    this is engine-vs-oracle, not engine-vs-engine. N/A fields are 0
-    (not null) so both sides canonicalize identically."""
+    misreads any header field hash-mismatches (engine-vs-oracle, not
+    engine-vs-engine). N/A fields are 0 (not null) so both sides
+    canonicalize identically."""
     from ..sources import multimodal as MM
 
     assets = _synth_media_assets(spark, sf_dir)
     zero = F.lit(0).cast("long")
-    img = MM.image_features(assets, strict=True).select(
+    img = MM.image_features(assets).select(
         F.col("asset_id").cast("long").alias("asset_id"),
         F.lit("image").alias("media_type"),
         F.col("width").cast("long").alias("width"),
@@ -774,7 +342,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("pixel_mean_avg"),
     )
-    aud = MM.audio_features(assets, strict=True).select(
+    aud = MM.audio_features(assets).select(
         F.col("asset_id").cast("long").alias("asset_id"),
         F.lit("audio").alias("media_type"),
         zero.alias("width"),
@@ -786,7 +354,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         zero.alias("n_tracks"),
         F.lit(0.0).alias("pixel_mean_avg"),
     )
-    vid = MM.video_metadata(assets, strict=True).select(
+    vid = MM.video_metadata(assets).select(
         F.col("asset_id").cast("long").alias("asset_id"),
         F.lit("video").alias("media_type"),
         F.col("width").cast("long").alias("width"),
@@ -2014,11 +1582,7 @@ QUERIES = {
     "bloom_novel_docs": bloom_novel_docs,
     "bloom_fpp_gate": bloom_fpp_gate,
     "splitter_invariants": splitter_invariants,
-    "media_decode_gate": media_decode_gate,
     "media_metadata": media_metadata,
-    "multimodal_gate": multimodal_gate,
-    "audio_spectral_gate": audio_spectral_gate,
-    "image_phash_gate": image_phash_gate,
     "neardup_verified_pairs": neardup_verified_pairs,
     "simhash_neardup": simhash_neardup,
     "simhash_verified_pairs": simhash_verified_pairs,

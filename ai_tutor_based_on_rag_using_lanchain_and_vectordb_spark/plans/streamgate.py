@@ -6,8 +6,6 @@ each streaming operator as a real availableNow Structured Streaming
 query over the events fixture INSIDE the query, compares it to the
 batch formulation of the same operator, and emits one pass-flag row
 per operator (rows-only: a streaming drain isn't SQL-expressible).
-
-Modeled on plans/pipeline.multimodal_gate (the media analog).
 """
 
 from __future__ import annotations

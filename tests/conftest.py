@@ -13,27 +13,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Long-running suites deselected from a plain ``pytest tests/`` run so
 # the default gate finishes inside a CI/driver window (the r13 driver's
-# pytest run was cut off at ~22% of the ~75-minute full suite — an
-# invisible-failure risk). Two tiers, both measured (r14, per-test
-# --durations over the whole suite):
-#   - media decoders / codec cross-validation / fuzzers (~282 tests),
-#   - the index-maintenance integration tier (persistent IVF/PQ/BM25
-#     build-upsert-delete-stream cycles; ~25-90 s per test because each
-#     rebuilds parquet layouts repeatedly).
+# pytest run was cut off at ~22% of the full suite — an
+# invisible-failure risk), measured with per-test --durations: the
+# index-maintenance integration tier (persistent IVF/PQ/BM25
+# build-upsert-delete-stream cycles; ~25-90 s per test because each
+# rebuilds parquet layouts repeatedly) and the single tests below.
 # Coverage is NOT deleted: run the slow set with ``-m slow``, or
 # everything with SPARK_GRAFT_FULL_TESTS=1 (or any explicit -m
-# expression, which disables this default entirely). Default subset:
-# ~18 min; full suite: ~75 min.
+# expression, which disables this default entirely).
 SLOW_MODULES = {
-    "test_mediadecode",
-    "test_minidecode",
-    "test_flac",
-    "test_mpeg1",
-    "test_mpegps",
-    "test_decoder_fuzz",
-    "test_libjpeg_crossval",
-    "test_property_fuzz",
-    "test_multimodal",
     # index-maintenance integration tier (measured 76-271 s per module)
     "test_index_delete",
     "test_ann_index",
@@ -45,20 +33,24 @@ SLOW_MODULES = {
 }
 
 # Individual long-running tests inside otherwise-fast modules
-# (measured 55-281 s each): the registry-wide plan sweep builds all
-# 214 query plans, and these two parity tests are themselves
-# index/stream integration cycles.
+# (measured 12-281 s each): the registry-wide plan sweep builds every
+# registered query plan, two parity tests are themselves index/stream
+# integration cycles, and the AES-256 (PDF 2.0) password tests run the
+# R6 hardened hash's pure-Python AES-CBC rounds many times over.
 SLOW_TESTS = {
     "test_plan_shape.py::test_entire_registry_has_no_cartesian_or_row_python",
     "test_oracle_parity.py::test_query_matches_oracle[purge_document_gate]",
     "test_oracle_parity.py::test_query_matches_oracle[streaming_equivalence_gate]",
+    "test_minidecode.py::test_pdf_aesv3_owner_password",
+    "test_minidecode.py::test_pdf_aesv3_r6_user_password",
+    "test_minidecode.py::test_pdf_aesv3_nonblank_password_stubs",
 }
 
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slow: long-running decode/fuzz/crossval suites, deselected from "
+        "slow: long-running index-maintenance suites and tests, deselected from "
         'plain runs (select with -m slow, or run all with -m "slow or '
         'not slow" / SPARK_GRAFT_FULL_TESTS=1)',
     )

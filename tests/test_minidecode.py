@@ -1013,3 +1013,21 @@ def test_pdf_aesv2_owner_password():
     assert pdf_pages(data, password=b"u2") == ["aes owner"]
     assert pdf_pages(data, password=b"admin2") == ["aes owner"]
     assert pdf_pages(data, password=b"zzz") == []
+
+
+def test_gzip_transparent_document_decode():
+    import gzip
+
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources.loaders import (
+        _gunzip_transparent,
+        sniff_mime,
+    )
+
+    path, data = _gunzip_transparent("a/doc.txt.gz", gzip.compress(b"hello spark"))
+    assert path == "a/doc.txt" and data == b"hello spark"
+    # corrupt gzip: fail-closed, keep original bytes
+    path, data = _gunzip_transparent("x.gz", b"\x1f\x8b broken")
+    assert data == b"\x1f\x8b broken"
+    # non-gzip passthrough
+    assert _gunzip_transparent("a.txt", b"plain") == ("a.txt", b"plain")
+    assert sniff_mime(b"\x1f\x8b\x08") == "application/gzip"

@@ -22,6 +22,14 @@ def test_oracle_keys_subset_of_queries():
     assert set(ORACLES) <= set(E.queries())
 
 
+def test_gate_guard_keys_subset_of_queries():
+    # all_queries() wraps a guard only for a registered name, so a guard
+    # left behind by a retired or renamed gate would be dropped silently
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans import _GATE_GUARDS
+
+    assert set(_GATE_GUARDS) <= set(E.queries())
+
+
 def test_entry_smoke(spark):
     df = E.entry(spark)
     assert df.count() > 0

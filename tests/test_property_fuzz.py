@@ -66,54 +66,6 @@ def test_splitter_invariants_fuzz(text, size, overlap):
         assert e1 - s2 <= overlap    # bounded overlap
 
 
-@settings(max_examples=40, deadline=None)
-@given(
-    h=st.integers(1, 24),
-    w=st.integers(1, 24),
-    predictor=st.integers(1, 7),
-    seed=st.integers(0, 2**31 - 1),
-    pt=st.integers(0, 3),
-)
-def test_lossless_jpeg_roundtrip_fuzz(h, w, predictor, seed, pt):
-    """Property: SOF3 decode(encode(img)) reproduces the point-
-    transform-quantized image EXACTLY for any dims/predictor/Pt."""
-    import numpy as np
-
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources import mediadecode as MD
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources.mediaencode import (
-        encode_lossless_jpeg,
-    )
-
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    out = MD.decode_jpeg_pixels(encode_lossless_jpeg(img, predictor=predictor, pt=pt))
-    assert out is not None and out.shape == (h, w, 1)
-    mask = np.uint8((0xFF << pt) & 0xFF)
-    assert (out[:, :, 0] == (img & mask)).all()
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    seed=st.integers(0, 2**31 - 1),
-    ycck=st.booleans(),
-    progressive=st.booleans(),
-)
-def test_cmyk_jpeg_roundtrip_fuzz(seed, ycck, progressive):
-    """Property: 4-component decode returns the encoded planes within
-    DCT rounding for both Adobe transforms, baseline and progressive."""
-    import numpy as np
-
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources import mediadecode as MD
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources.mediaencode import encode_jpeg
-
-    rng = np.random.default_rng(seed)
-    base = rng.integers(30, 226, (2, 2, 4))
-    img = np.repeat(np.repeat(base, 8, axis=0), 8, axis=1).astype(np.uint8)
-    out = MD.decode_jpeg_pixels(encode_jpeg(img, ycck=ycck, progressive=progressive))
-    assert out is not None and out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 3
-
-
 # -- interval-join grid math: the responsibility rule must emit every
 # -- overlapping pair exactly once for ANY integer bounds and width
 # -- (pure replica of operators/intervaljoin._buckets + owner rule)
