@@ -13,8 +13,15 @@ Three physical strategies, trading exactness for scale:
 3. ``knn_ivf`` — IVF coarse quantization: centroids from the package's
    one seeded Lloyd fit on a bounded sample (``fit_centroids``),
    candidates restricted to the query's top-`nprobe` cells, exact
-   rerank inside. Approximate; the 100 TB path (cell assignment
-   partitions/prunes the scan).
+   rerank inside. Approximate; the one-shot composition of the cell
+   machinery (the persistent, cell-partitioned index is
+   operators/pq_index.py).
+
+Every exact query-candidate cosine in the package — these strategies'
+scores, the IVF and IVF+PQ re-ranks, MMR's relevance and the registered
+exact k-NN plans — is one builder: ``vector_side`` projects each side
+and ``cosine_scored`` broadcasts the queries onto the candidates and
+scores dot(q, c) / (|q|·|c|), the DuckDB oracle's form.
 
 Every assignment to a fitted quantizer — IVF cells, PQ codes and the
 PQ quantization error — is one ``mapInArrow`` kernel, ``quantize``,
@@ -29,6 +36,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -49,6 +57,36 @@ def _topk_window(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def vector_side(
+    df: DataFrame, id_col: str, vec_col: str, prefix: str, id_alias: str, *extra
+) -> DataFrame:
+    """One side of the exact cosine: the id as ``id_alias``, the vector
+    promoted to double once per row (``{prefix}v``), its norm
+    (``{prefix}norm``) and any ``extra`` columns. Zero-norm rows drop
+    out: cosine is undefined there (the oracle's contract). ``prefix``
+    is ``"q"`` for the query side, ``"c"`` for the candidates;
+    ``vec_col`` is a top-level column name."""
+    vec = V.quote_col(vec_col)
+    return df.select(
+        F.col(id_col).alias(id_alias),
+        V.as_double(F.col(vec)).alias(f"{prefix}v"),
+        V.norm(vec).alias(f"{prefix}norm"),
+        *extra,
+    ).where(F.col(f"{prefix}norm") > 0)
+
+
+def cosine_scored(cand: DataFrame, queries: DataFrame, on) -> DataFrame:
+    """The package's one exact query-candidate cosine: the (few) query
+    rows broadcast onto the candidates on the caller's join condition
+    ``on`` (anything ``DataFrame.join`` takes), scored
+    dot(q, c) / (|q|·|c|) — the DuckDB oracle's form, bit for bit.
+    ``cand`` and ``queries`` are :func:`vector_side` projections with
+    prefixes ``"c"`` and ``"q"``."""
+    return cand.join(F.broadcast(queries), on).withColumn(
+        "score", V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
+    )
+
+
 def knn_exact_expr(
     vectors: DataFrame,
     queries: DataFrame,
@@ -61,21 +99,10 @@ def knn_exact_expr(
 ) -> DataFrame:
     """Strategy 1: broadcast nested-loop + fold-form cosine + window
     top-k. ``vec_col`` and ``query_vec_col`` are top-level column names."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(V.quote_col(query_vec_col)).alias("qv"),
-        V.norm(V.quote_col(query_vec_col)).alias("qnorm"),
-    ).where(F.col("qnorm") > 0)  # zero-norm excluded: cosine undefined
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(V.quote_col(vec_col)).alias("cv"),
-        V.norm(V.quote_col(vec_col)).alias("cnorm"),
-    ).where(F.col("cnorm") > 0)
+    q = vector_side(queries, query_id_col, query_vec_col, "q", "query_id")
+    c = vector_side(vectors, id_col, vec_col, "c", "neighbor_id")
     cond = F.lit(True) if not exclude_self else F.col("query_id") != F.col("neighbor_id")
-    scored = c.join(F.broadcast(q), cond).withColumn(
-        "score", V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
-    )
-    return _topk_window(scored, k)
+    return _topk_window(cosine_scored(c, q, cond), k)
 
 
 _SCORE_SCHEMA = T.StructType(
@@ -180,7 +207,7 @@ def lsh_similarity_join(
 # ---------------------------------------------------------------------
 # The coarse quantizer: one fit, one assignment kernel (which also
 # encodes PQ), one persisted table and one probe for every IVF path
-# (knn_ivf, pq.knn_ivfpq, the two persistent layouts, their upserts,
+# (knn_ivf, pq.knn_ivfpq, the persistent IVF+PQ layout and its upserts,
 # semdedup).
 
 #: the fit's seed; PQ subspace i uses _FIT_SEED + i
@@ -404,90 +431,67 @@ def read_centroids(spark, path: str) -> np.ndarray:
     return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
 
 
-def _prep_queries(
-    queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collect the (few) query vectors, drop zero-norm ones (cosine
-    undefined, the shared contract), return (unit vectors, ids). The
-    one query-side prep of every IVF-family search."""
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return np.empty((0, 0)), np.empty(0, np.int64)
-    qm = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
-    qids = np.asarray([r[id_col] for r in q_rows], dtype=np.int64)
+class _Queries(NamedTuple):
+    """A collected query batch, zero-norm rows dropped (cosine
+    undefined, the shared contract): the raw vectors (Q×D float64, what
+    the exact re-rank scores), their unit vectors (what the probe and
+    the ADC tables rank), the ids, and the probe table's extra
+    ``fields`` with each query's values of them (``meta``)."""
+
+    raw: np.ndarray
+    unit: np.ndarray
+    ids: np.ndarray
+    fields: tuple = ()
+    meta: tuple = ()
+
+
+def _queries(qm, qids, fields=(), meta=None) -> _Queries:
+    """:class:`_Queries` of a (Q×D) query matrix and its ids."""
+    qm = np.asarray(qm, dtype=np.float64)
+    qids = np.asarray(qids, dtype=np.int64)
     qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    keep_q = qn[:, 0] > 0
-    return qm[keep_q] / qn[keep_q], qids[keep_q]
+    keep = qn[:, 0] > 0
+    meta = [() for _ in qids] if meta is None else meta
+    return _Queries(
+        qm[keep], qm[keep] / qn[keep], qids[keep], tuple(fields),
+        tuple(m for m, kept in zip(meta, keep) if kept),
+    )
 
 
-def _probe_df(
-    spark, qu: np.ndarray, qids: np.ndarray, centroids: np.ndarray, nprobe: int
-):
+def _prep_queries(
+    queries: DataFrame, id_col: str, vec_col: str, match_cols: tuple = ()
+) -> _Queries:
+    """Collect the (few) query rows with their ``match_cols`` values:
+    the one query-side prep of every IVF-family search."""
+    rows = queries.select(id_col, vec_col, *match_cols).collect()
+    if not rows:
+        return _Queries(np.empty((0, 0)), np.empty((0, 0)), np.empty(0, np.int64))
+    return _queries(
+        np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in rows]),
+        [r[id_col] for r in rows],
+        [queries.schema[c] for c in match_cols],
+        [tuple(r[c] for c in match_cols) for r in rows],
+    )
+
+
+def _probe_df(spark, q: _Queries, centroids: np.ndarray, nprobe: int):
     """(broadcast probe table, probed cell list) for the top-``nprobe``
     cells of each query, ranked by the assignment's own proxy
     |c|²/2 − u·c ascending, ties to the lower cell — so a query equal
-    to a stored vector probes that vector's cell first."""
-    proxy = _proxy(qu, np.asarray(centroids, dtype=np.float64))
+    to a stored vector probes that vector's cell first. Each (query_id,
+    cell) row carries the query's ``meta`` values as its extra fields."""
+    proxy = _proxy(q.unit, np.asarray(centroids, dtype=np.float64))
     pairs = [
-        (int(qid), int(c))
-        for i, qid in enumerate(qids)
+        (int(qid), int(c), *q.meta[i])
+        for i, qid in enumerate(q.ids)
         for c in np.argsort(proxy[i], kind="stable")[:nprobe]
     ]
-    probe = F.broadcast(local_table(spark, pairs, "query_id long, cell int"))
-    return probe, sorted({c for _, c in pairs})
-
-
-def _probe_search(
-    celled: DataFrame,
-    queries: DataFrame,
-    prepped: tuple[np.ndarray, np.ndarray],
-    centroids: np.ndarray,
-    k: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    where: str | None = None,
-    match_cols: tuple = (),
-) -> DataFrame:
-    """Exact top-k inside each query's top-``nprobe`` cells of a frame
-    carrying a ``cell`` column (an assigned corpus or a cell-partitioned
-    layout, whose scan the cell IN-filter prunes). ``where`` filters
-    the pruned rows below scoring; ``match_cols`` requires a candidate
-    to equal its query on each column. ``prepped`` is
-    :func:`_prep_queries` of ``queries``, non-empty."""
-    qu, qids = prepped
-    probe_df, probed_cells = _probe_df(
-        queries.sparkSession, qu, qids, centroids, nprobe
+    schema = T.StructType(
+        [T.StructField("query_id", T.LongType()), T.StructField("cell", T.IntegerType()),
+         *q.fields]
     )
-    vectors = celled.where(F.col("cell").isin(probed_cells))
-    if where is not None:
-        vectors = vectors.where(where)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        V.as_double(F.col(V.quote_col(vec_col))).alias("qv"),
-        V.norm(V.quote_col(vec_col)).alias("qnorm"),
-        *[F.col(c).alias(f"_q_{c}") for c in match_cols],
-    ).where(F.col("qnorm") > 0)  # zero-norm excluded: cosine undefined
-    cand = (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
-            "cell",
-            V.norm(V.quote_col(vec_col)).alias("cnorm"),
-            *[F.col(c).alias(f"_c_{c}") for c in match_cols],
-        )
-        .join(probe_df, "cell")
-        .join(F.broadcast(q), "query_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-    )
-    for c in match_cols:
-        # per-query metadata equality, below scoring (NULL metadata on
-        # either side never matches: three-valued logic drops it)
-        cand = cand.where(F.col(f"_c_{c}") == F.col(f"_q_{c}"))
-    scored = cand.withColumn(
-        "score", V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
-    )
-    return _topk_window(scored, k)
+    probe = F.broadcast(local_table(spark, pairs, schema))
+    return probe, sorted({p[1] for p in pairs})
 
 
 def knn_ivf(
@@ -504,13 +508,19 @@ def knn_ivf(
     exact rerank inside.
 
     At 100 TB the assignment is a write-time partitioning column, so a
-    query touches nprobe/n_clusters of the data (partition pruning:
-    operators/ann_index.py). ``vec_col`` is a top-level column name."""
-    prepped = _prep_queries(queries, id_col, vec_col)
-    if not len(prepped[1]):  # empty or all zero-norm: no fit to pay
-        return local_table(vectors.sparkSession, [], RESULT_SCHEMA)
+    query touches nprobe/n_clusters of the data (partition pruning: the
+    persistent layout of operators/pq_index.py). ``vec_col`` is a
+    top-level column name."""
+    spark = vectors.sparkSession
+    q = _prep_queries(queries, id_col, vec_col)
+    if not len(q.ids):  # empty or all zero-norm: no fit to pay
+        return local_table(spark, [], RESULT_SCHEMA)
     centroids = fit_centroids(vectors, n_clusters, vec_col, id_col)
-    celled = with_cells(vectors, centroids, vec_col)
-    return _probe_search(
-        celled, queries, prepped, centroids, k, nprobe, id_col, vec_col
+    probe_df, _cells = _probe_df(spark, q, centroids, nprobe)
+    cand = vector_side(
+        with_cells(vectors, centroids, vec_col), id_col, vec_col, "c", "neighbor_id", "cell"
+    ).join(probe_df, "cell")
+    scored = cosine_scored(
+        cand, vector_side(queries, id_col, vec_col, "q", "query_id"), "query_id"
     )
+    return _topk_window(scored.where(F.col("neighbor_id") != F.col("query_id")), k)

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..session import default_parallelism
+from .knn import cosine_scored, vector_side
 
 __all__ = ["mmr_rerank", "SIM_SCALE"]
 
@@ -119,28 +120,12 @@ def mmr_rerank(
     4), so a caller can see exactly what diversity traded away.
     ``vec_col`` and ``query_vec_col`` are top-level column names."""
     _check_params(k, fetch_c, lam_permille)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        V.as_double(F.col(V.quote_col(query_vec_col))).alias("qv"),
-        V.norm(V.quote_col(query_vec_col)).alias("qnorm"),
-    ).where(F.col("qnorm") > 0)
-    c = vectors.select(
-        F.col(id_col).alias("nid"),
-        V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
-        V.norm(V.quote_col(vec_col)).alias("cnorm"),
-    ).where(F.col("cnorm") > 0)
+    q = vector_side(queries, query_id_col, query_vec_col, "q", "query_id")
+    c = vector_side(vectors, id_col, vec_col, "c", "nid")
     cond = (
         F.col("query_id") != F.col("nid") if exclude_self else F.lit(True)
     )
-    n_parts = default_parallelism()
-    scored = (
-        c.repartition(n_parts)
-        .join(F.broadcast(q), cond)
-        .withColumn(
-            "score",
-            V.dot("qv", "cv") / (F.col("qnorm") * F.col("cnorm")),
-        )
-    )
+    scored = cosine_scored(c.repartition(default_parallelism()), q, cond)
     pool = _pool_from_scored(scored, fetch_c)
     return _mmr_select(pool, k, fetch_c, int(lam_permille))
 
@@ -172,11 +157,7 @@ def mmr_rerank_candidates(
         F.col("neighbor_id").alias("nid"),
         F.col("score").cast("double").alias("score"),
     )
-    vecs = vectors.select(
-        F.col(id_col).alias("nid"),
-        V.as_double(F.col(V.quote_col(vec_col))).alias("cv"),
-        V.norm(V.quote_col(vec_col)).alias("cnorm"),
-    ).where(F.col("cnorm") > 0)
+    vecs = vector_side(vectors, id_col, vec_col, "c", "nid")
     scored = cand.join(vecs.hint("shuffle_hash"), "nid").select(
         "query_id", "nid", "score", "cv", "cnorm"
     )

@@ -106,58 +106,77 @@ def knn_pq_adc(
     `rerank_vectors` the shortlist is re-scored exactly (hash join on id
     against the raw vectors) — ADC ranks, exact scores decide, the
     production arrangement."""
-    qm = np.asarray(query_matrix, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
     # zero-norm queries drop out — cosine undefined, the same contract
     # knn_exact_expr applies (a NaN LUT would rank arbitrarily instead)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    keep_q = qn[:, 0] > 0
-    qm, qn, qids = qm[keep_q], qn[keep_q], qids[keep_q]
-    qu = qm / qn
-    spark = encoded.sparkSession
+    q = KNN._queries(query_matrix, query_ids)
     cand = encoded.select("vec_id", "codes").crossJoin(
-        F.broadcast(_lut_df(spark, codebooks, qu, qids))
+        F.broadcast(_lut_df(encoded.sparkSession, codebooks, q))
     )
-    n_short = max(shortlist, k)
     if rerank_vectors is None:
         return KNN._topk_window(_adc_scored(cand, exclude_self), k)
-    short = _adc_shortlist(cand, n_short, exclude_self)
-    return _exact_rerank(short, rerank_vectors, qu, qids, k, id_col, vec_col)
+    short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
+    return _exact_rerank(short, rerank_vectors, q, k, id_col, vec_col)
 
 
 def _exact_rerank(
     short: DataFrame,
     rerank_vectors: DataFrame,
-    qu: np.ndarray,
-    qids: np.ndarray,
+    q: KNN._Queries,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine re-scoring of an ADC shortlist: hash join on id
-    back to the raw vectors, broadcast the (few) unit query vectors,
-    fold-form dot product, window top-k."""
-    from ..functions import vector as V
-
+    """Exact cosine re-scoring of an ADC shortlist: hash join on id back
+    to the raw vectors, then the one exact scorer (knn.cosine_scored)
+    against the collected raw query rows, window top-k. The query side
+    is a local table of those rows, never the caller's query frame, so
+    the re-rank scans no Python-side data."""
     qdf = local_table(
         rerank_vectors.sparkSession,
-        [(int(q), qu[i].tolist()) for i, q in enumerate(qids)],
+        [(int(i), v.tolist()) for i, v in zip(q.ids, q.raw)],
         "query_id long, qv array<double>",
     )
-    exact = (
-        short.join(
-            rerank_vectors.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(V.quote_col(vec_col)).alias("cv"),
-                V.norm(V.quote_col(vec_col)).alias("cnorm"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .where(F.col("cnorm") > 0)
-        .withColumn("score", V.dot("qv", "cv") / F.col("cnorm"))
+    cand = short.join(
+        KNN.vector_side(rerank_vectors, id_col, vec_col, "c", "neighbor_id"),
+        "neighbor_id",
     )
-    return KNN._topk_window(exact, k)
+    qside = KNN.vector_side(qdf, "query_id", "qv", "q", "query_id")
+    return KNN._topk_window(KNN.cosine_scored(cand, qside, "query_id"), k)
+
+
+def _search(
+    codes: DataFrame,
+    rerank_vectors: DataFrame,
+    q: KNN._Queries,
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    k: int,
+    nprobe: int,
+    shortlist: int,
+    exclude_self: bool,
+    id_col: str,
+    vec_col: str,
+    match_cols: tuple = (),
+) -> DataFrame:
+    """The one IVF+PQ search body, shared by the inline composition
+    (:func:`knn_ivfpq`) and the persistent index (pq_index
+    ``IvfPqSearcher.search``): probe → cell-pruned code scan (partition
+    pruning on a cell-partitioned layout) → LUT join → ADC shortlist →
+    exact re-rank. ``codes`` carries (vec_id, codes, cell) plus the
+    ``match_cols``; a candidate must equal its query on each of those
+    (the query's values ride the probe table), so the equality lands
+    in the pruned scan before ADC and NULL metadata never matches.
+    ``q`` is non-empty."""
+    spark = rerank_vectors.sparkSession
+    probe_df, cells = KNN._probe_df(spark, q, centroids, nprobe)
+    cand = (
+        codes.where(F.col("cell").isin(cells))
+        .join(probe_df, ["cell", *match_cols])
+        .select("query_id", "vec_id", "codes")
+        .join(F.broadcast(_lut_df(spark, codebooks, q)), "query_id")
+    )
+    short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
+    return _exact_rerank(short, rerank_vectors, q, k, id_col, vec_col)
 
 
 def knn_ivfpq(
@@ -187,11 +206,10 @@ def knn_ivfpq(
     is one expression over the pruned code table with a partial
     WindowGroupLimit below the shuffle — no stage ever materializes a
     full score matrix."""
-    spark = vectors.sparkSession
     # queries first: an empty query set must not pay the fit
-    qu, qids = KNN._prep_queries(queries, id_col, vec_col)
-    if not len(qids):
-        return local_table(spark, [], KNN.RESULT_SCHEMA)
+    q = KNN._prep_queries(queries, id_col, vec_col)
+    if not len(q.ids):
+        return local_table(vectors.sparkSession, [], KNN.RESULT_SCHEMA)
 
     centroids, cb = KNN.fit_centroids(
         vectors, n_clusters, vec_col, id_col, pq=(m, kc)
@@ -201,11 +219,10 @@ def knn_ivfpq(
         id_col,
         ("cell",),
     )
-    probe_df, _cells = KNN._probe_df(spark, qu, qids, centroids, nprobe)
-    cand = enc.join(probe_df, "cell").select("query_id", "vec_id", "codes")
-    cand = cand.join(F.broadcast(_lut_df(spark, cb, qu, qids)), "query_id")
-    short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
-    return _exact_rerank(short, vectors, qu, qids, k, id_col, vec_col)
+    return _search(
+        enc, vectors, q, centroids, cb, k, nprobe, shortlist, exclude_self,
+        id_col, vec_col,
+    )
 
 
 #: ADC score of one (codes, lut) row: the sum over the M subspaces of
@@ -216,17 +233,16 @@ _ADC_SCORE_SQL = (
 )
 
 
-def _lut_df(
-    spark, codebooks: np.ndarray, qu: np.ndarray, qids: np.ndarray
-) -> DataFrame:
+def _lut_df(spark, codebooks: np.ndarray, q: KNN._Queries) -> DataFrame:
     """(query_id, lut) with lut[i][c] = <query subvector i, codebook i
     entry c>: the M×K asymmetric-distance table of each unit query,
     computed on the driver and shipped as a local table."""
     cb = np.asarray(codebooks, dtype=np.float64)
+    qu = q.unit
     lut = np.einsum("qis,ics->qic", qu.reshape(len(qu), cb.shape[0], cb.shape[2]), cb)
     return local_table(
         spark,
-        [(int(q), lut[i].tolist()) for i, q in enumerate(qids)],
+        [(int(qid), lut[i].tolist()) for i, qid in enumerate(q.ids)],
         "query_id long, lut array<array<double>>",
     )
 
@@ -246,11 +262,11 @@ def _adc_scored(cand: DataFrame, exclude_self: bool) -> DataFrame:
 
 def _adc_shortlist(cand: DataFrame, n_short: int, exclude_self: bool) -> DataFrame:
     """(query_id, neighbor_id) of each query's top-``n_short`` ADC
-    scores — shared by the inline composition (knn_ivfpq), the
-    persistent index (pq_index.search) and knn_pq_adc. The window's
-    rank filter lets Catalyst put a partial WindowGroupLimit below the
-    query_id exchange, so the shuffle carries at most ``n_short`` rows
-    per (partition, query), never the candidate set."""
+    scores — shared by the one search body (:func:`_search`) and
+    knn_pq_adc. The window's rank filter lets Catalyst put a partial
+    WindowGroupLimit below the query_id exchange, so the shuffle carries
+    at most ``n_short`` rows per (partition, query), never the
+    candidate set."""
     return KNN._topk_window(_adc_scored(cand, exclude_self), n_short).select(
         "query_id", "neighbor_id"
     )

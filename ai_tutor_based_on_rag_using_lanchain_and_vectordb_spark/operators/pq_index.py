@@ -1,5 +1,6 @@
-"""Persistent IVF+PQ index — the compressed counterpart of the raw
-IVF layout in operators/ann_index.py: the corpus is stored ONCE as
+"""Persistent IVF+PQ index — the package's one persistent vector index
+(the reference keeps one vector store, a Chroma collection,
+backend/chroma_utils.py:36-39): the corpus is stored ONCE as
 cell-partitioned PQ codes (M ints + a norm per vector instead of D
 floats — the 16×-smaller footprint is the point of the index), with
 the coarse centroids and subspace codebooks beside it. A search probes
@@ -10,7 +11,8 @@ caller's raw-vector table.
 Build cost is paid once; searches never re-fit or re-encode — the
 difference between this and pq.knn_ivfpq (which fits inline and exists
 for gates/one-shot use). Both fit, assign and probe cells with the
-coarse quantizer of operators/knn.py.
+coarse quantizer of operators/knn.py and run one search body
+(pq._search).
 """
 
 from __future__ import annotations
@@ -26,14 +28,13 @@ from ..streaming.epochs import start_foreach_batch
 from .knn import (
     RESULT_SCHEMA,
     _prep_queries,
-    _probe_df,
     fit_centroids,
     quantize,
     read_centroids,
     write_centroids,
 )
 from .partdelete import delete_ids_from_layout
-from .pq import _adc_shortlist, _encoded, _exact_rerank, _lut_df
+from .pq import _encoded, _search
 
 
 def build_ivfpq_index(
@@ -49,9 +50,9 @@ def build_ivfpq_index(
     """Fit the coarse quantizer + subspace codebooks and write the
     layout: codes parquet partitioned by cell, centroids, codebooks.
     ``meta_cols`` rides typed metadata beside the codes so searches can
-    filter below ADC (IvfPqSearcher.search ``where`` — the reference's
-    ``where={"file_id": …}`` vector-store filter on the compressed
-    path); upserts preserve whatever metadata the layout carries."""
+    filter below ADC (IvfPqSearcher.search ``where``/``match_cols`` —
+    the reference's ``where={"file_id": …}`` vector-store filter);
+    upserts preserve whatever metadata the layout carries."""
     centroids, cb = fit_centroids(vectors, n_cells, vec_col, id_col, pq=(m, kc))
     enc = _encoded(
         quantize(vectors.select(id_col, vec_col, *meta_cols), vec_col, centroids, cb),
@@ -161,6 +162,7 @@ class IvfPqSearcher:
         shortlist: int | None = None,
         exclude_self: bool = True,
         where: str | None = None,
+        match_cols: tuple = (),
     ) -> DataFrame:
         """Probe → pruned code scan → ADC → exact re-rank. The cell
         IN-filter prunes partitions of the codes layout before any
@@ -168,35 +170,35 @@ class IvfPqSearcher:
         shortlist. ``nprobe``/``shortlist`` default to
         :meth:`auto_params` when not given.
 
-        ``where`` is a static SQL predicate over the metadata columns
-        the layout carries (build_ivfpq_index ``meta_cols``) — the
-        reference's ``where={"file_id": …}`` filter, applied to the
-        partition-pruned code scan BEFORE ADC, so the shortlist and
-        the exact re-rank only ever see passing candidates (top-k
-        among the filtered set, not a filtered top-k)."""
+        Metadata filters over the columns the layout carries
+        (build_ivfpq_index ``meta_cols``) — the reference's
+        ``where={"file_id": …}`` filter, backend/chroma_utils.py:161,
+        250-253 — apply to the partition-pruned code scan BEFORE ADC,
+        so the shortlist and the exact re-rank only ever see passing
+        candidates (top-k among the filtered set, not a filtered top-k):
+
+        - ``where``: a static SQL predicate (``"label = 3"``).
+        - ``match_cols``: per-query equality — a candidate must equal
+          the QUERY's own value on each column (the "restrict to the
+          query's own label/file" shape). The query frame carries the
+          columns; NULL metadata on either side never matches.
+
+        With nprobe = all cells and a shortlist ≥ the filtered pool the
+        result is the exact filtered k-NN (Q(knn_ivf_filtered) carries
+        the label-filtered oracle verbatim)."""
         if nprobe is None or shortlist is None:
             auto_np, auto_sl = self.auto_params(k)
             nprobe = auto_np if nprobe is None else nprobe
             shortlist = auto_sl if shortlist is None else shortlist
-        qu, qids = _prep_queries(queries, self.id_col, self.vec_col)
-        if not len(qids):
+        q = _prep_queries(queries, self.id_col, self.vec_col, match_cols)
+        if not len(q.ids):
             return local_table(self.spark, [], RESULT_SCHEMA)
-        probe_df, probed_cells = _probe_df(self.spark, qu, qids, self.cent, nprobe)
-        codes = self.spark.read.parquet(
-            os.path.join(self.path, "codes")
-        ).where(F.col("cell").isin(probed_cells))  # partition pruning
+        codes = self.spark.read.parquet(os.path.join(self.path, "codes"))
         if where is not None:
-            # metadata filter below ADC: evaluated in the pruned scan,
-            # before any distance table is consulted
             codes = codes.where(where)
-        cand = (
-            codes.join(probe_df, "cell")
-            .select("query_id", "vec_id", "codes")
-            .join(F.broadcast(_lut_df(self.spark, self.cb, qu, qids)), "query_id")
-        )
-        short = _adc_shortlist(cand, max(shortlist, k), exclude_self)
-        return _exact_rerank(
-            short, self.rerank_vectors, qu, qids, k, self.id_col, self.vec_col
+        return _search(
+            codes, self.rerank_vectors, q, self.cent, self.cb, k, nprobe,
+            shortlist, exclude_self, self.id_col, self.vec_col, match_cols,
         )
 
 
@@ -251,9 +253,8 @@ def upsert_ivfpq_index(
     batch's mean squared quantization error under the FROZEN codebooks,
     None when nothing was encodable. The skipped count, the touched
     cells and this error come from one aggregate over the pinned pass.
-    The coarse quantizer's growth/drift refit triggers live in
-    ann_index.upsert_ivf_index; this is the matching signal for the PQ
-    side: a refit policy re-fits the codebooks when the error trend of
+    It is the index's drift signal: a refit policy rebuilds the index
+    (a fresh :func:`build_ivfpq_index`) when the error trend of
     incoming batches rises above the build-time distortion.
     ``vec_col`` is a top-level column name."""
     # preserve whatever metadata the layout carries (declared at build
@@ -303,15 +304,17 @@ def delete_ivfpq_ids(
     ids,
     id_col: str = "vec_id",
 ) -> dict:
-    """Purge vectors from the persistent codes layout (the IVF+PQ
-    counterpart of ann_index.delete_ivf_ids — same /delete-doc parity
-    note). Locate is a column-pruned (id, cell) probe; only cells
-    containing victim rows rewrite (dynamic partition overwrite). The
-    frozen quantizers are untouched — codebooks fitted over a corpus
-    that included the victims remain a valid (merely stale-fit)
-    quantizer for the survivors, and the exact re-rank on top makes
-    full-shortlist searches identical to a fresh build
-    (Q(purge_document_gate)). Idempotent on replay."""
+    """Purge vectors from the persistent codes layout — the vector-store
+    half of the reference's /delete-doc (backend/chroma_utils.py:174
+    deletes by metadata from the Chroma collection; a GDPR purge or a
+    re-crawl replacement needs the persistent index to forget too).
+    ``ids`` is a list or a 1-column DataFrame. Locate is a column-pruned
+    (id, cell) probe; only cells containing victim rows rewrite (dynamic
+    partition overwrite). The frozen quantizers are untouched —
+    codebooks fitted over a corpus that included the victims remain a
+    valid (merely stale-fit) quantizer for the survivors, and the exact
+    re-rank on top makes full-shortlist searches identical to a fresh
+    build (Q(purge_document_gate)). Idempotent on replay."""
     n, touched = delete_ids_from_layout(
         spark, os.path.join(path, "codes"), ids, id_col, "cell"
     )
@@ -326,8 +329,8 @@ def stream_ivfpq_index(
     vec_col: str = "embedding",
 ):
     """Continuous maintenance of the codes layout: every micro-batch
-    runs the frozen-quantizer upsert (same foreachBatch shape as
-    ann_index.stream_ivf_index). Returns the started StreamingQuery."""
+    runs the frozen-quantizer upsert through streaming/epochs.py's
+    foreachBatch wiring. Returns the started StreamingQuery."""
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         upsert_ivfpq_index(

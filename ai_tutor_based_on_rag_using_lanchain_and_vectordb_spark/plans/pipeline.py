@@ -629,12 +629,13 @@ def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF path in its exhaustive configuration (nprobe = all 8
     cells): every vector is a candidate, so the cell machinery — k-means
-    fit and cell assignment, probe-table join, partition pruning — runs end-to-end
-    yet the result is EXACT and carries knn_exact's DuckDB oracle.
-    This oracle-checks the IVF plumbing itself (tests/test_ann_index.py
-    proves nprobe=all ≡ exact in-repo; this row makes the driver see
-    it). Zero-norm vectors are excluded up front on both sides, the
-    shared contract with knn_exact and its oracle."""
+    fit, cell assignment, probe-table join — runs end-to-end yet the
+    result is EXACT and carries knn_exact's DuckDB oracle. This
+    oracle-checks the IVF plumbing itself: the in-repo proof that
+    nprobe=all ≡ exact is this row's own DuckDB hash
+    (tests/test_oracle_parity.py), the same row the driver sees.
+    Zero-norm vectors are excluded up front on both sides, the shared
+    contract with knn_exact and its oracle."""
     from ..functions import vector as V
 
     emb = load_table(spark, sf_dir, "embeddings").where(
@@ -898,32 +899,31 @@ def knn_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4 on the PRODUCTION index path: metadata-filtered k-NN through
-    the persistent IVF layout (reference: Chroma ``where={"file_id":
+    the persistent IVF+PQ layout (reference: Chroma ``where={"file_id":
     …}``, backend/chroma_utils.py:250-253). The layout carries ``label``
     as a typed metadata column (build meta_cols), and the per-query
-    equality (``match_cols``) lands in the partition-pruned scan BELOW
-    scoring — previously only the exact broadcast path
-    Q(knn_label_filtered) could filter; the IVF/PQ searchers had no
-    predicate parameter and a filtered query fell back to brute force
-    (r12 verdict ask #3). Exhaustive configuration (nprobe = all
-    cells), so the result is the EXACT label-filtered top-k and the
+    equality (``match_cols``) lands in the partition-pruned code scan
+    BEFORE ADC. Exhaustive configuration (nprobe = all cells, shortlist
+    = the corpus), so the exact re-rank sees every label-matching
+    candidate: the result is the EXACT label-filtered top-k and the
     whole filtered-index composition (build → meta-carrying layout →
-    probe → filter → score) carries Q(knn_label_filtered)'s DuckDB
-    oracle verbatim. Pruned+filtered recall is gated separately in
-    Q(knn_ivf_filtered_recall)."""
+    probe → filter → ADC → re-rank) carries Q(knn_label_filtered)'s
+    DuckDB oracle verbatim. Pruned+filtered recall is gated separately
+    in Q(knn_ivf_filtered_recall)."""
     import tempfile
 
     from ..functions import vector as V
-    from ..operators.ann_index import build_ivf_index, search_ivf_index
+    from ..operators.pq_index import build_ivfpq_index, open_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
     path = tempfile.mkdtemp(prefix="ivf_filtered_")
-    build_ivf_index(emb, path, n_cells=8, meta_cols=("label",))
+    build_ivfpq_index(emb, path, n_cells=8, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
-    out = search_ivf_index(
-        spark, path, queries, k=5, nprobe=8, match_cols=("label",)
+    n = emb.count()  # bounded collect: one scalar, exhaustive shortlist
+    out = open_ivfpq_index(spark, path, emb).search(
+        queries, k=5, nprobe=8, shortlist=n, match_cols=("label",)
     )
     return out.select(
         "query_id", "neighbor_id",
@@ -971,28 +971,28 @@ def knn_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The filtered search in its PRUNED production configuration
-    (nprobe=6 of 8 cells + per-query label equality): recall vs the
-    exact filtered ranking (Q(knn_label_filtered), oracle-green) must
-    stay ≥ 0.7 — the filter shrinks each query's candidate pool ~10×,
-    which is exactly when cell pruning could silently collapse a
-    filtered result. Measured 0.96 (sf0.001) / 1.0 (sf0.01), so the
-    gate clears with margin yet catches a collapse. In-plan-guarded;
-    rows-only (k-means cells aren't SQL-expressible)."""
+    """The filtered search in its PRUNED production configuration on
+    the persistent IVF+PQ index (nprobe=6 of 8 cells, the auto shortlist
+    max(20·k, 100), per-query label equality): recall vs the exact
+    filtered ranking (Q(knn_label_filtered), oracle-green) must stay
+    ≥ 0.7 — the filter shrinks each query's candidate pool ~10×, which
+    is exactly when cell pruning could silently collapse a filtered
+    result. In-plan-guarded; rows-only (k-means cells aren't
+    SQL-expressible)."""
     import tempfile
 
     from ..functions import vector as V
-    from ..operators.ann_index import build_ivf_index, search_ivf_index
+    from ..operators.pq_index import build_ivfpq_index, open_ivfpq_index
     from .vectors import knn_label_filtered
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
     path = tempfile.mkdtemp(prefix="ivf_filtered_rc_")
-    build_ivf_index(emb, path, n_cells=8, meta_cols=("label",))
+    build_ivfpq_index(emb, path, n_cells=8, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
-    approx = search_ivf_index(
-        spark, path, queries, k=5, nprobe=6, match_cols=("label",)
+    approx = open_ivfpq_index(spark, path, emb).search(
+        queries, k=5, nprobe=6, match_cols=("label",)
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     exact = knn_label_filtered(spark, sf_dir).select(
         "query_id", "neighbor_id"
@@ -1429,21 +1429,21 @@ def bloom_fpp_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delete/purge propagation across the three persistent retrieval
+    """Delete/purge propagation across the two persistent retrieval
     layouts — reference parity for POST /delete-doc, which removes a
     document from BOTH stores (backend/main.py:443-486 SQLite +
     backend/chroma_utils.py:174 Chroma `_collection.delete(where=
     {"file_id": …})`). The engine's ingest.delete_document covers
     catalog+chunks; this gate pins that the PERSISTENT indexes can
-    forget too: ingest → index (BM25 postings, IVF vectors, IVF+PQ
-    codes) → delete one *result-bearing* document from each → every
-    search is row-identical to an index built fresh from the surviving
-    corpus, and no stale posting/vector/code survives anywhere.
+    forget too: ingest → index (BM25 postings, IVF+PQ codes) → delete
+    one *result-bearing* document from each → every search is
+    row-identical to an index built fresh from the surviving corpus,
+    and no stale posting/code survives anywhere.
 
     Victims are chosen to MATTER: the top-1 hit of a live query in
     each layout, so the delete must shift ranks, df, N, avgdl — not
     just drop a row nobody returns. Equality configurations are the
-    exact ones (BM25 is always exact; IVF probes all cells; IVF+PQ
+    exact ones (BM25 is always exact; IVF+PQ probes all cells and
     re-ranks a full shortlist), so quantizer differences between the
     deleted and fresh-built indexes cannot mask — or fake — a
     mismatch. Rows-only (index builds aren't SQL), with every pass
@@ -1453,13 +1453,6 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Q·k ≤ 30-row search results being compared."""
     import tempfile
 
-    from ..operators.ann_index import (
-        build_ivf_index,
-        delete_ivf_ids,
-        read_stats,
-        search_ivf_index,
-    )
-    from ..operators.knn import read_centroids
     from ..operators.bm25 import (
         Bm25Searcher,
         build_bm25_index,
@@ -1504,36 +1497,10 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows.append(("bm25_victim_forgotten", int(leftovers), 0))
 
-    # ---------------- IVF vectors ----------------
-    ip = tempfile.mkdtemp(prefix="purge_ivf_")
-    build_ivf_index(emb, ip, n_cells=4)
-    n_cells = len(read_centroids(spark, ip))
-    n0 = int(read_stats(spark, ip)["cur_n"])
-    queries = pin(emb.where(F.col("vec_id") < 3), eager=True)
-    v_ivf = int(
-        search_ivf_index(spark, ip, queries, k=1, nprobe=n_cells)
-        .collect()[0]["neighbor_id"]
-    )
-    dinfo = delete_ivf_ids(spark, ip, [v_ivf])
-    rows.append(("ivf_victim_deleted", dinfo["deleted"], 1))
-    rows.append(("ivf_stats_decremented", int(dinfo["cur_n"]), n0 - 1))
-    fp = tempfile.mkdtemp(prefix="purge_ivff_")
-    surv_emb = emb.where(F.col("vec_id") != v_ivf)
-    build_ivf_index(surv_emb, fp, n_cells=4)
-    got = _rowset(search_ivf_index(spark, ip, queries, k=5, nprobe=n_cells))
-    want = _rowset(search_ivf_index(spark, fp, queries, k=5, nprobe=n_cells))
-    rows.append(("ivf_search_equals_fresh_build", len(got ^ want), 0))
-    rows.append((
-        "ivf_victim_forgotten",
-        spark.read.parquet(f"{ip}/vectors")
-        .where(F.col("vec_id") == v_ivf)
-        .count(),
-        0,
-    ))
-
     # ---------------- IVF+PQ codes ----------------
     pp = tempfile.mkdtemp(prefix="purge_pq_")
     build_ivfpq_index(emb, pp, n_cells=4, m=8, kc=16)
+    queries = pin(emb.where(F.col("vec_id") < 3), eager=True)
     n_emb = emb.count()
     v_pq = int(
         search_ivfpq_index(
@@ -1543,16 +1510,16 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinfo = delete_ivfpq_ids(spark, pp, [v_pq])
     rows.append(("ivfpq_victim_deleted", pinfo["deleted"], 1))
     pf = tempfile.mkdtemp(prefix="purge_pqf_")
-    surv2 = pin(emb.where(F.col("vec_id") != v_pq), eager=True)
-    build_ivfpq_index(surv2, pf, n_cells=4, m=8, kc=16)
+    surv = pin(emb.where(F.col("vec_id") != v_pq), eager=True)
+    build_ivfpq_index(surv, pf, n_cells=4, m=8, kc=16)
     got = _rowset(
         search_ivfpq_index(
-            spark, pp, queries, surv2, k=5, nprobe=4, shortlist=n_emb
+            spark, pp, queries, surv, k=5, nprobe=4, shortlist=n_emb
         )
     )
     want = _rowset(
         search_ivfpq_index(
-            spark, pf, queries, surv2, k=5, nprobe=4, shortlist=n_emb
+            spark, pf, queries, surv, k=5, nprobe=4, shortlist=n_emb
         )
     )
     rows.append(("ivfpq_search_equals_fresh_build", len(got ^ want), 0))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import exact as X
 from ..functions import vector as V
+from ..operators import knn as KNN
 from ..operators.semdedup import assign_cells, embedding_neardup_pairs_df, semdedup
 from ..session import default_parallelism, local_table, pin
 
@@ -30,19 +31,16 @@ N_QUERIES = 5  # vec_id < 5 are the designated query vectors
 
 
 def _scored_pairs(embeddings: DataFrame, same_label_only: bool) -> DataFrame:
-    # Fold-form scoring (functions/vector.py); norms and the DOUBLE
-    # promotion are computed once per row, not per pair.
-    queries = embeddings.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        V.as_double(F.col("embedding")).alias("qv"),
-        F.col("label").alias("qlabel"),
-        V.norm("embedding").alias("qnorm"),
+    """The exact cosine of the N_QUERIES designated queries against the
+    whole table (the one scorer, operators/knn.py ``cosine_scored``),
+    optionally restricted to the query's own label."""
+    queries = KNN.vector_side(
+        embeddings.where(F.col("vec_id") < N_QUERIES), "vec_id", "embedding",
+        "q", "query_id", F.col("label").alias("qlabel"),
     )
-    cand = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        V.as_double(F.col("embedding")).alias("cv"),
+    cand = KNN.vector_side(
+        embeddings, "vec_id", "embedding", "c", "neighbor_id",
         F.col("label").alias("clabel"),
-        V.norm("embedding").alias("cnorm"),
     )
     cond = F.col("query_id") != F.col("neighbor_id")
     if same_label_only:
@@ -51,53 +49,29 @@ def _scored_pairs(embeddings: DataFrame, same_label_only: bool) -> DataFrame:
     # input split), which would make the broadcast-join scoring stage a
     # single task; a fixed-count round-robin fans the N×Q scoring out
     # across the executor threads (AQE never coalesces explicit counts)
-    n_parts = default_parallelism()
-    return (
-        cand.repartition(n_parts)
-        .join(F.broadcast(queries), cond)
-        .withColumn(
-            "score",
-            V.dot("qv", "cv")
-            / (F.col("qnorm") * F.col("cnorm")),
-        )
+    return KNN.cosine_scored(cand.repartition(default_parallelism()), queries, cond)
+
+
+def _exact_topk(emb: DataFrame, same_label_only: bool) -> DataFrame:
+    return KNN._topk_window(_scored_pairs(emb, same_label_only), K).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("long").alias("rank"),
+        X.pround(F.col("score"), 4).alias("score"),
     )
 
 
 def knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3/J4 — exact cosine top-k (k=5) for 5 query vectors against the
     full collection, deterministic (score DESC, neighbor_id ASC)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        _scored_pairs(emb, same_label_only=False)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            X.pround(F.col("score"), 4).alias("score"),
-        )
-    )
+    return _exact_topk(load_table(spark, sf_dir, "embeddings"), False)
 
 
 def knn_label_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4+W3 — metadata-filtered k-NN: neighbors restricted to the
     query's own label partition *before* scoring (the Chroma
     ``where={"file_id": ...}`` pushdown, backend/chroma_utils.py:250-253)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        _scored_pairs(emb, same_label_only=True)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            X.pround(F.col("score"), 4).alias("score"),
-        )
-    )
+    return _exact_topk(load_table(spark, sf_dir, "embeddings"), True)
 
 
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,19 +159,13 @@ def vector_ranked_named(
     name = F.lit(None).cast("string")
     for i, (qid, _) in enumerate(BM25_QUERIES):
         name = F.when(F.col("query_id") == i, F.lit(qid)).otherwise(name)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        _scored_pairs(emb, same_label_only=False)
-        .where(F.col("query_id") < len(BM25_QUERIES))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= depth)
-        .select(
-            name.cast("string").alias("query_id"),
-            F.col("neighbor_id").alias("doc_id"),
-            "rank",
-        )
+    scored = _scored_pairs(emb, same_label_only=False)
+    return KNN._topk_window(
+        scored.where(F.col("query_id") < len(BM25_QUERIES)), depth
+    ).select(
+        name.cast("string").alias("query_id"),
+        F.col("neighbor_id").alias("doc_id"),
+        "rank",
     )
 
 

@@ -484,7 +484,9 @@ def _image_row(asset_id, data: bytes) -> tuple:
     img = decode_png_pixels(data)
     if img is None:
         raise _unsupported("image", asset_id, "PNG")
-    info = decode_png(data)
+    # the decoded channel count: palette indexes expand to RGB, so a
+    # palette PNG's header channel count (1) would disagree with its stats
+    info = decode_png(data)._replace(channels=img.shape[2])
     flat = img.reshape(-1, img.shape[2])
     return (
         asset_id, *info, flat.mean(axis=0).tolist(), flat.std(axis=0).tolist(),

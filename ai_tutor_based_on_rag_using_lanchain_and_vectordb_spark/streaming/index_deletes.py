@@ -1,7 +1,7 @@
 """Streaming delete propagation into the persistent retrieval layouts
 (st18): a stream of purge requests (doc/vec ids) applied per
-micro-batch to the BM25 postings, IVF vectors, and/or IVF+PQ codes
-layouts — the continuous form of the reference's /delete-doc
+micro-batch to the BM25 postings and/or the IVF+PQ codes layout — the
+continuous form of the reference's /delete-doc
 (backend/main.py:443-486), at the cadence a production corpus actually
 deletes (GDPR purges, re-crawl replacements).
 
@@ -13,11 +13,10 @@ re-added would kill the re-added copy
 (tests/test_index_delete.py::test_stream_deletes_exactly_once).
 
 The `apply_fns` are the batch delete operators themselves
-(operators/bm25.delete_bm25_docs, operators/ann_index.delete_ivf_ids,
-operators/pq_index.delete_ivfpq_ids) partially applied to their index
-paths — one delete stream can fan a purge request out to every layout
-a document lives in, which is exactly the reference's "remove from
-BOTH stores" contract.
+(operators/bm25.delete_bm25_docs, operators/pq_index.delete_ivfpq_ids)
+partially applied to their index paths — one delete stream can fan a
+purge request out to every layout a document lives in, which is
+exactly the reference's "remove from BOTH stores" contract.
 """
 
 from __future__ import annotations
@@ -61,7 +60,7 @@ def stream_index_deletes(
         stream_index_deletes(
             req_stream, state, ckpt,
             [lambda s, ids: delete_bm25_docs(s, bm25_path, ids),
-             lambda s, ids: delete_ivf_ids(s, ivf_path, ids)])
+             lambda s, ids: delete_ivfpq_ids(s, ivfpq_path, ids)])
     """
     state = DeleteStreamState(state_root, apply_fns)
     return start_foreach_batch(stream_df, state.apply_batch, checkpoint)

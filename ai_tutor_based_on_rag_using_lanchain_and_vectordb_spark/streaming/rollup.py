@@ -7,7 +7,7 @@ event stream: each micro-batch's per-day sketches are unioned into the
 stored per-day sketches (``hll_union`` two-arg form on the join of new
 vs stored), and only the touched day-partitions are rewritten (dynamic
 partition overwrite — the same incremental-maintenance move as
-``operators/ann_index.upsert_ivf_index``).
+``operators/pq_index.upsert_ivfpq_index``).
 
 Because HLL union is associative and commutative, ANY batching of the
 input produces the same merged registers — the N-batch ≡ 1-batch test

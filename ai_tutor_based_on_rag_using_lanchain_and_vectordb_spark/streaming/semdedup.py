@@ -21,7 +21,7 @@ pairs come from the batch operator's own scorer
 compare the same float bits.
 
 State is O(corpus) vectors but O(batch) WRITE per epoch (per-epoch
-parquet subtrees, the operators/ann_index.py cell-layout idea), and the
+parquet subtrees, the operators/pq_index.py cell-layout idea), and the
 pair work per batch is new×(cell-mates) only — history×history is never
 re-scored. Exactly-once via the committed-epoch marker of
 streaming/epochs.py: a crash before the commit replays against

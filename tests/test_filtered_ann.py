@@ -1,10 +1,11 @@
-"""Metadata-filtered search on the persistent ANN layouts (r12 verdict
-ask #3): the reference filters vector search by metadata
+"""Metadata-filtered search on the persistent IVF+PQ index (r12
+verdict ask #3): the reference filters vector search by metadata
 (backend/chroma_utils.py:161,250-253 ``where={"file_id": …}``);
 previously only the exact brute-force path could filter. These tests
-pin: filter semantics are top-k AMONG the filtered set, metadata
-columns survive upserts/refits, and a batch missing a declared
-metadata column fails loudly instead of silently dropping metadata.
+pin: filter semantics (a static ``where`` and per-query ``match_cols``)
+are top-k AMONG the filtered set, metadata columns survive upserts and
+deletes, and a batch missing a declared metadata column fails loudly
+instead of silently dropping metadata.
 """
 
 from __future__ import annotations
@@ -17,15 +18,10 @@ from pyspark.sql import functions as F
 
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load_table
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.functions import vector as V
-from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.ann_index import (
-    build_ivf_index,
-    delete_ivf_ids,
-    refit_ivf_index,
-    search_ivf_index,
-    upsert_ivf_index,
-)
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.pq_index import (
     build_ivfpq_index,
+    delete_ivfpq_ids,
+    open_ivfpq_index,
     search_ivfpq_index,
     upsert_ivfpq_index,
 )
@@ -78,80 +74,27 @@ def _rows(df):
     return sorted(tuple(str(v) for v in r) for r in df.collect())
 
 
-def test_ivf_match_cols_exhaustive_equals_exact(spark, sf_dir, tmp_path):
+def test_ivfpq_match_cols_exhaustive_equals_exact(spark, sf_dir, tmp_path):
     emb = _emb(spark, sf_dir)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, n_cells=4, meta_cols=("label",))
+    n = emb.count()
+    path = str(tmp_path / "ivfpq_m")
+    build_ivfpq_index(emb, path, n_cells=4, m=8, kc=16, meta_cols=("label",))
     queries = emb.where("vec_id < 5")
-    got = search_ivf_index(
-        spark, path, queries, k=5, nprobe=4, match_cols=("label",)
+    got = open_ivfpq_index(spark, path, emb).search(
+        queries, k=5, nprobe=4, shortlist=n, match_cols=("label",)
     ).select("query_id", "neighbor_id", "rank")
     want = _brute_filtered(emb, same_label=True)
     assert _rows(got) == _rows(want)
 
 
-def test_ivf_static_where_equals_exact(spark, sf_dir, tmp_path):
+def test_ivfpq_upsert_missing_meta_raises(spark, sf_dir, tmp_path):
     emb = _emb(spark, sf_dir)
-    path = str(tmp_path / "ivf_w")
-    build_ivf_index(emb, path, n_cells=4, meta_cols=("label",))
-    queries = emb.where("vec_id < 5")
-    got = search_ivf_index(
-        spark, path, queries, k=5, nprobe=4, where="label = 2"
-    ).select("query_id", "neighbor_id", "rank")
-    want = _brute_filtered(emb, same_label=False, label=2)
-    assert _rows(got) == _rows(want)
-    # and every returned neighbor really passes the predicate
-    layout = spark.read.parquet(os.path.join(path, "vectors"))
-    bad = (
-        got.withColumnRenamed("neighbor_id", "vec_id")
-        .join(layout.select("vec_id", "label"), "vec_id")
-        .where("label != 2")
-    )
-    assert bad.count() == 0
-
-
-def test_ivf_meta_survives_upsert_and_refit(spark, sf_dir, tmp_path):
-    emb = _emb(spark, sf_dir)
-    path = str(tmp_path / "ivf_up")
-    build_ivf_index(emb.where("vec_id < 300"), path, n_cells=4,
-                    meta_cols=("label",))
-    batch = emb.where("vec_id >= 300").select(
-        "vec_id", "embedding", "label"
-    ).localCheckpoint(eager=True)
-    info = upsert_ivf_index(spark, path, batch)
-    assert info["added"] > 0
-    layout = spark.read.parquet(os.path.join(path, "vectors"))
-    assert "label" in layout.columns
-    # labels in the layout match the source for BOTH old and new rows
-    mismatches = (
-        layout.select("vec_id", F.col("label").alias("have"))
-        .join(emb.select("vec_id", "label"), "vec_id")
-        .where(F.col("have") != F.col("label"))
-    )
-    assert mismatches.count() == 0
-    # filtered search sees upserted vectors too
-    got = search_ivf_index(
-        spark, path, emb.where("vec_id < 5"), k=5, nprobe=4,
-        match_cols=("label",),
-    ).select("query_id", "neighbor_id", "rank")
-    assert _rows(got) == _rows(_brute_filtered(emb, same_label=True))
-    # refit rebuilds the layout and the metadata rides through
-    refit_ivf_index(spark, path, n_cells=4)
-    assert "label" in spark.read.parquet(
-        os.path.join(path, "vectors")
-    ).columns
-    # and delete still works on the meta-carrying layout
-    assert delete_ivf_ids(spark, path, [300])["deleted"] == 1
-
-
-def test_ivf_upsert_missing_meta_raises(spark, sf_dir, tmp_path):
-    emb = _emb(spark, sf_dir)
-    path = str(tmp_path / "ivf_miss")
-    build_ivf_index(emb.where("vec_id < 300"), path, n_cells=4,
-                    meta_cols=("label",))
+    path = str(tmp_path / "ivfpq_miss")
+    build_ivfpq_index(emb.where("vec_id < 300"), path, n_cells=4, m=8,
+                      kc=16, meta_cols=("label",))
     batch = emb.where("vec_id >= 300").select("vec_id", "embedding")
     with pytest.raises(Exception, match="label"):
-        upsert_ivf_index(spark, path, batch)
+        upsert_ivfpq_index(spark, path, batch)
 
 
 def test_ivfpq_static_where_equals_exact(spark, sf_dir, tmp_path):
@@ -167,6 +110,14 @@ def test_ivfpq_static_where_equals_exact(spark, sf_dir, tmp_path):
     ).select("query_id", "neighbor_id", "rank")
     want = _brute_filtered(emb, same_label=False, label=3)
     assert _rows(got) == _rows(want)
+    # and every returned neighbor really passes the predicate
+    layout = spark.read.parquet(os.path.join(path, "codes"))
+    bad = (
+        got.withColumnRenamed("neighbor_id", "vec_id")
+        .join(layout.select("vec_id", "label"), "vec_id")
+        .where("label != 3")
+    )
+    assert bad.count() == 0
 
 
 def test_ivfpq_meta_survives_upsert(spark, sf_dir, tmp_path):
@@ -195,3 +146,11 @@ def test_ivfpq_meta_survives_upsert(spark, sf_dir, tmp_path):
         shortlist=n, where="label = 3",
     ).select("query_id", "neighbor_id", "rank")
     assert _rows(got) == _rows(_brute_filtered(emb, same_label=False, label=3))
+    # so does the per-query equality
+    got = open_ivfpq_index(spark, path, emb).search(
+        emb.where("vec_id < 5"), k=5, nprobe=4, shortlist=n,
+        match_cols=("label",),
+    ).select("query_id", "neighbor_id", "rank")
+    assert _rows(got) == _rows(_brute_filtered(emb, same_label=True))
+    # and delete works on the meta-carrying layout
+    assert delete_ivfpq_ids(spark, path, [300])["deleted"] == 1

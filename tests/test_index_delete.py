@@ -2,12 +2,12 @@
 (reference parity: POST /delete-doc removes a document from BOTH
 stores — backend/main.py:443-486 SQLite + chroma_utils.py:174 Chroma;
 the engine's ingest.delete_document covers catalog+chunks, and these
-tests cover the three persistent index layouts: BM25 postings, IVF
-vectors, IVF+PQ codes).
+tests cover the two persistent index layouts: BM25 postings and IVF+PQ
+codes).
 
 The contract under test everywhere: after a delete, searches are
 row-identical to an index that NEVER contained the victims — stats
-(N, avgdl, df) re-derive from survivors, no stale posting/vector/code
+(N, avgdl, df) re-derive from survivors, no stale posting/code
 survives, emptied partitions don't serve stale files, and replays are
 no-ops.
 """
@@ -19,12 +19,6 @@ import os
 from pyspark.sql import functions as F
 
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load_table
-from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.ann_index import (
-    build_ivf_index,
-    delete_ivf_ids,
-    read_stats,
-    search_ivf_index,
-)
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.bm25 import (
     Bm25Searcher,
     build_bm25_index,
@@ -155,66 +149,6 @@ def test_bm25_upsert_skip_mode_unchanged(spark, sf_dir, tmp_path):
     ).count()
 
 
-# ---------------------------------------------------------------- IVF
-
-
-def test_ivf_delete_equals_fresh_build(spark, sf_dir, tmp_path):
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, n_cells=4)
-    n_cells = spark.read.parquet(os.path.join(path, "centroids")).count()
-    n0 = int(read_stats(spark, path)["cur_n"])
-
-    queries = emb.where("vec_id < 3").localCheckpoint(eager=True)
-    top = search_ivf_index(spark, path, queries, k=1, nprobe=n_cells)
-    victims = sorted({int(r["neighbor_id"]) for r in top.collect()})
-    assert victims
-
-    info = delete_ivf_ids(spark, path, victims)
-    assert info["deleted"] == len(victims)
-    assert info["cur_n"] == n0 - len(victims)
-    assert read_stats(spark, path)["cur_n"] == n0 - len(victims)
-
-    # exhaustive search (nprobe = all cells) over the deleted index is
-    # EXACT over its id set — must equal the same search on an index
-    # built from the survivors, regardless of the two quantizers
-    fresh_path = str(tmp_path / "ivf_fresh")
-    build_ivf_index(
-        emb.where(~F.col("vec_id").isin(victims)), fresh_path, n_cells=4
-    )
-    got = _rows(search_ivf_index(spark, path, queries, k=5, nprobe=n_cells))
-    want = _rows(
-        search_ivf_index(spark, fresh_path, queries, k=5, nprobe=n_cells)
-    )
-    assert got == want
-
-    # replay is a no-op
-    info2 = delete_ivf_ids(spark, path, victims)
-    assert info2["deleted"] == 0
-    assert read_stats(spark, path)["cur_n"] == n0 - len(victims)
-
-
-def test_ivf_delete_empties_whole_cell(spark, sf_dir, tmp_path):
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf_empty")
-    build_ivf_index(emb, path, n_cells=4)
-    vectors_path = os.path.join(path, "vectors")
-    vdf = spark.read.parquet(vectors_path)
-    n_before = vdf.count()  # captured BEFORE the delete: vdf's file
-    # index snapshots pre-delete files and must not be re-evaluated
-    cell = int(vdf.groupBy("cell").count().orderBy("count").first()["cell"])
-    victims = [
-        int(r["vec_id"]) for r in vdf.where(F.col("cell") == cell).collect()
-    ]
-    info = delete_ivf_ids(spark, path, victims)
-    assert info["deleted"] == len(victims)
-    after = spark.read.parquet(vectors_path)
-    # the emptied cell serves ZERO rows (stale files cleared), others
-    # are untouched
-    assert after.where(F.col("cell") == cell).count() == 0
-    assert after.count() == n_before - len(victims)
-
-
 # ------------------------------------------------------------- IVF+PQ
 
 
@@ -262,6 +196,27 @@ def test_ivfpq_delete_equals_fresh_build(spark, sf_dir, tmp_path):
 
     # replay is a no-op
     assert delete_ivfpq_ids(spark, path, victims)["deleted"] == 0
+
+
+def test_ivfpq_delete_empties_whole_cell(spark, sf_dir, tmp_path):
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivfpq_empty")
+    build_ivfpq_index(emb, path, n_cells=4, m=8, kc=16)
+    codes_path = os.path.join(path, "codes")
+    cdf = spark.read.parquet(codes_path)
+    n_before = cdf.count()  # captured BEFORE the delete: cdf's file
+    # index snapshots pre-delete files and must not be re-evaluated
+    cell = int(cdf.groupBy("cell").count().orderBy("count").first()["cell"])
+    victims = [
+        int(r["vec_id"]) for r in cdf.where(F.col("cell") == cell).collect()
+    ]
+    info = delete_ivfpq_ids(spark, path, victims)
+    assert info["deleted"] == len(victims)
+    after = spark.read.parquet(codes_path)
+    # the emptied cell serves ZERO rows (stale files cleared), others
+    # are untouched
+    assert after.where(F.col("cell") == cell).count() == 0
+    assert after.count() == n_before - len(victims)
 
 
 # ------------------------------------------------- streaming deletes
@@ -326,9 +281,9 @@ def test_stream_deletes_end_to_end(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     emb = load_table(spark, sf_dir, "embeddings")
     bm25_path = str(tmp_path / "bm25_e2e")
-    ivf_path = str(tmp_path / "ivf_e2e")
+    ivfpq_path = str(tmp_path / "ivfpq_e2e")
     build_bm25_index(docs, bm25_path, n_buckets=4)
-    build_ivf_index(emb, ivf_path, n_cells=4)
+    build_ivfpq_index(emb, ivfpq_path, n_cells=4, m=8, kc=16)
 
     req_dir = str(tmp_path / "reqs")
     victims = [0, 1, 2, 3]
@@ -343,7 +298,7 @@ def test_stream_deletes_end_to_end(spark, sf_dir, tmp_path):
         str(tmp_path / "e2e_ckpt"),
         [
             lambda s, ids: delete_bm25_docs(s, bm25_path, ids),
-            lambda s, ids: delete_ivf_ids(s, ivf_path, ids),
+            lambda s, ids: delete_ivfpq_ids(s, ivfpq_path, ids),
         ],
     )
     q.awaitTermination(120)
@@ -351,7 +306,7 @@ def test_stream_deletes_end_to_end(spark, sf_dir, tmp_path):
     assert spark.read.parquet(os.path.join(bm25_path, "doclens")).where(
         F.col("doc_id").isin(victims)
     ).count() == 0
-    assert spark.read.parquet(os.path.join(ivf_path, "vectors")).where(
+    assert spark.read.parquet(os.path.join(ivfpq_path, "codes")).where(
         F.col("vec_id").isin(victims)
     ).count() == 0
 
@@ -362,7 +317,7 @@ def test_purge_document_gate_all_pass(spark, sf_dir):
     )
 
     rows = purge_document_gate(spark, sf_dir).collect()
-    assert len(rows) == 10
+    assert len(rows) == 6
     assert all(r["passed"] for r in rows), [
         (r["check"], r["observed"], r["expected"])
         for r in rows

@@ -190,10 +190,15 @@ def test_png_pixels_grayscale_and_rgba():
 def test_png_pixels_palette():
     pal = bytes(range(48))  # 16 RGB entries
     idx = (np.arange(20, dtype=np.uint8) % 16).reshape(4, 5, 1)
-    dec = MM.decode_png_pixels(_encode_png(idx, 3, [0], palette=pal))
+    png = _encode_png(idx, 3, [0], palette=pal)
+    dec = MM.decode_png_pixels(png)
     assert dec is not None and dec.shape == (4, 5, 3)
     expect = np.frombuffer(pal, dtype=np.uint8).reshape(16, 3)[idx[:, :, 0]]
     assert (dec == expect).all()
+    # the feature row reports the decoded channels, matching its stats
+    row = dict(zip(MM.IMAGE_FEATURES_SCHEMA.names, MM._image_row(1, png)))
+    assert row["channels"] == 3
+    assert len(row["pixel_mean"]) == len(row["pixel_std"]) == 3
 
 
 def test_png_pixels_rejects_corrupt_and_16bit():

@@ -81,21 +81,21 @@ def test_upsert_replaces_moves_and_adds(spark, emb, tmp_path):
     PI.build_ivfpq_index(emb, path, n_cells=8, m=8, kc=32)
 
     # a brand-new id, an updated id (vector changed -> may move cells),
-    # and a zero-norm quarantine row
+    # and zero-norm and NULL quarantine rows
     moved = emb.where("vec_id = 7").select(
         "vec_id", F.transform(F.col("embedding"), lambda x: -x).alias("embedding")
     )
     new = spark.createDataFrame(
-        [(999_999, [0.5] * 64), (999_998, [0.0] * 64)],
+        [(999_999, [0.5] * 64), (999_998, [0.0] * 64), (999_997, None)],
         "vec_id long, embedding array<float>",
     )
     res = PI.upsert_ivfpq_index(spark, path, moved.unionByName(new))
-    assert res["added"] == 1 and res["replaced"] == 1 and res["skipped"] == 1
+    assert res["added"] == 1 and res["replaced"] == 1 and res["skipped"] == 2
 
     codes = spark.read.parquet(path + "/codes")
     assert codes.where("vec_id = 7").count() == 1   # no stale duplicate
     assert codes.where("vec_id = 999999").count() == 1
-    assert codes.where("vec_id = 999998").count() == 0
+    assert codes.where("vec_id IN (999998, 999997)").count() == 0
     # total = original corpus + 1 added
     assert codes.count() == emb.count() + 1
 

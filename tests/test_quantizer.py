@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load_table
-from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators import ann_index
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators import knn as KNN
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators import pq as PQ
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators import pq_index
@@ -48,17 +47,8 @@ def test_fit_is_deterministic(emb):
 
 @pytest.mark.parametrize("n_cells", [8, 40])
 def test_ivf_build_and_upsert_assign_the_same_cell(spark, emb, tmp_path, n_cells):
-    path = str(tmp_path / "ivf")
-    ann_index.build_ivf_index(emb, path, n_cells=n_cells)
-    built = _cells(spark, path + "/vectors")
-    info = ann_index.upsert_ivf_index(spark, path, emb.where("vec_id % 3 = 0"))
-    assert info["added"] == 0 and info["replaced"] > 0
-    assert _cells(spark, path + "/vectors") == built
-
-
-def test_ivfpq_build_and_upsert_assign_the_same_cell(spark, emb, tmp_path):
     path = str(tmp_path / "ivfpq")
-    pq_index.build_ivfpq_index(emb, path, n_cells=8, m=8, kc=16)
+    pq_index.build_ivfpq_index(emb, path, n_cells=n_cells, m=8, kc=16)
     built = _cells(spark, path + "/codes")
     info = pq_index.upsert_ivfpq_index(spark, path, emb.where("vec_id % 3 = 0"))
     assert info["added"] == 0 and info["replaced"] > 0
@@ -76,25 +66,27 @@ def _zero_and_empty_queries(spark):
 def test_ivf_searches_return_nothing_for_empty_or_zero_norm_queries(
     spark, emb, tmp_path
 ):
-    path = str(tmp_path / "ivf")
-    ann_index.build_ivf_index(emb, path, n_cells=4)
+    path = str(tmp_path / "ivfpq")
+    pq_index.build_ivfpq_index(emb, path, n_cells=4, m=8, kc=16)
+    searcher = pq_index.open_ivfpq_index(spark, path, emb)
     for q in _zero_and_empty_queries(spark):
         assert KNN.knn_ivf(emb, q, k=3, n_clusters=4, nprobe=2).collect() == []
-        assert ann_index.search_ivf_index(spark, path, q, k=3, nprobe=2).collect() == []
+        assert searcher.search(q, k=3, nprobe=2).collect() == []
 
 
 @pytest.mark.parametrize("n_cells", [8, 40])
 def test_nprobe_one_probes_the_stored_vectors_cell(spark, emb, tmp_path, n_cells):
-    path = str(tmp_path / "ivf")
-    ann_index.build_ivf_index(emb, path, n_cells=n_cells)
-    stored = _cells(spark, path + "/vectors")
-    qu, qids = KNN._prep_queries(emb, "vec_id", "embedding")
-    probe, _ = KNN._probe_df(spark, qu, qids, KNN.read_centroids(spark, path), 1)
+    path = str(tmp_path / "ivfpq")
+    pq_index.build_ivfpq_index(emb, path, n_cells=n_cells, m=8, kc=16)
+    stored = _cells(spark, path + "/codes")
+    q = KNN._prep_queries(emb, "vec_id", "embedding")
+    probe, _ = KNN._probe_df(spark, q, KNN.read_centroids(spark, path), 1)
     probed = {int(r["query_id"]): int(r["cell"]) for r in probe.collect()}
     assert probed == stored
     # end to end: every hit of an nprobe=1 search lies in the query's cell
-    q = emb.where("vec_id < 5")
-    hits = ann_index.search_ivf_index(spark, path, q, k=5, nprobe=1).collect()
+    hits = pq_index.open_ivfpq_index(spark, path, emb).search(
+        emb.where("vec_id < 5"), k=5, nprobe=1
+    ).collect()
     assert hits
     assert all(stored[r["neighbor_id"]] == stored[r["query_id"]] for r in hits)
 

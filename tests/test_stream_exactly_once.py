@@ -6,7 +6,6 @@ replayed COMPLETED batch with bit-identical final state.
 Maintainers and their mechanism:
 - HLL rollup            epoch marker (tests/test_rollup.py)
 - streaming heavy hitters  last_epoch skip (tests/test_stream_freq.py)
-- IVF index stream      replace-by-id upsert (naturally idempotent)
 - IVF+PQ index stream   replace-by-id upsert (naturally idempotent)
 - BM25 index stream     doclens-membership anti-join (skip existing)
 - incremental components  replayed edges condense to self-loops
@@ -25,33 +24,6 @@ from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.catalog import load
 def _vec_state(spark, path, sub):
     rows = spark.read.parquet(os.path.join(path, sub)).collect()
     return sorted(sorted(r.asDict().items()) for r in (row for row in rows))
-
-
-def test_ivf_upsert_replay_is_idempotent(spark, sf_dir, tmp_path):
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.operators.ann_index import (
-        build_ivf_index,
-        read_stats,
-        upsert_ivf_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb.where("vec_id < 400"), path, n_cells=4)
-    batch = emb.where("vec_id >= 400").select(
-        "vec_id", "embedding"
-    ).localCheckpoint(eager=True)
-
-    info1 = upsert_ivf_index(spark, path, batch)
-    state1 = _vec_state(spark, path, "vectors")
-    stats1 = read_stats(spark, path)
-    assert info1["added"] > 0
-
-    # the redelivered (completed) batch
-    info2 = upsert_ivf_index(spark, path, batch)
-    assert info2["added"] == 0
-    assert info2["replaced"] == info1["added"]
-    assert _vec_state(spark, path, "vectors") == state1
-    assert read_stats(spark, path) == stats1
 
 
 def test_ivfpq_upsert_replay_is_idempotent(spark, sf_dir, tmp_path):
