@@ -47,8 +47,25 @@ def test_fit_is_deterministic(emb):
 
 @pytest.mark.parametrize("n_cells", [8, 40])
 def test_ivf_build_and_upsert_assign_the_same_cell(spark, emb, tmp_path, n_cells):
+    # the inline IVF assignment (knn_ivf's with_cells) on the stored
+    # centroids agrees with the cells the index build and upsert store
     path = str(tmp_path / "ivfpq")
     pq_index.build_ivfpq_index(emb, path, n_cells=n_cells, m=8, kc=16)
+    inline = {
+        int(r["vec_id"]): int(r["cell"])
+        for r in KNN.with_cells(emb, KNN.read_centroids(spark, path))
+        .select("vec_id", "cell")
+        .collect()
+    }
+    assert _cells(spark, path + "/codes") == inline
+    info = pq_index.upsert_ivfpq_index(spark, path, emb.where("vec_id % 3 = 0"))
+    assert info["added"] == 0 and info["replaced"] > 0
+    assert _cells(spark, path + "/codes") == inline
+
+
+def test_ivfpq_build_and_upsert_assign_the_same_cell(spark, emb, tmp_path):
+    path = str(tmp_path / "ivfpq")
+    pq_index.build_ivfpq_index(emb, path, n_cells=8, m=8, kc=16)
     built = _cells(spark, path + "/codes")
     info = pq_index.upsert_ivfpq_index(spark, path, emb.where("vec_id % 3 = 0"))
     assert info["added"] == 0 and info["replaced"] > 0
