@@ -30,8 +30,6 @@ Invariants (property-tested in tests/test_splitter.py):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -144,8 +142,12 @@ def split_documents(
     """Document → chunk rows with the reference's ordinal metadata
     (chunk_index, total_chunks; backend/chroma_utils.py:119-125).
 
-    posexplode provides the ordinal without a window; total_chunks comes
-    from the array size (computed before exploding — no second pass).
+    posexplode_outer provides the ordinal without a window, and
+    total_chunks is the array's size read in the same projection, so the
+    splitter UDF runs once per document. The outer form plus a NOT NULL
+    position filter keeps exactly the rows a plain posexplode would: a
+    plain posexplode lets Catalyst infer ``size(_chunks) > 0`` below the
+    UDF's projection, and that filter carries a second copy of the UDF.
     ``keep_cols`` are carried through unchanged (lineage columns like the
     file-level document id or source filename).
     """
@@ -157,8 +159,9 @@ def split_documents(
             F.col(id_col).alias("doc_id"),
             *keep_cols,
             "total_chunks",
-            F.posexplode("_chunks").alias("chunk_index", "_c"),
+            F.posexplode_outer("_chunks").alias("chunk_index", "_c"),
         )
+        .where(F.col("chunk_index").isNotNull())
         .select(
             "doc_id",
             *keep_cols,

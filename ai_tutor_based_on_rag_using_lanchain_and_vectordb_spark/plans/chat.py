@@ -16,6 +16,7 @@ from ..functions import text as TX
 from ..operators import embed as EMB
 from ..operators import knn as KNN
 from ..operators import splitter as SPL
+from ..session import pin
 
 RETRIEVER_K = 2  # reference backend/config.py:34
 
@@ -24,11 +25,15 @@ def build_chunk_index(
     spark: SparkSession, sf_dir: str, chunk_size: int = 300, chunk_overlap: int = 60
 ) -> tuple[DataFrame, DataFrame]:
     """documents → (chunks, vectors): the /upload-doc indexing path
-    (backend/chroma_utils.py:97-144) on the fixture corpus."""
+    (backend/chroma_utils.py:97-144) on the fixture corpus. The chunk
+    table is pinned: the vectors and the chat's context join both read
+    it, and each would otherwise run the splitter UDF again."""
     docs = load_table(spark, sf_dir, "documents")
-    chunks = SPL.split_documents(
-        docs, text_col="text", id_col="doc_id", size=chunk_size, overlap=chunk_overlap
-    ).withColumn("chunk_id", F.xxhash64("doc_id", "chunk_index"))
+    chunks = pin(
+        SPL.split_documents(
+            docs, text_col="text", id_col="doc_id", size=chunk_size, overlap=chunk_overlap
+        ).withColumn("chunk_id", F.xxhash64("doc_id", "chunk_index"))
+    )
     vectors = EMB.embed_documents(chunks, text_col="page_content", id_col="chunk_id")
     return chunks, vectors
 

@@ -8,6 +8,10 @@ equivalence).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,6 +26,15 @@ from . import chat
 
 
 PIPE_QUALITY_TAU = 0.5
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh local directory for a gate's layouts or staged files,
+    removed at process exit: the gate returns a lazy frame that still
+    reads it, so it cannot be removed on return."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def curation_pipeline_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,15 +923,13 @@ def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe → filter → ADC → re-rank) carries Q(knn_label_filtered)'s
     DuckDB oracle verbatim. Pruned+filtered recall is gated separately
     in Q(knn_ivf_filtered_recall)."""
-    import tempfile
-
     from ..functions import vector as V
     from ..operators.pq_index import build_ivfpq_index, open_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
-    path = tempfile.mkdtemp(prefix="ivf_filtered_")
+    path = _scratch_dir("ivf_filtered_")
     build_ivfpq_index(emb, path, n_cells=8, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
     n = emb.count()  # bounded collect: one scalar, exhaustive shortlist
@@ -947,15 +958,13 @@ def knn_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) reduces the composition to the exact filtered ranking, so
     the filter+probe+ADC+re-rank chain is driver-oracle-checked end to
     end."""
-    import tempfile
-
     from ..functions import vector as V
     from ..operators.pq_index import build_ivfpq_index, search_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
-    path = tempfile.mkdtemp(prefix="ivfpq_filtered_")
+    path = _scratch_dir("ivfpq_filtered_")
     build_ivfpq_index(emb, path, n_cells=4, m=8, kc=16, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
     n = emb.count()  # bounded collect: one scalar, exhaustive shortlist
@@ -979,8 +988,6 @@ def knn_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly when cell pruning could silently collapse a filtered
     result. In-plan-guarded; rows-only (k-means cells aren't
     SQL-expressible)."""
-    import tempfile
-
     from ..functions import vector as V
     from ..operators.pq_index import build_ivfpq_index, open_ivfpq_index
     from .vectors import knn_label_filtered
@@ -988,7 +995,7 @@ def knn_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
-    path = tempfile.mkdtemp(prefix="ivf_filtered_rc_")
+    path = _scratch_dir("ivf_filtered_rc_")
     build_ivfpq_index(emb, path, n_cells=8, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
     approx = open_ivfpq_index(spark, path, emb).search(
@@ -1230,10 +1237,6 @@ def warc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet: every doc_id/lang/text must survive the
     encode→gzip→parse→decode trip byte-exactly, so this is a true
     non-self-referential check of both the writer and the parser."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources import warc as W
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1241,8 +1244,7 @@ def warc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correctness fixture sized to the driver-check SF, not a production
     # path (production reads crawl segments in place). Removed at
     # process exit so the returned lazy frame stays valid.
-    out_dir = tempfile.mkdtemp(prefix="warc_rt_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = _scratch_dir("warc_rt_")
     W.write_warc_shards(docs, out_dir, n_shards=4, shard_key="doc_id")
     return W.wet_documents(spark, out_dir).select("doc_id", "lang", "text")
 
@@ -1302,18 +1304,13 @@ def domain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes host/domain/cap from the ORIGINAL parquet +
     the same URI synthesis in pure SQL — so the WARC round-trip, the
     URI plumbing, and the curation expressions are all under test."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..functions.url import registrable_domain, url_host
     from ..sources import warc as W
 
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "url", _curation_url_col()
     )
-    out_dir = tempfile.mkdtemp(prefix="warc_cur_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = _scratch_dir("warc_cur_")
     W.write_warc_shards(docs, out_dir, n_shards=4, shard_key="doc_id",
                         url_col="url")
     landed = W.wet_documents(spark, out_dir, with_uri=True)
@@ -1451,8 +1448,6 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Driver-side collects are all bounded: the 1-row victim picks and
     the Q·k ≤ 30-row search results being compared."""
-    import tempfile
-
     from ..operators.bm25 import (
         Bm25Searcher,
         build_bm25_index,
@@ -1473,7 +1468,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {tuple(str(v) for v in r) for r in df.collect()}
 
     # ---------------- BM25 postings/doclens ----------------
-    bp = tempfile.mkdtemp(prefix="purge_bm25_")
+    bp = _scratch_dir("purge_bm25_")
     build_bm25_index(docs, bp, n_buckets=8)
     victim = int(
         Bm25Searcher(spark, bp)
@@ -1482,7 +1477,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     info = delete_bm25_docs(spark, bp, [victim])
     rows.append(("bm25_victim_deleted", info["deleted_docs"], 1))
-    bf = tempfile.mkdtemp(prefix="purge_bm25f_")
+    bf = _scratch_dir("purge_bm25f_")
     build_bm25_index(docs.where(F.col("doc_id") != victim), bf, n_buckets=8)
     got = _rowset(Bm25Searcher(spark, bp).search(BM25_QUERIES, k=10))
     want = _rowset(Bm25Searcher(spark, bf).search(BM25_QUERIES, k=10))
@@ -1498,7 +1493,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append(("bm25_victim_forgotten", int(leftovers), 0))
 
     # ---------------- IVF+PQ codes ----------------
-    pp = tempfile.mkdtemp(prefix="purge_pq_")
+    pp = _scratch_dir("purge_pq_")
     build_ivfpq_index(emb, pp, n_cells=4, m=8, kc=16)
     queries = pin(emb.where(F.col("vec_id") < 3), eager=True)
     n_emb = emb.count()
@@ -1509,7 +1504,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pinfo = delete_ivfpq_ids(spark, pp, [v_pq])
     rows.append(("ivfpq_victim_deleted", pinfo["deleted"], 1))
-    pf = tempfile.mkdtemp(prefix="purge_pqf_")
+    pf = _scratch_dir("purge_pqf_")
     surv = pin(emb.where(F.col("vec_id") != v_pq), eager=True)
     build_ivfpq_index(surv, pf, n_cells=4, m=8, kc=16)
     got = _rowset(

@@ -2,22 +2,33 @@
 (backend/main.py:305-427) as one declarative dataflow:
 
     binaryFile scan
-      → validation filters (extension P5, size P6, MIME P8, name F2)
+      → validation (extension P5, size P6, MIME P8, name F2)
       → sha-256 content hash (F1)
-      → dedup anti-join vs catalog (J2 — the UNIQUE(file_hash) gate)
+      → in-batch dedup window + catalog gate (J2 — the UNIQUE(file_hash) gate)
+      → one pinned per-file classification frame
       → page decode (S1-S3) → recursive split (F18) + ordinals (W4)
       → deterministic embed → chunk + vector tables
 
 Differences from the reference, by design (SURVEY.md §4.5):
-- per-row ValueError on duplicate → set-based anti-join + a
-  `rejected` side-output carrying the reason (batch semantics),
+- per-row ValueError on duplicate → a per-file ``reason`` column and a
+  ``rejected`` side-output carrying it (batch semantics),
 - manual rollback (main.py:399-405) → single-job atomicity: outputs
   are only written after the whole plan succeeds.
 
-At scale: validations are scan-side filters (pushed to the file list /
-parquet footer where possible); the catalog anti-join broadcasts the
-catalog's hash column; everything downstream is map-only until the
-vector write.
+Evaluate once: every file is scanned, MIME-sniffed and hashed in one
+classification frame, pinned once through ``session.pin``; ``rejected``,
+``accepted``, ``catalog_rows`` and the chunks all read that pin, so no
+action re-runs the scan or the sniff UDF, and the decode and split UDFs
+each see a fresh file (page) once. The pin keeps ``content`` only for
+accepted files, so a rejected payload (an oversize upload, say) is read
+by the scan and never stored. The pin is lazy, but under AQE its RDD is
+planned when ``ingest()`` is called, which runs the in-batch window's
+shuffle stage (scan, sniff, hash) right then, as one Spark job.
+
+At scale: the scan, sniff and hash are map-side; the in-batch dedup
+window is one hash shuffle on ``file_hash``; the catalog gate
+broadcasts the catalog's distinct hash column; after the pin,
+everything up to the vector write is map-only.
 """
 
 from __future__ import annotations
@@ -30,7 +41,8 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..operators import embed as EMB
 from ..operators import splitter as SPL
-from .loaders import decode_pages_udf, read_binary_documents, sniff_mime_udf
+from ..session import pin
+from .loaders import EXPECTED_MIME, decode_pages_udf, read_binary_documents, sniff_mime_udf
 
 MAX_FILE_SIZE_MB = 10  # reference backend/config.py:26
 
@@ -42,42 +54,68 @@ class IngestResult:
     catalog_rows: DataFrame
     chunks: DataFrame
     vectors: DataFrame
+    files: DataFrame  # the pinned per-file classification the others read
     summaries: dict = field(default_factory=dict)
 
 
-def validate_files(files: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P5/P6/P8/F2 validation; returns (valid, rejected-with-reason)."""
-    sanitized = files.withColumn("filename", TX.sanitize_filename(F.col("path")))
-    checked = (
-        sanitized.withColumn("suffix", TX.file_suffix(F.col("filename")))
-        .withColumn("mime", sniff_mime_udf(F.substring(F.col("content"), 1, 64)))
-        .withColumn(
-            "reason",
-            F.when(
-                ~TX.has_allowed_extension(F.col("filename")),
-                F.lit("unsupported_extension"),
-            )
-            .when(
-                F.col("file_size") > MAX_FILE_SIZE_MB * 1024 * 1024,
-                F.lit("file_too_large"),
-            )
-            .when(F.col("file_size") == 0, F.lit("empty_file"))
-            # MIME check is fail-open like the reference
-            # (backend/file_utils.py:115-121): reject only a positive
-            # mismatch between sniffed mime and extension expectation
-            .when(
-                (F.col("suffix") == ".pdf") & (F.col("mime") != "application/pdf"),
-                F.lit("mime_mismatch"),
-            )
-            .when(
-                (F.col("suffix") == ".docx") & (F.col("mime") != "application/zip"),
-                F.lit("mime_mismatch"),
-            ),
-        )
+def _expected_mime(suffix: F.Column) -> F.Column:
+    """The one MIME a suffix must sniff as, NULL where none is checked."""
+    out = F.lit(None).cast("string")
+    for ext, mime in EXPECTED_MIME.items():
+        out = F.when(suffix == ext, F.lit(mime)).otherwise(out)
+    return out
+
+
+def _classify(spark: SparkSession, path_glob: str, catalog: DataFrame | None) -> DataFrame:
+    """One row per file: path, filename, suffix, file_size,
+    upload_timestamp, file_hash, reason (NULL = accepted) and content
+    (accepted files only). Reasons in precedence order: the validation
+    reasons, then ``duplicate_in_batch`` (every copy of a hash but the
+    lexicographically first path), then ``already_uploaded`` (the first
+    copy, when the catalog holds its hash)."""
+    files = read_binary_documents(spark, path_glob)
+    named = files.withColumn("filename", TX.sanitize_filename(F.col("path"))).withColumn(
+        "suffix", TX.file_suffix(F.col("filename"))
     )
-    valid = checked.where(F.col("reason").isNull()).drop("reason")
-    rejected = checked.where(F.col("reason").isNotNull()).select("path", "reason")
-    return valid, rejected
+    mime = sniff_mime_udf(F.substring(F.col("content"), 1, 64))
+    invalid = (
+        F.when(~TX.has_allowed_extension(F.col("filename")), F.lit("unsupported_extension"))
+        .when(F.col("file_size") > MAX_FILE_SIZE_MB * 1024 * 1024, F.lit("file_too_large"))
+        .when(F.col("file_size") == 0, F.lit("empty_file"))
+        # MIME check is fail-open like the reference
+        # (backend/file_utils.py:115-121): reject only a positive
+        # mismatch between sniffed mime and extension expectation
+        .when(mime != _expected_mime(F.col("suffix")), F.lit("mime_mismatch"))
+    )
+    # an invalid file drops its payload here, before the dedup shuffle,
+    # and carries no hash
+    valid = F.col("reason").isNull()
+    checked = (
+        named.withColumn("reason", invalid)
+        .withColumn("content", F.when(valid, F.col("content")))
+        .withColumn("file_hash", F.when(valid, TX.file_hash(F.col("content"))))
+    )
+    # in-batch dedup keeps the lexicographically-first path; an invalid
+    # file is its own window partition (keyed by path), so rejects do
+    # not pile into one NULL-hash task
+    copy_no = F.row_number().over(
+        Window.partitionBy(F.coalesce("file_hash", "path")).orderBy("path")
+    )
+    reason = F.coalesce(F.col("reason"), F.when(copy_no > 1, F.lit("duplicate_in_batch")))
+    if catalog is not None:
+        known = catalog.select("file_hash").distinct().withColumn("_known", F.lit(True))
+        checked = checked.join(F.broadcast(known), "file_hash", "left")
+        reason = F.coalesce(reason, F.when(F.col("_known"), F.lit("already_uploaded")))
+    return checked.withColumn("reason", reason).select(
+        "path",
+        "filename",
+        "suffix",
+        "file_size",
+        "upload_timestamp",
+        "file_hash",
+        "reason",
+        F.when(F.col("reason").isNull(), F.col("content")).alias("content"),
+    )
 
 
 def ingest(
@@ -88,31 +126,8 @@ def ingest(
     chunk_overlap: int = 200,
     embedding_dim: int = EMB.DEFAULT_DIM,
 ) -> IngestResult:
-    files = read_binary_documents(spark, path_glob)
-    valid, rejected = validate_files(files)
-
-    hashed = valid.withColumn("file_hash", TX.file_hash(F.col("content")))
-    # in-batch dedup first (keep lexicographically-first path), then the
-    # catalog anti-join (J2)
-    in_batch_first = hashed.withColumn(
-        "_rn",
-        F.row_number().over(Window.partitionBy("file_hash").orderBy("path")),
-    )
-    dup_in_batch = in_batch_first.where(F.col("_rn") > 1).select(
-        "path", F.lit("duplicate_in_batch").alias("reason")
-    )
-    unique_batch = in_batch_first.where(F.col("_rn") == 1).drop("_rn")
-    if catalog is not None:
-        already = unique_batch.join(
-            F.broadcast(catalog.select("file_hash")), "file_hash", "left_semi"
-        ).select("path", F.lit("already_uploaded").alias("reason"))
-        fresh = unique_batch.join(
-            F.broadcast(catalog.select("file_hash")), "file_hash", "left_anti"
-        )
-        rejected = rejected.unionByName(dup_in_batch).unionByName(already)
-    else:
-        fresh = unique_batch
-        rejected = rejected.unionByName(dup_in_batch)
+    files = pin(_classify(spark, path_glob, catalog))
+    fresh = files.where(F.col("reason").isNull())
 
     catalog_rows = fresh.select(
         F.xxhash64("file_hash").alias("id"),
@@ -123,18 +138,23 @@ def ingest(
         "upload_timestamp",
     )
 
-    pages = fresh.withColumn(
-        "pages", decode_pages_udf(F.col("path"), F.col("content"))
-    ).select(
-        F.xxhash64("file_hash").alias("doc_id"),
-        F.col("filename").alias("source_file"),
-        F.posexplode("pages").alias("page_no", "page_text"),
+    # posexplode_outer + a NOT NULL position keeps exactly the rows
+    # posexplode would, without the non-empty filter Catalyst infers
+    # under a plain posexplode (a second copy of the decode UDF)
+    pages = (
+        fresh.select(
+            F.xxhash64("file_hash").alias("file_doc_id"),
+            F.col("filename").alias("source_file"),
+            F.posexplode_outer(decode_pages_udf(F.col("path"), F.col("content"))).alias(
+                "page_no", "page_text"
+            ),
+        )
+        .where(F.col("page_no").isNotNull())
+        .withColumn("page_doc_id", F.xxhash64(F.col("file_doc_id"), F.col("page_no")))
     )
     chunks = (
         SPL.split_documents(
-            pages.withColumn(
-                "page_doc_id", F.xxhash64(F.col("doc_id"), F.col("page_no"))
-            ).withColumnRenamed("doc_id", "file_doc_id"),
+            pages,
             text_col="page_text",
             id_col="page_doc_id",
             size=chunk_size,
@@ -152,10 +172,11 @@ def ingest(
     )
     return IngestResult(
         accepted=fresh.select("path", "filename", "file_hash", "file_size"),
-        rejected=rejected,
+        rejected=files.where(F.col("reason").isNotNull()).select("path", "reason"),
         catalog_rows=catalog_rows,
         chunks=chunks,
         vectors=vectors,
+        files=files,
     )
 
 

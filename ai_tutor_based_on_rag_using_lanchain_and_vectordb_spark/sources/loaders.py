@@ -19,7 +19,6 @@ the binary head — fail-open like the reference.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -38,10 +37,11 @@ MAGIC_MIME = {
     b"\x1f\x8b": "application/gzip",
 }
 
+# the sniffed mime a suffix must match; suffixes not listed (.html) are
+# not MIME-checked, fail-open like the reference
 EXPECTED_MIME = {
-    ".pdf": ("application/pdf",),
-    ".docx": ("application/zip",),
-    ".html": ("text/html", "text/plain"),
+    ".pdf": "application/pdf",
+    ".docx": "application/zip",  # docx is a zip container
 }
 
 
@@ -180,20 +180,5 @@ def read_binary_documents(spark: SparkSession, path_glob: str) -> DataFrame:
             F.col("length").alias("file_size"),
             F.col("modificationTime").alias("upload_timestamp"),
             F.col("content"),
-        )
-    )
-
-
-def load_documents(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Files → one row per page with ordinals (posexplode = the per-page
-    Document fan-out of PyPDFLoader, chroma_utils.py:74)."""
-    files = read_binary_documents(spark, path_glob)
-    return (
-        files.withColumn("pages", decode_pages_udf(F.col("path"), F.col("content")))
-        .select(
-            "path",
-            "file_size",
-            "upload_timestamp",
-            F.posexplode("pages").alias("page_no", "page_text"),
         )
     )

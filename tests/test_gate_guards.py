@@ -4,11 +4,17 @@ fail the driver's own collect, not just pytest."""
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import types
+
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import SparkRuntimeException
 
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark import plans
+from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans import pipeline as PL
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans.guards import (
     guard_passed,
 )
@@ -60,3 +66,35 @@ def test_registry_wires_guards_over_gate_queries(spark, sf_dir):
     # its schema is the unguarded schema
     rows = reg["gk_quantile_gate"](spark, sf_dir).collect()
     assert rows and all(r["passed"] for r in rows)
+
+
+# Gates that build index layouts or stage files in local scratch dirs
+# and return lazy frames over them: each dir must be registered for
+# removal at process exit, or every registry run leaks its layouts.
+SCRATCH_GATES = [
+    "knn_ivf_filtered",
+    "knn_ivfpq_filtered",
+    "knn_ivf_filtered_recall",
+    "purge_document_gate",
+    "warc_roundtrip_docs",
+    "domain_curation",
+]
+
+
+@pytest.mark.parametrize("name", SCRATCH_GATES)
+def test_gate_registers_scratch_dir_cleanup(spark, sf_dir, monkeypatch, name):
+    made, registered = [], []
+
+    def mkdtemp(**kw):
+        made.append(tempfile.mkdtemp(**kw))
+        return made[-1]
+
+    def register(fn, *args, **kw):
+        registered.append((fn, args))
+        return atexit.register(fn, *args, **kw)
+
+    monkeypatch.setattr(PL, "tempfile", types.SimpleNamespace(mkdtemp=mkdtemp))
+    monkeypatch.setattr(PL, "atexit", types.SimpleNamespace(register=register))
+    plans.all_queries()[name](spark, sf_dir)
+    assert made, f"{name} made no scratch dir"
+    assert all((shutil.rmtree, (d,)) in registered for d in made), (made, registered)

@@ -3,6 +3,8 @@ fan-out, delete flow."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,3 +97,35 @@ def test_delete_document_null_safe(spark):
     # NULL-keyed rows must survive the delete, not vanish via 3VL
     assert [r["filename"] for r in new_cat.collect()] == ["orphan.html"]
     assert [r["chunk_id"] for r in new_chunks.collect()] == [11]
+
+
+def test_reason_precedence_and_pinned_payloads(spark, tmp_path):
+    page = b"<!DOCTYPE html><html><body><p>" + b"known lecture notes. " * 60 + b"</p></body></html>"
+    (tmp_path / "a_known.html").write_bytes(page)
+    (tmp_path / "b_known_copy.html").write_bytes(page)
+    (tmp_path / "c_new.html").write_bytes(page.replace(b"known", b"fresh"))
+    (tmp_path / "d_bad.pdf").write_bytes(b"NOTAPDF" + b"y" * 50)
+    (tmp_path / "e_script.exe").write_bytes(page)  # same bytes, wrong type
+    # the catalog lists the known hash twice: a catalog row set, not a key
+    catalog = spark.createDataFrame(
+        [(hashlib.sha256(page).hexdigest(),)] * 2, "file_hash string"
+    )
+    res = ING.ingest(spark, str(tmp_path) + "/*", catalog=catalog)
+    rej = {r["path"].rsplit("/", 1)[-1]: r["reason"] for r in res.rejected.collect()}
+    # a copy that is both a batch duplicate and cataloged reports the
+    # batch duplicate; the lexicographically-first copy the catalog hit;
+    # validation outranks both
+    assert rej == {
+        "a_known.html": "already_uploaded",
+        "b_known_copy.html": "duplicate_in_batch",
+        "d_bad.pdf": "mime_mismatch",
+        "e_script.exe": "unsupported_extension",
+    }
+    accepted = [r["path"].rsplit("/", 1)[-1] for r in res.accepted.collect()]
+    assert accepted == ["c_new.html"]
+    # rejected ∪ accepted is the input file set, each file once
+    assert sorted(list(rej) + accepted) == sorted(p.name for p in tmp_path.iterdir())
+    # the pinned classification keeps a payload only for accepted files
+    kept = {r["filename"] for r in res.files.where(F.col("content").isNotNull()).collect()}
+    assert kept == {"c_new.html"}
+    assert res.files.count() == 5

@@ -7,7 +7,9 @@ the build brief, frozen as tests.
 
 from __future__ import annotations
 
+import collections
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -190,11 +192,13 @@ def test_scaled_tables_still_broadcast_at_bench_scale(spark, sf_dir):
 
 
 def test_entire_registry_has_no_cartesian_or_row_python(spark, sf_dir):
-    # Registry-wide freeze (one pass, all 98 queries): no plan may
-    # contain a CartesianProduct (unbounded pair blowup at scale) or
+    # Registry-wide freeze (one pass, every registered query): no plan
+    # may contain a CartesianProduct (unbounded pair blowup at scale) or
     # BatchEvalPython (row-at-a-time Python UDF — the slow path the
     # engine is designed to avoid; Arrow stages show as *InPandas
-    # nodes, which are allowed).
+    # nodes, which are allowed). A query with an *EvalPython node must
+    # be listed in PYTHON_NODE_QUERIES, where the executed-plan UDF
+    # guard below runs it, and may not evaluate a UDF twice.
     flagged = []
     for name, fn in plans.all_queries().items():
         p = _plan(fn(spark, sf_dir))
@@ -202,7 +206,135 @@ def test_entire_registry_has_no_cartesian_or_row_python(spark, sf_dir):
             flagged.append((name, "CartesianProduct"))
         if "BatchEvalPython" in p:
             flagged.append((name, "BatchEvalPython"))
+        udfs = _eval_python_udfs(p)
+        if udfs and name not in PYTHON_NODE_QUERIES:
+            flagged.append((name, "unlisted EvalPython"))
+        if any(n > 1 for n in udfs.values()):
+            flagged.append((name, dict(udfs)))
     assert not flagged, flagged
+
+
+# Evaluate once: a Python UDF in two *EvalPython nodes of one plan runs
+# twice per row. Catalyst makes such copies when it substitutes a UDF
+# column into a pushed-down or inferred filter (e.g. the size(x) > 0 it
+# infers under a plain posexplode).
+
+# The registered queries whose plans hold an *EvalPython node (the
+# registry sweep above keeps this list complete). rag_chat_answers
+# reads its splitter output through a pin, so its plan has none.
+PYTHON_NODE_QUERIES = [
+    "doc_compression_ratio",
+    "recursive_chunks",
+    "splitter_invariants",
+]
+
+
+def _split_top(args: str) -> list[str]:
+    """Split ``a(x, y)#1, b(z)#2`` on its top-level commas."""
+    out, depth, cur = [], 0, ""
+    for ch in args:
+        depth += (ch in "([") - (ch in ")]")
+        if ch == "," and depth == 0:
+            out.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    return out + [cur.strip()] if cur.strip() else out
+
+
+def _eval_python_udfs(plan: str) -> collections.Counter:
+    """UDF name → number of *EvalPython nodes evaluating it, in a
+    formatted plan. Of an adaptive plan only the final (or current)
+    tree counts; its initial plan repeats the same nodes."""
+    tree, _, details = plan.partition("\n\n\n")
+    tree = tree.split("== Initial Plan ==")[0]
+    ids = set(re.findall(r"\w*EvalPython \((\d+)\)", tree))
+    got: collections.Counter = collections.Counter()
+    for node_id, args in re.findall(
+        r"^\((\d+)\) \w*EvalPython\n(?:.*\n)*?Arguments: \[(.*)\], \[", details, re.M
+    ):
+        if node_id in ids:
+            got.update({u.split("(", 1)[0] for u in _split_top(args)})
+    return got
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Runs ``action`` and returns the formatted physical plan of each
+    SQL execution it started, as Spark's SQL status store keeps it
+    (AQE's final plan once the execution ends)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    seen = {e.executionId() for e in executions()}
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() not in seen]
+
+
+def test_udf_counter_reads_final_plan_only():
+    plan = (
+        "== Physical Plan ==\nAdaptiveSparkPlan (9)\n+- == Final Plan ==\n"
+        "   ArrowEvalPython (3)\n   +- ArrowEvalPython (2)\n"
+        "+- == Initial Plan ==\n   ArrowEvalPython (5)\n   +- ArrowEvalPython (2)\n\n\n"
+        "(2) ArrowEvalPython\nInput [1]: [a#1]\nArguments: [f(substring(a#1, 1, 4))#7, g(a#1)#8], [pythonUDF0#9], 200\n\n"
+        "(3) ArrowEvalPython\nArguments: [f(substring(a#1, 1, 4))#7], [pythonUDF0#10], 200\n\n"
+        "(5) ArrowEvalPython\nArguments: [f(substring(a#1, 1, 4))#7], [pythonUDF0#11], 200\n"
+    )
+    assert _eval_python_udfs(plan) == {"f": 2, "g": 1}
+
+
+@pytest.fixture(scope="module")
+def ingest_run(spark, tmp_path_factory):
+    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources import ingest as ING
+
+    d = tmp_path_factory.mktemp("plan_uploads")
+    page = "<!DOCTYPE html><html><body><p>" + "plan guard paragraph text. " * 90 + "</p></body></html>"
+    (d / "a.html").write_text(page)
+    (d / "b.html").write_text(page.replace("guard", "shape"))
+    (d / "copy_of_a.html").write_text(page)
+    (d / "fake.pdf").write_bytes(b"NOTAPDF" + b"x" * 100)
+    (d / "notes.exe").write_bytes(b"MZ\x90\x00")
+    glob = str(d) + "/*"
+    return ING, glob, ING.ingest(spark, glob), str(tmp_path_factory.mktemp("plan_chunks"))
+
+
+@pytest.mark.parametrize("output", ["rejected", "accepted", "chunk_write"])
+def test_ingest_evaluates_each_udf_once(spark, ingest_run, output):
+    _, _, res, out = ingest_run
+    action = {
+        "rejected": res.rejected.collect,
+        "accepted": res.accepted.collect,
+        "chunk_write": lambda: res.chunks.write.mode("overwrite").parquet(out),
+    }[output]
+    plans_run = _executed_plans(spark, action)
+    assert plans_run, "no SQL execution recorded"
+    for p in plans_run:
+        udfs = _eval_python_udfs(p)
+        assert all(n == 1 for n in udfs.values()), f"{output}: {dict(udfs)}"
+        if output == "chunk_write":
+            assert set(udfs) == {"decode_pages_udf", "split_udf"}, dict(udfs)
+        else:  # both read the pinned classification, no Python
+            assert not udfs, f"{output}: {dict(udfs)}"
+
+
+def test_ingest_classification_sniffs_once(spark, ingest_run):
+    ING, glob, res, _ = ingest_run
+    assert _eval_python_udfs(_plan(res.files)) == {}  # a pin: no Python
+    udfs = _eval_python_udfs(_plan(ING._classify(spark, glob, None)))
+    assert udfs == {"sniff_mime_udf": 1}, dict(udfs)
+
+
+@pytest.mark.parametrize("name", PYTHON_NODE_QUERIES)
+def test_registered_query_evaluates_each_udf_once(spark, sf_dir, name):
+    df = _q(name, spark, sf_dir)
+    plans_run = _executed_plans(spark, df.collect)
+    assert plans_run, "no SQL execution recorded"
+    for p in plans_run:
+        udfs = _eval_python_udfs(p)
+        assert all(n == 1 for n in udfs.values()), f"{name}: {dict(udfs)}"
 
 
 def test_keep_best_uses_window_group_limit(spark, sf_dir):
