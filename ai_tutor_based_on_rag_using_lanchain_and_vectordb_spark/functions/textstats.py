@@ -98,21 +98,6 @@ def lang_scores(text: Column) -> dict[str, Column]:
     return out
 
 
-def lang_id(text: Column) -> Column:
-    """Predicted language = argmax marker score, ties broken by language
-    code order; 'und' (undetermined) when no marker hits."""
-    scores = lang_scores(text)
-    pairs = [
-        F.struct(scores[lang].alias("score"), F.lit(lang).alias("lang"))
-        for lang in sorted(scores)  # ascending code order
-    ]
-    # array_max on struct compares (score, lang) lexicographically; to
-    # break score-ties toward the *earlier* code we invert lang ordering
-    # is unnecessary for fixtures — marker sets are disjoint.
-    best = F.array_max(F.array(*pairs))
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
 def rolling_fingerprint(text: Column) -> Column:
     """Polynomial rolling-hash document fingerprint (mod 2^31-1) over
     UTF-8 code units — a cheap stable content signature computed as a

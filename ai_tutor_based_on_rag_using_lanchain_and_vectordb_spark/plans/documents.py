@@ -26,7 +26,7 @@ from ..catalog import load_table
 from ..functions import text as TX
 from ..functions import exact as X
 from ..functions import textstats as TS
-from ..session import local_table, pin
+from ..session import local_table, pin, scratch_dir
 
 CHUNK_SIZE = 120
 CHUNK_OVERLAP = 24
@@ -570,12 +570,10 @@ def bm25_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the postings/doclens/stats round trip end-to-end, not just the
     in-plan formulation — the same move as knn_ivfpq_exhaustive for the
     vector index."""
-    import tempfile
-
     from ..operators.bm25 import Bm25Searcher, build_bm25_index
 
     docs = load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="bm25_idx_")
+    path = scratch_dir("bm25_idx_")
     build_bm25_index(docs, path)
     return Bm25Searcher(spark, path).search(BM25_QUERIES, k=5)
 

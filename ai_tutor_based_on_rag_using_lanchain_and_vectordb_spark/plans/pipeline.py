@@ -8,10 +8,6 @@ equivalence).
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,20 +17,11 @@ from ..operators import dedup as DD
 from ..operators import embed as EMB
 from ..operators import knn as KNN
 from ..operators import splitter as SPL
-from ..session import local_table, pin
+from ..session import local_table, pin, scratch_dir
 from . import chat
 
 
 PIPE_QUALITY_TAU = 0.5
-
-
-def _scratch_dir(prefix: str) -> str:
-    """A fresh local directory for a gate's layouts or staged files,
-    removed at process exit: the gate returns a lazy frame that still
-    reads it, so it cannot be removed on return."""
-    path = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 def curation_pipeline_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,21 +405,6 @@ SELECT doc_id, 'video',
        CAST(500 + doc_id * 10 AS BIGINT), CAST(1 AS BIGINT), 0.0
 FROM ids
 """
-
-
-def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs verified with exact Jaccard ≥ 0.5.
-
-    No longer a registry row of its own (r8): the pipeline is split so
-    the driver checks each half at its strongest gate — the LSH
-    candidate step through Q(minhash_recall) (recall vs exact ground
-    truth; rows-only, probabilistic by nature: (16,4) banding misses a
-    0.9-Jaccard pair with p≈0.014, and sf0.01 contains exactly one
-    such miss), and the exact-Jaccard verify half through the
-    oracle-hash-checked Q(neardup_verified_pairs) below. The composed
-    operator stays pytest-covered (tests/test_dedup.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return DD.minhash_dedup_pairs(docs, threshold=0.5)
 
 
 def neardup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -929,7 +901,7 @@ def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
-    path = _scratch_dir("ivf_filtered_")
+    path = scratch_dir("ivf_filtered_")
     build_ivfpq_index(emb, path, n_cells=8, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
     n = emb.count()  # bounded collect: one scalar, exhaustive shortlist
@@ -964,7 +936,7 @@ def knn_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
-    path = _scratch_dir("ivfpq_filtered_")
+    path = scratch_dir("ivfpq_filtered_")
     build_ivfpq_index(emb, path, n_cells=4, m=8, kc=16, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
     n = emb.count()  # bounded collect: one scalar, exhaustive shortlist
@@ -995,7 +967,7 @@ def knn_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").where(
         V.norm("embedding") > 0
     )
-    path = _scratch_dir("ivf_filtered_rc_")
+    path = scratch_dir("ivf_filtered_rc_")
     build_ivfpq_index(emb, path, n_cells=8, meta_cols=("label",))
     queries = emb.where(F.col("vec_id") < 5)
     approx = open_ivfpq_index(spark, path, emb).search(
@@ -1244,7 +1216,7 @@ def warc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correctness fixture sized to the driver-check SF, not a production
     # path (production reads crawl segments in place). Removed at
     # process exit so the returned lazy frame stays valid.
-    out_dir = _scratch_dir("warc_rt_")
+    out_dir = scratch_dir("warc_rt_")
     W.write_warc_shards(docs, out_dir, n_shards=4, shard_key="doc_id")
     return W.wet_documents(spark, out_dir).select("doc_id", "lang", "text")
 
@@ -1310,7 +1282,7 @@ def domain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "url", _curation_url_col()
     )
-    out_dir = _scratch_dir("warc_cur_")
+    out_dir = scratch_dir("warc_cur_")
     W.write_warc_shards(docs, out_dir, n_shards=4, shard_key="doc_id",
                         url_col="url")
     landed = W.wet_documents(spark, out_dir, with_uri=True)
@@ -1468,7 +1440,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {tuple(str(v) for v in r) for r in df.collect()}
 
     # ---------------- BM25 postings/doclens ----------------
-    bp = _scratch_dir("purge_bm25_")
+    bp = scratch_dir("purge_bm25_")
     build_bm25_index(docs, bp, n_buckets=8)
     victim = int(
         Bm25Searcher(spark, bp)
@@ -1477,7 +1449,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     info = delete_bm25_docs(spark, bp, [victim])
     rows.append(("bm25_victim_deleted", info["deleted_docs"], 1))
-    bf = _scratch_dir("purge_bm25f_")
+    bf = scratch_dir("purge_bm25f_")
     build_bm25_index(docs.where(F.col("doc_id") != victim), bf, n_buckets=8)
     got = _rowset(Bm25Searcher(spark, bp).search(BM25_QUERIES, k=10))
     want = _rowset(Bm25Searcher(spark, bf).search(BM25_QUERIES, k=10))
@@ -1493,7 +1465,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append(("bm25_victim_forgotten", int(leftovers), 0))
 
     # ---------------- IVF+PQ codes ----------------
-    pp = _scratch_dir("purge_pq_")
+    pp = scratch_dir("purge_pq_")
     build_ivfpq_index(emb, pp, n_cells=4, m=8, kc=16)
     queries = pin(emb.where(F.col("vec_id") < 3), eager=True)
     n_emb = emb.count()
@@ -1504,7 +1476,7 @@ def purge_document_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pinfo = delete_ivfpq_ids(spark, pp, [v_pq])
     rows.append(("ivfpq_victim_deleted", pinfo["deleted"], 1))
-    pf = _scratch_dir("purge_pqf_")
+    pf = scratch_dir("purge_pqf_")
     surv = pin(emb.where(F.col("vec_id") != v_pq), eager=True)
     build_ivfpq_index(surv, pf, n_cells=4, m=8, kc=16)
     got = _rowset(

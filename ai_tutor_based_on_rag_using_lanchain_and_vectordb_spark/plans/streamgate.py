@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import _read_schema, ensure_nanos_conf, load_table
-from ..session import local_table, pin, tune_for_oracle
+from ..session import local_table, pin, scratch_dir, tune_for_oracle
 from ..streaming import windows as W
 from ..streaming.epochs import drain, start_foreach_batch
 
@@ -173,8 +173,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an index whose bucket-pruned search equals the one-shot direct
     # search — exact by construction (postings and doc lengths are
     # doc-local; corpus stats derive from doclens at open).
-    import tempfile
-
     from ..operators.bm25 import (
         Bm25Searcher,
         bm25_search,
@@ -193,7 +191,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_stream = doc_stream.withColumn(
             c, F.expr(f"timestamp_micros({c} div 1000)")
         )
-    idx_path = tempfile.mkdtemp(prefix="sg_bm25_")
+    idx_path = scratch_dir("sg_bm25_")
     state = {"built": False}
 
     def feed(batch_df: DataFrame, _epoch: int) -> None:

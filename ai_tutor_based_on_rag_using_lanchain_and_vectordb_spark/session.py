@@ -14,7 +14,10 @@ Defaults chosen for the 100 TB design point (and harmless at test scale):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -90,3 +93,12 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh local directory for a query's layouts or staged files,
+    removed at process exit: the query returns a lazy frame that still
+    reads it, so it cannot be removed on return."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path

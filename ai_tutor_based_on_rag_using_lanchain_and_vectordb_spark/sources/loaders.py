@@ -5,12 +5,14 @@ The reference uses PyPDFLoader / Docx2txtLoader / UnstructuredHTMLLoader
 
     spark.read.format("binaryFile") → decode pandas_udf → posexplode pages
 
-Decoders: HTML and plain text are real (regex strip-tags — no external
-deps). PDF/DOCX use a three-step chain: pypdf/docx2txt when installed
-(import-gated) → the pure-stdlib extractors in ``minidecode.py`` (real
-decode for Flate/uncompressed PDF text streams and ECMA-376 DOCX XML)
-→ ``_decode_stub`` as a last resort for payloads neither path can read
-(encrypted/exotic PDFs), keeping the pipeline shape intact.
+This is the package's one path from file bytes to page text: the
+binaryFile scan (``read_binary_documents``) feeds ``decode_pages_udf``,
+which dispatches on the suffix. HTML and plain text are decoded here
+(regex strip-tags); PDF and DOCX go to the pure-stdlib extractors in
+``minidecode.py`` and nothing else, so no installed package changes a
+page, chunk or vector. A PDF or DOCX neither extractor can read decodes
+to ``[]``: the file stays accepted and yields no chunks, as an empty
+HTML page does.
 
 MIME sniffing (P8, backend/file_utils.py:73-121) checks magic bytes on
 the binary head — fail-open like the reference.
@@ -70,55 +72,20 @@ def _text_passthrough(data: bytes) -> list[str]:
     return [text] if text else []
 
 
-def _decode_stub(data: bytes, kind: str) -> list[str]:
-    """STUB decoder for formats whose libraries aren't in this container
-    (pypdf / docx2txt). Deterministic fake: one pseudo-page per 1024
-    bytes, each page a printable-byte projection of its slice — keeps
-    page counts, ordering, and schema realistic for pipeline tests."""
-    pages = []
-    for off in range(0, max(len(data), 1), 1024):
-        chunk = data[off : off + 1024]
-        printable = bytes(b for b in chunk if 32 <= b < 127)
-        pages.append(f"[{kind}-page-{off // 1024}] " + printable.decode("ascii", "ignore"))
-    return pages
-
-
-def decode_pdf(data: bytes, password: str | bytes | None = None) -> list[str]:
-    """``password`` is the user password for encrypted documents (blank
-    assumed when omitted — the PyPDFLoader behavior the reference relies
-    on, backend/chroma_utils.py:61-63)."""
-    try:  # full-featured decoder when available
-        import io
-
-        from pypdf import PdfReader  # type: ignore
-
-        reader = PdfReader(io.BytesIO(data))
-        if reader.is_encrypted:
-            pw = password.decode("latin-1") if isinstance(password, bytes) else password
-            reader.decrypt(pw or "")
-        return [p.extract_text() or "" for p in reader.pages]
-    except ImportError:
-        pass
+def decode_pdf(data: bytes) -> list[str]:
+    """One entry per page; an encrypted document opens with the blank
+    password only, as PyPDFLoader's does (backend/chroma_utils.py:61-63)."""
+    # imported on first use: minidecode takes ~20 ms to import, which
+    # an HTML-only worker or a process that never decodes would pay
     from .minidecode import pdf_pages
 
-    # real stdlib extractor (zlib + text ops)
-    pages = pdf_pages(data, password=password)
-    return pages if pages else _decode_stub(data, "pdf")
+    return pdf_pages(data)
 
 
 def decode_docx(data: bytes) -> list[str]:
-    try:
-        import io
-
-        import docx2txt  # type: ignore
-
-        return [docx2txt.process(io.BytesIO(data))]
-    except ImportError:
-        pass
     from .minidecode import docx_pages
 
-    pages = docx_pages(data)  # real stdlib extractor (zipfile + etree)
-    return pages if pages else _decode_stub(data, "docx")
+    return docx_pages(data)
 
 
 DECODERS = {

@@ -1,9 +1,9 @@
 """Minimal pure-stdlib PDF and DOCX text extractors.
 
 The reference's primary ingest path is PyPDFLoader / Docx2txtLoader
-(backend/chroma_utils.py:60-74). This container has neither pypdf nor
-docx2txt, so these small extractors make the decode step REAL for the
-common cases instead of a stub:
+(backend/chroma_utils.py:60-74). These small extractors are the
+package's only PDF and DOCX decoders (``loaders.decode_pdf`` /
+``decode_docx`` call them and nothing else):
 
 - DOCX is a zip container (ECMA-376): ``word/document.xml`` holds the
   body; text lives in ``<w:t>`` runs, paragraphs in ``<w:p>`` elements.
@@ -30,22 +30,22 @@ common cases instead of a stub:
   page tree resolves (damaged xref, exotic layouts) the extractor falls
   back to the previous stream heuristic: each content stream with a
   ``BT`` block is one pseudo-page. Encrypted PDFs (standard security
-  handler) decrypt with the supplied password, accepted as EITHER the
-  user or the owner password (Algorithm 7 recovers the user password
-  from /O; V5 authorizes against /O+/OE directly) — blank assumed when
-  none is given, the usual owner-restricted case — across all the
-  standard cipher generations: RC4 (V 1/2 R 2/3), AESV2 (V 4 R 3/4,
+  handler) decrypt with the blank password, tried as the user password
+  and then as the owner password (Algorithm 7 recovers the user
+  password from /O; V5 authorizes against /O+/OE directly), as pypdf's
+  ``decrypt("")`` does — the usual owner-restricted case — across all
+  the standard cipher generations: RC4 (V 1/2 R 2/3), AESV2 (V 4 R 3/4,
   AES-128-CBC per-object keys) and AESV3 (V 5 R 5/6, AES-256 with the
   R6 hardened hash), via pure hashlib MD5/SHA-2 key derivation plus an
   in-repo FIPS-197 AES (known-answer-vector tested); the /U entry is
-  verified first so a wrong password never yields garbage text. Not
-  handled (falls back to the caller's stub): non-standard security
-  handlers, and Type0 fonts that ship no ToUnicode map (unrecoverable
-  without external CMap tables).
+  verified first so a document locked by a non-blank password never
+  yields garbage text. Not handled (the document decodes to ``[]``):
+  non-blank passwords, non-standard security handlers, and Type0 fonts
+  that ship no ToUnicode map (unrecoverable without external CMap
+  tables).
 
-Both return ``[]`` when the payload yields nothing, so callers can
-fall back (loaders.decode_pdf / decode_docx keep their import-gated
-pypdf/docx2txt fast path and the deterministic stub as last resort).
+Both return ``[]`` when the payload yields nothing: the file is
+ingested with no pages, so it yields no chunks.
 """
 
 from __future__ import annotations
@@ -270,11 +270,9 @@ def _std_encryption_key(
     password: bytes = b"",
 ) -> bytes:
     """ISO 32000-1 Algorithm 2: file key from the (possibly empty) user
-    password. The password is padded/truncated to 32 bytes with the
-    spec's constant pad — the empty default covers the common
-    owner-restricted-but-blank-user-password case; callers supply the
-    real user password for genuinely protected documents (PyPDFLoader
-    semantics, reference backend/chroma_utils.py:61-63)."""
+    password, padded/truncated to 32 bytes with the spec's constant
+    pad. The empty default is the blank user password; the owner
+    branch passes the padded user password Algorithm 7 recovers."""
     import hashlib
     import struct as _s
 
@@ -535,13 +533,15 @@ def _hash_r6(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
             return k[:32]
 
 
-def _build_v5_decryptor(enc: bytes, r: int, password: bytes = b""):
-    """AESV3 (V5, R5/R6): authorize ``password`` as the USER password
-    (validation hash over /U's salts → file key from /UE) or, failing
-    that, as the OWNER password (hash over /O's salts keyed with the
-    first 48 bytes of /U → file key from /OE) — the either-password
-    behavior pypdf's ``decrypt`` has."""
+def _build_v5_decryptor(enc: bytes, r: int):
+    """AESV3 (V5, R5/R6): authorize the blank password as the USER
+    password (validation hash over /U's salts → file key from /UE) or,
+    failing that, as the OWNER password (hash over /O's salts keyed with
+    the first 48 bytes of /U → file key from /OE) — the either-password
+    behavior pypdf's ``decrypt("")`` has."""
     import hashlib
+
+    password = b""
 
     u = _dict_string(enc, b"U")
     ue = _dict_string(enc, b"UE")
@@ -576,19 +576,14 @@ def _build_v5_decryptor(enc: bytes, r: int, password: bytes = b""):
     raise ValueError("wrong or missing password")
 
 
-def _build_decryptor(
-    data: bytes, table: dict[int, bytes], password: str | bytes | None = None
-):
+def _build_decryptor(data: bytes, table: dict[int, bytes]):
     """None when the document isn't encrypted; a decryptor callable for
     the standard handler — RC4 (V 1/2, R 2/3), AESV2 (V 4, R 4) and
-    AESV3 (V 5, R 5/6) — authorized by ``password`` (the USER password;
-    blank by default, the common owner-restricted case). A str password
-    is encoded per the handler revision: Latin-1 for the classic
-    handlers (PDFDoc encoding's printable range), UTF-8 for V5, the
-    same convention pypdf applies. Raises ValueError for wrong
-    passwords, custom security handlers, or crypt filters other than
-    StdCF, so the caller falls back to the stub instead of emitting
-    garbage."""
+    AESV3 (V 5, R 5/6) — authorized by the blank password as the user or
+    the owner password (the common owner-restricted case). Raises
+    ValueError for a non-blank password, custom security handlers, or
+    crypt filters other than StdCF, so the document decodes to ``[]``
+    instead of garbage."""
     em = None
     for m in re.finditer(rb"/Encrypt\s+(\d+)\s+\d+\s+R", data):
         em = m  # last trailer wins (incremental updates)
@@ -602,13 +597,7 @@ def _build_decryptor(
     v = int(vm.group(1)) if vm else 0
     r = int(rm.group(1)) if rm else 2
     if v == 5 and r in (5, 6):
-        pw5 = password.encode("utf-8") if isinstance(password, str) else (password or b"")
-        return _build_v5_decryptor(enc, r, pw5)
-    pw = (
-        password.encode("latin-1", "replace")
-        if isinstance(password, str)
-        else (password or b"")
-    )
+        return _build_v5_decryptor(enc, r)
     aes = False
     if v == 4:
         # V4 wraps the cipher choice in crypt filters; only the default
@@ -651,16 +640,14 @@ def _build_decryptor(
         id_m = m
     id1 = _hex_bytes(id_m.group(1)) if id_m else b""
     encrypt_metadata = re.search(rb"/EncryptMetadata\s+false", enc) is None
-    key = _std_encryption_key(
-        o, int(pm.group(1)), id1, r, n, encrypt_metadata, password=pw
-    )
+    key = _std_encryption_key(o, int(pm.group(1)), id1, r, n, encrypt_metadata)
     expect = _std_user_check(key, id1, r)
     got = u[:16] if r >= 3 else u[:32]
     if got != expect[: len(got)]:
-        # owner-password attempt (Algorithm 7): recover the padded user
+        # blank owner password (Algorithm 7): recover the padded user
         # password from /O and authorize with it — pypdf's
         # either-password behavior
-        userpw = _owner_recover_user_pw(pw, o, r, n)
+        userpw = _owner_recover_user_pw(b"", o, r, n)
         key = _std_encryption_key(
             o, int(pm.group(1)), id1, r, n, encrypt_metadata, password=userpw
         )
@@ -1058,22 +1045,22 @@ def _page_fonts(
     return fonts
 
 
-def pdf_pages(data: bytes, password: str | bytes | None = None) -> list[str]:
+def pdf_pages(data: bytes) -> list[str]:
     """Page texts. Primary path: walk the /Pages tree and concatenate
     each page's /Contents streams (one output entry per real page, in
     tree order — empty pages stay as empty strings so page numbering
     matches the document). Fallback when no tree resolves: one entry
     per content stream containing a BT text block. ``[]`` when the
-    document has no parseable text streams. ``password`` is the user
-    password for encrypted documents (blank assumed when omitted —
-    PyPDFLoader semantics, reference backend/chroma_utils.py:61-63)."""
+    document has no parseable text streams, or is encrypted under a
+    non-blank password (the blank one is all PyPDFLoader tries,
+    reference backend/chroma_utils.py:61-63)."""
     if not data.startswith(b"%PDF"):
         return []
     table = _object_table(data)
     try:
-        decrypt = _build_decryptor(data, table, password)
+        decrypt = _build_decryptor(data, table)
     except ValueError:
-        return []  # wrong password / exotic handler: caller falls to stub
+        return []  # non-blank password / exotic handler: no pages
     if decrypt is not None:
         # rebuild so ObjStm payloads inflate through RC4 (the /Encrypt
         # dict itself is never inside an ObjStm, so pass 1 found it)

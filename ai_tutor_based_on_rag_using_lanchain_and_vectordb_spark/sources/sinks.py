@@ -2,18 +2,17 @@
 decisions that replace the reference's SQLite indexes
 (backend/db_utils.py:56-65,177-186) at scale:
 
-- chat logs    → partitioned by date(created_at): the idx_created_at
+- events       → partitioned by date(ts): the idx_created_at
   equivalent; time-range predicates (P3) become partition pruning.
-- chunks/vecs  → bucketed by doc_id: the idx_file_hash/file_id
-  equivalent; per-document fetch/delete (J3) touches one bucket, and a
-  chunks⋈vectors join on doc_id is shuffle-free when both sides share
-  the bucketing.
+- chunks       → clustered by doc_id: the idx_file_hash/file_id
+  equivalent; a per-document fetch/delete (J3) skips row groups.
+  Vectors land in the IVF-PQ layout (operators/pq_index.py).
 - append mode  → the INSERT path (db_utils.py:80-86); streaming ingest
   lands through foreachBatch into the same layout.
 
-Buckets require a saveAsTable (metastore) target; the path-based
-variants fall back to repartition-by-key + sorted files, which still
-gives clustered row groups (min/max skipping) without a metastore.
+Buckets require a saveAsTable (metastore) target (sources/bucketed.py);
+these path-based writers use repartition-by-key + sorted files, which
+still gives clustered row groups (min/max skipping) without a metastore.
 """
 
 from __future__ import annotations
@@ -24,17 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..streaming.epochs import start_foreach_batch
-
-
-def write_logs_partitioned(logs: DataFrame, path: str, mode: str = "append") -> None:
-    """Chat-log table partitioned by event date (P3-prunable layout)."""
-    (
-        logs.withColumn("log_date", F.to_date("created_at"))
-        .repartition("log_date")
-        .write.mode(mode)
-        .partitionBy("log_date")
-        .parquet(path)
-    )
 
 
 def write_events_partitioned(events: DataFrame, path: str, mode: str = "append") -> None:
@@ -57,17 +45,6 @@ def write_chunks_clustered(
     (
         chunks.repartition(n_files, "doc_id")
         .sortWithinPartitions("doc_id", "chunk_index")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_vectors_clustered(
-    vectors: DataFrame, path: str, n_files: int = 32, mode: str = "overwrite"
-) -> None:
-    (
-        vectors.repartition(n_files, "chunk_id")
-        .sortWithinPartitions("chunk_id")
         .write.mode(mode)
         .parquet(path)
     )

@@ -312,8 +312,7 @@ class WarcReader(DataSourceReader):
         """Consume record_type equality/IN filters — matching records
         decode, everything else is seeked past by Content-Length
         (framing read, no row build, no HTTP split, no text decode).
-        Multiple consumed predicates intersect, same contract as
-        pyds.CorpusDirReader.pushFilters."""
+        Multiple consumed predicates intersect."""
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute == ("record_type",):
                 got = {f.value}

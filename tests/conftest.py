@@ -31,14 +31,13 @@ SLOW_MODULES = {
 # Individual long-running tests inside otherwise-fast modules
 # (measured 12-281 s each): the registry-wide plan sweep builds every
 # registered query plan, two parity tests are themselves index/stream
-# integration cycles, and the AES-256 (PDF 2.0) password tests run the
-# R6 hardened hash's pure-Python AES-CBC rounds many times over.
+# integration cycles, and the AES-256 (PDF 2.0) password test runs the
+# R6 hardened hash's pure-Python AES-CBC rounds many times over. Every
+# entry must name a test of its module: a stale one fails collection.
 SLOW_TESTS = {
     "test_plan_shape.py::test_entire_registry_has_no_cartesian_or_row_python",
     "test_oracle_parity.py::test_query_matches_oracle[purge_document_gate]",
     "test_oracle_parity.py::test_query_matches_oracle[streaming_equivalence_gate]",
-    "test_minidecode.py::test_pdf_aesv3_owner_password",
-    "test_minidecode.py::test_pdf_aesv3_r6_user_password",
     "test_minidecode.py::test_pdf_aesv3_nonblank_password_stubs",
 }
 
@@ -53,14 +52,24 @@ def pytest_configure(config):
 
 
 def pytest_collection_modifyitems(config, items):
+    tails = set()
     for it in items:
         mod = it.nodeid.split("::", 1)[0].rsplit("/", 1)[-1].removesuffix(".py")
         tail = "::".join(
             [it.nodeid.split("::", 1)[0].rsplit("/", 1)[-1]]
             + it.nodeid.split("::")[1:]
         )
+        tails.add(tail)
         if mod in SLOW_MODULES or tail in SLOW_TESTS:
             it.add_marker(pytest.mark.slow)
+    # a stale entry (its test renamed or deleted) would silently stop
+    # marking anything slow; checked in every module collected whole,
+    # not picked by node id
+    picked = {a.split("::", 1)[0].rsplit("/", 1)[-1] for a in config.args if "::" in a}
+    files = {t.split("::", 1)[0] for t in tails} - picked
+    stale = sorted(t for t in SLOW_TESTS if t.split("::", 1)[0] in files and t not in tails)
+    if stale:
+        raise pytest.UsageError(f"SLOW_TESTS names no collected test: {stale}")
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
     if config.getoption("-m"):

@@ -14,7 +14,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import SparkRuntimeException
 
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark import plans
-from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans import pipeline as PL
+from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark import session as S
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans.guards import (
     guard_passed,
 )
@@ -68,9 +68,10 @@ def test_registry_wires_guards_over_gate_queries(spark, sf_dir):
     assert rows and all(r["passed"] for r in rows)
 
 
-# Gates that build index layouts or stage files in local scratch dirs
+# Queries that build index layouts or stage files in local scratch dirs
 # and return lazy frames over them: each dir must be registered for
-# removal at process exit, or every registry run leaks its layouts.
+# removal at process exit (session.scratch_dir), or every registry run
+# leaks its layouts.
 SCRATCH_GATES = [
     "knn_ivf_filtered",
     "knn_ivfpq_filtered",
@@ -78,6 +79,7 @@ SCRATCH_GATES = [
     "purge_document_gate",
     "warc_roundtrip_docs",
     "domain_curation",
+    "bm25_index_search",
 ]
 
 
@@ -93,8 +95,8 @@ def test_gate_registers_scratch_dir_cleanup(spark, sf_dir, monkeypatch, name):
         registered.append((fn, args))
         return atexit.register(fn, *args, **kw)
 
-    monkeypatch.setattr(PL, "tempfile", types.SimpleNamespace(mkdtemp=mkdtemp))
-    monkeypatch.setattr(PL, "atexit", types.SimpleNamespace(register=register))
+    monkeypatch.setattr(S, "tempfile", types.SimpleNamespace(mkdtemp=mkdtemp))
+    monkeypatch.setattr(S, "atexit", types.SimpleNamespace(register=register))
     plans.all_queries()[name](spark, sf_dir)
     assert made, f"{name} made no scratch dir"
     assert all((shutil.rmtree, (d,)) in registered for d in made), (made, registered)

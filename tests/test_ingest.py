@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources import ingest as ING
 
+from .test_minidecode import make_pdf, text_stream
+
 
 @pytest.fixture(scope="module")
 def upload_dir(tmp_path_factory):
@@ -20,7 +22,9 @@ def upload_dir(tmp_path_factory):
         + "</p><script>ignored()</script></body></html>"
     )
     (d / "dup_of_notes.html").write_bytes((d / "notes.html").read_bytes())
-    (d / "report.pdf").write_bytes(b"%PDF-1.4 " + b"fake pdf body bytes " * 300)
+    (d / "report.pdf").write_bytes(make_pdf([text_stream([b"(quarterly report page text)"])]))
+    # right magic, nothing decodable: accepted, and yields no chunks
+    (d / "unreadable.pdf").write_bytes(b"%PDF-1.4 " + b"garbage bytes " * 300)
     (d / "bad_magic.pdf").write_bytes(b"NOTAPDF" + b"x" * 100)
     (d / "malware.exe").write_bytes(b"MZ\x90\x00")
     (d / "huge.html").write_bytes(b"<html>" + b"A" * (11 * 1024 * 1024))
@@ -45,7 +49,7 @@ def test_validation_reasons(spark, upload_dir):
     kept = accepted & html_pair
     assert kept == {"dup_of_notes.html"}  # sorts before notes.html
     assert rej["notes.html"] == "duplicate_in_batch"
-    assert accepted == kept | {"report.pdf"}
+    assert accepted == kept | {"report.pdf", "unreadable.pdf"}
 
 
 def test_catalog_anti_join_gate(spark, upload_dir):
@@ -69,12 +73,17 @@ def test_chunks_and_vectors_shapes(spark, upload_dir):
     html_chunks = chunks[chunks["page_content"].str.contains("paragraph", na=False)]
     assert len(html_chunks) > 0
     assert not chunks["page_content"].str.contains("<h1>|<script>", regex=True).any()
+    # one chunk per PDF page of real text; an unreadable PDF adds none
+    by_file = chunks.groupby("source_file")["page_content"].apply(list).to_dict()
+    assert by_file["report.pdf"] == ["quarterly report page text"]
+    assert "unreadable.pdf" not in by_file
+    assert res.catalog_rows.where(F.col("filename") == "unreadable.pdf").count() == 1
 
 
 def test_delete_document_flow(spark, upload_dir):
     res = ING.ingest(spark, upload_dir + "/*")
     cat = res.catalog_rows
-    doc = cat.limit(1).collect()[0]
+    doc = cat.where(F.col("filename") == "report.pdf").collect()[0]
     # chunks carry the file-level doc_id directly — no rename needed
     chunks = res.chunks
     victim_chunks = chunks.where(F.col("doc_id") == doc["id"]).count()

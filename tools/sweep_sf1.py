@@ -2,13 +2,13 @@
 
 The per-round bench covers the 27 headline queries; this sweeps ALL
 registered queries once at 10× distinct scale and prints the slowest —
-the probe that caught the round-6 LSH blowups (minhash_neardup at
-992 s) which the headline set never exercised. Run it whenever an
+the probe that caught the round-6 LSH blowups (MinHash near-dup pairs
+at 992 s) which the headline set never exercised. Run it whenever an
 operator family changes:
 
     python tools/bench_sf1.py            # ensures .bench/sf1d exists
     python tools/sweep_sf1.py            # the sweep
-    python tools/sweep_sf1.py --from minhash_neardup   # resume point
+    python tools/sweep_sf1.py --from minhash_recall    # resume point
 """
 
 from __future__ import annotations
